@@ -132,16 +132,16 @@ object Bm25 {
       // index artifacts are byte-sized at write (guide §6): tiny
       // corpora write ONE file per dir instead of one per reduce
       // partition — every later probe pays the listing + footer count
-      graft.sources.ParquetTable.sizedForWriteShuffled(tf)
+      graft.sources.ParquetTable.sizedForWrite(tf)
         .write.mode("overwrite").parquet(s"$dir/postings")
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
         .write.mode("overwrite").parquet(s"$dir/termstats")
       // Σ tf per doc == raw token count, riding the CACHED tf frame
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       dl.cache()
       try {
-        graft.sources.ParquetTable.sizedForWriteShuffled(dl)
+        graft.sources.ParquetTable.sizedForWrite(dl)
           .write.mode("overwrite").parquet(s"$dir/doclens")
         // N must be the same statistic [[topK]] uses (docs.count(), i.e.
         // ALL docs including null/empty-text ones), not dl.count() (docs
@@ -230,9 +230,9 @@ object Bm25 {
     tf.cache()
     try {
       val nTf = tf.count() // materializes the cache; the delta's marker share
-      graft.sources.ParquetTable.sizedForWriteShuffled(tf)
+      graft.sources.ParquetTable.sizedForWrite(tf)
         .write.mode("append").parquet(s"$dir/postings")
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
         .write.mode("append").parquet(s"$dir/doclens")
       // termstats is read AND replaced — stage to a sibling dir, then
@@ -257,7 +257,7 @@ object Bm25 {
     val p = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_staged")
     val fs = p.getFileSystem(conf)
-    graft.sources.ParquetTable.sizedForWriteShuffled(df)
+    graft.sources.ParquetTable.sizedForWrite(df)
       .write.mode("overwrite").parquet(tmp.toString)
     fs.delete(p, true)
     require(fs.rename(tmp, p), s"replaceDir: rename $tmp -> $p failed")

@@ -111,7 +111,7 @@ object Dsir {
              (col("nt") + lit(k) * col("v"))) -
          log((col("cr") + lit(k)) /
              (col("nr") + lit(k) * col("v")))).as("lr"))
-      .transform(graft.sources.ParquetTable.sizedForWriteShuffled)
+      .transform(graft.sources.ParquetTable.sizedForWrite)
       .write.mode("overwrite").parquet(s"$dir/termratio")
   }
 

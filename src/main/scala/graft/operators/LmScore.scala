@@ -136,9 +136,9 @@ object LmScore {
       .groupBy(col("f1"), col("f2")).agg(count(lit(1)).as("c2"))
     pairCounts.cache()
     try {
-      graft.sources.ParquetTable.sizedForWriteShuffled(pairCounts)
+      graft.sources.ParquetTable.sizedForWrite(pairCounts)
         .write.mode("overwrite").parquet(s"$dir/paircounts")
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           pairCounts.groupBy(col("f1")).agg(sum(col("c2")).as("c1")))
         .write.mode("overwrite").parquet(s"$dir/ctxcounts")
       tokenizedOf(corpus, idCol, textCol)

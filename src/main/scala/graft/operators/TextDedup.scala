@@ -179,7 +179,7 @@ object TextDedup {
   def winnowingIndexSave(
       history: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 3, w: Int = 4): Unit = {
-    graft.sources.ParquetTable.sizedForWriteShuffled(history
+    graft.sources.ParquetTable.sizedForWrite(history
         .select(col(idCol).as("hist_id"),
           explode(winnowingFingerprints(col(textCol), k, w)).as("fp")))
       .write.mode("overwrite").parquet(s"$dir/posting")
@@ -208,7 +208,7 @@ object TextDedup {
     val spark = docs.sparkSession
     val p = SmallMeta.headRow(spark, s"$dir/params")
     val (k, w) = (p.getInt(0), p.getInt(1))
-    graft.sources.ParquetTable.sizedForWriteShuffled(docs
+    graft.sources.ParquetTable.sizedForWrite(docs
         .select(col(idCol).as("hist_id"),
           explode(winnowingFingerprints(col(textCol), k, w)).as("fp")))
       .write.mode("append").parquet(s"$dir/posting")
@@ -550,10 +550,10 @@ object TextDedup {
       baseHash)
     rows.cache()
     try {
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           rows.select(col(idCol).as("hist_id"), col("band"), col("key")))
         .write.mode("overwrite").parquet(s"$dir/bands")
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           rows.select(col(idCol).as("hist_id"), col("sig")).distinct())
         .write.mode("overwrite").parquet(s"$dir/sigs")
       Seq((n, numHashes, bands, seed, baseHash))
@@ -598,10 +598,10 @@ object TextDedup {
       baseHash)
     rows.cache()
     try {
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           rows.select(col(idCol).as("hist_id"), col("band"), col("key")))
         .write.mode("append").parquet(s"$dir/bands")
-      graft.sources.ParquetTable.sizedForWriteShuffled(
+      graft.sources.ParquetTable.sizedForWrite(
           rows.select(col(idCol).as("hist_id"), col("sig")).distinct())
         .write.mode("append").parquet(s"$dir/sigs")
     } finally { rows.unpersist(); () }

@@ -186,9 +186,8 @@ object ParquetTable {
           dir -> DataSkipping.candidateFiles(spark, dir, cond)
         }
       case Some(entries) =>
-        entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dataDir, es) =>
+        byDataDir(entries).map { case (dataDir, parts) =>
           val base = new Path(path, dataDir).toString
-          val parts = es.map(_._1)
           base -> DataSkipping.candidateFiles(spark, base, cond)
             .filter(rel => parts.exists(p => rel.startsWith(p + "/")))
         }
@@ -225,7 +224,7 @@ object ParquetTable {
         // inside its partition, which is what the sidecar pruning feeds
         // on. `numFiles` bounds total write tasks, not files-per-
         // partition (Delta OPTIMIZE ZORDER's per-partition binning).
-        val partitionColumns = entries.head._1.split('/').toSeq.map(_.split('=')(0))
+        val partitionColumns = partitionColumnsOf(entries)
         require(zorderBy.forall(c => !partitionColumns.exists(_.equalsIgnoreCase(c))),
           s"optimize: Z-order columns must be data columns " +
             s"(${partitionColumns.mkString(", ")} are partition columns — " +
@@ -282,9 +281,7 @@ object ParquetTable {
             v => readVersion(spark, path, v).repartition(numFiles),
             writeOptions = bloomOpts)
         case Some(entries) =>
-          val partitionColumns =
-            entries.head._1.split('/').toSeq.map(_.split('=')(0))
-          publishMaintenance(spark, path, "optimizeBloom", partitionColumns,
+          publishMaintenance(spark, path, "optimizeBloom", partitionColumnsOf(entries),
             v => readVersion(spark, path, v),
             filesPerPartition = math.max(1, numFiles),
             writeOptions = bloomOpts)
@@ -343,14 +340,6 @@ object ParquetTable {
     java.lang.Long.parseLong(spark.conf.get(
       TargetFileBytesConf, String.valueOf(128L * 1024 * 1024)))
 
-  /** Same policy as [[sizedForWrite]] — separate name kept for the
-    * call sites' intent documentation: artifact writes whose PLAN
-    * embeds heavy per-row compute that the write itself is the first
-    * action to materialize (MinHash banding, tokenize+count builds).
-    */
-  private[graft] def sizedForWriteShuffled(df: DataFrame): DataFrame =
-    sizedForWrite(df)
-
   /** Size an UNPARTITIONED image/artifact write by the byte estimate
     * instead of inheriting the plan's partitioning. Without this every
     * commit writes `spark.sql.shuffle.partitions` files however small
@@ -359,11 +348,14 @@ object ParquetTable {
     * cluster conf (thousands of shuffle partitions) a modest commit
     * scatters thousands of KB-sized files. The estimate is the analyzed
     * plan's sizeInBytes — for parquet scans the actual compressed input
-    * bytes; filters/joins only ever round it UP (size-only visitor), so
-    * the derived count errs toward MORE files, never a starved write.
-    * Fires only when the write would otherwise scatter tiny files, and
-    * resizes with a post-compute `repartition` — see the inline
-    * comments for why each of those choices is load-bearing.
+    * bytes; filters and joins only ever round it UP (size-only visitor).
+    * Row-multiplying operators do NOT: a Generate (explode) estimates at
+    * about its input's size however many rows it emits, so a
+    * shuffle-bearing plan that explodes a small input can be packed into
+    * one file although its output is large. Fires only when the write
+    * would otherwise scatter tiny files, and resizes with a post-compute
+    * `repartition` — see the inline comments for why each of those
+    * choices is load-bearing.
     */
   private[graft] def sizedForWrite(df: DataFrame): DataFrame = {
     val target = targetFileBytes(df.sparkSession)
@@ -439,17 +431,22 @@ object ParquetTable {
   // (advisoryPartitionSizeInBytes) right-sizing the reduce stage that
   // feeds the write (SURVEY §4); the bench's AQE-off setting is a
   // local-VM workaround, not a production recommendation.
+  // `keepLayout` writes `df`'s own task layout as-is — maintenance images
+  // (compact's fold, ZORDER's range slabs) arrange it themselves, and
+  // neither the adaptive sizing nor the per-partition clustering may
+  // undo that.
   private def writePlain(
       df: DataFrame, path: String, partitionColumns: Seq[String],
       filesPerPartition: Int = 1,
       writeOptions: Map[String, String] = Map.empty,
-      sizeAdaptive: Boolean = true): Unit = {
+      keepLayout: Boolean = false): Unit = {
     // writer options land in THIS job's hadoop conf only (Spark's
     // newHadoopConfWithOptions), so parquet writer properties — bloom
     // filters, per-column settings — never leak into concurrent writes
     // through the shared SparkContext configuration (ADVICE r9 low)
     val out =
-      if (partitionColumns.isEmpty && sizeAdaptive) sizedForWrite(df)
+      if (keepLayout) df
+      else if (partitionColumns.isEmpty) sizedForWrite(df)
       else clusterByPartitions(df, partitionColumns, filesPerPartition)
     val w = out.write.mode(SaveMode.Overwrite).options(writeOptions)
     (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
@@ -683,7 +680,7 @@ object ParquetTable {
     * `txn = Some(appId -> txnVersion)` makes the merge IDEMPOTENT under
     * re-delivery (Delta's `txnAppId`/`txnVersion`): the marker commits
     * atomically with the data, a batch at or below the app's committed
-    * watermark is skipped entirely, and the commit loops re-check under
+    * watermark is skipped entirely, and [[commitLoop]] re-checks under
     * the CAS race so two racing replays of one batch commit once. This
     * is the exactly-once primitive for streaming foreachBatch sinks
     * (txnVersion = batchId); txn versions must be monotone per app.
@@ -726,7 +723,7 @@ object ParquetTable {
     requireTxnAppId(txn)
     // idempotent-write fast path (Delta txnAppId/txnVersion): a batch at
     // or below the app's committed watermark is a re-delivery — skip it
-    // before any work. The commit loops re-check under the CAS race.
+    // before any work. The commit loop re-checks under the CAS race.
     if (exists(spark, path) && txnAlreadyApplied(spark, path, txn)) return
     if (!exists(spark, path)) {
       require(combine.isEmpty,
@@ -752,7 +749,6 @@ object ParquetTable {
         cdf, evolveSchema, txn, mergeOnRead, combine)
       return
     }
-    val target = read(spark, path)
     // stats-informed planning (see [[planMergeStats]]) — lazy: the probe
     // pass over `updates` runs only on a branch that consults it
     lazy val statsPlan = planMergeStats(spark, path, updates, pk)
@@ -774,7 +770,7 @@ object ParquetTable {
       // own write time)
       Constraints.validateFrame(spark, path, upd)
       val parts = upd.select(partitionColumns.map(col): _*).distinct()
-      val affected = target.join(parts, partitionColumns.toSeq, "left_semi")
+      val affected = read(spark, path).join(parts, partitionColumns.toSeq, "left_semi")
       val merged = combine.map(_(affected, upd)).getOrElse(
         mergeFrames(affected, upd, pk, broadcastKeys = statsPlan.broadcastKeys))
       withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
@@ -783,11 +779,7 @@ object ParquetTable {
           .partitionBy(partitionColumns: _*)
           .parquet(path)
       }
-    } else if (evolveSchema) {
-      atomicReplace(spark, path,
-        mergeFrames(target, updates, pk, evolveSchema = true,
-          broadcastKeys = statsPlan.broadcastKeys), Nil, txn)
-    } else if (combine.isEmpty && currentVersion(spark, path)
+    } else if (!evolveSchema && combine.isEmpty && currentVersion(spark, path)
         // the bulk-update demotion: above the MOR floor but with the
         // update set covering most of the table's pk NDV (ANALYZEd
         // tables only), rewrite — MOR would append ~the table and DV
@@ -799,31 +791,39 @@ object ParquetTable {
       // and txn re-delivery handled inside)
       mergeVectors(spark, path, updates, pk, cdf, txn)
     } else {
+      // copy-on-write tier: the whole image derived from the head, so a
+      // lost race recomputes against the winner's head ([[commitLoop]]).
+      // A plain unpartitioned dir (no manifest yet) is read as is and
+      // published as version 1.
       val updG = GeneratedColumns.fill(spark, path,
         ColumnDefaults.fill(spark, path, updates))
-      val merged = combine.map(_(target, updG.dropDuplicates(pk)))
-        .getOrElse(mergeFrames(target, updG, pk,
-          broadcastKeys = statsPlan.broadcastKeys))
-      val v = atomicReplace(spark, path, merged, Nil, txn)
-      // capture is derived from the COMMITTED image, not by re-evaluating
-      // the update plan: a lazy dedup could pick a different row per
-      // duplicate PK on re-execution, and the feed must never disagree
-      // with what the commit actually published (v < 0 = txn re-delivery
-      // detected under the race: nothing committed, nothing to capture).
-      // Scoped to the update keys: merge never deletes and never changes
-      // a row outside the key set, so diffing the affected slices equals
-      // the full-snapshot diff at a fraction of the join size.
-      if (v >= 0 && cdf) {
-        val updKeys = updates.select(pk.map(col): _*).distinct()
-        // re-select after the semi-joins: a using-columns join HOISTS the
-        // pk columns to the front, and the feed must carry table order
-        val cols = target.columns.toSeq
-        writeChangeManifest(spark, path, v,
-          changeRowsBetween(
-            target.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-            readVersion(spark, path, v).join(updKeys, pk, "left_semi")
-              .select(cols.map(col): _*),
-            pk, "right_outer"))
+      commitLoop(spark, path, "merge", txn, missing = None) { v =>
+        val target = if (v == 0) spark.read.parquet(path) else readVersion(spark, path, v)
+        val merged =
+          if (evolveSchema) mergeFrames(target, updates, pk, evolveSchema = true,
+            broadcastKeys = statsPlan.broadcastKeys)
+          else combine.map(_(target, updG.dropDuplicates(pk)))
+            .getOrElse(mergeFrames(target, updG, pk, broadcastKeys = statsPlan.broadcastKeys))
+        val dataDir = stageImage(spark, path, merged)
+        // capture is derived from the COMMITTED image, not by re-evaluating
+        // the update plan: a lazy dedup could pick a different row per
+        // duplicate PK on re-execution, and the feed must never disagree
+        // with what the commit actually published. Scoped to the update
+        // keys: merge never deletes and never changes a row outside the
+        // key set, so diffing the affected slices equals the full-snapshot
+        // diff at a fraction of the join size.
+        Commit(dataDir, staged = Seq(dataDir), onWin = nv => if (cdf) {
+          val updKeys = updates.select(pk.map(col): _*).distinct()
+          // re-select after the semi-joins: a using-columns join HOISTS the
+          // pk columns to the front, and the feed must carry table order
+          val cols = target.columns.toSeq
+          writeChangeManifest(spark, path, nv,
+            changeRowsBetween(
+              target.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
+              readVersion(spark, path, nv).join(updKeys, pk, "left_semi")
+                .select(cols.map(col): _*),
+              pk, "right_outer"))
+        })
       }
     }
   }
@@ -839,7 +839,7 @@ object ParquetTable {
 
   /** Unique data-dir name for every versioned write — two racing writers
     * can never target the same directory; the manifest, not the name,
-    * binds a dir into a version.
+    * binds a dir into a version. Only [[stage]] and [[convert]] mint one.
     */
   private def freshDataDirName() =
     s"_d${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
@@ -982,6 +982,186 @@ object ParquetTable {
       }
     } catch { case _: Throwable => None }
 
+  // ---- the commit protocol -----------------------------------------------
+
+  /** Lost version races a verb absorbs before [[commitLoop]] gives up. */
+  private val MaxCommitAttempts = 10
+
+  /** What one attempt of a versioned verb decided against the head. */
+  private sealed trait Attempt
+
+  /** Nothing to commit: the verb returns `version` (the head it read). */
+  private final case class NoOp(version: Long) extends Attempt
+
+  /** A manifest to publish at head + 1: its body and headers, the dirs
+    * the attempt [[stage]]d for it (table-relative: data dirs and DV
+    * dirs), what to run once it won (CDF capture, handed the committed
+    * version), and what to do when it lost to a commit that moved the
+    * head ([[OnMove]]).
+    */
+  private final case class Commit(
+      body: String,
+      staged: Seq[String] = Nil,
+      dv: Seq[String] = Nil,
+      colmap: Option[String] = None,
+      onWin: Long => Unit = _ => (),
+      onMove: OnMove = Recompute) extends Attempt
+
+  /** The discipline of a staged [[Commit]] whose CAS was lost to a
+    * commit that moved the head — see [[commitLoop]].
+    */
+  private sealed trait OnMove
+  /** The image was derived from the head: recompute it. */
+  private case object Recompute extends OnMove
+  /** The image was supplied by the caller: publish it unchanged. */
+  private case object Replay extends OnMove
+  /** Try `onto(newHead)` — a manifest-only re-expression of the staged
+    * data on top of the winner (only the body and headers of the
+    * returned commit are used) — and recompute when it returns None.
+    */
+  private final case class Rebase(onto: Long => Option[Commit]) extends OnMove
+
+  /** THE commit protocol: every versioned verb publishes through this one
+    * optimistic loop (Delta's OptimisticTransaction, re-expressed over the
+    * manifest CAS). Each attempt:
+    *
+    *   1. txn re-delivery: when `txn` is at or below the app's committed
+    *      watermark (a racer committed this very batch), deletes whatever
+    *      this verb staged and returns -1 — nothing committed;
+    *   2. reads the head `v` (0 when the table does not exist yet; a verb
+    *      that needs one passes `missing`, the tail of its error);
+    *   3. takes the staged commit while the head has not moved since it
+    *      was built, else applies its [[OnMove]] discipline, else calls
+    *      `attempt(v)` for a fresh one — which stages its data through
+    *      [[stage]] and returns a [[Commit]], or a [[NoOp]] the loop
+    *      returns as is;
+    *   4. CASes the manifest at exactly v + 1 ([[commitVersion]]); a win
+    *      runs the commit's `onWin` and returns v + 1.
+    *
+    * Two disciplines, chosen by where the image comes from:
+    *
+    *   - a CALLER-SUPPLIED image ([[atomicReplace]], [[createVersioned]],
+    *     [[restore]]) is `Replay`: the staged data is re-published at
+    *     whatever the next number is. Last-writer-wins is their documented
+    *     contract, and race recovery costs one manifest write;
+    *   - an image DERIVED from the head (every other verb) is `Recompute`:
+    *     once the head moved, the stale dirs are deleted and the image is
+    *     recomputed against the new head. Re-publishing it would erase the
+    *     winner's commit — the classic lakehouse lost update (Delta's
+    *     ConflictChecker never replays a stale rewrite either).
+    *     [[mergeVersioned]] first tries a `Rebase` onto the winner, which
+    *     succeeds when the two commits are disjoint ([[rebaseOnto]]).
+    *
+    * Orphan cleanup lives here: staged dirs are deleted when a recompute
+    * replaces them, on txn re-delivery, and when the verb gives up after
+    * [[MaxCommitAttempts]] lost races with an IOException naming it. (The
+    * one other cleanup is [[validateCommit]]'s, for a CHECK-constraint
+    * violation before any publish.) Returns the committed version, the
+    * NoOp's version, or -1 for a txn re-delivery.
+    */
+  private def commitLoop(
+      spark: SparkSession, path: String, verb: String,
+      txn: Option[(String, Long)] = None, missing: Option[String] = Some(""))(
+      attempt: Long => Attempt): Long = {
+    requireTxnAppId(txn)
+    var staged: Option[Commit] = None // the attempt whose dirs are on disk
+    var pending: Commit = null        // what staged publishes as at base + 1
+    var base = -1L
+    def drop(): Unit = {
+      staged.foreach(_.staged.foreach { d =>
+        val p = new Path(path, d)
+        hadoopFs(spark, p).delete(p, true)
+      })
+      staged = None
+    }
+    var attempts = 0
+    while (attempts < MaxCommitAttempts) {
+      attempts += 1
+      if (txnAlreadyApplied(spark, path, txn)) { drop(); return -1L }
+      val v = currentVersion(spark, path).getOrElse(missing.fold(0L)(why =>
+        throw new IllegalStateException(s"$verb: no versioned table at $path$why")))
+      val carried = staged.flatMap { s =>
+        if (v == base) Some(pending)
+        else s.onMove match {
+          case Replay => Some(pending)
+          case Rebase(onto) => onto(v)
+          case Recompute => None
+        }
+      }
+      carried match {
+        case Some(c) => pending = c
+        case None =>
+          drop()
+          attempt(v) match {
+            case NoOp(current) => return current
+            case c: Commit => staged = Some(c); pending = c
+          }
+      }
+      base = v
+      if (commitVersion(spark, path, v + 1, pending.body, txn, pending.dv, pending.colmap)) {
+        staged.get.onWin(v + 1)
+        return v + 1
+      }
+    }
+    drop()
+    throw new java.io.IOException(
+      s"$verb: lost the version race at $path $MaxCommitAttempts times; giving up")
+  }
+
+  /** Stage one commit's data: `df` lands in a fresh `_d*` dir with its
+    * stats sidecar, then the table's CHECK constraints run against what
+    * landed ([[validateCommit]]). Returns the dir name for the manifest.
+    * `physicalNames` marks a partial commit written under an active
+    * column mapping; `keepLayout` — see [[writePlain]].
+    */
+  private def stage(
+      spark: SparkSession, path: String, df: DataFrame,
+      partitionColumns: Seq[String] = Nil, filesPerPartition: Int = 1,
+      writeOptions: Map[String, String] = Map.empty,
+      keepLayout: Boolean = false, physicalNames: Boolean = false): String = {
+    val dataDir = freshDataDirName()
+    val dir = new Path(path, dataDir).toString
+    writePlain(df, dir, partitionColumns, filesPerPartition, writeOptions, keepLayout)
+    DataSkipping.writeStats(spark, dir, df.schema)
+    validateCommit(spark, path, dataDir, physicalNames)
+    dataDir
+  }
+
+  /** [[stage]] a whole unpartitioned table image, identity, default and
+    * generated columns filled first — the image of a full-rewrite commit.
+    */
+  private def stageImage(
+      spark: SparkSession, path: String, df: DataFrame,
+      partitionColumns: Seq[String] = Nil,
+      writeOptions: Map[String, String] = Map.empty): String =
+    stage(spark, path,
+      GeneratedColumns.fill(spark, path, ColumnDefaults.fill(spark, path,
+        IdentityColumns.fill(spark, path, df))),
+      partitionColumns, writeOptions = writeOptions)
+
+  /** Stage a deletion vector: the row addresses ([[DvFileCol]],
+    * [[DvIdxCol]]) of `rows` land in a fresh DV dir. Returns its
+    * table-relative name.
+    */
+  private def stageDv(spark: SparkSession, path: String, rows: DataFrame): String = {
+    val name = s"$DvDirName/dv${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
+    sizedForWrite(rows.select(col(DvFileCol), col(DvIdxCol)))
+      .write.mode(SaveMode.Overwrite).parquet(new Path(path, name).toString)
+    name
+  }
+
+  /** [[stageDv]] when `rows` is non-empty, None (and nothing staged)
+    * otherwise. ONE job computes the matches: the DV is written, then
+    * what landed is probed — an isEmpty pre-check would run the match
+    * twice.
+    */
+  private def stageDvIfAny(spark: SparkSession, path: String, rows: DataFrame): Option[String] = {
+    val name = stageDv(spark, path, rows)
+    val dir = new Path(path, name)
+    if (!spark.read.parquet(dir.toString).isEmpty) Some(name)
+    else { hadoopFs(spark, dir).delete(dir, true); None }
+  }
+
   // ---- partitioned versioned layout --------------------------------------
   // Manifest file content formats:
   //   unpartitioned:  one line, the version's data dir name
@@ -1112,6 +1292,82 @@ object ParquetTable {
       (p, d)
     }.toSeq)
   }
+
+  /** Partition columns recovered from partition entries: "a=1/b=2" → a, b. */
+  private def partitionColumnsOf(entries: Seq[(String, String)]): Seq[String] =
+    entries.head._1.split('/').toSeq.map(_.split('=')(0))
+
+  /** The manifest body for partition entries: sorted `partitionDir\tdataDir` lines. */
+  private def entriesBody(entries: Seq[(String, String)]): String =
+    entries.sorted.map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
+
+  /** Partition entries grouped by data dir, in data-dir order: (dataDir,
+    * the partition dirs it serves). A partition may span several dirs
+    * after append-entry INSERTs, so every slice reader goes through here.
+    */
+  private def byDataDir(entries: Seq[(String, String)]): Seq[(String, Seq[String])] =
+    entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dd, es) => dd -> es.map(_._1) }
+
+  /** One plain scan leg per data dir of a partitioned slice, rooted at
+    * exactly the entries' partition subdirs (basePath recovers the
+    * partition columns).
+    */
+  private def sliceLegs(
+      spark: SparkSession, path: String, entries: Seq[(String, String)]): Seq[DataFrame] =
+    byDataDir(entries).map { case (dataDir, parts) =>
+      val base = new Path(path, dataDir).toString
+      spark.read.option("basePath", base).parquet(parts.map(p => s"$base/$p"): _*)
+    }
+
+  /** The affected-slice reader: the live rows of version `v`'s `entries`.
+    * Each leg is DV-filtered on its scan relation, aligned to the
+    * version's schema (dirs from before a schema evolution read appended
+    * columns as typed NULLs) and — when `logical` — put under the
+    * version's column mapping, so a verb computes in logical space and
+    * writes back through [[toPhysical]].
+    */
+  private def readSlice(
+      spark: SparkSession, path: String, v: Long, entries: Seq[(String, String)],
+      logical: Boolean = true): DataFrame = {
+    val schema = versionSchema(spark, path, v)
+    val dv = dvOf(spark, path, v)
+    val (renames, drops) =
+      if (logical) columnMapping(spark, path, v) else (Map.empty[String, String], Nil)
+    sliceLegs(spark, path, entries).map { leg =>
+      val df = dvFilterLeg(leg, dv)
+      applyColmapTo(renames, drops, schema.map(alignTo(df, _)).getOrElse(df))
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The row-address reader: the live rows of version `v` — or of its
+    * partitioned `entries` slice — with their row addresses
+    * ([[DvFileCol]], [[DvIdxCol]]) attached and rows a prior DV retired
+    * excluded, so a new DV holds only live matches. Legs stay physical
+    * through the DV join (row addresses are name-agnostic); the logical
+    * view goes on after it, so predicates and keys resolve under a
+    * column mapping.
+    */
+  private def addressedRows(
+      spark: SparkSession, path: String, v: Long,
+      entries: Option[Seq[(String, String)]] = None): DataFrame = {
+    val dv = dvOf(spark, path, v)
+    val (renames, drops) = columnMapping(spark, path, v)
+    entries.fold(versionLegs(spark, path, v))(sliceLegs(spark, path, _))
+      .map(leg => applyColmapTo(renames, drops, liveAddressed(leg, dv)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** What a commit staged in `dataDir`, read back — only the `parts`
+    * partition dirs of a partitioned commit — under version `v`'s logical
+    * view: the post-image of a CDF capture, never a re-run of the plan
+    * that produced it.
+    */
+  private def stagedRows(
+      spark: SparkSession, path: String, v: Long, dataDir: String,
+      parts: Seq[String] = Nil): DataFrame =
+    applyColmap(spark, path, v,
+      if (parts.isEmpty) spark.read.parquet(new Path(path, dataDir).toString)
+      else sliceLegs(spark, path, parts.map(_ -> dataDir)).head)
 
   /** The widest (superset) schema among `schemas` — well-defined under
     * append-only evolution, where every dir's schema is a prefix-superset
@@ -1255,9 +1511,9 @@ object ParquetTable {
         // pruning AND sidecar file skipping at planning time. Dirs
         // without a schema-bearing sidecar (pre-feature) fall back to
         // the legacy unioned basePath read.
-        val groups = entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dataDir, es) =>
+        val groups = byDataDir(entries).map { case (dataDir, parts) =>
           val base = new Path(path, dataDir)
-          (base, es.map(_._1), DataSkipping.readStats(spark, base.toString))
+          (base, parts, DataSkipping.readStats(spark, base.toString))
         }
         // the version's table schema is the SUPERSET across dirs: after a
         // schema-evolving merge, untouched partitions keep old dirs whose
@@ -1291,11 +1547,7 @@ object ParquetTable {
               (dataSchema.fields ++ index.partitionSchema.fields)
                 .map(f => f.name -> f.dataType).toMap)
             Seq(GraftColumnBridge.ofFileIndex(spark, index, dataSchema, cs))
-          case None =>
-            groups.map { case (base, partDirs, _) =>
-              spark.read.option("basePath", base.toString)
-                .parquet(partDirs.map(p => s"$base/$p"): _*)
-            }
+          case None => sliceLegs(spark, path, entries)
         }
     }
 
@@ -1344,166 +1596,89 @@ object ParquetTable {
 
   /** Create (or fully replace) a PARTITIONED versioned table: the image
     * lands in one fresh data dir; the manifest maps every partition to it.
+    * A caller-supplied image — see [[commitLoop]] for the race contract.
     */
   def createVersioned(
       df: DataFrame, path: String, partitionColumns: Seq[String],
       filesPerPartition: Int = 1, txn: Option[(String, Long)] = None,
-      writeOptions: Map[String, String] = Map.empty): Unit =
-    publishVersioned(GeneratedColumns.fill(df.sparkSession, path,
-      ColumnDefaults.fill(df.sparkSession, path, df)),
-      path, partitionColumns, filesPerPartition,
-      preserveLayout = false, txn, writeOptions)
-
-  /** Shared partitioned-version publish. `preserveLayout = true` writes
-    * `df`'s task layout as-is (no per-partition re-clustering) — the
-    * OPTIMIZE ZORDER path, whose range-partitioned slabs ARE the file
-    * layout being published.
-    */
-  private def publishVersioned(
-      df: DataFrame, path: String, partitionColumns: Seq[String],
-      filesPerPartition: Int, preserveLayout: Boolean,
-      txn: Option[(String, Long)] = None,
       writeOptions: Map[String, String] = Map.empty): Unit = {
     require(partitionColumns.nonEmpty,
       "createVersioned is for partitioned tables; use create for unpartitioned")
     val spark = df.sparkSession
-    val dataDir = freshDataDirName()
-    if (preserveLayout)
-      df.write.mode(SaveMode.Overwrite).options(writeOptions)
-        .partitionBy(partitionColumns: _*)
-        .parquet(new Path(path, dataDir).toString)
-    else
-      writePlain(df, new Path(path, dataDir).toString, partitionColumns,
-        filesPerPartition, writeOptions)
-    DataSkipping.writeStats(spark, new Path(path, dataDir).toString, df.schema)
-    validateCommit(spark, path, dataDir)
-    val entries = partitionDirsOf(df, partitionColumns)
-      .map(p => s"$p\t$dataDir").mkString("\n")
-    var committed = false
-    var attempts = 0
-    while (!committed) {
-      attempts += 1
-      require(attempts <= 10, s"createVersioned: lost the version race at $path")
-      // same re-delivery re-check as atomicReplace: losing the CAS to a
-      // racer that committed this very txn must not commit it twice
-      if (txnAlreadyApplied(spark, path, txn)) {
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-        return
-      }
-      val v = currentVersion(spark, path).getOrElse(0L) + 1
-      committed = commitVersion(spark, path, v, entries, txn)
+    val image = GeneratedColumns.fill(spark, path, ColumnDefaults.fill(spark, path, df))
+    commitLoop(spark, path, "createVersioned", txn, missing = None) { _ =>
+      val dataDir = stage(spark, path, image, partitionColumns, filesPerPartition,
+        writeOptions)
+      Commit(entriesBody(partitionDirsOf(image, partitionColumns).map(_ -> dataDir)),
+        staged = Seq(dataDir), onMove = Replay)
     }
+    ()
   }
 
-  /** Outcome of [[rebaseVersionedCommit]]: `Rebased(v)` landed the
-    * already-written commit at version `v` on top of the winner without
-    * recomputing; `RebaseConflict` means a concurrent commit overlaps
-    * this one, and the caller's loop must recompute from the new
-    * snapshot.
-    */
-  private sealed trait RebaseOutcome
-  private final case class Rebased(version: Long) extends RebaseOutcome
-  private case object RebaseConflict extends RebaseOutcome
-
-  /** After a partitioned merge loses the version CAS, try to land its
-    * already-written data dir on top of the winner WITHOUT recomputing —
-    * the manifest-entry re-expression of Delta's ConflictChecker
-    * (`OptimisticTransaction.checkForConflicts`, which rebases a lost
-    * commit onto winning transactions when their read/write sets are
-    * disjoint). The lost merge rebases iff every concurrent winner is
-    * DISJOINT from it:
+  /** The [[Rebase]] of a partitioned merge that lost the version CAS:
+    * land its already-written data dir on top of the winner at `head`
+    * WITHOUT recomputing — the manifest-entry re-expression of Delta's
+    * ConflictChecker (`OptimisticTransaction.checkForConflicts`, which
+    * rebases a lost commit onto winning transactions when their
+    * read/write sets are disjoint). The merge computed against `baseV`
+    * rebases iff every commit since is DISJOINT from it:
     *
-    *   - no winner re-pointed, consolidated, or appended an entry of any
-    *     affected partition (Delta: `ConcurrentAppendException` /
+    *   - none re-pointed, consolidated, or appended an entry of any
+    *     `affected` partition (Delta: `ConcurrentAppendException` /
     *     `ConcurrentWriteException` — the winner changed files this merge
     *     read or replaces);
-    *   - no winner removed a DV this merge's rewrite folded in (a
-    *     concurrent restore/OPTIMIZE materialized state out from under
-    *     it);
-    *   - no winner added a DV targeting an affected partition's base data
-    *     dirs (Delta: `ConcurrentDeleteReadException` — the winner
-    *     deleted rows inside the slice this merge read; rebasing would
-    *     resurrect them).
+    *   - none changed the column mapping (the dir was written under the
+    *     base map's physical names);
+    *   - none removed a DV this merge's rewrite folded in (a concurrent
+    *     restore/OPTIMIZE materialized state out from under it);
+    *   - none added a DV targeting an affected partition's data dirs
+    *     (Delta: `ConcurrentDeleteReadException` — the winner deleted
+    *     rows inside the slice this merge read; rebasing would resurrect
+    *     them).
     *
     * On disjointness the commit re-publishes against the WINNER's
-    * manifest: untouched entries come from the winner, affected entries
-    * point at the dir this merge already wrote — a manifest-only retry
-    * with zero data I/O, which is what makes concurrent ETL into
-    * different date partitions of a 100 TB table scale (the recompute
-    * fallback would re-read and re-write whole partitions per race).
-    * Several racing winners are absorbed by looping onto each new head.
-    *
-    * A winner that only EVOLVED the schema (appended columns via a new
-    * dir elsewhere) is not a conflict: reads align every dir to the
-    * version's superset sidecar schema, so the rebased dir serves the
-    * appended columns as typed NULLs exactly like any untouched
-    * partition.
+    * manifest: untouched entries come from the winner, the `mapped`
+    * partitions point at `dataDir` (beside their old entries when
+    * `appendBesideOld` — the merge-on-read tier), and `newDv` rides the
+    * winner's DV header — a manifest-only retry with zero data I/O, which
+    * is what makes concurrent ETL into different date partitions of a
+    * 100 TB table scale. `affected` is the full set the merge read (for
+    * conflict detection); `mapped` can be smaller when a conditional
+    * DELETE emptied a partition (no subdir exists for it). A winner that
+    * only EVOLVED the schema elsewhere is not a conflict: reads align
+    * every dir to the version's superset sidecar schema.
     */
-  private def rebaseVersionedCommit(
-      spark: SparkSession, path: String, baseV: Long,
-      affected: Seq[String], dataDir: String,
-      appendBesideOld: Boolean,
-      newDvName: Option[String],
-      txn: Option[(String, Long)],
-      mapped: Option[Seq[String]] = None): RebaseOutcome = {
-    // `affected` drives CONFLICT detection (the full set this merge read);
-    // `mapped` (default: affected) is the subset that re-points to the new
-    // data dir — a rewrite whose conditional DELETE emptied a partition
-    // must keep that partition in the conflict check but out of the
-    // manifest (no subdir exists for it).
-    val remap = mapped.getOrElse(affected)
+  private def rebaseOnto(
+      spark: SparkSession, path: String, baseV: Long, head: Long,
+      affected: Seq[String], mapped: Seq[String], dataDir: String,
+      appendBesideOld: Boolean, newDv: Option[String]): Option[Commit] = {
     val affectedSet = affected.toSet
-    val baseEntries = partitionEntries(spark, path, baseV)
-      .getOrElse(return RebaseConflict)
-    val baseAff = baseEntries.filter(e => affectedSet(e._1)).sorted
+    def affectedOf(v: Long) =
+      partitionEntries(spark, path, v).map(_.filter(e => affectedSet(e._1)).sorted)
+    val headEntries = partitionEntries(spark, path, head).getOrElse(Nil)
     val baseDvs = dvDirs(spark, path, baseV)
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      // a racer may have committed this very txn: hand back to the
-      // caller's loop, whose re-delivery re-check cleans up and returns
-      if (txnAlreadyApplied(spark, path, txn)) return RebaseConflict
-      val vNew = currentVersion(spark, path).getOrElse(return RebaseConflict)
-      val newEntries = partitionEntries(spark, path, vNew)
-        .getOrElse(return RebaseConflict)
-      val newDvs = dvDirs(spark, path, vNew)
-      if (newEntries.filter(e => affectedSet(e._1)).sorted != baseAff)
-        return RebaseConflict
-      // a winner that changed the COLUMN MAPPING invalidates this commit's
-      // physical translation (its dir was written under the base map) —
-      // recompute rather than publish files named for the wrong schema
-      if (columnMapping(spark, path, vNew) != columnMapping(spark, path, baseV))
-        return RebaseConflict
-      if (!baseDvs.forall(newDvs.contains)) return RebaseConflict
-      val addedDvs = newDvs.filterNot(baseDvs.contains)
-      if (addedDvs.nonEmpty) {
-        // DV file keys are `dataDir/partitionDir/file` (see
-        // [[dvFileKey]]), so the overlap check runs at (dataDir,
-        // partition) granularity — a winner's DV inside a SHARED data
-        // dir (the create dir holds every partition) conflicts only
-        // when it targets one of THIS merge's partitions. One
-        // distinct-key scan of the added DVs (small by construction:
-        // 16 B/deleted row, distinct keys = files touched) decides it.
-        val affPrefixes = baseAff.map { case (p, dd) => s"$dd/$p/" }
-        val touches = dvFrame(spark, path, addedDvs)
-          .select(col(DvFileCol)).distinct().collect()
-          .exists(r => affPrefixes.exists(r.getString(0).startsWith))
-        if (touches) return RebaseConflict
-      }
-      val rebasedEntries =
-        if (appendBesideOld) newEntries ++ remap.map(_ -> dataDir)
-        else newEntries.filterNot(e => affectedSet(e._1)) ++
-          remap.map(_ -> dataDir)
-      if (rebasedEntries.isEmpty) return RebaseConflict
-      val rebased = rebasedEntries
-        .sorted.map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-      if (commitVersion(spark, path, vNew + 1, rebased, txn,
-          dv = newDvs ++ newDvName.toSeq,
-          colmap = carriedColmap(spark, path, vNew)))
-        return Rebased(vNew + 1)
+    val headDvs = dvDirs(spark, path, head)
+    val addedDvs = headDvs.filterNot(baseDvs.contains)
+    // DV file keys are `dataDir/partitionDir/file` (see [[dvFileKey]]), so
+    // the overlap check runs at (dataDir, partition) granularity — a
+    // winner's DV inside a SHARED data dir (the create dir holds every
+    // partition) conflicts only when it targets one of THIS merge's
+    // partitions. One distinct-key scan of the added DVs (small by
+    // construction: 16 B/deleted row, distinct keys = files touched).
+    def dvTouchesSlice = {
+      val prefixes = affectedOf(baseV).getOrElse(Nil).map { case (p, dd) => s"$dd/$p/" }
+      dvFrame(spark, path, addedDvs).select(col(DvFileCol)).distinct().collect()
+        .exists(r => prefixes.exists(r.getString(0).startsWith))
     }
-    RebaseConflict
+    val disjoint = affectedOf(baseV).isDefined && affectedOf(head) == affectedOf(baseV) &&
+      columnMapping(spark, path, head) == columnMapping(spark, path, baseV) &&
+      baseDvs.forall(headDvs.contains) && (addedDvs.isEmpty || !dvTouchesSlice)
+    val rebased =
+      (if (appendBesideOld) headEntries else headEntries.filterNot(e => affectedSet(e._1))) ++
+        mapped.map(_ -> dataDir)
+    if (!disjoint || rebased.isEmpty) None
+    else Some(Commit(entriesBody(rebased), dv = headDvs ++ newDv,
+      colmap = carriedColmap(spark, path, head)))
   }
 
   /** Upsert into a partitioned VERSIONED table: reads only the affected
@@ -1511,18 +1686,15 @@ object ParquetTable {
     * those partitions into one fresh data dir, and publishes a manifest
     * that re-points just those entries. Untouched partitions: zero I/O.
     *
-    * Concurrency (Delta ConflictChecker parity — see
-    * [[rebaseVersionedCommit]]): concurrent merges into DISJOINT
-    * partitions both land, and the loser lands by OCC REBASE — it keeps
-    * the data dir it already wrote and re-publishes a manifest on top of
-    * the winner's, a metadata-only retry with no data I/O. Overlapping
-    * commits (same partition touched, or a concurrent DV delete inside
-    * an affected partition) make the loser RECOMPUTE from the winner's
-    * snapshot, so same-partition races serialize last-writer-wins per
-    * pk, concurrent row-deletes are never resurrected, and both writers
-    * always land (bounded retries; no `ConcurrentAppendException`
-    * surfaced to the caller — the rebase Delta would throw for is
-    * absorbed by the recompute tier).
+    * Concurrency: a derived image with a [[Rebase]] ([[commitLoop]]).
+    * Concurrent merges into DISJOINT partitions both land, the loser by
+    * a manifest-only rebase onto the winner ([[rebaseOnto]]).
+    * Overlapping commits (same partition touched, or a concurrent DV
+    * delete inside an affected partition) make the loser RECOMPUTE from
+    * the winner's snapshot, so same-partition races serialize
+    * last-writer-wins per pk, concurrent row-deletes are never
+    * resurrected, and both writers land (no `ConcurrentAppendException`
+    * surfaced to the caller).
     */
   def mergeVersioned(
       spark: SparkSession,
@@ -1544,252 +1716,151 @@ object ParquetTable {
         "cdf capture nor schema evolution")
     require(!(combine.isDefined && mergeOnRead.contains(true)),
       "mergeVersioned: conditional clauses (combine) take the rewrite tier")
-    requireTxnAppId(txn)
     TableProperties.requireNotAppendOnly(spark, path, "mergeVersioned")
     val upd = GeneratedColumns.fill(spark, path,
       ColumnDefaults.fill(spark, path, updates)).dropDuplicates(pk)
+    if (currentVersion(spark, path).isEmpty) {
+      require(combine.isEmpty,
+        s"mergeVersioned: conditional clauses need an existing target at $path")
+      createVersioned(upd, path, partitionColumns, filesPerPartition, txn)
+      return
+    }
     // stats-informed planning — lazy: the probe runs only when a branch
     // below consults it (ANALYZEd tables only; see [[planMergeStats]])
     lazy val statsPlan = planMergeStats(spark, path, updates, pk)
-    var committed = false
-    var attempts = 0
-    while (!committed) {
-      attempts += 1
-      require(attempts <= 10, s"mergeVersioned: lost the version race at $path")
-      if (txnAlreadyApplied(spark, path, txn)) return
-      currentVersion(spark, path) match {
-        case None =>
-          require(combine.isEmpty,
-            s"mergeVersioned: conditional clauses need an existing target at $path")
-          createVersioned(upd, path, partitionColumns, filesPerPartition, txn)
-          committed = true
-        case Some(v) =>
-          val entries = partitionEntries(spark, path, v).getOrElse(
-            throw new IllegalStateException(
-              s"mergeVersioned: $path holds an UNPARTITIONED versioned table"))
-          val affected = partitionDirsOf(upd, partitionColumns)
-          val affectedSet = affected.toSet
-          // ALL entries of the affected partitions — a partition can
-          // span several dirs after append-entry INSERTs, and the slice
-          // must union every one or the merge silently loses rows
-          val affectedEntries = entries.filter(e => affectedSet(e._1))
-          // the version's table schema (sidecars only — no listing): the
-          // anchor both for aligning mixed-schema affected dirs after an
-          // earlier evolution and for widening inserts into new partitions.
-          // PHYSICAL names; under an active column mapping the slice gets
-          // the logical view applied after alignment, the merge computes
-          // in logical space, and the write translates back (toPhysical)
-          // so every committed file stays physical-named and the map
-          // carries forward — Delta's mutate-under-mapping model.
-          val tableSchema = versionSchema(spark, path, v)
+    lazy val affected = partitionDirsOf(upd, partitionColumns)
+    commitLoop(spark, path, "mergeVersioned", txn) { v =>
+      val entries = partitionEntries(spark, path, v).getOrElse(
+        throw new IllegalStateException(
+          s"mergeVersioned: $path holds an UNPARTITIONED versioned table"))
+      val affectedSet = affected.toSet
+      val affectedEntries = entries.filter(e => affectedSet(e._1))
+      // the affected slice in LOGICAL space; the merge computes there and
+      // the write translates back (toPhysical), so every committed file
+      // stays physical-named and the map carries forward — Delta's
+      // mutate-under-mapping model. Deletion vectors apply per leg, so a
+      // merge never resurrects vector-deleted rows; the DV header is
+      // carried into the commit, keeping deletes on UNTOUCHED partitions
+      val target =
+        if (affectedEntries.isEmpty) None
+        else Some(readSlice(spark, path, v, affectedEntries))
+      // merge-on-read tier for HOT partitions (the partitioned twin of
+      // [[mergeVectors]]): matched rows in the affected slice retire by
+      // deletion vector, the update set appends as ONE new dir with
+      // entries beside the old ones — O(update rows) instead of rewriting
+      // the whole affected partition. Auto-tiered like the unpartitioned
+      // path: affected-slice rows (from sidecars, metadata-only) above
+      // [[MorAutoRowsFloor]] AND every affected partition still under the
+      // [[MorMaxDataDirs]] dir cap (at the cap the rewrite runs and
+      // consolidates). Schema evolution always rewrites.
+      val useMor = combine.isEmpty && !evolveSchema && target.isDefined &&
+        mergeOnRead.getOrElse {
+          val rows = affectedSliceRows(spark, path, affectedEntries)
+          val maxDirs = affectedEntries.groupBy(_._1).values
+            .map(_.size).maxOption.getOrElse(0)
+          rows.exists(_ > MorAutoRowsFloor) && maxDirs < MorMaxDataDirs &&
+            !statsPlan.bulkUpdate // bulk updates rewrite (ANALYZEd tables)
+        }
+      if (useMor) {
+        val t = target.get
+        val cols = t.columns.toSeq
+        val updAligned = upd.select(cols.map(col): _*)
+        val updKeys = hintKeys(
+          updAligned.select(pk.map(col): _*).distinct(), statsPlan.broadcastKeys)
+        val dataDir = stage(spark, path, toPhysical(spark, path, v, updAligned),
+          partitionColumns, filesPerPartition, physicalNames = true)
+        // (file, row_index) of affected-slice rows whose pk is replaced
+        val dvName = stageDvIfAny(spark, path,
+          addressedRows(spark, path, v, Some(affectedEntries)).join(updKeys, pk, "left_semi"))
+        Commit(entriesBody(entries ++ affected.map(_ -> dataDir)),
+          staged = dataDir +: dvName.toSeq,
+          dv = dvDirs(spark, path, v) ++ dvName,
+          colmap = carriedColmap(spark, path, v),
+          // committed appended dir = the post-images; pre side = the
+          // affected slice's replaced keys (re-selected: the semi join
+          // hoists pk columns) — valid under rebase too: disjointness
+          // proved no winner touched the slice
+          onWin = committedV => if (cdf) writeChangeManifest(spark, path, committedV,
+            changeRowsBetween(
+              t.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
+              stagedRows(spark, path, v, dataDir, affected).select(cols.map(col): _*),
+              pk, "right_outer")),
+          // entries unchanged means the DV's (file, row_index) targets
+          // are still the live base files
+          onMove = Rebase(w => rebaseOnto(spark, path, v, w, affected, affected, dataDir,
+            appendBesideOld = true, dvName)))
+      } else {
+        // the version's LOGICAL table schema, from sidecars alone: the
+        // anchor for images of partitions the table does not hold yet
+        lazy val logicalSchema = {
           val (cmRenames, cmDrops) = columnMapping(spark, path, v)
-          val logicalSchema = tableSchema.map(colmapSchema(cmRenames, cmDrops, _))
-          // deletion vectors apply to the target slice (per leg, before
-          // align/union — see dvFilterLeg) so a merge can never resurrect
-          // vector-deleted rows; the header is carried into the commit
-          // below, keeping deletes on UNTOUCHED partitions in force
-          val dv = dvOf(spark, path, v)
-          val target =
-            if (affectedEntries.isEmpty) None
-            else Some(affectedEntries.groupBy(_._2).toSeq.sortBy(_._1).map {
-              case (dataDir, es) =>
-                val base = new Path(path, dataDir).toString
-                val df = dvFilterLeg(spark.read.option("basePath", base)
-                  .parquet(es.map(e => s"$base/${e._1}"): _*), dv)
-                applyColmapTo(cmRenames, cmDrops,
-                  tableSchema.map(alignTo(df, _)).getOrElse(df))
-            }.reduce(_.unionByName(_)))
-          // merge-on-read tier for HOT partitions (the partitioned twin
-          // of [[mergeVectors]], possible now that a partition may span
-          // several dirs): matched rows in the affected slice retire by
-          // deletion vector, the update set appends as ONE new dir with
-          // entries beside the old ones — O(update rows) instead of
-          // rewriting the whole affected partition. Auto-tiered like the
-          // unpartitioned path: affected-slice rows (from sidecars,
-          // metadata-only) above [[MorAutoRowsFloor]] AND every affected
-          // partition still under the [[MorMaxDataDirs]] dir cap (at the
-          // cap the rewrite runs and consolidates). Schema evolution
-          // always rewrites.
-          val useMor = combine.isEmpty && !evolveSchema && target.isDefined &&
-            mergeOnRead.getOrElse {
-              val rows = affectedSliceRows(spark, path, affectedEntries)
-              val maxDirs = affectedEntries.groupBy(_._1).values
-                .map(_.size).maxOption.getOrElse(0)
-              rows.exists(_ > MorAutoRowsFloor) && maxDirs < MorMaxDataDirs &&
-                !statsPlan.bulkUpdate // bulk updates rewrite (ANALYZEd tables)
+          versionSchema(spark, path, v).map(colmapSchema(cmRenames, cmDrops, _))
+        }
+        val merged = target match {
+          case Some(t) =>
+            combine.map(_(t, upd)).getOrElse(mergeFrames(t, upd, pk,
+              evolveSchema, broadcastKeys = statsPlan.broadcastKeys))
+          case None if combine.isDefined =>
+            // all affected partitions are NEW: every source row is
+            // unmatched — the clause image against an empty frame of the
+            // TABLE schema (its LOGICAL view under a mapping), never
+            // upd.schema: the source may carry extra clause-only columns,
+            // and a committed dir with those columns would break every
+            // later multi-dir unionByName read
+            combine.get(spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              logicalSchema.getOrElse(readVersion(spark, path, v).schema)), upd)
+          case None =>
+            if (!evolveSchema) upd
+            else logicalSchema match {
+              // only NEW partitions touched: inserts still align with the
+              // table — missing table columns carry typed NULLs, genuinely
+              // new columns append after them
+              case Some(ts) =>
+                val missing = ts.fields.filterNot(f =>
+                  upd.columns.exists(_.equalsIgnoreCase(f.name)))
+                val extras = upd.columns.filterNot(c =>
+                  ts.fieldNames.exists(_.equalsIgnoreCase(c)))
+                missing.foldLeft(upd)((d, f) =>
+                  d.withColumn(f.name, lit(null).cast(f.dataType)))
+                  .select((ts.fieldNames.toSeq ++ extras).map(col): _*)
+              case None => upd
             }
-          if (useMor) {
-            val t = target.get
-            val cols = t.columns.toSeq
-            val updAligned = upd.select(cols.map(col): _*)
-            val updKeys = hintKeys(
-              updAligned.select(pk.map(col): _*).distinct(), statsPlan.broadcastKeys)
-            // (file, row_index) of affected-slice rows whose pk is being
-            // replaced — prior DVs excluded, schemas normalized to
-            // pk+key columns so post-evolution dirs union cleanly
-            val matched = affectedEntries.groupBy(_._2).toSeq.sortBy(_._1).map {
-              case (dataDir, es) =>
-                val base = new Path(path, dataDir).toString
-                val leg = spark.read.option("basePath", base)
-                  .parquet(es.map(e => s"$base/${e._1}"): _*)
-                val withMeta = leg
-                  .withColumn(DvFileCol, dvFileKey(col("_metadata.file_path")))
-                  .withColumn(DvIdxCol, col("_metadata.row_index"))
-                // logical view over the physical leg (pk names are
-                // logical; the row-address columns pass through the map)
-                applyColmapTo(cmRenames, cmDrops,
-                  dv.fold(withMeta)(d =>
-                    withMeta.join(d, Seq(DvFileCol, DvIdxCol), "left_anti")))
-                  .select(pk.map(col) ++ Seq(col(DvFileCol), col(DvIdxCol)): _*)
-            }.reduce(_.unionByName(_))
-              .join(updKeys, pk, "left_semi")
-              .select(col(DvFileCol), col(DvIdxCol))
-            val dataDir = freshDataDirName()
-            val updPhys = toPhysical(spark, path, v, updAligned)
-            writePlain(updPhys, new Path(path, dataDir).toString,
-              partitionColumns, filesPerPartition)
-            DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-              updPhys.schema)
-            validateCommit(spark, path, dataDir, physicalNames = true)
-            val dvName = s"$DvDirName/dv${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
-            val dvPath = new Path(path, dvName)
-            sizedForWrite(matched)
-              .write.mode(SaveMode.Overwrite).parquet(dvPath.toString)
-            val hasMatches = !spark.read.parquet(dvPath.toString).isEmpty
-            if (!hasMatches) hadoopFs(spark, dvPath).delete(dvPath, true)
-            val newEntries = (entries ++ affected.map(_ -> dataDir)).sorted
-              .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-            val dvs = dvDirs(spark, path, v) ++ (if (hasMatches) Seq(dvName) else Nil)
-            var committedV =
-              if (commitVersion(spark, path, v + 1, newEntries, txn, dvs,
-                carriedColmap(spark, path, v))) v + 1
-              else -1L
-            if (committedV < 0)
-              // lost the CAS: rebase onto the winner when disjoint (keep
-              // the appended dir and DV — entries unchanged means the DV's
-              // (file, row_index) targets are still the live base files)
-              rebaseVersionedCommit(spark, path, v, affected, dataDir,
-                appendBesideOld = true,
-                newDvName = if (hasMatches) Some(dvName) else None,
-                txn) match {
-                case Rebased(vc) => committedV = vc
-                case RebaseConflict =>
-                  val dd = new Path(path, dataDir)
-                  hadoopFs(spark, dd).delete(dd, true)
-                  if (hasMatches) hadoopFs(spark, dvPath).delete(dvPath, true)
-              }
-            committed = committedV >= 0
-            if (committed && cdf) {
-              // committed appended dir = the post-images; pre side = the
-              // affected slice's replaced keys (re-selected: the semi
-              // join hoists pk columns) — valid under rebase too: the
-              // disjointness check proved no winner touched the slice
-              val base = new Path(path, dataDir).toString
-              val committedSlice = applyColmapTo(cmRenames, cmDrops,
-                spark.read.option("basePath", base)
-                  .parquet(affected.map(p => s"$base/$p"): _*))
-                .select(cols.map(col): _*)
-              writeChangeManifest(spark, path, committedV,
-                changeRowsBetween(
-                  t.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-                  committedSlice, pk, "right_outer"))
-            }
-          } else {
-          val merged = target match {
-            case Some(t) =>
-              combine.map(_(t, upd)).getOrElse(mergeFrames(t, upd, pk,
-                evolveSchema, broadcastKeys = statsPlan.broadcastKeys))
-            case None if combine.isDefined =>
-              // all affected partitions are NEW: every source row is
-              // unmatched — the clause image against an empty frame of
-              // the TABLE schema (its LOGICAL view under a mapping),
-              // never upd.schema: the source may carry extra clause-only
-              // columns, and a committed dir with those columns would
-              // break every later multi-dir unionByName read
-              combine.get(spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                logicalSchema.getOrElse(readVersion(spark, path, v).schema)), upd)
-            case None =>
-              if (!evolveSchema) upd
-              else logicalSchema match {
-                // only NEW partitions touched: inserts still align with
-                // the table — missing table columns carry typed NULLs,
-                // genuinely new columns append after them
-                case Some(ts) =>
-                  val missing = ts.fields.filterNot(f =>
-                    upd.columns.exists(_.equalsIgnoreCase(f.name)))
-                  val extras = upd.columns.filterNot(c =>
-                    ts.fieldNames.exists(_.equalsIgnoreCase(c)))
-                  missing.foldLeft(upd)((d, f) =>
-                    d.withColumn(f.name, lit(null).cast(f.dataType)))
-                    .select((ts.fieldNames.toSeq ++ extras).map(col): _*)
-                case None => upd
-              }
-          }
-          val dataDir = freshDataDirName()
-          val mergedPhys = toPhysical(spark, path, v, merged)
-          writePlain(mergedPhys, new Path(path, dataDir).toString, partitionColumns,
-            filesPerPartition)
-          DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-            mergedPhys.schema)
-          validateCommit(spark, path, dataDir, physicalNames = true)
-          // every affected partition consolidates onto the new dir (its
-          // old entries — possibly several — drop out). Survivors come
-          // from the WRITTEN layout, not a re-run of the merge plan: a
-          // conditional DELETE clause can empty a whole partition, and
-          // mapping it anyway would publish a dangling manifest entry
-          // (ADVICE r7 high).
-          val survivors = writtenPartitionDirs(
-            spark, path, dataDir, partitionColumns).toSet
-          require(survivors.subsetOf(affectedSet),
-            s"mergeVersioned: merged rows landed outside the affected " +
-              s"partitions at $path (${(survivors -- affectedSet).mkString(", ")})")
-          val kept = entries.filterNot(e => affectedSet(e._1)) ++
-            affected.filter(survivors).map(_ -> dataDir)
-          require(kept.nonEmpty,
-            s"mergeVersioned: merge would empty every partition of $path; " +
-              "an empty partitioned manifest is unreadable — drop the table instead")
-          val newEntries = kept.sorted
-            .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-          var committedV =
-            if (commitVersion(spark, path, v + 1, newEntries, txn,
-              dv = dvDirs(spark, path, v),
-              colmap = carriedColmap(spark, path, v))) v + 1
-            else -1L
-          if (committedV < 0)
-            // lost the CAS: rebase the rewrite onto the winner when
-            // disjoint — the consolidated dir already folded in the base
-            // DVs, which the disjointness check proves still stand.
-            // Conflict detection keeps the FULL affected set (a winner
-            // touching an emptied partition still conflicts); only the
-            // surviving partitions re-map to the new dir.
-            rebaseVersionedCommit(spark, path, v, affected, dataDir,
-              appendBesideOld = false, newDvName = None, txn,
-              mapped = Some(affected.filter(survivors))) match {
-              case Rebased(vc) => committedV = vc
-              case RebaseConflict =>
-                val dd = new Path(path, dataDir)
-                hadoopFs(spark, dd).delete(dd, true)
-            }
-          committed = committedV >= 0
-          if (committed && cdf) {
-            // capture from the COMMITTED slice (the data dir this commit
-            // published), never by re-evaluating the update plan — see
-            // the unpartitioned branch. The v-snapshot dirs the before
-            // side reads remain on disk (vacuum hasn't run). Valid under
-            // rebase too: disjointness proved no winner touched the
-            // before-side slice.
-            val base = new Path(path, dataDir).toString
-            val newSlice = applyColmapTo(cmRenames, cmDrops,
-              spark.read.option("basePath", base)
-                .parquet(affected.map(p => s"$base/$p"): _*))
-            val before = target.getOrElse(newSlice.filter(lit(false)))
-            writeChangeManifest(spark, path, committedV,
-              changeRowsBetween(before, newSlice, pk, "right_outer"))
-          }
-          } // end rewrite tier
+        }
+        val dataDir = stage(spark, path, toPhysical(spark, path, v, merged),
+          partitionColumns, filesPerPartition, physicalNames = true)
+        // every affected partition consolidates onto the new dir (its old
+        // entries — possibly several — drop out). Survivors come from the
+        // WRITTEN layout, not a re-run of the merge plan: a conditional
+        // DELETE clause can empty a whole partition, and mapping it anyway
+        // would publish a dangling manifest entry (ADVICE r7 high).
+        val survivors = writtenPartitionDirs(spark, path, dataDir, partitionColumns).toSet
+        require(survivors.subsetOf(affectedSet),
+          s"mergeVersioned: merged rows landed outside the affected " +
+            s"partitions at $path (${(survivors -- affectedSet).mkString(", ")})")
+        val kept = entries.filterNot(e => affectedSet(e._1)) ++
+          affected.filter(survivors).map(_ -> dataDir)
+        require(kept.nonEmpty,
+          s"mergeVersioned: merge would empty every partition of $path; " +
+            "an empty partitioned manifest is unreadable — drop the table instead")
+        Commit(entriesBody(kept), staged = Seq(dataDir),
+          dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v),
+          // capture from the COMMITTED slice, never by re-evaluating the
+          // update plan; the v-snapshot dirs the before side reads remain
+          // on disk (vacuum hasn't run)
+          onWin = committedV => if (cdf) {
+            val newSlice = stagedRows(spark, path, v, dataDir, affected)
+            writeChangeManifest(spark, path, committedV, changeRowsBetween(
+              target.getOrElse(newSlice.filter(lit(false))), newSlice, pk, "right_outer"))
+          },
+          // the consolidated dir already folded in the base DVs, which the
+          // disjointness check proves still stand; conflicts are judged on
+          // the FULL affected set, only survivors re-map
+          onMove = Rebase(w => rebaseOnto(spark, path, v, w, affected,
+            affected.filter(survivors), dataDir, appendBesideOld = false, None)))
       }
     }
+    ()
   }
 
   /** Row-level DELETE on a versioned table: rows matching `condition`
@@ -1831,122 +1902,72 @@ object ParquetTable {
     rewriteRows(spark, path, condition, Some(set), cdf)
   }
 
-  /** Shared core of [[delete]] (`set = None`) and [[update]]. */
+  /** Shared core of [[delete]] (`set = None`) and [[update]]: an image
+    * derived from the head ([[commitLoop]]'s recompute discipline — a
+    * raced rewrite recomputes, it never re-publishes its stale image).
+    */
   private def rewriteRows(
       spark: SparkSession, path: String, condition: Column,
       set: Option[Map[String, Column]], cdf: Boolean): Long = {
     val verb = if (set.isEmpty) "delete" else "update"
     TableProperties.requireNotAppendOnly(spark, path, verb)
-    var result = -1L
-    var attempts = 0
-    while (result < 0) {
-      attempts += 1
-      require(attempts <= 10, s"$verb: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"$verb: no versioned table at $path (row-level rewrites need " +
-          "manifest isolation; plain layouts have no safe in-place path)"))
+    // the matched slice is captured BEFORE the commit: both it and the
+    // rewrite evaluate the (deterministic) predicate over the same
+    // immutable snapshot dirs, so they are exact complements. Persisted
+    // ONLY when cdf capture will re-read it: without cdf the no-op probe
+    // is a limit-1 job (unpartitioned) or a partition-column-pruned scan
+    // (partitioned), and caching the full matched slice for either would
+    // put a table-sized fraction on executor memory/disk (ADVICE r15)
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def matchedIn(target: DataFrame): DataFrame = {
+      val m = target.filter(condition)
+      if (cdf) persisted += m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      m
+    }
+    def rewrite(df: DataFrame, resolvedSet: Option[Map[String, Column]]): DataFrame =
+      resolvedSet.fold(df.filter(!condition))(applySet(df, condition, _))
+    try commitLoop(spark, path, verb, missing = Some(" (row-level rewrites need " +
+        "manifest isolation; plain layouts have no safe in-place path)")) { v =>
+      val target = readVersion(spark, path, v)
+      requireDeterministic(target, condition, set, verb)
       partitionEntries(spark, path, v) match {
         case None =>
-          val target = readVersion(spark, path, v)
-          requireDeterministic(target, condition, set, verb)
           val resolvedSet = set.map(resolveSet(target, _, Nil, verb))
-          // matched is captured BEFORE the commit: both frames evaluate
-          // the (deterministic) predicate over the same immutable
-          // snapshot dirs, so they are exact complements. Persisted ONLY
-          // when cdf capture will re-read it (the no-op probe alone is a
-          // limit-1 job; caching the full matched slice for it would
-          // materialize a table-sized fraction to executor memory/disk
-          // for nothing — ADVICE r15).
-          val matched = target.filter(condition)
-          if (cdf) matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (matched.isEmpty) result = v // no-op
-            else {
-              val out = resolvedSet match {
-                case None => target.filter(!condition)
-                case Some(s) => applySet(target, condition, s)
-              }
-              val nv = atomicReplace(spark, path, out, Nil)
-              if (cdf) writeChangeManifest(spark, path, nv,
-                captureRewrite(matched, resolvedSet))
-              result = nv
-            }
-          } finally { if (cdf) matched.unpersist(); () }
-        case Some(entries) =>
-          val partitionColumns = entries.head._1.split('/').toSeq.map(_.split('=')(0))
-          val target = readVersion(spark, path, v)
-          requireDeterministic(target, condition, set, verb)
-          // persisted ONLY when the cdf capture will re-read the slice:
-          // without cdf the affected-partition discovery runs on the
-          // partition columns alone (column-pruned scan), and caching the
-          // full matched slice just to learn its partitions would put a
-          // table-sized fraction on executor memory/disk (ADVICE r15)
-          val matched = target.filter(condition)
-          if (cdf) matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val resolvedSet = set.map(resolveSet(target, _, partitionColumns, verb))
-          try {
-          val affected = partitionDirsOf(matched, partitionColumns)
-          if (affected.isEmpty) result = v // no-op
+          val matched = matchedIn(target)
+          if (matched.isEmpty) NoOp(v)
           else {
-            val affectedSet = affected.toSet
-            // ALL entries of the affected partitions (several dirs per
-            // partition after append-entry INSERTs)
-            val affectedEntries = entries.filter(e => affectedSet(e._1))
-            // rewrite ONLY the affected partitions' slice (each dir
-            // aligned to the version schema — post-evolution old dirs
-            // read appended columns as typed NULLs). Under an active
-            // column mapping: logical view for the predicate/SET,
-            // physical names back on the way out (toPhysical), map
-            // carried — the partial-rewrite discipline of mergeVersioned.
-            val sliceSchema = versionSchema(spark, path, v)
-            val (cmR, cmD) = columnMapping(spark, path, v)
-            // vector-deleted rows stay deleted through the rewrite (per-leg
-            // DV filter, before align/union); the dv header is carried into
-            // the commit for the untouched partitions' sake
-            val dv = dvOf(spark, path, v)
-            val slice = affectedEntries.groupBy(_._2).toSeq.sortBy(_._1).map {
-              case (dataDir, es) =>
-                val base = new Path(path, dataDir).toString
-                val df = dvFilterLeg(spark.read.option("basePath", base)
-                  .parquet(es.map(e => s"$base/${e._1}"): _*), dv)
-                applyColmapTo(cmR, cmD,
-                  sliceSchema.map(alignTo(df, _)).getOrElse(df))
-            }.reduce(_.unionByName(_))
-            val newSlice = resolvedSet match {
-              case None => slice.filter(!condition)
-              case Some(s) => applySet(slice, condition, s)
-            }
-            val dataDir = freshDataDirName()
-            val newSlicePhys = toPhysical(spark, path, v, newSlice)
-            writePlain(newSlicePhys, new Path(path, dataDir).toString, partitionColumns)
-            DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-              newSlicePhys.schema)
-            validateCommit(spark, path, dataDir, physicalNames = true)
+            val dataDir = stageImage(spark, path, rewrite(target, resolvedSet))
+            Commit(dataDir, staged = Seq(dataDir), onWin = nv => if (cdf)
+              writeChangeManifest(spark, path, nv, captureRewrite(matched, resolvedSet)))
+          }
+        case Some(entries) =>
+          val partitionColumns = partitionColumnsOf(entries)
+          val matched = matchedIn(target)
+          val resolvedSet = set.map(resolveSet(target, _, partitionColumns, verb))
+          val affected = partitionDirsOf(matched, partitionColumns).toSet
+          if (affected.isEmpty) NoOp(v)
+          else {
+            // rewrite ONLY the affected partitions' slice, in logical
+            // space, physical names back on the way out — the partial-
+            // rewrite discipline of mergeVersioned
+            val newSlice = rewrite(
+              readSlice(spark, path, v, entries.filter(e => affected(e._1))), resolvedSet)
+            val dataDir = stage(spark, path, toPhysical(spark, path, v, newSlice),
+              partitionColumns, physicalNames = true)
             // a fully-deleted partition leaves the manifest; every
             // affected partition's old entries drop out wholesale
-            val remaining = partitionDirsOf(newSlice, partitionColumns).toSet
-            val newEntries = entries.filterNot(e => affectedSet(e._1)) ++
-              remaining.map(_ -> dataDir)
+            val newEntries = entries.filterNot(e => affected(e._1)) ++
+              partitionDirsOf(newSlice, partitionColumns).map(_ -> dataDir)
             require(newEntries.nonEmpty,
               s"$verb would empty every partition of $path; an empty " +
                 "partitioned manifest is unreadable — drop the table instead")
-            val content = newEntries.sorted
-              .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-            if (commitVersion(spark, path, v + 1, content,
-                dv = dvDirs(spark, path, v),
-                colmap = carriedColmap(spark, path, v))) {
-              if (cdf) writeChangeManifest(spark, path, v + 1,
-                captureRewrite(matched, resolvedSet))
-              result = v + 1
-            } else { // lost the race: re-read the winner's manifest, retry
-              val dd = new Path(path, dataDir)
-              hadoopFs(spark, dd).delete(dd, true)
-            }
+            Commit(entriesBody(newEntries), staged = Seq(dataDir),
+              dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v),
+              onWin = nv => if (cdf)
+                writeChangeManifest(spark, path, nv, captureRewrite(matched, resolvedSet)))
           }
-          } finally { if (cdf) matched.unpersist(); () }
       }
-    }
-    result
+    } finally persisted.foreach(_.unpersist())
   }
 
   /** Determinism must be checked on the ANALYZED expressions — an
@@ -2019,17 +2040,14 @@ object ParquetTable {
 
   /** Write the full new table image as the NEXT manifest version: data
     * lands ONCE in a fresh uniquely-named dir, then one atomic manifest
-    * commit publishes it. Losing the version race costs only a manifest
-    * retry onto the next number (the data dir is reused, not rewritten),
-    * so last-writer-wins is explicit and race recovery is O(manifest). Old
-    * versions stay intact (and readable via `readAt`) until `vacuum`.
+    * commit publishes it. A caller-supplied image: a lost race re-publishes
+    * the same dir at the next number, last-writer-wins ([[commitLoop]]).
+    * Old versions stay intact (and readable via `readAt`) until `vacuum`.
     * Returns the committed version number.
     *
     * `txn` (appId → txnVersion) records an idempotent-write marker in the
-    * same atomic commit; a re-delivery detected on a retry (another
-    * writer committed this txn while we raced) abandons the write, cleans
-    * up the orphan dir, and returns -1 — the caller must treat -1 as
-    * "already applied, nothing committed".
+    * same atomic commit; a re-delivery returns -1 — the caller must treat
+    * -1 as "already applied, nothing committed".
     */
   def atomicReplace(
       spark: SparkSession,
@@ -2037,36 +2055,11 @@ object ParquetTable {
       df0: DataFrame,
       partitionColumns: Seq[String],
       txn: Option[(String, Long)] = None,
-      writeOptions: Map[String, String] = Map.empty): Long = {
-    requireTxnAppId(txn)
-    val df = GeneratedColumns.fill(spark, path,
-      ColumnDefaults.fill(spark, path,
-        IdentityColumns.fill(spark, path, df0)))
-    val dataDir = freshDataDirName()
-    writePlain(df, new Path(path, dataDir).toString, partitionColumns,
-      writeOptions = writeOptions)
-    DataSkipping.writeStats(spark, new Path(path, dataDir).toString, df.schema)
-    validateCommit(spark, path, dataDir)
-    var attempts = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempts += 1
-      if (attempts > 10) {
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-        throw new java.io.IOException(
-          s"atomicReplace: lost the version race at $path $attempts times; giving up")
-      }
-      if (txnAlreadyApplied(spark, path, txn)) {
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-        return -1L
-      }
-      val v = currentVersion(spark, path).getOrElse(0L) + 1
-      if (commitVersion(spark, path, v, dataDir, txn)) committed = v
+      writeOptions: Map[String, String] = Map.empty): Long =
+    commitLoop(spark, path, "atomicReplace", txn, missing = None) { _ =>
+      val dataDir = stageImage(spark, path, df0, partitionColumns, writeOptions)
+      Commit(dataDir, staged = Seq(dataDir), onMove = Replay)
     }
-    committed
-  }
 
   /** SNAPSHOT-DIFF change feed between two committed versions — the NET
     * tier; [[tableChanges]] is the per-commit Delta-`table_changes` tier.
@@ -2345,8 +2338,7 @@ object ParquetTable {
     require(!logical.exists(_.equalsIgnoreCase(to)),
       s"renameColumn: column '$to' already exists at $path")
     partitionEntries(spark, path, v).foreach { entries =>
-      val partCols = entries.head._1.split('/').toSeq.map(_.split('=')(0))
-      require(!partCols.exists(_.equalsIgnoreCase(from)),
+      require(!partitionColumnsOf(entries).exists(_.equalsIgnoreCase(from)),
         s"renameColumn: '$from' is a partition column — the directory " +
           "layout embeds it; rewrite via createVersioned with new names")
     }
@@ -2395,8 +2387,7 @@ object ParquetTable {
       s"dropColumn: no column '$name' at $path (have ${logical.mkString(",")})")
     require(logical.length > 1, s"dropColumn: cannot drop the only column")
     partitionEntries(spark, path, v).foreach { entries =>
-      val partCols = entries.head._1.split('/').toSeq.map(_.split('=')(0))
-      require(!partCols.exists(_.equalsIgnoreCase(name)),
+      require(!partitionColumnsOf(entries).exists(_.equalsIgnoreCase(name)),
         s"dropColumn: '$name' is a partition column")
     }
     require(!Constraints.list(spark, path).exists(_._2.toLowerCase
@@ -2515,12 +2506,17 @@ object ParquetTable {
     * entirely, materializing the deletes.
     */
   private def dvFilterLeg(leg: DataFrame, dv: Option[DataFrame]): DataFrame =
-    dv.fold(leg) { d =>
-      leg.withColumn(DvFileCol, dvFileKey(col("_metadata.file_path")))
-        .withColumn(DvIdxCol, col("_metadata.row_index"))
-        .join(d, Seq(DvFileCol, DvIdxCol), "left_anti")
-        .drop(DvFileCol, DvIdxCol)
-    }
+    dv.fold(leg)(d => liveAddressed(leg, Some(d)).drop(DvFileCol, DvIdxCol))
+
+  /** ONE scan leg with the reader's row addresses attached
+    * ([[DvFileCol]] via [[dvFileKey]], [[DvIdxCol]]), rows `dv` retired
+    * anti-joined away — the same scan-relation rule as [[dvFilterLeg]].
+    */
+  private def liveAddressed(leg: DataFrame, dv: Option[DataFrame]): DataFrame = {
+    val withMeta = leg.withColumn(DvFileCol, dvFileKey(col("_metadata.file_path")))
+      .withColumn(DvIdxCol, col("_metadata.row_index"))
+    dv.fold(withMeta)(d => withMeta.join(d, Seq(DvFileCol, DvIdxCol), "left_anti"))
+  }
 
   /** The version's DV as Some(frame) when the `#dv=` header is present —
     * the one object read paths thread through [[dvFilterLeg]]. */
@@ -2600,8 +2596,7 @@ object ParquetTable {
   private def affectedSliceRows(
       spark: SparkSession, path: String,
       affectedEntries: Seq[(String, String)]): Option[Long] = {
-    val perDir = affectedEntries.groupBy(_._2).toSeq.map { case (dd, es) =>
-      val parts = es.map(_._1)
+    val perDir = byDataDir(affectedEntries).map { case (dd, parts) =>
       DataSkipping.readStats(spark, new Path(path, dd).toString).map(sc =>
         sc.files.filter { case (rel, _) =>
           parts.exists(p => rel.startsWith(p + "/"))
@@ -2645,94 +2640,52 @@ object ParquetTable {
   def mergeVectors(
       spark: SparkSession, path: String, updates: DataFrame, pk: Seq[String],
       cdf: Boolean = false, txn: Option[(String, Long)] = None): Long = {
-    requireTxnAppId(txn)
     TableProperties.requireNotAppendOnly(spark, path, "mergeVectors")
     // MOR's update set is small by contract, so the NDV probe can cost
     // more than the decision saves (ADVICE r13): when even the STATIC
     // estimate of the updates plan already sits under the broadcast
     // threshold, Catalyst broadcasts the derived key set unaided — skip
-    // the probe. Lazy besides: the txn re-delivery fast path below
-    // returns before any probe runs.
+    // the probe. Lazy besides: a txn re-delivery returns before any
+    // probe runs.
     lazy val keysHint = {
       val threshold = autoBroadcastThreshold(spark)
       val static = updates.queryExecution.optimizedPlan.stats.sizeInBytes
       if (threshold > 0 && static <= threshold) None
       else planMergeStats(spark, path, updates, pk).broadcastKeys
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 10, s"mergeVectors: lost the version race at $path")
-      if (txnAlreadyApplied(spark, path, txn)) return -1L
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"mergeVectors: no versioned table at $path (merge-on-read needs " +
-          "manifest isolation; create the table first)"))
+    commitLoop(spark, path, "mergeVectors", txn, missing = Some(" (merge-on-read " +
+        "needs manifest isolation; create the table first)")) { v =>
       require(partitionEntries(spark, path, v).isEmpty,
         s"mergeVectors: $path is partitioned — partitioned merges are " +
           "already partition-scoped (mergeVersioned)")
       val target = readVersion(spark, path, v)
       val cols = target.columns.toSeq
-      val (cmR, cmD) = columnMapping(spark, path, v)
       val upd = GeneratedColumns.fill(spark, path,
         ColumnDefaults.fill(spark, path, updates))
         .dropDuplicates(pk).select(cols.map(col): _*)
-      // retire matched target rows by DV: per-leg (file, row_index) of
-      // rows whose pk is in the update set, prior DVs already excluded.
-      // Legs are physical — the logical view goes on AFTER the DV join
-      // (row addresses are name-agnostic; pk names are logical)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), keysHint)
-      val dv = dvOf(spark, path, v)
-      val matched = versionLegs(spark, path, v).map { leg =>
-        val withMeta = leg.withColumn(DvFileCol, dvFileKey(col("_metadata.file_path")))
-          .withColumn(DvIdxCol, col("_metadata.row_index"))
-        applyColmapTo(cmR, cmD,
-          dv.fold(withMeta)(d => withMeta.join(d, Seq(DvFileCol, DvIdxCol), "left_anti")))
-      }.reduce(_.unionByName(_))
-        .join(updKeys, pk, "left_semi")
-        .select(col(DvFileCol), col(DvIdxCol))
       // the append dir carries the full update set (matched rows'
       // replacements AND inserts) in PHYSICAL names under an active
-      // mapping; written before the commit loop's CAS so losers can
-      // clean up
-      val dataDir = freshDataDirName()
-      val updPhys = toPhysical(spark, path, v, upd)
-      writePlain(updPhys, new Path(path, dataDir).toString, Nil)
-      DataSkipping.writeStats(spark, new Path(path, dataDir).toString, updPhys.schema)
-      validateCommit(spark, path, dataDir, physicalNames = true)
-      // ONE job computes the matches: write the DV dir, then probe what
-      // landed (an isEmpty pre-check would run the snapshot-join twice)
-      val dvName = s"$DvDirName/dv${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
-      val dvPath = new Path(path, dvName)
-      sizedForWrite(matched)
-        .write.mode(SaveMode.Overwrite).parquet(dvPath.toString)
-      val hasMatches = !spark.read.parquet(dvPath.toString).isEmpty
-      if (!hasMatches) hadoopFs(spark, dvPath).delete(dvPath, true)
-      val content = manifestContent(spark, path, v).trim + "\n" + dataDir
-      val dvs = dvDirs(spark, path, v) ++ (if (hasMatches) Seq(dvName) else Nil)
-      if (commitVersion(spark, path, v + 1, content, txn, dvs,
-          carriedColmap(spark, path, v))) {
+      // mapping; matched target rows retire by DV
+      val dataDir = stage(spark, path, toPhysical(spark, path, v, upd),
+        physicalNames = true)
+      val dvName = stageDvIfAny(spark, path,
+        addressedRows(spark, path, v).join(updKeys, pk, "left_semi"))
+      Commit(manifestContent(spark, path, v).trim + "\n" + dataDir,
+        staged = dataDir +: dvName.toSeq,
+        dv = dvDirs(spark, path, v) ++ dvName,
+        colmap = carriedColmap(spark, path, v),
         // CDF capture scoped to the affected keys: rows outside the
         // update-key set are byte-identical across the commit (same
         // files), so diffing the pre-snapshot's affected slice against
         // the COMMITTED appended dir equals the full-snapshot diff at a
-        // fraction of the cost (and still never re-evaluates the update
-        // plan — the post side is what the commit actually published)
-        // re-select after the semi-join: a using-columns join HOISTS the
-        // pk columns to the front, and the feed must carry table order
-        if (cdf) writeChangeManifest(spark, path, v + 1,
+        // fraction of the cost (re-selected after the semi-join: a
+        // using-columns join HOISTS the pk columns to the front)
+        onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
           changeRowsBetween(
             target.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-            applyColmapTo(cmR, cmD,
-              spark.read.parquet(new Path(path, dataDir).toString)),
-            pk, "right_outer"))
-        return v + 1
-      } else { // lost the race: recompute against the winner's snapshot
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-        if (hasMatches) hadoopFs(spark, dvPath).delete(dvPath, true)
-      }
+            stagedRows(spark, path, v, dataDir), pk, "right_outer")))
     }
-    -1L // unreachable
   }
 
   /** CONVERT a plain parquet layout into a versioned table in place —
@@ -2810,16 +2763,10 @@ object ParquetTable {
       DataSkipping.writeStats(spark, dd.toString,
         spark.read.parquet(dd.toString).schema)
       // leaf partition dirs (depth = |partitionColumns|) become entries
-      def leaves(dir: Path, depth: Int): Seq[String] =
-        if (depth == 0) Seq(dir.toUri.getPath.stripPrefix(dd.toUri.getPath).stripPrefix("/"))
-        else fs.listStatus(dir).filter(_.isDirectory)
-          .filter(_.getPath.getName.contains('='))
-          .flatMap(st => leaves(st.getPath, depth - 1)).toSeq
-      val entries = leaves(dd, partitionColumns.length).sorted
-        .map(p => s"$p\t$dataDir").mkString("\n")
-      require(entries.nonEmpty, s"convert: no leaf partition dirs of depth " +
+      val leaves = writtenPartitionDirs(spark, path, dataDir, partitionColumns)
+      require(leaves.nonEmpty, s"convert: no leaf partition dirs of depth " +
         s"${partitionColumns.length} under $path")
-      commitOrRestore(entries)
+      commitOrRestore(entriesBody(leaves.map(_ -> dataDir)))
     }
     1L
   }
@@ -2867,136 +2814,64 @@ object ParquetTable {
   def insertInto(
       spark: SparkSession, path: String, rows0: DataFrame,
       cdf: Boolean = false, txn: Option[(String, Long)] = None): Long = {
-    requireTxnAppId(txn)
     val rows = GeneratedColumns.fill(spark, path,
       ColumnDefaults.fill(spark, path,
         IdentityColumns.fill(spark, path, rows0)))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 10, s"insertInto: lost the version race at $path")
-      if (txnAlreadyApplied(spark, path, txn)) return -1L
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"insertInto: no versioned table at $path (plain layouts append " +
-          "through ParquetTable.append)"))
-      partitionEntries(spark, path, v) match {
-        case None =>
-          // the insert aligns to the LOGICAL schema; the appended dir is
-          // written physical under an active mapping, which carries
-          val aligned = alignInsert(rows, readVersion(spark, path, v).schema)
-          val (cmR, cmD) = columnMapping(spark, path, v)
-          val dataDir = freshDataDirName()
-          val alignedPhys = toPhysical(spark, path, v, aligned)
-          writePlain(alignedPhys, new Path(path, dataDir).toString, Nil)
-          DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-            alignedPhys.schema)
-          validateCommit(spark, path, dataDir, physicalNames = true)
-          val content = manifestContent(spark, path, v).trim + "\n" + dataDir
-          if (commitVersion(spark, path, v + 1, content, txn, dvDirs(spark, path, v),
-              carriedColmap(spark, path, v))) {
-            if (cdf) writeChangeManifest(spark, path, v + 1,
-              applyColmapTo(cmR, cmD,
-                spark.read.parquet(new Path(path, dataDir).toString))
-                .withColumn("_change_type", lit("insert")))
-            return v + 1
-          } else {
-            val dd = new Path(path, dataDir)
-            hadoopFs(spark, dd).delete(dd, true)
-          }
-        case Some(entries) =>
-          // partitioned APPEND-ENTRY commit — O(appended rows), the
-          // Delta AddFile shape: the new rows land in one fresh dir and
-          // the manifest gains (partition → newDir) entries BESIDE the
-          // old ones (a partition may now span several dirs; every slice
-          // reader — merges, row-level rewrites, reads, vacuum, detail —
-          // groups the full entry list by dir). The next merge or
-          // row-level rewrite of an affected partition consolidates it
-          // back onto a single dir.
-          val partitionColumns = entries.head._1.split('/').toSeq.map(_.split('=')(0))
-          val aligned = alignInsert(rows, readVersion(spark, path, v).schema)
-          val (cmR, cmD) = columnMapping(spark, path, v)
-          val affected = partitionDirsOf(aligned, partitionColumns)
-          val dataDir = freshDataDirName()
-          val alignedPhys = toPhysical(spark, path, v, aligned)
-          writePlain(alignedPhys, new Path(path, dataDir).toString, partitionColumns)
-          DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-            alignedPhys.schema)
-          validateCommit(spark, path, dataDir, physicalNames = true)
-          val newEntries = (entries ++ affected.map(_ -> dataDir)).sorted
-            .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-          if (commitVersion(spark, path, v + 1, newEntries, txn, dvDirs(spark, path, v),
-              carriedColmap(spark, path, v))) {
-            // capture from the COMMITTED dir, never the row plan: the
-            // appended dir IS exactly the inserted multiset
-            if (cdf) writeChangeManifest(spark, path, v + 1,
-              applyColmapTo(cmR, cmD,
-                spark.read.option("basePath", new Path(path, dataDir).toString)
-                  .parquet(affected.map(p => s"$path/$dataDir/$p"): _*))
-                .select(aligned.columns.map(col).toSeq: _*)
-                .withColumn("_change_type", lit("insert")))
-            return v + 1
-          } else {
-            val dd = new Path(path, dataDir)
-            hadoopFs(spark, dd).delete(dd, true)
-          }
-      }
+    commitLoop(spark, path, "insertInto", txn, missing = Some(" (plain layouts " +
+        "append through ParquetTable.append)")) { v =>
+      // the insert aligns to the LOGICAL schema; the appended dir is
+      // written physical under an active mapping, which carries
+      val aligned = alignInsert(rows, readVersion(spark, path, v).schema)
+      val entries = partitionEntries(spark, path, v)
+      val partitionColumns = entries.map(partitionColumnsOf).getOrElse(Nil)
+      val affected = if (entries.isEmpty) Nil else partitionDirsOf(aligned, partitionColumns)
+      val dataDir = stage(spark, path, toPhysical(spark, path, v, aligned),
+        partitionColumns, physicalNames = true)
+      // unpartitioned: the manifest body grows by the new dir's line.
+      // Partitioned: an APPEND-ENTRY commit — (partition → newDir) entries
+      // land BESIDE the old ones (a partition may now span several dirs;
+      // every slice reader groups the full entry list by dir), and the
+      // next merge or row-level rewrite of the partition consolidates it
+      Commit(
+        entries.fold(manifestContent(spark, path, v).trim + "\n" + dataDir)(es =>
+          entriesBody(es ++ affected.map(_ -> dataDir))),
+        staged = Seq(dataDir), dv = dvDirs(spark, path, v),
+        colmap = carriedColmap(spark, path, v),
+        // capture from the COMMITTED dir, never the row plan: the
+        // appended dir IS exactly the inserted multiset
+        onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
+          stagedRows(spark, path, v, dataDir, affected)
+            .select(aligned.columns.map(col).toSeq: _*)
+            .withColumn("_change_type", lit("insert"))))
     }
-    -1L // unreachable
   }
 
   def deleteVectors(
       spark: SparkSession, path: String, condition: Column,
       cdf: Boolean = false): Long = {
     TableProperties.requireNotAppendOnly(spark, path, "deleteVectors")
-    var result = -1L
-    var attempts = 0
-    while (result < 0) {
-      attempts += 1
-      require(attempts <= 10, s"deleteVectors: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"deleteVectors: no versioned table at $path (deletion vectors " +
-          "need manifest isolation)"))
-      val dv = dvOf(spark, path, v)
-      val (cmR, cmD) = columnMapping(spark, path, v)
-      // legs with the reader's (file, row_index) attached, previous DVs
-      // already excluded — so re-deleting an already-deleted row is a
-      // no-op and the new DV holds only live matches. Logical view over
-      // each physical leg so `condition` resolves under a column mapping
-      // (a DV is pure row addressing — the commit carries the map).
-      val snap = versionLegs(spark, path, v).map { leg =>
-        val withMeta = leg.withColumn(DvFileCol, dvFileKey(col("_metadata.file_path")))
-          .withColumn(DvIdxCol, col("_metadata.row_index"))
-        applyColmapTo(cmR, cmD,
-          dv.fold(withMeta)(d => withMeta.join(d, Seq(DvFileCol, DvIdxCol), "left_anti")))
-      }.reduce(_.unionByName(_))
-      requireDeterministic(snap.drop(DvFileCol, DvIdxCol), condition, None, "deleteVectors")
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try commitLoop(spark, path, "deleteVectors", missing = Some(" (deletion " +
+        "vectors need manifest isolation)")) { v =>
+      // previous DVs already excluded — re-deleting an already-deleted
+      // row is a no-op and the new DV holds only live matches
+      val live = addressedRows(spark, path, v)
+      requireDeterministic(live.drop(DvFileCol, DvIdxCol), condition, None, "deleteVectors")
       // matched is DELETE-SIZED (O(matched rows) is this verb's whole
       // contract) — persist it so the no-op probe, the DV write and the
       // cdf capture share ONE snapshot scan instead of three (guide §2.4;
       // at 100 TB each re-evaluation was a full table scan)
-      val matched = snap.filter(condition)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (matched.isEmpty) result = v // no-op
-        else {
-          val dvName = s"$DvDirName/dv${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
-          sizedForWrite(matched.select(col(DvFileCol), col(DvIdxCol)))
-            .write.mode(SaveMode.Overwrite).parquet(new Path(path, dvName).toString)
-          val content = manifestContent(spark, path, v)
-          if (commitVersion(spark, path, v + 1, content,
-              dv = dvDirs(spark, path, v) :+ dvName,
-              colmap = carriedColmap(spark, path, v))) {
-            if (cdf) writeChangeManifest(spark, path, v + 1,
-              matched.drop(DvFileCol, DvIdxCol).withColumn("_change_type", lit("delete")))
-            result = v + 1
-          } else { // lost the race: the winner may have changed what matches
-            val dd = new Path(path, dvName)
-            hadoopFs(spark, dd).delete(dd, true)
-          }
-        }
-      } finally { matched.unpersist(); () }
-    }
-    result
+      val matched = live.filter(condition)
+      persisted += matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (matched.isEmpty) NoOp(v)
+      else {
+        val dvName = stageDv(spark, path, matched)
+        Commit(manifestContent(spark, path, v), staged = Seq(dvName),
+          dv = dvDirs(spark, path, v) :+ dvName, colmap = carriedColmap(spark, path, v),
+          onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
+            matched.drop(DvFileCol, DvIdxCol).withColumn("_change_type", lit("delete"))))
+      }
+    } finally persisted.foreach(_.unpersist())
   }
 
   // ---- per-commit change data feed ---------------------------------------
@@ -3175,13 +3050,11 @@ object ParquetTable {
           0, 0, Option.empty[Long], Option.empty[Long], 0L, 0, 0, ""))
       case Some(v) =>
         val entries = partitionEntries(spark, path, v)
-        val partCols = entries.map(_.head._1.split('/').toSeq.map(_.split('=')(0)))
-          .getOrElse(Nil)
+        val partCols = entries.map(partitionColumnsOf).getOrElse(Nil)
         // (dataDir, referenced partition prefixes — empty = whole dir)
         val dirRefs: Seq[(String, Seq[String])] = entries match {
           case None => unpartitionedDirs(spark, path, v).map((_, Nil))
-          case Some(es) => es.groupBy(_._2).toSeq.sortBy(_._1)
-            .map { case (dd, ps) => (dd, ps.map(_._1)) }
+          case Some(es) => byDataDir(es)
         }
         val perDir = dirRefs.map { case (dd, parts) =>
           DataSkipping.readStats(spark, new Path(path, dd).toString).map { sc =>
@@ -3237,6 +3110,7 @@ object ParquetTable {
     * is untouched: the rolled-back versions stay readable via `readAt`
     * until `vacuum`, exactly Delta's RESTORE semantics. The restored
     * version's dirs must still exist, so restore what `vacuum` has kept.
+    * A caller-supplied image ([[commitLoop]]'s replay discipline).
     * Returns the new version number.
     */
   def restore(spark: SparkSession, path: String, version: Long): Long = {
@@ -3248,16 +3122,10 @@ object ParquetTable {
     // of its snapshot — restoring without them would resurrect
     // vector-deleted rows / revert logical names
     val dv = dvDirs(spark, path, version)
-    val (cmR, cmD) = columnMapping(spark, path, version)
-    val cm = Some(colmapValue(cmR, cmD)).filter(_.nonEmpty)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 10, s"restore: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(0L) + 1
-      if (commitVersion(spark, path, v, content, dv = dv, colmap = cm)) return v
+    val cm = carriedColmap(spark, path, version)
+    commitLoop(spark, path, "restore", missing = None) { _ =>
+      Commit(content, dv = dv, colmap = cm, onMove = Replay)
     }
-    -1L // unreachable
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE t SHALLOW CLONE s`): publish
@@ -3338,14 +3206,10 @@ object ParquetTable {
   def compact(spark: SparkSession, path: String): Unit = {
     val v0 = currentVersion(spark, path).getOrElse(
       throw new IllegalStateException(s"compact: no versioned table at $path"))
-    val partitionColumns = partitionEntries(spark, path, v0) match {
-      // recover the partition columns from the entry paths: "a=1/b=2" → a,b
-      case Some(entries) => entries.head._1.split('/').toSeq.map(_.split('=')(0))
-      // unpartitioned: fold a merge-on-read chain (N appended dirs +
-      // DVs) back to one full-image dir; a no-chain table republishes
-      // its single dir — still useful to materialize DVs
-      case None => Nil
-    }
+    // unpartitioned: fold a merge-on-read chain (N appended dirs + DVs)
+    // back to one full-image dir; a no-chain table republishes its single
+    // dir — still useful to materialize DVs
+    val partitionColumns = partitionEntries(spark, path, v0).map(partitionColumnsOf).getOrElse(Nil)
     publishMaintenance(spark, path, "compact", partitionColumns,
       v => readVersion(spark, path, v))
     ()
@@ -3353,19 +3217,10 @@ object ParquetTable {
 
   /** Publish a MAINTENANCE rewrite — a full-image derivation of the head
     * ([[compact]]'s fold, [[optimize]]'s ZORDER cluster, [[optimizeBloom]]'s
-    * bloom rewrite) whose only payload IS the head it read. Unlike
-    * [[atomicReplace]] (caller-supplied image — last-writer-wins is the
-    * documented contract there), a maintenance image may commit as v+1
-    * ONLY while v is still the head: retrying a lost CAS onto the next
-    * number, the way atomicReplace recovers, would republish a snapshot
-    * that no longer contains the racing writer's rows — the classic
-    * lakehouse lost-update (Delta's ConflictChecker fails/recomputes a
-    * raced OPTIMIZE for the same reason; it never replays the stale
-    * rewrite). So: derive `image(v)`, land it in a fresh dir, CAS on
-    * exactly v+1; on loss delete the orphan dir and RECOMPUTE from the
-    * new head — the [[compactWhere]]/[[compactSmall]] discipline (a
-    * rearrangement has no payload to rebase). Cost of losing is one
-    * wasted rewrite; cost of the old behavior was the winner's rows.
+    * bloom rewrite) whose only payload IS the head it read: `image(v)`
+    * lands in a fresh dir and commits as v + 1 only while v is the head
+    * ([[commitLoop]]'s recompute discipline — a rearrangement has no
+    * payload to rebase). Cost of losing is one wasted rewrite.
     */
   private def publishMaintenance(
       spark: SparkSession, path: String, what: String,
@@ -3373,44 +3228,23 @@ object ParquetTable {
       image: Long => DataFrame,
       preserveLayout: Boolean = false,
       filesPerPartition: Int = 1,
-      writeOptions: Map[String, String] = Map.empty): Long = {
-    var committedV = -1L
-    var attempts = 0
-    while (committedV < 0) {
-      attempts += 1
-      require(attempts <= 10, s"$what: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(s"$what: no versioned table at $path"))
-      val df = image(v)
-      val dataDir = freshDataDirName()
-      val ddPath = new Path(path, dataDir).toString
-      if (preserveLayout && partitionColumns.nonEmpty)
-        df.write.mode(SaveMode.Overwrite).options(writeOptions)
-          .partitionBy(partitionColumns: _*).parquet(ddPath)
-      else
-        // maintenance images arrange their OWN layout (compact's fold,
-        // ZORDER's range slabs) — the adaptive sizing must not refuse it
-        writePlain(df, ddPath, partitionColumns, filesPerPartition,
-          writeOptions, sizeAdaptive = false)
-      DataSkipping.writeStats(spark, ddPath, df.schema)
-      validateCommit(spark, path, dataDir)
+      writeOptions: Map[String, String] = Map.empty): Long =
+    commitLoop(spark, path, what) { v =>
+      // maintenance images arrange their OWN layout (compact's fold,
+      // ZORDER's range slabs) — the adaptive sizing must not refuse it
+      val dataDir = stage(spark, path, image(v), partitionColumns, filesPerPartition,
+        writeOptions, keepLayout = preserveLayout || partitionColumns.isEmpty)
       // metadata-only entry derivation (lists the dirs the write produced)
-      // — partitionDirsOf would re-execute the whole rewrite plan
-      val content =
+      // — partitionDirsOf would re-execute the whole rewrite plan. A full
+      // rewrite of the logical head image: DVs and an active column
+      // mapping are materialized (no dv, no colmap) — the full-image
+      // commit rules
+      Commit(
         if (partitionColumns.isEmpty) dataDir
-        else writtenPartitionDirs(spark, path, dataDir, partitionColumns)
-          .map(p => s"$p\t$dataDir").mkString("\n")
-      // full rewrite of the logical head image: DVs are materialized
-      // (dv = Nil) and an active column mapping is materialized to
-      // physical names (colmap = None) — the full-image commit rules
-      if (commitVersion(spark, path, v + 1, content)) committedV = v + 1
-      else {
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-      }
+        else entriesBody(writtenPartitionDirs(spark, path, dataDir, partitionColumns)
+          .map(_ -> dataDir)),
+        staged = Seq(dataDir))
     }
-    committedV
-  }
 
   /** Delta-parity `GENERATE symlink_format_manifest`: export the CURRENT
     * version's live data files as plain text manifests readable by
@@ -3523,108 +3357,61 @@ object ParquetTable {
     */
   def compactSmall(
       spark: SparkSession, path: String,
-      minBytes: Long = 32L * 1024 * 1024): Long = {
-    var committedV = -1L
-    var attempts = 0
-    while (committedV < 0) {
-      attempts += 1
-      require(attempts <= 10, s"compactSmall: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"compactSmall: no versioned table at $path"))
+      minBytes: Long = 32L * 1024 * 1024): Long =
+    commitLoop(spark, path, "compactSmall") { v =>
       require(dvDirs(spark, path, v).isEmpty,
         s"compactSmall: version $v carries deletion vectors — run compact() " +
           "to materialize them first (subset folding could orphan a DV)")
       val fs = hadoopFs(spark, new Path(path))
-      val tableSchema = versionSchema(spark, path, v)
+      def small(dir: Path) = fs.getContentSummary(dir).getLength < minBytes
+      // physical in, physical out: the fold unions raw dirs and rewrites
+      // them byte-compatible, so an active column mapping simply carries
       partitionEntries(spark, path, v) match {
         case None =>
-          val dirs = unpartitionedDirs(spark, path, v)
-          val (small, big) = dirs.partition(d =>
-            fs.getContentSummary(new Path(path, d)).getLength < minBytes)
-          if (small.size < 2) return v
-          val merged = small.map { d =>
-            val df = spark.read.parquet(new Path(path, d).toString)
-            tableSchema.map(alignTo(df, _)).getOrElse(df)
-          }.reduce(_.unionByName(_))
-          val dataDir = freshDataDirName()
-          writePlain(merged, new Path(path, dataDir).toString, Nil)
-          DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-            merged.schema)
-          validateCommit(spark, path, dataDir, physicalNames = true)
-          val content = (big :+ dataDir).mkString("\n")
-          // physical in, physical out: the fold unions raw dirs and
-          // rewrites them byte-compatible, so an active column mapping
-          // simply carries
-          if (commitVersion(spark, path, v + 1, content,
-            colmap = carriedColmap(spark, path, v)))
-            committedV = v + 1
+          val (folded, kept) = unpartitionedDirs(spark, path, v)
+            .partition(d => small(new Path(path, d)))
+          if (folded.size < 2) NoOp(v)
           else {
-            val dd = new Path(path, dataDir)
-            hadoopFs(spark, dd).delete(dd, true)
+            val tableSchema = versionSchema(spark, path, v)
+            val dataDir = stage(spark, path, folded.map { d =>
+              val df = spark.read.parquet(new Path(path, d).toString)
+              tableSchema.map(alignTo(df, _)).getOrElse(df)
+            }.reduce(_.unionByName(_)), physicalNames = true)
+            Commit((kept :+ dataDir).mkString("\n"), staged = Seq(dataDir),
+              colmap = carriedColmap(spark, path, v))
           }
         case Some(entries) =>
-          val partitionColumns = entries.head._1.split('/').toSeq.map(_.split('=')(0))
+          val partitionColumns = partitionColumnsOf(entries)
           // per-(partition, dir) slice footprint — a dir may hold a big
           // slice of one partition and a tiny slice of another
-          val sized = entries.map { case (p, dd) =>
-            (p, dd,
-              fs.getContentSummary(new Path(new Path(path, dd), p)).getLength)
-          }
-          val foldable: Map[String, Set[String]] = sized.groupBy(_._1).collect {
-            case (p, es) if es.count(_._3 < minBytes) >= 2 =>
-              p -> es.filter(_._3 < minBytes).map(_._2).toSet
-          }
-          if (foldable.isEmpty) return v
-          val merged = foldable.toSeq.sortBy(_._1).map { case (p, dds) =>
-            dds.toSeq.sorted.map { dd =>
-              val base = new Path(path, dd).toString
-              val df = spark.read.option("basePath", base).parquet(s"$base/$p")
-              tableSchema.map(alignTo(df, _)).getOrElse(df)
-            }.reduce(_.unionByName(_))
-          }.reduce(_.unionByName(_))
-          val dataDir = freshDataDirName()
-          writePlain(merged, new Path(path, dataDir).toString, partitionColumns)
-          DataSkipping.writeStats(spark, new Path(path, dataDir).toString,
-            merged.schema)
-          validateCommit(spark, path, dataDir, physicalNames = true)
-          val survivors = writtenPartitionDirs(
-            spark, path, dataDir, partitionColumns).toSet
-          require(survivors == foldable.keySet,
-            s"compactSmall: folded rows landed outside their partitions at " +
-              s"$path (${(survivors diff foldable.keySet).mkString(", ")})")
-          val newEntries = (entries.filterNot { case (p, dd) =>
-            foldable.get(p).exists(_.contains(dd))
-          } ++ foldable.keys.map(_ -> dataDir)).sorted
-            .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-          if (commitVersion(spark, path, v + 1, newEntries,
-            colmap = carriedColmap(spark, path, v)))
-            committedV = v + 1
+          val foldable = entries.filter { case (p, dd) => small(new Path(new Path(path, dd), p)) }
+            .groupBy(_._1).filter(_._2.size >= 2)
+          if (foldable.isEmpty) NoOp(v)
           else {
-            val dd = new Path(path, dataDir)
-            hadoopFs(spark, dd).delete(dd, true)
+            val folded = foldable.values.flatten.toSeq
+            val dataDir = stage(spark, path, readSlice(spark, path, v, folded, logical = false),
+              partitionColumns, physicalNames = true)
+            val survivors = writtenPartitionDirs(spark, path, dataDir, partitionColumns).toSet
+            require(survivors == foldable.keySet,
+              s"compactSmall: folded rows landed outside their partitions at " +
+                s"$path (${(survivors diff foldable.keySet).mkString(", ")})")
+            Commit(entriesBody(entries.filterNot(folded.contains) ++
+              foldable.keys.map(_ -> dataDir)), staged = Seq(dataDir),
+              colmap = carriedColmap(spark, path, v))
           }
       }
     }
-    committedV
-  }
 
   def compactWhere(
       spark: SparkSession, path: String, predicate: Column,
-      filesPerPartition: Int = 1): Long = {
-    var committedV = -1L
-    var attempts = 0
-    while (committedV < 0) {
-      attempts += 1
-      require(attempts <= 10, s"compactWhere: lost the version race at $path")
-      val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-        s"compactWhere: no versioned table at $path"))
+      filesPerPartition: Int = 1): Long =
+    commitLoop(spark, path, "compactWhere") { v =>
       val entries = partitionEntries(spark, path, v).getOrElse(
         throw new IllegalStateException(
           s"compactWhere: $path holds an UNPARTITIONED versioned table — " +
             "use compact() (one dir chain, nothing to scope)"))
-      val partitionColumns = entries.head._1.split('/').toSeq.map(_.split('=')(0))
-      val cur = readVersion(spark, path, v)
-      val filtered = cur.filter(predicate)
+      val partitionColumns = partitionColumnsOf(entries)
+      val filtered = readVersion(spark, path, v).filter(predicate)
       // reference check on the ANALYZED filter (Spark 4 Columns are lazy
       // ColumnNode trees — unresolvable without a plan)
       val refs = filtered.queryExecution.analyzed.collect {
@@ -3637,43 +3424,19 @@ object ParquetTable {
         s"compactWhere: predicate references non-partition column(s) " +
           s"${nonPartition.mkString(", ")} — partition columns are " +
           s"${partitionColumns.mkString(", ")}")
-      val affected = partitionDirsOf(filtered, partitionColumns)
-      if (affected.isEmpty) return v
-      val affectedSet = affected.toSet
-      val affectedEntries = entries.filter(e => affectedSet(e._1))
-      val tableSchema = versionSchema(spark, path, v)
-      val dv = dvOf(spark, path, v)
-      val slice = affectedEntries.groupBy(_._2).toSeq.sortBy(_._1).map {
-        case (dataDir, es) =>
-          val base = new Path(path, dataDir).toString
-          val df = dvFilterLeg(spark.read.option("basePath", base)
-            .parquet(es.map(e => s"$base/${e._1}"): _*), dv)
-            .drop(DvFileCol, DvIdxCol)
-          tableSchema.map(alignTo(df, _)).getOrElse(df)
-      }.reduce(_.unionByName(_))
-      val dataDir = freshDataDirName()
-      writePlain(slice, new Path(path, dataDir).toString, partitionColumns,
-        filesPerPartition)
-      DataSkipping.writeStats(spark, new Path(path, dataDir).toString, slice.schema)
-      validateCommit(spark, path, dataDir, physicalNames = true)
-      val newEntries = (entries.filterNot(e => affectedSet(e._1)) ++
-        affected.map(_ -> dataDir)).sorted
-        .map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-      // partition-scoped fold of raw physical dirs: the mapping carries
-      // (predicates reference partition columns, which are never renamed)
-      if (commitVersion(spark, path, v + 1, newEntries,
-        dv = dvDirs(spark, path, v),
-        colmap = carriedColmap(spark, path, v)))
-        committedV = v + 1
+      val affected = partitionDirsOf(filtered, partitionColumns).toSet
+      if (affected.isEmpty) NoOp(v)
       else {
-        // lost the CAS — drop the orphaned dir and recompute against the
-        // winner's version (compaction has no payload to rebase)
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
+        // partition-scoped fold of raw physical dirs: the mapping carries
+        // (predicates reference partition columns, which are never renamed)
+        val dataDir = stage(spark, path,
+          readSlice(spark, path, v, entries.filter(e => affected(e._1)), logical = false),
+          partitionColumns, filesPerPartition, physicalNames = true)
+        Commit(entriesBody(entries.filterNot(e => affected(e._1)) ++
+          affected.toSeq.map(_ -> dataDir)), staged = Seq(dataDir),
+          dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v))
       }
     }
-    committedV
-  }
 
   /** Retire history: keep the newest `keepLast` versions, delete older
     * manifests and every data dir (or partition subdir) no kept manifest

@@ -290,7 +290,7 @@ object StreamingIngest {
         val cached = novel.cache() // two consumers: merge + fingerprints
         try {
           ParquetTable.merge(s, outPath, cached, Seq(idCol))
-          ParquetTable.sizedForWriteShuffled(fps)
+          ParquetTable.sizedForWrite(fps)
             .write.mode("append").parquet(storePath)
         } finally cached.unpersist()
       }
@@ -370,7 +370,7 @@ object StreamingIngest {
         val cachedFps = fps.cache() // two consumers: store append + bloom fold
         try {
           ParquetTable.merge(s, outPath, cachedNovel, Seq(idCol))
-          ParquetTable.sizedForWriteShuffled(cachedFps)
+          ParquetTable.sizedForWrite(cachedFps)
             .write.mode("append").parquet(storePath)
           // fold the batch's novel fingerprints into the running filter:
           // a MICRO-BATCH-bounded collect of 8-byte hashes (never the
@@ -449,7 +449,7 @@ object StreamingIngest {
           val fps = graft.operators.ParagraphDedup
             .paragraphFps(scrubbed, textCol, paraSep).cache()
           try {
-            ParquetTable.sizedForWriteShuffled(fps)
+            ParquetTable.sizedForWrite(fps)
               .write.mode("append").parquet(storePath)
             val hashed = fps.select(xxhash64(col("fp")))
               .collect().map(_.getLong(0))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** Concurrent writers against one partitioned versioned table — the OCC
-  * semantics [[ParquetTable.rebaseVersionedCommit]] documents (Delta
+  * semantics [[ParquetTable.rebaseOnto]] documents (Delta
   * ConflictChecker parity):
   *
   *   - merges into DISJOINT partitions both land, and the loser lands by
@@ -248,6 +248,43 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(rowsOf(path) === Map(1 -> ("a", "a1"), 2 -> ("b", "MERGED")))
     assert(loserAttempts === 2)
     assert((dirsAtBlock -- dataDirs(path)).nonEmpty) // stale fold discarded
+  }
+
+  // the unpartitioned rewrite verbs derive their whole image from the
+  // head they read: a loser must recompute against the winner's head,
+  // never re-publish its stale image onto the next version (which would
+  // silently erase the winner's commit)
+  private val evolvedRow = spark.createDataFrame(
+    java.util.Arrays.asList(Row(2, "b", "LOSER", "x2")),
+    schema.add(StructField("x", StringType, nullable = true)))
+
+  Seq[(String, String => Any, Map[Int, (String, String)])](
+    ("copy-on-write merge",
+      p => ParquetTable.merge(spark, p, df(Row(2, "b", "LOSER")), Seq("id"),
+        mergeOnRead = Some(false)),
+      Map(1 -> ("a", "a1"), 2 -> ("b", "LOSER"))),
+    ("schema-evolving merge",
+      p => ParquetTable.merge(spark, p, evolvedRow, Seq("id"), evolveSchema = true),
+      Map(1 -> ("a", "a1"), 2 -> ("b", "LOSER"))),
+    ("update",
+      p => ParquetTable.update(spark, p, col("id") === 2, Map("v" -> lit("LOSER"))),
+      Map(1 -> ("a", "a1"), 2 -> ("b", "LOSER"))),
+    ("delete",
+      p => ParquetTable.delete(spark, p, col("id") === 2),
+      Map(1 -> ("a", "a1")))
+  ).foreach { case (what, loser, loserImage) =>
+    test(s"unpartitioned $what racing a merge: the loser recomputes, the winner's row survives") {
+      val path = tmpDir("occ-rewrite") + "/t"
+      ParquetTable.create(df(Row(1, "a", "a1"), Row(2, "b", "b2")), path) // v1
+
+      raceLoserAgainst(path) { loser(path); () } {
+        ParquetTable.merge(spark, path, df(Row(3, "c", "c3")), Seq("id"))
+      }
+
+      assert(ParquetTable.currentVersion(spark, path) === Some(3L))
+      // the winner's insert (v2) survives the loser's commit at v3
+      assert(rowsOf(path) === loserImage + (3 -> ("c", "c3")))
+    }
   }
 
   test("stress: racing disjoint merges over several rounds all land") {
