@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -115,7 +118,8 @@ object StatsSketch {
     val dp = df.sparkSession.sparkContext.defaultParallelism
     val projected = df.select(cols.map(col): _*)
     val src =
-      if (projected.rdd.getNumPartitions < dp) projected.repartition(dp)
+      if (partitionCount(projected.queryExecution.executedPlan) < dp)
+        projected.repartition(dp)
       else projected
     val entries = cols.map { c =>
       val (bucket, rank) = bucketRank(col(c), p, seed)
@@ -127,6 +131,33 @@ object StatsSketch {
       .filter(col("rank").isNotNull)
       .groupBy(col("column"), col("bucket"))
       .agg(max(col("rank")).as("rank"))
+  }
+
+  /** Output partitions of a physical plan, read off the plan itself: its
+    * known output partitioning (a shuffle, a bucketed scan), or else the
+    * splits Spark cuts from its file scans' listings, summed over its
+    * inputs — so no RDD, and no generated code, is built to read one
+    * number.
+    */
+  private def partitionCount(plan: SparkPlan): Int = plan match {
+    case _ if plan.outputPartitioning.numPartitions > 0 => plan.outputPartitioning.numPartitions
+    case s: FileSourceScanExec => fileSplits(s)
+    case m: InMemoryTableScanExec => partitionCount(m.relation.cachedPlan)
+    case _ => math.max(1, plan.children.map(partitionCount).sum)
+  }
+
+  /** The read tasks of a file scan, sized as `FileSourceScanExec` sizes
+    * them: each file cut at the max split size, then packed. */
+  private def fileSplits(scan: FileSourceScanExec): Int = {
+    val rel = scan.relation
+    val listing = scan.selectedPartitions
+    val maxSplit = FilePartition.maxSplitBytes(rel.sparkSession, listing)
+    val splits = listing.filePartitionIterator.flatMap { p =>
+      p.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        rel.fileFormat.isSplitable(rel.sparkSession, rel.options, f.getPath),
+        maxSplit, p.values))
+    }.toSeq.sortBy(-_.length)
+    FilePartition.getFilePartitions(rel.sparkSession, splits, maxSplit).size
   }
 
   /** Quick NDV estimate of the (composite) key `cols` of `df`: ONE

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Deduplicator, Validator}
@@ -107,10 +108,13 @@ object Pipeline {
     }
 
   /** One dataset through the full path (reference: src/glue_etl.py:217-320).
-    * The validated frame is persisted before the valid/rejected split reads
-    * it twice (the reference's cache+count at glue_etl.py:228-229 — load-
-    * bearing, not a micro-optimization: without it the CSV scan and
-    * validation joins run twice).
+    * The validated frame is persisted (the reference's cache+count at
+    * glue_etl.py:228-229), and ONE accounting pass over it — rows per
+    * distinct `validation_errors` value, i.e. per combination of failed
+    * rules (a handful), collected to the driver — yields the input and
+    * rejected counts, the clean-input check and the rejection summary. The
+    * rejected append and the merge then read the cached rows, so the CSV
+    * scan and validation joins run once.
     */
   def processDataset(
       spark: SparkSession,
@@ -121,13 +125,15 @@ object Pipeline {
     val annotated = Validator.validate(raw, spec, references)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val split = Validator.Result(
-        valid = annotated.filter(org.apache.spark.sql.functions.col(Validator.ErrorsCol).isNull)
-          .select(spec.columnNames.map(org.apache.spark.sql.functions.col): _*),
-        rejected = annotated.filter(org.apache.spark.sql.functions.col(Validator.ErrorsCol).isNotNull))
-      val inputRows = annotated.count()
-      val rejectedRows = writeRejected(split.rejected, cfg, spec)
-      val deduped = Deduplicator.dropDuplicatesByKey(split.valid, spec.primaryKey)
+      val errors = col(Validator.ErrorsCol)
+      val byError = annotated.groupBy(errors).count().collect()
+        .map(r => Option(r.getString(0)) -> r.getLong(1)).toSeq
+      val inputRows = byError.map(_._2).sum
+      val rejectedRows = writeRejected(annotated.filter(errors.isNotNull),
+        byError.collect { case (Some(msg), n) => msg -> n }, cfg, spec)
+      val deduped = Deduplicator.dropDuplicatesByKey(
+        annotated.filter(errors.isNull).select(spec.columnNames.map(col): _*),
+        spec.primaryKey)
       ParquetTable.merge(spark, tablePath(cfg, spec.name), deduped,
         spec.primaryKey, spec.partitionColumns)
       val mergedRows =
@@ -137,18 +143,25 @@ object Pipeline {
     } finally annotated.unpersist()
   }
 
-  private def writeRejected(rejected: DataFrame, cfg: Config, spec: TableSpec): Long =
-    // isEmpty short-circuits at the first surviving row (the reference's
-    // `.isEmpty()` probe, etl_utils.py:72) — the clean-input fast path
-    // never pays a full count
-    if (rejected.isEmpty) 0L
-    else {
+  /** Appends the rejected rows, with their metadata, to the rejected sink
+    * and prints the most frequent error types (reference:
+    * glue_etl.py:284-289). `counts` (error message → rows) come from
+    * processDataset's accounting pass, so a clean drop launches no job
+    * here (the reference's `.isEmpty()` probe, etl_utils.py:72) and the
+    * summary re-reads nothing. Returns the rejected row count.
+    */
+  private def writeRejected(
+      rejected: DataFrame, counts: Seq[(String, Long)], cfg: Config, spec: TableSpec): Long = {
+    if (counts.nonEmpty) {
       val withMeta = Validator.withRejectionMetadata(rejected, spec.name, cfg.jobName)
       val parts = spec.partitionColumns.filter(withMeta.columns.contains)
       ParquetTable.append(withMeta, s"${cfg.rejectedDir}/${spec.name}", parts)
-      Validator.rejectionSummary(rejected).show(false)
-      rejected.count()
+      println(s"${spec.name}: rejected rows by error (top 5)")
+      counts.sortBy { case (msg, n) => (-n, msg) }.take(5)
+        .foreach { case (msg, n) => println(f"$n%10d  $msg") }
     }
+    counts.map(_._2).sum
+  }
 
   private val CatalogNames = Seq(
     "products" -> "clean_products", "orders" -> "clean_orders",

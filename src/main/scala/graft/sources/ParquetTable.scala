@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -468,9 +469,30 @@ object ParquetTable {
       .parquet(path)
   }
 
+  /** `df` deduplicated on `pk` (an arbitrary row per key, like
+    * `dropDuplicates`), returned as is when its analyzed plan already is a
+    * `Deduplicate` on exactly those keys — a caller that deduplicated
+    * upstream (the pipeline, a streaming batch) and the merge layers below
+    * share ONE pk aggregate instead of stacking one per layer.
+    */
+  private def dedupByKey(df: DataFrame, pk: Seq[String]): DataFrame =
+    if (dedupInput(df, pk).isDefined) df else df.dropDuplicates(pk)
+
+  /** The plan of the rows `df` deduplicates, when its analyzed plan is a
+    * `Deduplicate` on exactly the keys `pk`. */
+  private def dedupInput(df: DataFrame, pk: Seq[String]): Option[LogicalPlan] = {
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    df.queryExecution.analyzed match {
+      case Deduplicate(keys, child) if keys.size == pk.size &&
+          pk.forall(k => keys.exists(a => resolver(a.name, k))) => Some(child)
+      case _ => None
+    }
+  }
+
   /** Pure merge plan: rows of `target` whose PK appears in `updates` are
     * replaced by the update row; unmatched update rows are inserted.
-    * `updates` is PK-deduplicated first (MERGE requires a unique source key).
+    * `updates` is PK-deduplicated first (MERGE requires a unique source key),
+    * unless it already is ([[dedupByKey]]).
     * One anti-join + union — AQE broadcasts the deduplicated update keys
     * when they are small.
     *
@@ -487,7 +509,7 @@ object ParquetTable {
       broadcastKeys: Option[Boolean] = None): DataFrame =
     if (!evolveSchema) {
       val cols = target.columns.toSeq
-      val upd = updates.dropDuplicates(pk).select(cols.map(col): _*)
+      val upd = dedupByKey(updates, pk).select(cols.map(col): _*)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), broadcastKeys)
       // a using-columns join hoists the pk columns to the front of the
       // output; re-select so merge preserves the table's column order
@@ -502,7 +524,7 @@ object ParquetTable {
           updates.schema.find(_.name.equalsIgnoreCase(c)).get.dataType)))
       val missing = target.columns
         .filterNot(c => updates.columns.exists(_.equalsIgnoreCase(c)))
-      val upd = missing.foldLeft(updates.dropDuplicates(pk))((df, c) =>
+      val upd = missing.foldLeft(dedupByKey(updates, pk))((df, c) =>
         df.withColumn(c, lit(null).cast(target.schema(c).dataType)))
         .select(widenedTarget.columns.map(col).toSeq: _*)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), broadcastKeys)
@@ -729,12 +751,12 @@ object ParquetTable {
       require(combine.isEmpty,
         s"merge: conditional clauses need an existing target table at $path")
       if (partitionColumns.isEmpty)
-        atomicReplace(spark, path, updates.dropDuplicates(pk), Nil, txn)
+        atomicReplace(spark, path, dedupByKey(updates, pk), Nil, txn)
       else {
         require(txn.isEmpty, "merge: txn markers need a versioned table; the " +
           "initial partitioned load via merge is a plain layout (use " +
           "createVersioned + mergeVersioned for versioned partitioned txn)")
-        create(updates.dropDuplicates(pk), path, partitionColumns, filesPerPartition)
+        create(dedupByKey(updates, pk), path, partitionColumns, filesPerPartition)
       }
       return
     }
@@ -763,13 +785,20 @@ object ParquetTable {
       // pruning via a dynamic IN-filter on collected partition values — the
       // partition-value set is small by construction: one row per partition
       // directory), merge, and rewrite just those partitions.
-      val upd = GeneratedColumns.fill(spark, path,
-      ColumnDefaults.fill(spark, path, updates)).dropDuplicates(pk)
+      val incoming = GeneratedColumns.fill(spark, path,
+        ColumnDefaults.fill(spark, path,
+          dedupInput(updates, pk).fold(updates)(GraftColumnBridge.ofRows(spark, _))))
+      val upd = incoming.dropDuplicates(pk)
       // plain layout: no pre-publish dir to read back — validate the
       // incoming rows like append does (existing rows passed at their
       // own write time)
       Constraints.validateFrame(spark, path, upd)
-      val parts = upd.select(partitionColumns.map(col): _*).distinct()
+      // the partitions of ALL incoming rows, not of the deduplicated ones:
+      // the dedup keeps an arbitrary row per key, and a second evaluation
+      // of it can pick a row from another partition than the write does —
+      // dynamic overwrite would then replace a partition whose untouched
+      // rows were never read. This superset is deterministic.
+      val parts = incoming.select(partitionColumns.map(col): _*).distinct()
       val affected = read(spark, path).join(parts, partitionColumns.toSeq, "left_semi")
       val merged = combine.map(_(affected, upd)).getOrElse(
         mergeFrames(affected, upd, pk, broadcastKeys = statsPlan.broadcastKeys))
@@ -802,7 +831,7 @@ object ParquetTable {
         val merged =
           if (evolveSchema) mergeFrames(target, updates, pk, evolveSchema = true,
             broadcastKeys = statsPlan.broadcastKeys)
-          else combine.map(_(target, updG.dropDuplicates(pk)))
+          else combine.map(_(target, dedupByKey(updG, pk)))
             .getOrElse(mergeFrames(target, updG, pk, broadcastKeys = statsPlan.broadcastKeys))
         val dataDir = stageImage(spark, path, merged)
         // capture is derived from the COMMITTED image, not by re-evaluating
@@ -1717,8 +1746,8 @@ object ParquetTable {
     require(!(combine.isDefined && mergeOnRead.contains(true)),
       "mergeVersioned: conditional clauses (combine) take the rewrite tier")
     TableProperties.requireNotAppendOnly(spark, path, "mergeVersioned")
-    val upd = GeneratedColumns.fill(spark, path,
-      ColumnDefaults.fill(spark, path, updates)).dropDuplicates(pk)
+    val upd = dedupByKey(GeneratedColumns.fill(spark, path,
+      ColumnDefaults.fill(spark, path, updates)), pk)
     if (currentVersion(spark, path).isEmpty) {
       require(combine.isEmpty,
         s"mergeVersioned: conditional clauses need an existing target at $path")
@@ -2660,9 +2689,8 @@ object ParquetTable {
           "already partition-scoped (mergeVersioned)")
       val target = readVersion(spark, path, v)
       val cols = target.columns.toSeq
-      val upd = GeneratedColumns.fill(spark, path,
-        ColumnDefaults.fill(spark, path, updates))
-        .dropDuplicates(pk).select(cols.map(col): _*)
+      val upd = dedupByKey(GeneratedColumns.fill(spark, path,
+        ColumnDefaults.fill(spark, path, updates)), pk).select(cols.map(col): _*)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), keysHint)
       // the append dir carries the full update set (matched rows'
       // replacements AND inserts) in PHYSICAL names under an active

@@ -103,4 +103,49 @@ class PipelineSpec extends SparkSpec {
       case None => spark.conf.unset("spark.sql.cbo.enabled")
     }
   }
+
+  test("processDataset: one accounting pass, a bounded number of Spark jobs per table") {
+    val root = tmpDir("pipeline-jobs")
+    val cfg = Pipeline.Config(inputDir = s"$root/raw", outputDir = s"$root/curated",
+      rejectedDir = s"$root/rejected")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    /** (input, valid, rejected, merged, jobs) per table, in run order. */
+    def load(): Seq[(String, (Long, Long, Long, Long, Int))] = {
+      writeFixtures(cfg.inputDir)
+      val refs = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+      graft.schemas.Schemas.all.map { spec =>
+        org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+        jobs.set(0)
+        val r = Pipeline.processDataset(spark, cfg, spec, refs.toMap)
+        org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+        val n = jobs.get()
+        refs(spec.name) = graft.sources.ParquetTable.read(spark, Pipeline.tablePath(cfg, spec.name))
+        spec.name -> ((r.inputRows, r.validRows, r.rejectedRows, r.mergedRows, n))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (initial, replay) =
+      try (load(), load())
+      finally spark.sparkContext.removeSparkListener(listener)
+    val counts = Seq(
+      "products" -> ((4L, 3L, 1L, 2L)),
+      "orders" -> ((3L, 2L, 1L, 2L)),
+      "order_items" -> ((3L, 1L, 2L, 1L)))
+    // jobs per table with one accounting pass and one dedup; four separate
+    // counting actions and a stacked dedup ran 16/16/20 on the initial load
+    // and 22/22/25 on the replay
+    val maxJobs = Seq(
+      initial -> Map("products" -> 11, "orders" -> 11, "order_items" -> 15),
+      replay -> Map("products" -> 16, "orders" -> 16, "order_items" -> 20))
+    for ((run, bound) <- maxJobs) {
+      assert(run.map { case (t, (i, v, r, m, _)) => t -> ((i, v, r, m)) } === counts)
+      for ((t, (_, _, _, _, n)) <- run)
+        assert(n <= bound(t), s"$t: processDataset launched $n Spark jobs, at most ${bound(t)} expected")
+    }
+  }
 }
