@@ -1270,7 +1270,7 @@ object TrainingQueries {
     // the reference's query layer sets (glue_etl.py:407-408) — the plan
     // is sized from the sketch's NDV and the sidecars' exact row count
     // (PlanStats; flip directions are plan-asserted in PlanStatsSpec,
-    // the 153 MB → 0 MB shuffle pair in PlanStatsBench), and THIS entry
+    // the 153 MB → 0 MB shuffle pair recorded in SCALING.md §3l), and THIS entry
     // pins that the statistics change plans, never answers. Aggregates
     // are exact-integer doubles so both engines sum order-independently.
     "q150_cbo_stats_join" -> ((s, d) => {

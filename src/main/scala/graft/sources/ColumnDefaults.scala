@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types.DataType
@@ -35,9 +34,9 @@ import org.apache.spark.sql.types.DataType
   * projection inside the write's own stage; the read-side extension is a
   * plan-time `withColumn` — no data I/O, no shuffle, nothing per-row.
   *
-  * Storage: `<table>/_graft_defaults`, the [[Constraints]] file format —
-  * one rule per line, `name\ttypeSql\tdefaultSql\taddedAtVersion`
-  * (defaultSql empty = no default → NULL fill), temp+rename replace.
+  * Storage: one `name\ttypeSql\tdefaultSql\taddedAt\tdroppedAt` row per
+  * rule in a [[TableDdl]] file (an empty defaultSql = no default → NULL
+  * fill; an empty droppedAt = live).
   */
 object ColumnDefaults {
 
@@ -56,48 +55,16 @@ object ColumnDefaults {
       default.map(d => expr(d)).getOrElse(lit(null)).cast(dataType)
   }
 
-  private val FileName = "_graft_defaults"
-
-  private def filePath(table: String) = new Path(table, FileName)
-
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val file = TableDdl.Defaults
 
   /** The table's added-column rules, oldest first. Empty for no file. */
-  def list(spark: SparkSession, table: String): Seq[Rule] = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (!hfs.exists(f)) Nil
-    else {
-      val len = hfs.getFileStatus(f).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = hfs.open(f)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty).map { line =>
-        val p = line.split('\t')
-        Rule(p(0), p(1), Some(p(2)).filter(_.nonEmpty), p(3).toLong,
-          if (p.length > 4 && p(4).nonEmpty) Some(p(4).toLong) else None)
-      }.toSeq
-    }
-  }
+  def list(spark: SparkSession, table: String): Seq[Rule] =
+    file.read(spark, table).map(r => Rule(r(0), r(1), Some(r(2)).filter(_.nonEmpty),
+      r(3).toLong, r.lift(4).filter(_.nonEmpty).map(_.toLong)))
 
-  private def write(spark: SparkSession, table: String, rules: Seq[Rule]): Unit = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (rules.isEmpty) { hfs.delete(f, false); return }
-    val tmp = new Path(table, s"._graft_defaults.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(rules.map(r =>
-        s"${r.name}\t${r.typeSql}\t${r.default.getOrElse("")}\t${r.addedAt}" +
-          s"\t${r.droppedAt.map(_.toString).getOrElse("")}")
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!hfs.rename(tmp, f)) {
-      hfs.delete(f, false)
-      require(hfs.rename(tmp, f), s"column-default DDL: rename failed at $f")
-    }
-  }
+  private def write(spark: SparkSession, table: String, rules: Seq[Rule]): Unit =
+    file.write(spark, table, rules.map(r => Seq(r.name, r.typeSql, r.default.getOrElse(""),
+      s"${r.addedAt}", r.droppedAt.fold("")(_.toString))))
 
   /** Syntax/type validation for a prospective rule — run BEFORE the
     * metadata commit so a bad DDL never burns a version.

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, not}
 
@@ -10,10 +9,8 @@ import org.apache.spark.sql.functions.{expr, not}
   * complementing the row-routing [[graft.operators.Validator]] which
   * quarantines instead of failing).
   *
-  * Storage: one small text file `<table>/_graft_constraints`
-  * (`name\texprSql` per line), replaced atomically via temp+rename on
-  * DDL. DDL is last-writer-wins (like any catalog property update);
-  * writers read the constraint set once per commit.
+  * Storage: one `name\texprSql` row per constraint in a [[TableDdl]]
+  * file; writers read the constraint set once per commit.
   *
   * Enforcement: every versioned commit validates the DATA DIR IT JUST
   * WROTE before publishing the manifest ([[ParquetTable]] calls
@@ -34,49 +31,14 @@ import org.apache.spark.sql.functions.{expr, not}
   */
 object Constraints {
 
-  private val FileName = "_graft_constraints"
-
-  private def filePath(table: String) = new Path(table, FileName)
-
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val file = TableDdl.Constraints
 
   /** The table's constraints, oldest first. Empty for no file. */
-  def list(spark: SparkSession, table: String): Seq[(String, String)] = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (!hfs.exists(f)) Nil
-    else {
-      val len = hfs.getFileStatus(f).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = hfs.open(f)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('\t')
-        (line.substring(0, i), line.substring(i + 1))
-      }.toSeq
-    }
-  }
+  def list(spark: SparkSession, table: String): Seq[(String, String)] =
+    file.read(spark, table).map(r => (r(0), r(1)))
 
-  private def write(
-      spark: SparkSession, table: String, cs: Seq[(String, String)]): Unit = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (cs.isEmpty) { hfs.delete(f, false); return }
-    val tmp = new Path(table, s"._graft_constraints.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(cs.map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // replace-by-rename first: on local FS rename(2) replaces atomically,
-    // so concurrent readers always see a complete file. HDFS refuses an
-    // existing destination, so fall back to delete+rename there — a
-    // small no-constraints window on HDFS DDL only, never on commits.
-    if (!hfs.rename(tmp, f)) {
-      hfs.delete(f, false)
-      require(hfs.rename(tmp, f), s"constraint DDL: rename failed at $f")
-    }
-  }
+  private def write(spark: SparkSession, table: String, cs: Seq[(String, String)]): Unit =
+    file.write(spark, table, cs.map { case (n, e) => Seq(n, e) })
 
   /** Add a CHECK constraint. Existing data must already satisfy it
     * (one scan, Delta semantics); the name must be new and
@@ -109,14 +71,6 @@ object Constraints {
       s"no constraint named $name on $table " +
         s"(have: ${cur.map(_._1).mkString(", ") match { case "" => "none"; case s => s }})")
     write(spark, table, cur.filterNot(_._1.equalsIgnoreCase(name)))
-  }
-
-  /** Copy the constraint set from one table to another (SHALLOW CLONE
-    * carries constraints, like Delta clones table properties).
-    */
-  private[sources] def copy(spark: SparkSession, from: String, to: String): Unit = {
-    val cs = list(spark, from)
-    if (cs.nonEmpty) write(spark, to, cs)
   }
 
   /** First violating row rendered for an error message, if any. Probes

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -40,53 +39,18 @@ import org.apache.spark.sql.functions.expr
   * refused by the existing constraint-reference guard (the paired
   * invariant names both the column and its inputs).
   *
-  * Storage: `<table>/_graft_generated`, the [[Constraints]] file format
-  * (name\texprSql per line, temp+rename replace). NOTE: a PLAIN
-  * partitioned `create` replaces the whole directory (including DDL
-  * files) — like constraints, register rules after the initial plain
-  * create; versioned and unpartitioned tables have no such hazard.
+  * Storage: one `name\texprSql` row per rule in a [[TableDdl]] file.
   */
 object GeneratedColumns {
 
-  private val FileName = "_graft_generated"
-
-  private def filePath(table: String) = new Path(table, FileName)
-
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val file = TableDdl.Generated
 
   /** The table's generation rules, oldest first. Empty for no file. */
-  def list(spark: SparkSession, table: String): Seq[(String, String)] = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (!hfs.exists(f)) Nil
-    else {
-      val len = hfs.getFileStatus(f).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = hfs.open(f)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('\t')
-        (line.substring(0, i), line.substring(i + 1))
-      }.toSeq
-    }
-  }
+  def list(spark: SparkSession, table: String): Seq[(String, String)] =
+    file.read(spark, table).map(r => (r(0), r(1)))
 
-  private def write(
-      spark: SparkSession, table: String, rules: Seq[(String, String)]): Unit = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (rules.isEmpty) { hfs.delete(f, false); return }
-    val tmp = new Path(table, s"._graft_generated.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(rules.map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!hfs.rename(tmp, f)) {
-      hfs.delete(f, false)
-      require(hfs.rename(tmp, f), s"generated-column DDL: rename failed at $f")
-    }
-  }
+  private def write(spark: SparkSession, table: String, rules: Seq[(String, String)]): Unit =
+    file.write(spark, table, rules.map { case (n, e) => Seq(n, e) })
 
   /** Register `name GENERATED ALWAYS AS (exprSql)`. If the table exists
     * it must already carry the column (validated against the expression
@@ -137,10 +101,4 @@ object GeneratedColumns {
     list(spark, table).foldLeft(df) { case (d, (n, e)) =>
       if (d.columns.exists(_.equalsIgnoreCase(n))) d else d.withColumn(n, expr(e))
     }
-
-  /** Clone carry-over, like [[Constraints.copy]]. */
-  private[sources] def copy(spark: SparkSession, from: String, to: String): Unit = {
-    val rules = list(spark, from)
-    if (rules.nonEmpty) write(spark, to, rules)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -30,53 +29,22 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * a watermark can't be trusted against data it never saw — Delta
   * likewise only accepts identity columns at table creation.
   *
-  * Storage: `<table>/_graft_identity`, one `name\tstart\tstep\twm` line
-  * per rule (wm = last value handed out), temp+rename replace like the
-  * other DDL files.
+  * Storage: one `name\tstart\tstep\twm` row per rule (wm = last value
+  * handed out) in a [[TableDdl]] file. Clones carry the rules WITH their
+  * watermark (the clone's data already holds the assigned values;
+  * resetting would re-issue them), like Delta's identity-state cloning.
   */
 object IdentityColumns {
 
-  private val FileName = "_graft_identity"
-
-  private def filePath(table: String) = new Path(table, FileName)
-
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val file = TableDdl.Identity
 
   /** (name, start, step, highWatermark) per rule, oldest first. */
-  def list(spark: SparkSession, table: String): Seq[(String, Long, Long, Long)] = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (!hfs.exists(f)) Nil
-    else {
-      val len = hfs.getFileStatus(f).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = hfs.open(f)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty).map { line =>
-        val p = line.split('\t')
-        (p(0), p(1).toLong, p(2).toLong, p(3).toLong)
-      }.toSeq
-    }
-  }
+  def list(spark: SparkSession, table: String): Seq[(String, Long, Long, Long)] =
+    file.read(spark, table).map(r => (r(0), r(1).toLong, r(2).toLong, r(3).toLong))
 
   private def write(
-      spark: SparkSession, table: String,
-      rules: Seq[(String, Long, Long, Long)]): Unit = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (rules.isEmpty) { hfs.delete(f, false); return }
-    val tmp = new Path(table, s"._graft_identity.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(rules.map { case (n, s, st, w) => s"$n\t$s\t$st\t$w" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!hfs.rename(tmp, f)) {
-      hfs.delete(f, false)
-      require(hfs.rename(tmp, f), s"identity DDL: rename failed at $f")
-    }
-  }
+      spark: SparkSession, table: String, rules: Seq[(String, Long, Long, Long)]): Unit =
+    file.write(spark, table, rules.map { case (n, s, st, w) => Seq(n, s"$s", s"$st", s"$w") })
 
   /** Register an identity column. CREATE-time only: the table must not
     * exist yet (see the class doc). `step` may be negative (descending
@@ -107,15 +75,6 @@ object IdentityColumns {
     require(cur.exists(_._1.equalsIgnoreCase(name)),
       s"no identity column named $name on $table")
     write(spark, table, cur.filterNot(_._1.equalsIgnoreCase(name)))
-  }
-
-  /** Clone carry-over — rules travel WITH their watermark (the clone's
-    * data already holds the assigned values; resetting would re-issue
-    * them). Matches Delta's identity-state cloning.
-    */
-  private[sources] def copy(spark: SparkSession, from: String, to: String): Unit = {
-    val rules = list(spark, from)
-    if (rules.nonEmpty) write(spark, to, rules)
   }
 
   /** Assign identity values to every registered column the frame does

@@ -64,9 +64,7 @@ object ParquetTable {
     // takes the create path
     fs.exists(p) && fs.listStatus(p).exists { st =>
       val n = st.getPath.getName
-      !n.startsWith("._graft_") && n != "_graft_constraints" &&
-        n != "_graft_generated" && n != "_graft_identity" &&
-        n != "_graft_properties"
+      !n.startsWith("._graft_") && !TableDdl.isDdlFile(n)
     }
   }
 
@@ -295,19 +293,31 @@ object ParquetTable {
     * created as manifest version 1 (or the next version if the path
     * already holds a versioned table). `filesPerPartition > 1` splits each
     * hot partition's write across that many files/tasks (see
-    * clusterByPartitions).
+    * clusterByPartitions). DDL registered before the create survives it.
     */
   def create(
       df: DataFrame, path: String, partitionColumns: Seq[String] = Nil,
       filesPerPartition: Int = 1): Unit = {
-    val g = GeneratedColumns.fill(df.sparkSession, path,
-      ColumnDefaults.fill(df.sparkSession, path,
-        IdentityColumns.fill(df.sparkSession, path, df)))
+    val spark = df.sparkSession
+    val g = fillColumns(spark, path, IdentityColumns.fill(spark, path, df))
     if (partitionColumns.nonEmpty) {
-      Constraints.validateFrame(g.sparkSession, path, g)
-      writePlain(g, path, partitionColumns, filesPerPartition)
-    } else atomicReplace(g.sparkSession, path, g, Nil)
+      Constraints.validateFrame(spark, path, g)
+      // the plain overwrite deletes the whole directory, DDL files included:
+      // carry them across it, read after the fills so an identity watermark
+      // the fill just advanced is the one written back
+      val ddl = TableDdl.snapshot(spark, path)
+      try writePlain(g, path, partitionColumns, filesPerPartition)
+      finally TableDdl.restore(spark, path, ddl)
+    } else atomicReplace(spark, path, g, Nil)
   }
+
+  /** Default-valued, then generated columns the frame does not carry —
+    * row-local projections inside the write's own stage. Every ingest verb
+    * fills through here; the verbs that also assign identity values fill
+    * those first.
+    */
+  private def fillColumns(spark: SparkSession, path: String, df: DataFrame): DataFrame =
+    GeneratedColumns.fill(spark, path, ColumnDefaults.fill(spark, path, df))
 
   /** Cluster rows onto their target partitions before a `partitionBy`
     * write. Without this every write task opens a writer for every
@@ -457,12 +467,11 @@ object ParquetTable {
   def append(
       df: DataFrame, path: String, partitionColumns: Seq[String] = Nil,
       filesPerPartition: Int = 1): Unit = {
-    val g = GeneratedColumns.fill(df.sparkSession, path,
-      ColumnDefaults.fill(df.sparkSession, path,
-        IdentityColumns.fill(df.sparkSession, path, df)))
+    val spark = df.sparkSession
+    val g = fillColumns(spark, path, IdentityColumns.fill(spark, path, df))
     // plain layout: no pre-publish dir to read back, so the incoming
     // frame is validated instead (one pass; no-op without constraints)
-    Constraints.validateFrame(g.sparkSession, path, g)
+    Constraints.validateFrame(spark, path, g)
     val w = clusterByPartitions(g, partitionColumns, filesPerPartition)
       .write.mode(SaveMode.Append)
     (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
@@ -785,9 +794,8 @@ object ParquetTable {
       // pruning via a dynamic IN-filter on collected partition values — the
       // partition-value set is small by construction: one row per partition
       // directory), merge, and rewrite just those partitions.
-      val incoming = GeneratedColumns.fill(spark, path,
-        ColumnDefaults.fill(spark, path,
-          dedupInput(updates, pk).fold(updates)(GraftColumnBridge.ofRows(spark, _))))
+      val incoming = fillColumns(spark, path,
+        dedupInput(updates, pk).fold(updates)(GraftColumnBridge.ofRows(spark, _)))
       val upd = incoming.dropDuplicates(pk)
       // plain layout: no pre-publish dir to read back — validate the
       // incoming rows like append does (existing rows passed at their
@@ -824,8 +832,7 @@ object ParquetTable {
       // lost race recomputes against the winner's head ([[commitLoop]]).
       // A plain unpartitioned dir (no manifest yet) is read as is and
       // published as version 1.
-      val updG = GeneratedColumns.fill(spark, path,
-        ColumnDefaults.fill(spark, path, updates))
+      val updG = fillColumns(spark, path, updates)
       commitLoop(spark, path, "merge", txn, missing = None) { v =>
         val target = if (v == 0) spark.read.parquet(path) else readVersion(spark, path, v)
         val merged =
@@ -1163,9 +1170,7 @@ object ParquetTable {
       spark: SparkSession, path: String, df: DataFrame,
       partitionColumns: Seq[String] = Nil,
       writeOptions: Map[String, String] = Map.empty): String =
-    stage(spark, path,
-      GeneratedColumns.fill(spark, path, ColumnDefaults.fill(spark, path,
-        IdentityColumns.fill(spark, path, df))),
+    stage(spark, path, fillColumns(spark, path, IdentityColumns.fill(spark, path, df)),
       partitionColumns, writeOptions = writeOptions)
 
   /** Stage a deletion vector: the row addresses ([[DvFileCol]],
@@ -1634,7 +1639,7 @@ object ParquetTable {
     require(partitionColumns.nonEmpty,
       "createVersioned is for partitioned tables; use create for unpartitioned")
     val spark = df.sparkSession
-    val image = GeneratedColumns.fill(spark, path, ColumnDefaults.fill(spark, path, df))
+    val image = fillColumns(spark, path, df)
     commitLoop(spark, path, "createVersioned", txn, missing = None) { _ =>
       val dataDir = stage(spark, path, image, partitionColumns, filesPerPartition,
         writeOptions)
@@ -1746,8 +1751,7 @@ object ParquetTable {
     require(!(combine.isDefined && mergeOnRead.contains(true)),
       "mergeVersioned: conditional clauses (combine) take the rewrite tier")
     TableProperties.requireNotAppendOnly(spark, path, "mergeVersioned")
-    val upd = dedupByKey(GeneratedColumns.fill(spark, path,
-      ColumnDefaults.fill(spark, path, updates)), pk)
+    val upd = dedupByKey(fillColumns(spark, path, updates), pk)
     if (currentVersion(spark, path).isEmpty) {
       require(combine.isEmpty,
         s"mergeVersioned: conditional clauses need an existing target at $path")
@@ -2375,7 +2379,7 @@ object ParquetTable {
         .contains(from.toLowerCase)),
       s"renameColumn: a CHECK constraint references '$from' — drop and " +
         "re-add the constraint around the rename")
-    // identity rules are keyed by column NAME (_graft_identity lines);
+    // identity rules are keyed by column NAME (the identity DDL rows);
     // renaming the column would leave the rule pointing at the vacated
     // name, and later ingest would fill a spurious column under it
     // (ADVICE r9 medium) — mirror the partition-column refusal
@@ -2689,8 +2693,7 @@ object ParquetTable {
           "already partition-scoped (mergeVersioned)")
       val target = readVersion(spark, path, v)
       val cols = target.columns.toSeq
-      val upd = dedupByKey(GeneratedColumns.fill(spark, path,
-        ColumnDefaults.fill(spark, path, updates)), pk).select(cols.map(col): _*)
+      val upd = dedupByKey(fillColumns(spark, path, updates), pk).select(cols.map(col): _*)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), keysHint)
       // the append dir carries the full update set (matched rows'
       // replacements AND inserts) in PHYSICAL names under an active
@@ -2842,9 +2845,7 @@ object ParquetTable {
   def insertInto(
       spark: SparkSession, path: String, rows0: DataFrame,
       cdf: Boolean = false, txn: Option[(String, Long)] = None): Long = {
-    val rows = GeneratedColumns.fill(spark, path,
-      ColumnDefaults.fill(spark, path,
-        IdentityColumns.fill(spark, path, rows0)))
+    val rows = fillColumns(spark, path, IdentityColumns.fill(spark, path, rows0))
     commitLoop(spark, path, "insertInto", txn, missing = Some(" (plain layouts " +
         "append through ParquetTable.append)")) { v =>
       // the insert aligns to the LOGICAL schema; the appended dir is
@@ -3209,17 +3210,13 @@ object ParquetTable {
     require(commitVersion(spark, targetPath, 1L, abs, dv = dvAbs,
       colmap = Some(colmapValue(cmR, cmD)).filter(_.nonEmpty)),
       s"shallowClone: lost the creation race at $targetPath")
-    // clones carry the source's CHECK constraints and generation rules
-    // (Delta clones table properties); drop them on the clone
-    // independently if unwanted
-    Constraints.copy(spark, sourcePath, targetPath)
-    GeneratedColumns.copy(spark, sourcePath, targetPath)
+    // clones carry the source's DDL verbatim (Delta clones table
+    // properties): constraints, generation rules, properties and identity
+    // rules WITH their watermark (a reset one would re-issue the values
+    // the clone's data holds); drop them on the clone independently if
+    // unwanted. Column defaults are clamped to the cloned version.
+    TableDdl.copy(spark, sourcePath, targetPath, TableDdl.Files.filter(_ != TableDdl.Defaults))
     ColumnDefaults.copy(spark, sourcePath, targetPath, v)
-    TableProperties.copy(spark, sourcePath, targetPath)
-    // identity rules carry WITH their watermark (Delta clones identity
-    // state the same way): the clone's data contains the source's
-    // assigned values, so a reset watermark would re-issue them
-    IdentityColumns.copy(spark, sourcePath, targetPath)
     1L
   }
 

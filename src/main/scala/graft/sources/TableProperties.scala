@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Table properties — Delta's `TBLPROPERTIES` tier: free-form key/value
@@ -13,69 +12,34 @@ import org.apache.spark.sql.SparkSession
   *   immutability contract audit/compliance pipelines pin on their raw
   *   ingest tables.
   *
-  * Storage: `<table>/_graft_properties`, the [[Constraints]] file
-  * format (key\tvalue per line, temp+rename replace). DDL is
-  * last-writer-wins like the other DDL files; clones carry properties
-  * (Delta clones them too).
+  * Storage: one `key\tvalue` row per property in a [[TableDdl]] file;
+  * clones carry properties (Delta clones them too).
   */
 object TableProperties {
-
-  private val FileName = "_graft_properties"
 
   /** The enforced immutability property. */
   val AppendOnlyKey = "graft.appendOnly"
 
-  private def filePath(table: String) = new Path(table, FileName)
-
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val file = TableDdl.Properties
 
   /** All properties, insertion order. Empty for no file. */
-  def list(spark: SparkSession, table: String): Seq[(String, String)] = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (!hfs.exists(f)) Nil
-    else {
-      val len = hfs.getFileStatus(f).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = hfs.open(f)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('\t')
-        (line.substring(0, i), line.substring(i + 1))
-      }.toSeq
-    }
-  }
+  def list(spark: SparkSession, table: String): Seq[(String, String)] =
+    file.read(spark, table).map(r => (r(0), r(1)))
+
+  private def write(spark: SparkSession, table: String, props: Seq[(String, String)]): Unit =
+    file.write(spark, table, props.map { case (k, v) => Seq(k, v) })
 
   def get(spark: SparkSession, table: String, key: String): Option[String] =
     list(spark, table).collectFirst {
       case (k, v) if k.equalsIgnoreCase(key) => v
     }
 
-  private def write(
-      spark: SparkSession, table: String, props: Seq[(String, String)]): Unit = {
-    val f = filePath(table)
-    val hfs = fs(spark, f)
-    if (props.isEmpty) { hfs.delete(f, false); return }
-    val tmp = new Path(table, s"._graft_properties.tmp${System.nanoTime()}")
-    val out = hfs.create(tmp, true)
-    try out.write(props.map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!hfs.rename(tmp, f)) {
-      hfs.delete(f, false)
-      require(hfs.rename(tmp, f), s"TBLPROPERTIES DDL: rename failed at $f")
-    }
-  }
-
-  /** Set (upsert) properties. Keys/values must not contain control
-    * characters (the line format).
+  /** Set (upsert) properties. Keys must be non-empty; keys and values
+    * must not contain control characters (the [[TableDdl]] writer refuses
+    * them).
     */
   def set(spark: SparkSession, table: String, props: Map[String, String]): Unit = {
-    props.foreach { case (k, v) =>
-      require(k.nonEmpty && !(k + v).exists(c => c == '\n' || c == '\r' || c == '\t'),
-        s"TBLPROPERTIES: key/value must be non-empty and free of control chars ('$k')")
-    }
+    require(props.keys.forall(_.nonEmpty), "TBLPROPERTIES: keys must be non-empty")
     val cur = list(spark, table).filterNot { case (k, _) =>
       props.keys.exists(_.equalsIgnoreCase(k))
     }
@@ -89,12 +53,6 @@ object TableProperties {
     write(spark, table, list(spark, table).filterNot { case (k, _) =>
       keys.exists(_.equalsIgnoreCase(k))
     })
-
-  /** Clone carry-over, like [[Constraints.copy]]. */
-  private[sources] def copy(spark: SparkSession, from: String, to: String): Unit = {
-    val props = list(spark, from)
-    if (props.nonEmpty) write(spark, to, props)
-  }
 
   /** Refuses when `graft.appendOnly = true` — called by every
     * row-mutating verb before any work.
