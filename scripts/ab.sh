@@ -11,7 +11,12 @@
 # each side's median and quartiles and the change's win count. The verdict
 # follows the pairing rule: a gain holds when the change wins at least nine
 # tenths of the pairs (ties count for neither side) and the medians differ
-# by more than the parent's interquartile range.
+# by more than the parent's interquartile range. A no-regression line
+# follows: the change's median against the parent's, as a fraction of the
+# parent's median, checked against the metric's `bound`. It reads
+# `unresolved` when the parent's IQR/median is wider than the bound (unless
+# every change run beats every parent run), else `within bound` or
+# `exceeds bound`.
 #
 # Raw records are kept in $AB_OUT (default: a new directory under /tmp).
 set -u
@@ -84,4 +89,17 @@ for m in json.load(open(spec_path))["end_to_end"]:
           "gain %s" % (name, "higher" if higher else "lower", pq[1], pq[0], pq[2], cq[1],
                        cq[0], cq[2], 100.0 * (cq[1] - pq[1]) / pq[1], wins, len(pairs), iqr,
                        "holds" if holds else "not shown"))
+    bound = m["bound"]
+    worse = -gain / pq[1]
+    spread = iqr / pq[1]
+    ps, cs = [p for p, _ in pairs], [c for _, c in pairs]
+    all_better = min(cs) > max(ps) if higher else max(cs) < min(ps)
+    if spread > bound and not all_better:
+        verdict = "unresolved"
+    else:
+        verdict = "exceeds bound" if worse > bound else "within bound"
+    print("%s no-regression: change median is %.1f%% %s than the parent's; bound %.1f%%; "
+          "parent IQR/median %.1f%%; %s" % (
+              name, 100.0 * abs(worse), "worse" if worse > 0 else "better", 100.0 * bound,
+              100.0 * spread, verdict))
 EOF

@@ -28,7 +28,4 @@ object Deduplicator {
       .filter(col("__graft_rn") === 1)
       .drop("__graft_rn")
   }
-
-  /** Exact whole-row dedup — `distinct()` with hash partial aggregation. */
-  def distinctRows(df: DataFrame): DataFrame = df.distinct()
 }

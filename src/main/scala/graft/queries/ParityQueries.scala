@@ -831,9 +831,9 @@ object ParityQueries {
         .orderBy(col("l_returnflag"))
     }),
 
-    // SQL DELETE FROM over the versioned table layer (GraftDeleteCommand
-    // → ParquetTable.delete) — with MERGE (q57) and UPDATE (q61) this
-    // completes the three Delta row-level verbs. The oracle is the
+    // SQL DELETE FROM over the versioned table layer (GraftSql's DELETE
+    // FROM → ParquetTable.delete) — with MERGE (q57) and UPDATE (q61)
+    // this completes the three Delta row-level verbs. The oracle is the
     // predicate's complement over the source table.
     "q60_sql_delete" -> ((s, d) => {
       val tmp = scratchDir("graft_q60")
@@ -847,7 +847,7 @@ object ParityQueries {
         .orderBy(col("o_orderkey"))
     }),
 
-    // SQL UPDATE over the versioned table layer (GraftUpdateCommand →
+    // SQL UPDATE over the versioned table layer (GraftSql's UPDATE →
     // ParquetTable.update): matched rows get SET applied (values cast to
     // the column's type, schema never drifts); the oracle is a CASE
     // projection over the source table. `* 2` keeps the arithmetic exact

@@ -27,8 +27,6 @@ final case class TableSpec(
     foreignKeys: Seq[ForeignKey] = Nil,
     rules: Seq[RowRule] = Nil) {
   def columnNames: Seq[String] = schema.fields.map(_.name).toSeq
-  def nonNullableColumns: Seq[String] =
-    schema.fields.filterNot(_.nullable).map(_.name).toSeq
 }
 
 /** The three e-commerce tables of the reference lakehouse, with the

@@ -75,10 +75,4 @@ object Catalog {
       case None => false
     }
   }
-
-  /** Re-scan a partitioned table's location for partition directories the
-    * catalog does not know yet (call after out-of-band writes to `path`).
-    */
-  def refreshPartitions(spark: SparkSession, table: String): Unit =
-    spark.sql(s"MSCK REPAIR TABLE `$table`")
 }

@@ -1327,6 +1327,13 @@ object ParquetTable {
     }.toSeq)
   }
 
+  /** Partition columns of the current version, in directory order; Nil
+    * for an unpartitioned or missing table.
+    */
+  def partitionColumns(spark: SparkSession, path: String): Seq[String] =
+    currentVersion(spark, path).flatMap(partitionEntries(spark, path, _))
+      .map(partitionColumnsOf).getOrElse(Nil)
+
   /** Partition columns recovered from partition entries: "a=1/b=2" → a, b. */
   private def partitionColumnsOf(entries: Seq[(String, String)]): Seq[String] =
     entries.head._1.split('/').toSeq.map(_.split('=')(0))

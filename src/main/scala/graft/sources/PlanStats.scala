@@ -168,9 +168,6 @@ object PlanStats {
         stamped.builtVersion <= version) stamped.bins
     else Map.empty
 
-  def ndvFor(spark: SparkSession, sketchDir: String): Option[Map[String, Double]] =
-    statsFor(spark, sketchDir).map(_._1)
-
   /** Sidecar `num`-kind min/max strings whose rendering provably matches
     * `CatalogColumnStat`'s external format for the column's type
     * (integral → plain integer of the stored value; IEEE → decimal;

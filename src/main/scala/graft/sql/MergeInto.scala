@@ -1,53 +1,152 @@
 package graft.sql
 
+import org.antlr.v4.runtime.ParserRuleContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, Literal}
-import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.analysis.{FieldName, RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, ConstraintCharacteristic, EqualTo, Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.parser.{AbstractSqlParser, AstBuilder, ParameterContext, ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, Assignment, CreateTableAsSelect, DeleteAction, DeleteFromTable, DescribeRelation, DropColumns, DropConstraint, Filter, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, OptionList, RenameColumn, SetTableProperties, ShowTableProperties, SubqueryAlias, UnresolvedTableSpec, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.{expr, lit}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructType, TimestampType}
 
-import graft.sources.ParquetTable
+import graft.operators.{StatsHistogram, StatsSketch}
+import graft.sources.{ColumnDefaults, Constraints, GeneratedColumns, IdentityColumns, ParquetTable, TableProperties}
 
-/** SQL `MERGE INTO` for graft versioned tables — the reference's core
-  * lakehouse verb (reference: src/glue_etl.py:338-349,
-  * `whenMatchedUpdateAll.whenNotMatchedInsertAll` on the primary key),
-  * which until now existed only as the `ParquetTable.merge` API.
+/** graft SQL: the statements that name a `graft.`/table/path`` target,
+  * each run as one [[GraftCommand]] over a `ParquetTable` or DDL verb.
   *
-  * Spark's own parser already understands the statement (it builds a
-  * `MergeIntoTable` plan); what plain parquet lacks is an executor for
-  * it. [[GraftSqlParser]] intercepts the parsed plan when the target is
-  * the path-based `graft.`/table/path`` identifier and rewrites it to a
-  * runnable command over `ParquetTable.merge` — grammar, quoting, and
-  * comments stay 100% Spark.
-  *
-  * Two entry points:
+  * Entry points:
   *   - declarative: `spark.sql.extensions=graft.functions.GraftSessionExtensions`
-  *     (or `GraftColumnBridge.sessionWithExtensions`), then
-  *     `spark.sql("MERGE INTO graft.`/p` AS t USING updates AS s ON t.id = s.id
-  *     WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")` —
-  *     and plain reads: `spark.sql("SELECT … FROM graft.`/p`")`, with
-  *     `VERSION AS OF n` time travel;
-  *   - imperative: [[GraftSql.merge]] / [[GraftSql.sql]] on any existing
-  *     session.
+  *     (or `GraftColumnBridge.sessionWithExtensions`) installs
+  *     [[GraftSqlParser]], so `spark.sql(…)` runs every statement below and
+  *     reads `graft.`p`` in any query position;
+  *   - imperative: [[GraftSql.sql]] / [[GraftSql.merge]] on any session.
   *
-  * Supported shape = exactly the reference's: equi-conjunction ON
-  * condition (the primary key), `WHEN MATCHED THEN UPDATE SET *`,
-  * `WHEN NOT MATCHED THEN INSERT *`, optionally
-  * `MERGE WITH SCHEMA EVOLUTION` (Spark's own grammar position) →
-  * `ParquetTable.merge(evolveSchema = true)`. Anything else on a graft
-  * target fails fast at parse time with the reason — better than
-  * Spark's downstream "table does not support row-level operations".
+  * Parsing. A statement first meets graft's pre-match: 22 patterns on the
+  * raw text, for the verbs Spark 4.1.2's grammar lacks (OPTIMIZE, VACUUM,
+  * RESTORE, FSCK, …) or misreads. It runs before Spark's parser because
+  * Spark turns some of these texts into a different statement:
+  * `DESCRIBE HISTORY graft.`p`` parses as a column describe of a table
+  * named `HISTORY`. Every other statement is parsed by Spark, so comments,
+  * quoting and whitespace follow Spark's grammar, and [[dispatch]] turns a
+  * plan whose target is `graft.`p`` into a command. A variant of such a
+  * plan that graft does not run (DESCRIBE EXTENDED, ADD COLUMNS with
+  * several columns, CTAS … USING, …) fails with an IllegalArgumentException
+  * naming the supported shape. Any other plan only has its `graft.`p``
+  * relations replaced by versioned reads ([[rewriteRelations]]).
   *
-  * MERGE semantics are `ParquetTable.merge`'s: idempotent upsert-by-PK
-  * (replaying the same batch is a no-op — the reference's Delta MERGE
-  * replay guarantee), update = full-row replace, partitioned versioned
-  * targets rewrite only affected partitions. Partition columns are
-  * recovered from the current manifest, so the statement needs no
-  * partition clause.
+  * Syntax table. Per statement: `[S]` parsed by Spark's grammar or `[G]`
+  * by the pre-match; the verb it calls; its result columns (`!` = not
+  * null, `-` = none). Verbs without an owner are `ParquetTable`'s.
+  * {{{
+  * MERGE INTO graft.`p` [WITH SCHEMA EVOLUTION] … ON t.k = s.k …     [S]
+  *     merge (conditional clauses: the clauseImage combine)      -
+  * INSERT INTO | OVERWRITE graft.`p` <query>                       [S]
+  *     insertInto | atomicReplace / createVersioned              -
+  * DELETE FROM graft.`p` [WHERE c]                                 [S]
+  *     delete | deleteVectors (spark.graft.delete.mode)          committed_version bigint!
+  * UPDATE graft.`p` SET c = e, … [WHERE c]                         [S]
+  *     update                                                    committed_version bigint!
+  * CREATE TABLE graft.`p` [PARTITIONED BY (c, …)] AS <query>       [S]
+  *     create | createVersioned                                  version bigint
+  * DESC[RIBE] [TABLE] graft.`p`                                    [S]
+  *     read schema + DDL files                                   col_name, data_type, info string!
+  * ALTER TABLE graft.`p` RENAME COLUMN a TO b                      [S]
+  *     renameColumn                                              version bigint
+  * ALTER TABLE graft.`p` DROP COLUMN a                             [S]
+  *     dropColumn                                                version bigint
+  * ALTER TABLE graft.`p` ADD CONSTRAINT n CHECK (e)                [S]
+  *     Constraints.add                                           -
+  * ALTER TABLE graft.`p` DROP CONSTRAINT n                         [S]
+  *     Constraints.drop                                          -
+  * ALTER TABLE graft.`p` ADD COLUMN c type [DEFAULT e]             [S]
+  *     addColumn                                                 version bigint
+  * ALTER TABLE graft.`p` ALTER COLUMN c SET DEFAULT e | DROP DEFAULT [S]
+  *     ColumnDefaults.setDefault                                 -
+  * ALTER TABLE graft.`p` SET TBLPROPERTIES ('k' = 'v', …)          [S]
+  *     TableProperties.set                                       -
+  * ALTER TABLE graft.`p` UNSET TBLPROPERTIES [IF EXISTS] ('k', …)  [S]
+  *     TableProperties.unset                                     -
+  * SHOW TBLPROPERTIES graft.`p`                                    [S]
+  *     TableProperties.list                                      key, value string!
+  * RESTORE TABLE graft.`p` TO VERSION AS OF n                      [G]
+  *     restore                                                   restored_to_version bigint!
+  * RESTORE TABLE graft.`p` TO TIMESTAMP AS OF 'ts'                 [G]
+  *     versionAtTimestamp + restore                              restored_to_version bigint!
+  * OPTIMIZE graft.`p`                                              [G]
+  *     compact                                                   optimized_version bigint!
+  * OPTIMIZE graft.`p` WHERE <partition predicate>                  [G]
+  *     compactWhere                                              optimized_version bigint!
+  * OPTIMIZE graft.`p` COMPACT SMALL [BELOW bytes]                  [G]
+  *     compactSmall                                              version bigint
+  * OPTIMIZE graft.`p` ZORDER BY (c, …)                             [G]
+  *     optimize                                                  committed_version bigint!
+  * OPTIMIZE graft.`p` BLOOM BY (c, …) [ZORDER BY (z, …)]           [G]
+  *     optimizeBloom                                             version bigint
+  * VACUUM graft.`p` [RETAIN n VERSIONS | HOURS]                    [G]
+  *     vacuum                                                    versions_retained bigint!
+  * VACUUM graft.`p` [RETAIN n VERSIONS | HOURS] DRY RUN            [G]
+  *     vacuumPlan                                                kind, path string!
+  * DESC[RIBE] HISTORY graft.`p`                                    [G]
+  *     history       version bigint!, partitioned boolean!, n_entries int!, n_data_dirs int!,
+  *                   has_change_manifest boolean!, commit_ts timestamp, manifest_mtime timestamp!
+  * DESC[RIBE] DETAIL graft.`p`                                     [G]
+  *     detail        location string!, format string!, version bigint, commit_ts timestamp,
+  *                   partitioned boolean!, partition_columns array<string!>!, n_partitions int!,
+  *                   n_data_dirs int!, num_files bigint, num_rows bigint,
+  *                   num_deleted_rows bigint!, n_versions int!, n_constraints int!,
+  *                   column_mapping string!
+  * FSCK graft.`p`                                                  [G]
+  *     fsck                                                      kind string!, version bigint!, detail string!
+  * GENERATE symlink_format_manifest FOR TABLE graft.`p`            [G]
+  *     generateSymlinkManifest                                   manifest string!, n_files bigint!
+  * CREATE TABLE graft.`t` SHALLOW CLONE graft.`s` [VERSION AS OF n] [G]
+  *     shallowClone                                              cloned_version bigint!
+  * CONVERT TO GRAFT parquet.`p` [PARTITIONED BY (c, …)]            [G]
+  *     convert                                                   converted_version bigint!
+  * ALTER TABLE graft.`p` ADD COLUMN c GENERATED ALWAYS AS (e)      [G]
+  *     GeneratedColumns.add                                      -
+  * ALTER TABLE graft.`p` DROP GENERATED COLUMN c                   [G]
+  *     GeneratedColumns.drop                                     -
+  * ALTER TABLE graft.`p` ADD COLUMN c GENERATED BY DEFAULT AS IDENTITY
+  *     [(START WITH s INCREMENT BY i)]                             [G]
+  *     IdentityColumns.add                                       -
+  * ALTER TABLE graft.`p` DROP IDENTITY COLUMN c                    [G]
+  *     IdentityColumns.drop                                      -
+  * ANALYZE graft.`p` COMPUTE STATISTICS FOR COLUMNS (c, …)         [G]
+  *     StatsSketch.analyze                                       analyzed_version bigint!
+  * ANALYZE graft.`p` COMPUTE INCREMENTAL STATISTICS USING PK (k, …) [G]
+  *     StatsSketch.analyzeIncremental                            analyzed_version bigint!
+  * ANALYZE graft.`p` COMPUTE HISTOGRAM FOR COLUMNS (c, …)          [G]
+  *     StatsHistogram.build                                      column string!, bins int!
+  * SHOW STATISTICS graft.`p`                                       [G]
+  *     StatsSketch.estimate   column string!, m int!, zeros bigint!, s_scaled bigint!,
+  *                            ndv_est double!, exact boolean!
+  * }}}
+  *
+  * MERGE (reference: src/glue_etl.py:338-349, `whenMatchedUpdateAll
+  * .whenNotMatchedInsertAll` on the primary key): the ON condition is a
+  * conjunction of same-named column equalities (the primary key). The
+  * plain shape `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+  * INSERT *` is `ParquetTable.merge`'s idempotent upsert-by-PK (replaying
+  * a batch is a no-op); `WITH SCHEMA EVOLUTION` maps to `evolveSchema`.
+  * Conditional clauses run the [[clauseImage]] inside the same
+  * partition-scoped copy-on-write commit. Partition columns come from the
+  * target's current manifest, so no statement needs a partition clause.
+  *
+  * DELETE and UPDATE carry their conditions as SQL text, re-parsed
+  * against the target read when the command runs: an unresolved
+  * expression inside a command would fail the analyzer's resolution check
+  * first. DESCRIBE flags each column's provenance (`partition`,
+  * `generated(e)`, `identity(s,st)`, `added@vN [default e]`, `renamed
+  * from p`) from metadata only. CTAS refuses an existing table (no
+  * CREATE OR REPLACE). TBLPROPERTIES keys are free-form: the keys Spark
+  * reserves (`owner`, `location`, `provider`) are refused by Spark's
+  * grammar, so a graft-target SET/UNSET that names one is parsed again
+  * with that check off.
   */
 object GraftSql {
 
@@ -66,40 +165,115 @@ object GraftSql {
     }
 
   /** Run one graft-aware statement on an existing session — the
-    * imperative twin of querying through [[GraftSqlParser]]: SELECTs over
-    * `graft.`path`` (optionally `VERSION AS OF n`), graft-target MERGE /
-    * DELETE FROM / UPDATE, and the maintenance verbs RESTORE TABLE /
-    * OPTIMIZE … ZORDER BY / VACUUM / DESCRIBE HISTORY.
+    * imperative twin of querying through [[GraftSqlParser]].
     */
   def sql(spark: SparkSession, sqlText: String): DataFrame =
     GraftColumnBridge.ofRows(spark,
-      parseMaintenance(sqlText).getOrElse(
-        dispatch(spark.sessionState.sqlParser.parsePlan(sqlText))))
+      statementPlan(sqlText, spark.sessionState.sqlParser.parsePlan))
+
+  /** The plan of `sqlText`: the pre-match, else `parse` (Spark's grammar)
+    * followed by [[dispatch]].
+    */
+  private[sql] def statementPlan(sqlText: String, parse: String => LogicalPlan): LogicalPlan =
+    parseMaintenance(sqlText).getOrElse(dispatch(
+      try parse(sqlText) catch {
+        case e: ParseException if e.getCondition == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY" =>
+          val lenient = try PropertyParser.parsePlan(sqlText) catch { case _: ParseException => throw e }
+          lenient match {
+            case SetTableProperties(GraftTable(_), _) | UnsetTableProperties(GraftTable(_), _, _) =>
+              lenient
+            case _ => throw e
+          }
+      }))
+
+  /** Spark's grammar without its reserved-property check. */
+  private object PropertyParser extends AbstractSqlParser {
+    override val astBuilder: AstBuilder = new AstBuilder {
+      override def cleanTableProperties[V](
+          ctx: ParserRuleContext, properties: Map[String, V]): Map[String, V] = properties
+    }
+  }
+
+  /** The target of a plan naming `graft.`path``, in any of the unresolved
+    * forms Spark's parser gives a table.
+    */
+  private object GraftTable {
+    def unapply(plan: LogicalPlan): Option[String] = plan match {
+      case SubqueryAlias(_, child) => unapply(child)
+      case u: UnresolvedRelation => graft(u.multipartIdentifier)
+      case u: UnresolvedTable => graft(u.multipartIdentifier)
+      case u: UnresolvedTableOrView => graft(u.multipartIdentifier)
+      case u: UnresolvedIdentifier => graft(u.nameParts)
+      case _ => None
+    }
+
+    private def graft(name: Seq[String]): Option[String] = name match {
+      case Seq(ns, path) if ns.equalsIgnoreCase("graft") => Some(path)
+      case _ => None
+    }
+  }
+
+  private def column(name: String, t: DataType, nullable: Boolean = false): Attribute =
+    AttributeReference(name, t, nullable)()
+
+  /** A command with no result columns. */
+  private def ddl(statement: String)(verb: SparkSession => Unit): GraftCommand =
+    GraftCommand(statement, Nil)(s => { verb(s); Nil })
+
+  /** A command whose one row is the version `verb` returns. */
+  private def versioned(statement: String, name: String, nullable: Boolean = false)(
+      verb: SparkSession => Long): GraftCommand =
+    GraftCommand(statement, Seq(column(name, LongType, nullable)))(s => Seq(Row(verb(s))))
+
+  /** Refuses the first present variant: Spark parsed it, graft does not run it. */
+  private def only(statement: String, shape: String)(variants: Option[String]*): Unit =
+    variants.flatten.headOption.foreach(what => throw new IllegalArgumentException(
+      s"$statement: $what is not supported (supported: $shape)"))
+
+  private def nested(field: FieldName): Option[String] =
+    Option.when(field.name.length != 1)(s"the nested field ${field.name.mkString(".")}")
+
+  private val PlainTableSpec = UnresolvedTableSpec(Map.empty, None, OptionList(Nil), None, None,
+    None, None, external = false, Nil)
 
   /** Shared statement dispatch (used by both the injected parser and
-    * [[sql]]): graft-target MERGE → runnable command (its source's graft
-    * relations rewritten too); everything else → graft relations
-    * substituted wherever they appear.
+    * [[sql]]): a graft-target plan becomes its command; every other plan
+    * has its graft relations substituted wherever they appear.
     */
   private[sql] def dispatch(plan: LogicalPlan): LogicalPlan = plan match {
-    case m: MergeIntoTable => rewrite(m) match {
-      case Some(cmd) => cmd.copy(source = rewriteRelations(cmd.source))
-      case None => rewriteRelations(m) // non-graft target; graft sources still read
-    }
-    case i: InsertIntoStatement if targetPath(i.table).isDefined =>
-      val path = targetPath(i.table).get
-      require(i.partitionSpec.isEmpty,
+    case m: MergeIntoTable => rewrite(m).getOrElse(rewriteRelations(m))
+    case InsertIntoStatement(GraftTable(path), spec, cols, query, overwrite, _, _) =>
+      require(spec.isEmpty,
         s"INSERT graft.`$path`: static PARTITION specs are not supported — " +
           "partition values travel in the rows (dynamic), as in Delta")
-      require(i.userSpecifiedCols.isEmpty,
+      require(cols.isEmpty,
         s"INSERT graft.`$path`: a column list is not supported; insert " +
           "full rows in table column order (or use byName via DataFrame API)")
-      GraftInsertCommand(path, rewriteRelations(i.query), i.overwrite)
-    case DeleteFromTable(t, cond) if targetPath(t).isDefined =>
-      requireNoSubquery(cond, "DELETE FROM", targetPath(t).get)
-      GraftDeleteCommand(targetPath(t).get, cond.sql)
-    case UpdateTable(t, assignments, cond) if targetPath(t).isDefined =>
-      val path = targetPath(t).get
+      val source = rewriteRelations(query)
+      ddl(s"INSERT graft.`$path`") { s =>
+        val rows = GraftColumnBridge.ofRows(s, source)
+        val partitionColumns = ParquetTable.partitionColumns(s, path)
+        if (overwrite) {
+          // overwrite still aligns to the CURRENT schema (positional VALUES)
+          val aligned = ParquetTable.currentVersion(s, path)
+            .map(v => ParquetTable.alignInsert(rows, ParquetTable.readAt(s, path, v).schema))
+            .getOrElse(rows)
+          if (partitionColumns.isEmpty) ParquetTable.atomicReplace(s, path, aligned, Nil)
+          else ParquetTable.createVersioned(aligned, path, partitionColumns)
+        } else ParquetTable.insertInto(s, path, rows)
+      }
+    case DeleteFromTable(GraftTable(path), cond) =>
+      requireNoSubquery(cond, "DELETE FROM", path)
+      val conditionSql = cond.sql
+      versioned(s"DELETE FROM graft.`$path`", "committed_version") { s =>
+        s.conf.get("spark.graft.delete.mode", "copy-on-write") match {
+          case "copy-on-write" => ParquetTable.delete(s, path, expr(conditionSql))
+          case "merge-on-read" => ParquetTable.deleteVectors(s, path, expr(conditionSql))
+          case other => throw new IllegalArgumentException(
+            s"spark.graft.delete.mode must be copy-on-write or merge-on-read, got '$other'")
+        }
+      }
+    case UpdateTable(GraftTable(path), assignments, cond) =>
       cond.foreach(requireNoSubquery(_, "UPDATE", path))
       val set = assignments.map {
         case Assignment(k: UnresolvedAttribute, value) =>
@@ -108,7 +282,92 @@ object GraftSql {
         case Assignment(k, _) => throw new IllegalArgumentException(
           s"UPDATE graft.`$path`: SET key must be a plain column, got ${k.sql}")
       }
-      GraftUpdateCommand(path, set, cond.map(_.sql))
+      val conditionSql = cond.map(_.sql)
+      versioned(s"UPDATE graft.`$path`", "committed_version")(s => ParquetTable.update(s, path,
+        conditionSql.map(expr).getOrElse(lit(true)), set.map { case (k, v) => k -> expr(v) }.toMap))
+    case CreateTableAsSelect(GraftTable(path), partitioning, query, spec, writeOptions,
+        ifNotExists, _) =>
+      val statement = s"CREATE TABLE graft.`$path`"
+      val partitionBy = partitioning.flatMap(t => t.references.toSeq.map(_.fieldNames.toSeq) match {
+        case Seq(Seq(c)) if t.name == "identity" => Some(c)
+        case _ => None
+      })
+      only(statement, "CREATE TABLE graft.`p` [PARTITIONED BY (c, …)] AS <query>")(
+        Option.when(partitionBy.length != partitioning.length)("a partition transform"),
+        Option.when(ifNotExists)("IF NOT EXISTS"),
+        Option.when(spec != PlainTableSpec || writeOptions.nonEmpty)(
+          "a USING, OPTIONS, LOCATION, TBLPROPERTIES or COMMENT clause"))
+      versioned(statement, "version", nullable = true) { s =>
+        require(!ParquetTable.exists(s, path),
+          s"$statement: table already exists — drop/clean the path first (no CREATE OR REPLACE)")
+        val df = GraftColumnBridge.ofRows(s, rewriteRelations(query))
+        if (partitionBy.nonEmpty) ParquetTable.createVersioned(df, path, partitionBy)
+        else ParquetTable.create(df, path)
+        ParquetTable.currentVersion(s, path).getOrElse(1L)
+      }
+    case DescribeRelation(GraftTable(path), partitionSpec, extended, _) =>
+      val statement = s"DESCRIBE graft.`$path`"
+      only(statement, "DESC[RIBE] [TABLE] graft.`p`")(
+        Option.when(extended)("EXTENDED"), Option.when(partitionSpec.nonEmpty)("a PARTITION spec"))
+      GraftCommand(statement, Seq("col_name", "data_type", "info").map(column(_, StringType)))(
+        describe(_, path))
+    case RenameColumn(GraftTable(path), from, to) =>
+      val statement = s"ALTER TABLE graft.`$path` RENAME COLUMN"
+      only(statement, "RENAME COLUMN a TO b")(nested(from))
+      versioned(statement, "version", nullable = true)(
+        ParquetTable.renameColumn(_, path, from.name.head, to))
+    case DropColumns(GraftTable(path), fields, ifExists) =>
+      val statement = s"ALTER TABLE graft.`$path` DROP COLUMN"
+      only(statement, "DROP COLUMN a")(
+        Option.when(fields.length != 1)("dropping several columns"),
+        Option.when(ifExists)("IF EXISTS"), nested(fields.head))
+      versioned(statement, "version", nullable = true)(
+        ParquetTable.dropColumn(_, path, fields.head.name.head))
+    // the parser puts the table under a Filter here, as an
+    // UnresolvedRelation: matched before rewriteRelations would replace it
+    case AddCheckConstraint(Filter(_, GraftTable(path)), check) =>
+      val statement = s"ALTER TABLE graft.`$path` ADD CONSTRAINT"
+      only(statement, "ADD CONSTRAINT name CHECK (expr)")(
+        Option.when(check.userProvidedName == null)("an unnamed CHECK"),
+        Option.when(check.userProvidedCharacteristic != ConstraintCharacteristic.empty)(
+          "a constraint characteristic (ENFORCED, RELY, …)"))
+      ddl(statement)(Constraints.add(_, path, check.userProvidedName, check.condition.trim))
+    case DropConstraint(GraftTable(path), name, ifExists, cascade) =>
+      val statement = s"ALTER TABLE graft.`$path` DROP CONSTRAINT"
+      only(statement, "DROP CONSTRAINT name")(
+        Option.when(ifExists)("IF EXISTS"), Option.when(cascade)("CASCADE"))
+      ddl(statement)(Constraints.drop(_, path, name))
+    case AddColumns(GraftTable(path), cols) =>
+      val statement = s"ALTER TABLE graft.`$path` ADD COLUMN"
+      val c = cols.head
+      only(statement, "ADD COLUMN c type [DEFAULT expr]")(
+        Option.when(cols.length != 1)("adding several columns"),
+        c.path.map(p => s"the nested column ${p.name.mkString(".")}.${c.colName}"),
+        Option.when(!c.nullable)("NOT NULL"),
+        Option.when(c.comment.nonEmpty)("COMMENT"),
+        Option.when(c.position.nonEmpty)("a column position"))
+      versioned(statement, "version", nullable = true)(
+        ParquetTable.addColumn(_, path, c.colName, c.dataType.sql, c.default.map(_.originalSQL)))
+    case AlterColumns(GraftTable(path), specs) =>
+      val statement = s"ALTER TABLE graft.`$path` ALTER COLUMN"
+      val a = specs.head
+      only(statement, "ALTER COLUMN c SET DEFAULT expr | DROP DEFAULT")(
+        Option.when(specs.length != 1)("altering several columns"),
+        nested(a.column),
+        Option.when(a.newDataType.nonEmpty || a.newNullability.nonEmpty ||
+          a.newComment.nonEmpty || a.newPosition.nonEmpty ||
+          a.newDefaultExpression.isDefined == a.dropDefault)("a change other than the DEFAULT"))
+      ddl(statement)(ColumnDefaults.setDefault(_, path, a.column.name.head,
+        a.newDefaultExpression.map(_.originalSQL)))
+    case SetTableProperties(GraftTable(path), props) =>
+      ddl(s"ALTER TABLE graft.`$path` SET TBLPROPERTIES")(TableProperties.set(_, path, props))
+    case UnsetTableProperties(GraftTable(path), keys, _) =>
+      ddl(s"ALTER TABLE graft.`$path` UNSET TBLPROPERTIES")(TableProperties.unset(_, path, keys))
+    case ShowTableProperties(GraftTable(path), key, _) =>
+      val statement = s"SHOW TBLPROPERTIES graft.`$path`"
+      only(statement, "SHOW TBLPROPERTIES graft.`p`")(key.map(k => s"the single key '$k'"))
+      GraftCommand(statement, Seq(column("key", StringType), column("value", StringType)))(
+        TableProperties.list(_, path).map { case (k, v) => Row(k, v) })
     case other => rewriteRelations(other)
   }
 
@@ -118,18 +377,40 @@ object GraftSql {
     * a downstream unresolved-plan error.
     */
   private def requireNoSubquery(e: Expression, verb: String, path: String): Unit =
-    require(!e.exists(_.isInstanceOf[
-      org.apache.spark.sql.catalyst.expressions.SubqueryExpression]),
+    require(!e.exists(_.isInstanceOf[SubqueryExpression]),
       s"$verb graft.`$path`: subqueries in conditions are not supported; " +
         "materialize the subquery into the predicate or use the DataFrame API")
 
-  /** Maintenance statement shapes Spark's grammar does not have (Delta
-    * adds them via its own parser extension; here a pre-parse match does),
-    * recognized on the raw text before delegation:
-    * `RESTORE TABLE graft.`p` TO VERSION AS OF n`,
-    * `OPTIMIZE graft.`p` ZORDER BY (c1, c2…)`,
-    * `VACUUM graft.`p` [RETAIN n VERSIONS]`, and
-    * `DESCRIBE HISTORY graft.`p``.
+  /** DESCRIBE's rows: one per logical column, (name, type, provenance). */
+  private def describe(session: SparkSession, path: String): Seq[Row] = {
+    val schema = ParquetTable.read(session, path).schema
+    val parts = ParquetTable.partitionColumns(session, path).map(_.toLowerCase).toSet
+    val gen = GeneratedColumns.list(session, path).map { case (n, e) => n.toLowerCase -> e }.toMap
+    val ident = IdentityColumns.list(session, path)
+      .map(r => r._1.toLowerCase -> ((r._2, r._3))).toMap
+    val defs = ColumnDefaults.list(session, path).filter(_.live)
+      .map(r => r.name.toLowerCase -> r).toMap
+    val renamed = ParquetTable.currentVersion(session, path)
+      .map(ParquetTable.columnMapping(session, path, _)._1)
+      .getOrElse(Map.empty[String, String])
+      .map { case (phys, logical) => logical.toLowerCase -> phys }
+    schema.fields.toSeq.map { f =>
+      val n = f.name.toLowerCase
+      val info = Seq(
+        if (parts.contains(n)) Some("partition") else None,
+        gen.get(n).map(e => s"generated($e)"),
+        ident.get(n).map { case (s, st) => s"identity($s,$st)" },
+        defs.get(n).map(r =>
+          s"added@v${r.addedAt}" + r.default.map(d => s" default $d").getOrElse("")),
+        renamed.get(n).map(p => s"renamed from $p")
+      ).flatten.mkString("; ")
+      Row(f.name, f.dataType.simpleString, info)
+    }
+  }
+
+  /** The pre-match: statement shapes Spark's grammar lacks or misreads
+    * (Delta adds them through its own parser extension), recognized on
+    * the raw text before Spark's parser sees it.
     */
   private val RestoreStmt =
     """(?is)\s*RESTORE\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*""".r
@@ -144,6 +425,9 @@ object GraftSql {
     """(?is)\s*OPTIMIZE\s+graft\s*\.\s*`([^`]+)`\s+WHERE\s+(.+?)\s*;?\s*""".r
   private val CompactStmt =
     """(?is)\s*OPTIMIZE\s+graft\s*\.\s*`([^`]+)`\s*;?\s*""".r
+  private val CompactSmallStmt =
+    ("""(?is)\s*OPTIMIZE\s+graft\s*\.\s*`([^`]+)`\s+COMPACT\s+SMALL""" +
+      """(?:\s+BELOW\s+(\d+))?\s*;?\s*""").r
   private val VacuumStmt =
     ("""(?is)\s*VACUUM\s+graft\s*\.\s*`([^`]+)`(?:\s+RETAIN\s+(\d+)\s+""" +
       """(VERSIONS|HOURS))?(\s+DRY\s+RUN)?\s*;?\s*""").r
@@ -159,23 +443,9 @@ object GraftSql {
   private val CloneStmt =
     ("""(?is)\s*CREATE\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+SHALLOW\s+CLONE\s+""" +
       """graft\s*\.\s*`([^`]+)`(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?\s*""").r
-  // matched AFTER CloneStmt (whose tail starts with SHALLOW, not AS)
-  private val CtasStmt =
-    ("""(?is)\s*CREATE\s+TABLE\s+graft\s*\.\s*`([^`]+)`""" +
-      """(?:\s+PARTITIONED\s+BY\s*\(([^)]+)\))?\s+AS\s+(SELECT\b.+?)\s*;?\s*""").r
-  private val DescribeStmt =
-    """(?is)\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?graft\s*\.\s*`([^`]+)`\s*;?\s*""".r
-  private val RenameColumnStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+RENAME\s+COLUMN\s+""" +
-      """`?([^`\s]+)`?\s+TO\s+`?([^`\s;]+)`?\s*;?\s*""").r
-  private val DropColumnStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+DROP\s+COLUMN\s+""" +
-      """`?([^`\s;]+)`?\s*;?\s*""").r
-  private val AddConstraintStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+ADD\s+CONSTRAINT\s+""" +
-      """(\w+)\s+CHECK\s*\((.+)\)\s*;?\s*""").r
-  private val DropConstraintStmt =
-    """(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*""".r
+  private val ConvertStmt =
+    ("""(?is)\s*CONVERT\s+TO\s+GRAFT\s+parquet\s*\.\s*`([^`]+)`""" +
+      """(?:\s+PARTITIONED\s+BY\s*\(([^)]+)\))?\s*;?\s*""").r
   private val AddGeneratedStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+ADD\s+COLUMN\s+""" +
       """(\w+)\s+GENERATED\s+ALWAYS\s+AS\s*\((.+)\)\s*;?\s*""").r
@@ -189,35 +459,6 @@ object GraftSql {
   private val DropIdentityStmt =
     ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+DROP\s+IDENTITY\s+""" +
       """COLUMN\s+(\w+)\s*;?\s*""").r
-  // matched AFTER AddGeneratedStmt/AddIdentityStmt (their COLUMN clause
-  // starts with GENERATED, excluded here), so plain ADD COLUMN never
-  // shadows them
-  private val AddColumnStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+ADD\s+COLUMN\s+""" +
-      """(\w+)\s+(?!GENERATED\b)([A-Za-z_]+(?:\s*\([\d,\s]*\))?(?:\s*<[^;]*>)?)""" +
-      """(?:\s+DEFAULT\s+(.+?))?\s*;?\s*""").r
-  private val SetDefaultStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+ALTER\s+COLUMN\s+""" +
-      """(\w+)\s+SET\s+DEFAULT\s+(.+?)\s*;?\s*""").r
-  private val DropDefaultStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+ALTER\s+COLUMN\s+""" +
-      """(\w+)\s+DROP\s+DEFAULT\s*;?\s*""").r
-  private val CompactSmallStmt =
-    ("""(?is)\s*OPTIMIZE\s+graft\s*\.\s*`([^`]+)`\s+COMPACT\s+SMALL""" +
-      """(?:\s+BELOW\s+(\d+))?\s*;?\s*""").r
-  private val SetPropsStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+SET\s+""" +
-      """TBLPROPERTIES\s*\(([^)]*)\)\s*;?\s*""").r
-  private val UnsetPropsStmt =
-    ("""(?is)\s*ALTER\s+TABLE\s+graft\s*\.\s*`([^`]+)`\s+UNSET\s+""" +
-      """TBLPROPERTIES\s*(?:IF\s+EXISTS\s*)?\(([^)]*)\)\s*;?\s*""").r
-  private val ShowPropsStmt =
-    """(?is)\s*SHOW\s+TBLPROPERTIES\s+graft\s*\.\s*`([^`]+)`\s*;?\s*""".r
-  private val PropPair = """'((?:[^'\\]|\\.)*)'\s*=\s*'((?:[^'\\]|\\.)*)'""".r
-  private val PropKey = """'((?:[^'\\]|\\.)*)'""".r
-  private val ConvertStmt =
-    ("""(?is)\s*CONVERT\s+TO\s+GRAFT\s+parquet\s*\.\s*`([^`]+)`""" +
-      """(?:\s+PARTITIONED\s+BY\s*\(([^)]+)\))?\s*;?\s*""").r
   // matched BEFORE AnalyzeStmt (whose clause is COMPUTE STATISTICS, not
   // COMPUTE INCREMENTAL STATISTICS)
   private val AnalyzeIncrementalStmt =
@@ -232,96 +473,143 @@ object GraftSql {
   private val ShowStatsStmt =
     """(?is)\s*SHOW\s+STATISTICS\s+graft\s*\.\s*`([^`]+)`\s*;?\s*""".r
 
+  /** A pre-matched `(c1, `c2`, …)` list; a clause left out is empty. */
+  private def names(list: String): Seq[String] =
+    Option(list).toSeq.flatMap(_.split(',')).map(_.trim.stripPrefix("`").stripSuffix("`"))
+      .filter(_.nonEmpty)
+
   private[sql] def parseMaintenance(sqlText: String): Option[LogicalPlan] =
-    sqlText match {
-      case RestoreStmt(path, v) => Some(GraftRestoreCommand(path, v.toLong))
+    Some(sqlText).collect {
+      case RestoreStmt(path, v) =>
+        versioned(s"RESTORE TABLE graft.`$path`", "restored_to_version")(
+          ParquetTable.restore(_, path, v.toLong))
       case RestoreTsStmt(path, ts) =>
-        Some(GraftRestoreTimestampCommand(path, ts.trim))
-      case ConvertStmt(path, cols) => Some(GraftConvertCommand(path,
-        Option(cols).map(_.split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-          .toSeq.filter(_.nonEmpty)).getOrElse(Nil)))
+        versioned(s"RESTORE TABLE graft.`$path`", "restored_to_version") { s =>
+          val millis = epochMillis(ts.trim, s"RESTORE graft.`$path` TO TIMESTAMP AS OF")
+          ParquetTable.restore(s, path, ParquetTable.versionAtTimestamp(s, path, millis))
+        }
+      case ConvertStmt(path, cols) =>
+        versioned(s"CONVERT TO GRAFT parquet.`$path`", "converted_version")(
+          ParquetTable.convert(_, path, names(cols)))
       case CloneStmt(target, source, v) =>
-        Some(GraftCloneCommand(source, target, Option(v).map(_.toLong)))
-      case CtasStmt(path, parts, select) =>
-        Some(GraftCtasCommand(path,
-          Option(parts).map(_.split(',').map(_.trim.stripPrefix("`")
-            .stripSuffix("`")).toSeq.filter(_.nonEmpty)).getOrElse(Nil),
-          select.trim))
-      case DescribeStmt(path) => Some(GraftDescribeCommand(path))
-      case RenameColumnStmt(path, from, to) =>
-        Some(GraftColumnCommand(path, from, Some(to)))
-      case DropColumnStmt(path, name) =>
-        Some(GraftColumnCommand(path, name, None))
-      case AddConstraintStmt(path, name, check) =>
-        Some(GraftConstraintCommand(path, name, Some(check.trim)))
-      case DropConstraintStmt(path, name) =>
-        Some(GraftConstraintCommand(path, name, None))
+        versioned(s"CREATE TABLE graft.`$target` SHALLOW CLONE", "cloned_version")(
+          ParquetTable.shallowClone(_, source, target, Option(v).map(_.toLong)))
       case AddGeneratedStmt(path, name, genExpr) =>
-        Some(GraftGeneratedCommand(path, name, Some(genExpr.trim)))
+        ddl(s"ALTER TABLE graft.`$path` ADD COLUMN … GENERATED ALWAYS")(
+          GeneratedColumns.add(_, path, name, genExpr.trim))
       case DropGeneratedStmt(path, name) =>
-        Some(GraftGeneratedCommand(path, name, None))
-      case SetPropsStmt(path, pairs) =>
-        val props = PropPair.findAllMatchIn(pairs)
-          .map(m => m.group(1) -> m.group(2)).toSeq
-        require(props.nonEmpty,
-          "SET TBLPROPERTIES: expected at least one 'key' = 'value' pair")
-        Some(GraftPropertiesCommand(path, set = props, unset = Nil))
-      case UnsetPropsStmt(path, keys) =>
-        val ks = PropKey.findAllMatchIn(keys).map(_.group(1)).toSeq
-        require(ks.nonEmpty, "UNSET TBLPROPERTIES: expected at least one 'key'")
-        Some(GraftPropertiesCommand(path, set = Nil, unset = ks))
-      case ShowPropsStmt(path) => Some(GraftShowPropertiesCommand(path))
+        ddl(s"ALTER TABLE graft.`$path` DROP GENERATED COLUMN")(
+          GeneratedColumns.drop(_, path, name))
       case AddIdentityStmt(path, name, start, step) =>
-        Some(GraftIdentityCommand(path, name, add = true,
-          Option(start).map(_.toLong).getOrElse(1L),
-          Option(step).map(_.toLong).getOrElse(1L)))
+        ddl(s"ALTER TABLE graft.`$path` ADD COLUMN … AS IDENTITY")(IdentityColumns.add(_, path,
+          name, Option(start).map(_.toLong).getOrElse(1L), Option(step).map(_.toLong).getOrElse(1L)))
       case DropIdentityStmt(path, name) =>
-        Some(GraftIdentityCommand(path, name, add = false, 0L, 0L))
-      case AddColumnStmt(path, name, typeSql, default) =>
-        Some(GraftAddColumnCommand(path, name, typeSql.trim,
-          Option(default).map(_.trim)))
-      case SetDefaultStmt(path, name, default) =>
-        Some(GraftSetDefaultCommand(path, name, Some(default.trim)))
-      case DropDefaultStmt(path, name) =>
-        Some(GraftSetDefaultCommand(path, name, None))
+        ddl(s"ALTER TABLE graft.`$path` DROP IDENTITY COLUMN")(IdentityColumns.drop(_, path, name))
       case OptimizeBloomStmt(path, bloomCols, zCols) =>
-        def split(s: String) = s.split(',')
-          .map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq.filter(_.nonEmpty)
-        Some(GraftOptimizeBloomCommand(path, split(bloomCols),
-          Option(zCols).map(split).getOrElse(Nil)))
-      case OptimizeStmt(path, cols) => Some(GraftOptimizeCommand(path,
-        cols.split(',').map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq
-          .filter(_.nonEmpty)))
+        versioned(s"OPTIMIZE graft.`$path` BLOOM BY", "version", nullable = true)(
+          ParquetTable.optimizeBloom(_, path, names(bloomCols), names(zCols)))
+      case OptimizeStmt(path, cols) =>
+        versioned(s"OPTIMIZE graft.`$path` ZORDER BY", "committed_version")(
+          ParquetTable.optimize(_, path, names(cols)))
       case CompactWhereStmt(path, cond) =>
-        Some(GraftCompactWhereCommand(path, cond.trim))
+        versioned(s"OPTIMIZE graft.`$path` WHERE", "optimized_version")(
+          ParquetTable.compactWhere(_, path, expr(cond.trim)))
       case CompactSmallStmt(path, below) =>
-        Some(GraftCompactSmallCommand(path,
-          Option(below).map(_.toLong).getOrElse(32L * 1024 * 1024)))
-      case CompactStmt(path) => Some(GraftCompactCommand(path))
+        versioned(s"OPTIMIZE graft.`$path` COMPACT SMALL", "version", nullable = true)(
+          ParquetTable.compactSmall(_, path,
+            Option(below).map(_.toLong).getOrElse(32L * 1024 * 1024)))
+      case CompactStmt(path) =>
+        versioned(s"OPTIMIZE graft.`$path`", "optimized_version") { s =>
+          ParquetTable.compact(s, path)
+          ParquetTable.currentVersion(s, path).getOrElse(-1L)
+        }
       case VacuumStmt(path, retain, unit, dry) =>
-        val hours = Option(unit).exists(_.equalsIgnoreCase("HOURS"))
-        Some(GraftVacuumCommand(path,
-          Option(retain).map(_.toInt).getOrElse(2), hours,
-          dryRun = dry != null))
-      case HistoryStmt(path) => Some(GraftHistoryCommand(path))
-      case DetailStmt(path) => Some(GraftDetailCommand(path))
-      case FsckStmt(path) => Some(GraftFsckCommand(path))
-      case GenerateStmt(path) => Some(GraftGenerateManifestCommand(path))
+        val n = Option(retain).map(_.toInt).getOrElse(2)
+        def keep(s: SparkSession) =
+          if ("HOURS".equalsIgnoreCase(unit)) ParquetTable.keepCountForHorizon(s, path, n * 3600000L)
+          else n
+        if (dry != null)
+          GraftCommand(s"VACUUM graft.`$path` DRY RUN",
+            Seq(column("kind", StringType), column("path", StringType)))(
+            s => ParquetTable.vacuumPlan(s, path, keep(s)).map { case (k, p) => Row(k, p) })
+        else versioned(s"VACUUM graft.`$path`", "versions_retained") { s =>
+          ParquetTable.vacuum(s, path, keep(s))
+          ParquetTable.versions(s, path).size.toLong
+        }
+      case HistoryStmt(path) =>
+        GraftCommand(s"DESCRIBE HISTORY graft.`$path`", Seq(
+          column("version", LongType), column("partitioned", BooleanType),
+          column("n_entries", IntegerType), column("n_data_dirs", IntegerType),
+          column("has_change_manifest", BooleanType),
+          column("commit_ts", TimestampType, nullable = true),
+          column("manifest_mtime", TimestampType)))(
+          ParquetTable.history(_, path).collect().toSeq)
+      case DetailStmt(path) =>
+        GraftCommand(s"DESCRIBE DETAIL graft.`$path`", Seq(
+          column("location", StringType), column("format", StringType),
+          column("version", LongType, nullable = true),
+          column("commit_ts", TimestampType, nullable = true),
+          column("partitioned", BooleanType),
+          column("partition_columns", ArrayType(StringType, containsNull = false)),
+          column("n_partitions", IntegerType), column("n_data_dirs", IntegerType),
+          column("num_files", LongType, nullable = true),
+          column("num_rows", LongType, nullable = true),
+          column("num_deleted_rows", LongType), column("n_versions", IntegerType),
+          column("n_constraints", IntegerType), column("column_mapping", StringType)))(
+          ParquetTable.detail(_, path).collect().toSeq)
+      case FsckStmt(path) =>
+        GraftCommand(s"FSCK graft.`$path`", Seq(
+          column("kind", StringType), column("version", LongType), column("detail", StringType)))(
+          ParquetTable.fsck(_, path).collect().toSeq)
+      case GenerateStmt(path) =>
+        GraftCommand(s"GENERATE symlink_format_manifest FOR TABLE graft.`$path`",
+          Seq(column("manifest", StringType), column("n_files", LongType)))(
+          ParquetTable.generateSymlinkManifest(_, path).map { case (m, n) => Row(m, n) })
       case AnalyzeIncrementalStmt(path, pk) =>
-        Some(GraftAnalyzeIncrementalCommand(path,
-          pk.split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-            .toSeq.filter(_.nonEmpty)))
+        versioned(s"ANALYZE graft.`$path` COMPUTE INCREMENTAL STATISTICS", "analyzed_version")(
+          StatsSketch.analyzeIncremental(_, path, names(pk), ParquetTable.statsDir(path)))
       case AnalyzeStmt(path, cols) =>
-        Some(GraftAnalyzeCommand(path,
-          cols.split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-            .toSeq.filter(_.nonEmpty)))
+        versioned(s"ANALYZE graft.`$path` COMPUTE STATISTICS", "analyzed_version")(
+          StatsSketch.analyze(_, path, names(cols), ParquetTable.statsDir(path)))
       case AnalyzeHistogramStmt(path, cols) =>
-        Some(GraftAnalyzeHistogramCommand(path,
-          cols.split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-            .toSeq.filter(_.nonEmpty)))
-      case ShowStatsStmt(path) => Some(GraftShowStatsCommand(path))
-      case _ => None
+        GraftCommand(s"ANALYZE graft.`$path` COMPUTE HISTOGRAM",
+          Seq(column("column", StringType), column("bins", IntegerType))) { s =>
+          // stamp the bins with the version they describe — the read path's
+          // staleness guard refuses bins older than the last full ANALYZE,
+          // newer than the snapshot being read, or any bins once an
+          // update/delete window flipped the sketch inexact. A plain
+          // (non-versioned) location takes the free-standing tier (−1): no
+          // lifecycle, bins valid until the next StatsSketch.save
+          // re-baseline deletes them
+          val v = ParquetTable.currentVersion(s, path).getOrElse(-1L)
+          StatsHistogram.build(ParquetTable.read(s, path), names(cols),
+              ParquetTable.statsDir(path), version = v)
+            .toSeq.sortBy(_._1).map { case (c, bins) => Row(c, bins.size) }
+        }
+      case ShowStatsStmt(path) =>
+        GraftCommand(s"SHOW STATISTICS graft.`$path`", Seq(
+          column("column", StringType), column("m", IntegerType), column("zeros", LongType),
+          column("s_scaled", LongType), column("ndv_est", DoubleType),
+          column("exact", BooleanType))) { s =>
+          val dir = ParquetTable.statsDir(path)
+          val exact = StatsSketch.isExact(s, dir)
+          StatsSketch.estimate(s, dir).orderBy("column").collect().toSeq
+            .map(r => Row(r.getString(0), r.getInt(1), r.getLong(2),
+              r.getLong(3), r.getDouble(4), exact))
+        }
     }
+
+  /** A timestamp literal as epoch millis: digits are epoch millis;
+    * `yyyy-MM-dd[ HH:mm:ss[.f]]` reads in the JVM zone, the clock the
+    * manifests' `#ts=` headers are stamped from.
+    */
+  private def epochMillis(str: String, what: String): Long = {
+    def fail() = throw new IllegalArgumentException(
+      s"$what '$str': expected 'yyyy-MM-dd[ HH:mm:ss[.f]]' or epoch millis")
+    if (str.nonEmpty && str.forall(_.isDigit)) str.toLongOption.getOrElse(fail())
+    else try java.sql.Timestamp.valueOf(if (str.length == 10) str + " 00:00:00" else str).getTime
+    catch { case _: IllegalArgumentException => fail() }
+  }
 
   /** Substitute every `graft.`path`` relation in `plan` with the
     * versioned-table read it names: bare references read the CURRENT
@@ -335,10 +623,10 @@ object GraftSql {
     * time — exactly when `spark.sql` runs this parser).
     */
   private[sql] def rewriteRelations(plan: LogicalPlan): LogicalPlan = {
+    def session(what: String): SparkSession = SparkSession.getActiveSession.getOrElse(
+      throw new IllegalStateException(s"$what: no active SparkSession to resolve the read"))
     def readPlan(path: String, version: Option[String]): LogicalPlan = {
-      val spark = SparkSession.getActiveSession.getOrElse(
-        throw new IllegalStateException(
-          s"graft.`$path`: no active SparkSession to resolve the read"))
+      val spark = session(s"graft.`$path`")
       val df = version match {
         case Some(v) =>
           val ver = try v.toLong catch {
@@ -350,41 +638,25 @@ object GraftSql {
       }
       df.queryExecution.logical
     }
-    // TIMESTAMP AS OF literal → epoch millis. Strings parse in the JVM
-    // zone (same clock `#ts=` headers are stamped from); TIMESTAMP
-    // literals arrive as epoch micros already. Non-literals are rejected:
-    // time travel must be decidable at parse time.
+    // TIMESTAMP AS OF literal → epoch millis. TIMESTAMP literals arrive
+    // as epoch micros already. Non-literals are rejected: time travel must
+    // be decidable at parse time.
     def tsMillisOf(path: String, e: Expression): Long = e match {
-      case Literal(s, org.apache.spark.sql.types.StringType) if s != null =>
-        val str = s.toString.trim
-        def fail() = throw new IllegalArgumentException(
-          s"graft.`$path` TIMESTAMP AS OF '$str': expected " +
-            "'yyyy-MM-dd[ HH:mm:ss[.f]]' or epoch millis")
-        if (str.nonEmpty && str.forall(_.isDigit)) str.toLongOption.getOrElse(fail())
-        else try java.sql.Timestamp.valueOf(
-          if (str.length == 10) str + " 00:00:00" else str).getTime
-        catch { case _: IllegalArgumentException => fail() }
-      case Literal(micros: Long, org.apache.spark.sql.types.TimestampType) =>
-        Math.floorDiv(micros, 1000L)
+      case Literal(s, StringType) if s != null =>
+        epochMillis(s.toString.trim, s"graft.`$path` TIMESTAMP AS OF")
+      case Literal(micros: Long, TimestampType) => Math.floorDiv(micros, 1000L)
       case other => throw new IllegalArgumentException(
-        s"graft.`$path` TIMESTAMP AS OF: literal timestamp required, " +
-          s"got ${other.sql}")
+        s"graft.`$path` TIMESTAMP AS OF: literal timestamp required, got ${other.sql}")
     }
     plan.transformUpWithSubqueries {
-      case RelationTimeTravel(u: UnresolvedRelation, ts, version)
-          if targetPath(u).isDefined =>
-        val path = targetPath(u).get
+      case RelationTimeTravel(GraftTable(path), ts, version) =>
         ts match {
           case Some(e) =>
-            val spark = SparkSession.getActiveSession.getOrElse(
-              throw new IllegalStateException(
-                s"graft.`$path`: no active SparkSession to resolve the read"))
-            ParquetTable.readAtTimestamp(spark, path, tsMillisOf(path, e))
+            ParquetTable.readAtTimestamp(session(s"graft.`$path`"), path, tsMillisOf(path, e))
               .queryExecution.logical
           case None => readPlan(path, version)
         }
-      case u: UnresolvedRelation if targetPath(u).isDefined =>
-        readPlan(targetPath(u).get, None)
+      case u @ GraftTable(path) if u.isInstanceOf[UnresolvedRelation] => readPlan(path, None)
       // Delta's `table_changes` TVF equivalent: the per-commit CDF as a
       // relation in ANY query position.
       //   graft_table_changes('/path', fromVersion, toVersion, pk...)
@@ -400,20 +672,18 @@ object GraftSql {
         }
         require(args.length >= 3, "graft_table_changes(path, fromVersion, " +
           "toVersion, pkCol...) needs at least path + two versions")
-        val spark = SparkSession.getActiveSession.getOrElse(
-          throw new IllegalStateException(
-            "graft_table_changes: no active SparkSession"))
-        ParquetTable.tableChanges(spark, args(0), args(1).toLong, args(2).toLong,
-          args.drop(3)).queryExecution.logical
+        ParquetTable.tableChanges(session("graft_table_changes"), args(0), args(1).toLong,
+          args(2).toLong, args.drop(3)).queryExecution.logical
     }
   }
 
-  /** `MergeIntoTable` → [[GraftMergeCommand]] when the target is
-    * `graft.`path``; None when the statement belongs to someone else.
-    * Unsupported clause shapes on a graft target throw, naming the clause.
+  /** `MergeIntoTable` → its command when the target is `graft.`path``
+    * (the source's graft relations rewritten too); None when the
+    * statement belongs to someone else. Unsupported clause shapes on a
+    * graft target throw, naming the clause.
     */
-  private[sql] def rewrite(m: MergeIntoTable): Option[GraftMergeCommand] =
-    targetPath(m.targetTable).map { path =>
+  private[sql] def rewrite(m: MergeIntoTable): Option[GraftCommand] =
+    GraftTable.unapply(m.targetTable).map { path =>
       def fail(what: String): Nothing = throw new IllegalArgumentException(
         s"MERGE INTO graft.`$path`: $what (supported shapes: ON pk equality " +
           "conjunction; matched clauses 'WHEN MATCHED [AND cond] THEN " +
@@ -422,11 +692,16 @@ object GraftSql {
       val pk = pkColumns(m.mergeCondition).getOrElse(
         fail(s"ON condition must be a conjunction of t.col = s.col " +
           s"equalities on same-named columns, got: ${m.mergeCondition.sql}"))
+      val source = rewriteRelations(m.sourceTable)
       val simple = m.matchedActions == Seq(UpdateStarAction(None)) &&
         m.notMatchedActions == Seq(InsertStarAction(None)) &&
         m.notMatchedBySourceActions.isEmpty
       if (simple)
-        GraftMergeCommand(path, m.sourceTable, pk, m.withSchemaEvolution)
+        ddl(s"MERGE INTO graft.`$path`") { s =>
+          val updates = GraftColumnBridge.ofRows(s, source)
+          ParquetTable.merge(s, path, updates, pk, ParquetTable.partitionColumns(s, path),
+            evolveSchema = m.withSchemaEvolution)
+        }
       else {
         // conditional-clause shape → the rewrite-tier clause image
         if (m.withSchemaEvolution)
@@ -468,10 +743,41 @@ object GraftSql {
           fail("conditional clauses need explicit target AND source " +
             "aliases (MERGE INTO graft.`p` AS t USING src AS s …) so the " +
             "conditions' qualifiers can resolve")
-        GraftMergeCommand(path, m.sourceTable, pk, evolveSchema = false,
-          tAlias = tA.getOrElse("__graft_t"), sAlias = sA.getOrElse("__graft_s"),
-          matchedClauses = Some(matched), insertClause = insert,
-          bySourceClauses = bySource)
+        val tAlias = tA.getOrElse("__graft_t")
+        val sAlias = sA.getOrElse("__graft_s")
+        ddl(s"MERGE INTO graft.`$path`") { s =>
+          val updates = GraftColumnBridge.ofRows(s, source)
+          val partitionColumns = ParquetTable.partitionColumns(s, path)
+          // the clause image replaces the upsert image inside the SAME
+          // partition-scoped copy-on-write commit machinery. BY SOURCE
+          // clauses must see EVERY target row, so the partition scoping
+          // (affected = source partitions) no longer applies — the merge
+          // degrades to whole-table on partitioned targets; refuse with
+          // guidance instead of silently dropping out-of-slice rows.
+          if (bySource.nonEmpty && partitionColumns.nonEmpty)
+            throw new IllegalArgumentException(
+              s"MERGE INTO graft.`$path`: WHEN NOT MATCHED BY SOURCE needs " +
+                "the whole target, which defeats partition-scoped merging " +
+                "on a partitioned table — run it as DELETE/UPDATE with an " +
+                "anti-join condition instead")
+          // UPDATE SET on a partition column would move the row into a
+          // partition dir the partition-scoped manifest never maps — the
+          // row silently vanishes from reads. Mirror ParquetTable.update's
+          // resolveSet guard at the clause layer.
+          for {
+            cl <- matched ++ bySource
+            (key, _) <- cl.sets
+            pc <- partitionColumns.find(_.equalsIgnoreCase(key))
+          } throw new IllegalArgumentException(
+            s"MERGE INTO graft.`$path`: UPDATE SET cannot assign " +
+              s"partition column $pc — a moved row would land in a " +
+              "partition the merge's manifest scope never maps; " +
+              "DELETE + re-INSERT the row to move it across partitions")
+          val combine = (t0: DataFrame, s0: DataFrame) =>
+            clauseImage(t0, s0, pk, tAlias, sAlias, matched, insert, bySource)
+          ParquetTable.merge(s, path, updates, pk, partitionColumns,
+            mergeOnRead = Some(false), combine = Some(combine))
+        }
       }
     }
 
@@ -548,15 +854,6 @@ object GraftSql {
       }: _*)
   }
 
-  private def targetPath(plan: LogicalPlan): Option[String] = plan match {
-    case SubqueryAlias(_, child) => targetPath(child)
-    case u: UnresolvedRelation
-        if u.multipartIdentifier.length == 2 &&
-          u.multipartIdentifier.head.equalsIgnoreCase("graft") =>
-      Some(u.multipartIdentifier(1))
-    case _ => None
-  }
-
   /** `t.k1 = s.k1 AND t.k2 = s.k2 …` → Some(Seq(k1, k2…)); anything else
     * (inequalities, functions, differing column names) → None.
     */
@@ -573,13 +870,6 @@ object GraftSql {
   }
 }
 
-/** The runnable side of a graft `MERGE INTO`: resolves the (still
-  * unresolved) source plan against the session at run time, recovers
-  * partition columns from the target's current manifest, and delegates
-  * to `ParquetTable.merge`. `MERGE INTO … WITH SCHEMA EVOLUTION`
-  * (Spark's own grammar) maps to `evolveSchema = true` — Delta
-  * `mergeSchema` parity, both layouts.
-  */
 /** One MERGE clause in replayable string form: `cond` = the AND
   * condition's SQL (None = unconditional), `kind` = update-star /
   * update-set / delete, `sets` = SET assignments (update-set only).
@@ -595,804 +885,33 @@ object MergeClause {
   val Delete = "delete"
 }
 
-case class GraftMergeCommand(
-    path: String,
-    source: LogicalPlan,
-    pk: Seq[String],
-    evolveSchema: Boolean = false,
-    tAlias: String = "t",
-    sAlias: String = "s",
-    matchedClauses: Option[Seq[MergeClause]] = None,
-    insertClause: Option[Option[String]] = Some(None),
-    bySourceClauses: Seq[MergeClause] = Nil) extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val updates = GraftColumnBridge.ofRows(session, source)
-    val partitionColumns = ParquetTable.currentVersion(session, path)
-      .flatMap(v => ParquetTable.partitionEntries(session, path, v))
-      .map(_.head._1.split('/').toSeq.map(_.split('=')(0)))
-      .getOrElse(Nil)
-    matchedClauses match {
-      case None =>
-        ParquetTable.merge(session, path, updates, pk, partitionColumns,
-          evolveSchema = evolveSchema)
-      case Some(clauses) =>
-        // conditional clauses: the clause image replaces the upsert image
-        // inside the SAME partition-scoped copy-on-write commit machinery.
-        // BY SOURCE clauses must see EVERY target row, so the partition
-        // scoping (affected = source partitions) no longer applies — the
-        // merge degrades to whole-table on partitioned targets; refuse
-        // with guidance instead of silently dropping out-of-slice rows.
-        if (bySourceClauses.nonEmpty && partitionColumns.nonEmpty)
-          throw new IllegalArgumentException(
-            s"MERGE INTO graft.`$path`: WHEN NOT MATCHED BY SOURCE needs " +
-              "the whole target, which defeats partition-scoped merging " +
-              "on a partitioned table — run it as DELETE/UPDATE with an " +
-              "anti-join condition instead")
-        // UPDATE SET on a partition column would move the row into a
-        // partition dir the partition-scoped manifest never maps — the
-        // row silently vanishes from reads (ADVICE r7 high). Mirror
-        // ParquetTable.update's resolveSet guard at the clause layer.
-        if (partitionColumns.nonEmpty)
-          for {
-            cl <- clauses ++ bySourceClauses
-            (key, _) <- cl.sets
-            pc <- partitionColumns.find(_.equalsIgnoreCase(key))
-          } throw new IllegalArgumentException(
-            s"MERGE INTO graft.`$path`: UPDATE SET cannot assign " +
-              s"partition column $pc — a moved row would land in a " +
-              "partition the merge's manifest scope never maps; " +
-              "DELETE + re-INSERT the row to move it across partitions")
-        val combine = (t0: DataFrame, s0: DataFrame) =>
-          GraftSql.clauseImage(t0, s0, pk, tAlias, sAlias, clauses,
-            insertClause, bySourceClauses)
-        ParquetTable.merge(session, path, updates, pk, partitionColumns,
-          mergeOnRead = Some(false), combine = Some(combine))
-    }
-    Seq.empty
-  }
-}
-
-/** `INSERT INTO | OVERWRITE graft.`path``: append (INSERT INTO — the
-  * O(appended rows) versioned commit of `ParquetTable.insertInto`; on
-  * partitioned tables only affected partitions rewrite) or replace
-  * (INSERT OVERWRITE — full-image commit: `atomicReplace` unpartitioned,
-  * `createVersioned` republish partitioned). Duplicates are kept —
-  * INSERT is append; MERGE is the upsert verb.
+/** The one runnable node of graft SQL: `statement` names the statement
+  * and its target, `output` its result columns (built once, when the
+  * statement is parsed), and `body` runs the verb. The body rides in the
+  * second parameter list, which tree copies carry through
+  * `otherCopyArgs`; the syntax table in [[GraftSql]] lists every body.
   */
-case class GraftInsertCommand(
-    path: String,
-    source: LogicalPlan,
-    overwrite: Boolean) extends LeafRunnableCommand {
+case class GraftCommand(statement: String, override val output: Seq[Attribute])(
+    body: SparkSession => Seq[Row]) extends LeafRunnableCommand {
 
-  override def output: Seq[Attribute] = Nil
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(body)
 
-  override def run(session: SparkSession): Seq[Row] = {
-    val rows = GraftColumnBridge.ofRows(session, source)
-    val partitionColumns = ParquetTable.currentVersion(session, path)
-      .flatMap(v => ParquetTable.partitionEntries(session, path, v))
-      .map(_.head._1.split('/').toSeq.map(_.split('=')(0)))
-      .getOrElse(Nil)
-    if (overwrite) {
-      // overwrite still aligns to the CURRENT schema (positional VALUES)
-      val aligned = ParquetTable.currentVersion(session, path)
-        .map(v => ParquetTable.alignInsert(rows,
-          ParquetTable.readAt(session, path, v).schema))
-        .getOrElse(rows)
-      if (partitionColumns.isEmpty)
-        ParquetTable.atomicReplace(session, path, aligned, Nil)
-      else ParquetTable.createVersioned(aligned, path, partitionColumns)
-    } else ParquetTable.insertInto(session, path, rows)
-    Seq.empty
-  }
-}
-
-/** `CONVERT TO GRAFT parquet.`/path`` [PARTITIONED BY (c1, …)]`: adopt a
-  * plain parquet layout as a versioned table in place — Delta's
-  * `CONVERT TO DELTA` verb (see `ParquetTable.convert`; files are
-  * renamed, never rewritten). Returns one row with the created version.
-  */
-case class GraftConvertCommand(path: String, partitionColumns: Seq[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "converted_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    Seq(Row(ParquetTable.convert(session, path, partitionColumns)))
-}
-
-/** Bare `OPTIMIZE graft.`path`` (no ZORDER BY) — Delta's default
-  * OPTIMIZE: bin-pack compaction via `ParquetTable.compact`, which folds
-  * a merge-on-read chain (appended dirs + deletion vectors) or a
-  * scattered partitioned current version back into one fresh data dir.
-  * Returns one row with the new current version.
-  */
-case class GraftCompactCommand(path: String) extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "optimized_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    ParquetTable.compact(session, path)
-    Seq(Row(ParquetTable.currentVersion(session, path).getOrElse(-1L)))
-  }
-}
-
-/** `OPTIMIZE graft.`path` WHERE <partition predicate>`: partition-scoped
-  * compaction — Delta's OPTIMIZE-WHERE tier ([[ParquetTable.compactWhere]]):
-  * only matching partitions fold their dir chains / materialize their
-  * deletion vectors; cold partitions are untouched.
-  */
-case class GraftCompactWhereCommand(path: String, condition: String)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "optimized_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    Seq(Row(ParquetTable.compactWhere(session, path,
-      org.apache.spark.sql.functions.expr(condition))))
-}
-
-/** `RESTORE TABLE graft.`path` TO VERSION AS OF n`: republishes the old
-  * image as the next version — metadata-only (see `ParquetTable.restore`).
-  * Returns one row with the newly committed version.
-  */
-case class GraftRestoreCommand(path: String, version: Long)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "restored_to_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    Seq(Row(ParquetTable.restore(session, path, version)))
-}
-
-/** `RESTORE TABLE graft.`path` TO TIMESTAMP AS OF '<ts>'`: restores the
-  * latest version committed at or before the timestamp (resolved through
-  * the manifests' `#ts=` headers, the `readAtTimestamp` rule). Accepted
-  * literal shapes: `'yyyy-MM-dd[ HH:mm:ss[.f]]'` (JVM zone, the clock
-  * the headers are stamped from) or digits-only epoch millis.
-  */
-case class GraftRestoreTimestampCommand(path: String, ts: String)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "restored_to_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    def fail() = throw new IllegalArgumentException(
-      s"RESTORE graft.`$path` TO TIMESTAMP AS OF '$ts': expected " +
-        "'yyyy-MM-dd[ HH:mm:ss[.f]]' or epoch millis")
-    val millis =
-      if (ts.nonEmpty && ts.forall(_.isDigit)) ts.toLongOption.getOrElse(fail())
-      else try java.sql.Timestamp.valueOf(
-        if (ts.length == 10) ts + " 00:00:00" else ts).getTime
-      catch { case _: IllegalArgumentException => fail() }
-    val v = ParquetTable.versionAtTimestamp(session, path, millis)
-    Seq(Row(ParquetTable.restore(session, path, v)))
-  }
-}
-
-/** `DESCRIBE DETAIL graft.`path``: one metadata-only row for the current
-  * snapshot (see `ParquetTable.detail` — sidecar-derived counts, no data
-  * I/O).
-  */
-case class GraftDetailCommand(path: String) extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType, TimestampType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("location", StringType, nullable = false)(),
-    AttributeReference("format", StringType, nullable = false)(),
-    AttributeReference("version", LongType, nullable = true)(),
-    AttributeReference("commit_ts", TimestampType, nullable = true)(),
-    AttributeReference("partitioned", BooleanType, nullable = false)(),
-    AttributeReference("partition_columns", ArrayType(StringType, containsNull = false),
-      nullable = false)(),
-    AttributeReference("n_partitions", IntegerType, nullable = false)(),
-    AttributeReference("n_data_dirs", IntegerType, nullable = false)(),
-    AttributeReference("num_files", LongType, nullable = true)(),
-    AttributeReference("num_rows", LongType, nullable = true)(),
-    AttributeReference("num_deleted_rows", LongType, nullable = false)(),
-    AttributeReference("n_versions", IntegerType, nullable = false)(),
-    AttributeReference("n_constraints", IntegerType, nullable = false)(),
-    AttributeReference("column_mapping", StringType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    ParquetTable.detail(session, path).collect().toSeq
-}
-
-/** `CREATE TABLE graft.`target` SHALLOW CLONE graft.`source`
-  * [VERSION AS OF n]`: metadata-only clone whose manifest references the
-  * source's data dirs (see `ParquetTable.shallowClone` for the
-  * divergence and vacuum contract). Returns one row with the clone's
-  * first version.
-  */
-case class GraftCloneCommand(
-    sourcePath: String, targetPath: String, version: Option[Long])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "cloned_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    Seq(Row(ParquetTable.shallowClone(session, sourcePath, targetPath, version)))
-}
-
-/** `ALTER TABLE graft.`path` ADD CONSTRAINT name CHECK (expr)` /
-  * `… DROP CONSTRAINT name` — Delta's CHECK-constraint DDL (see
-  * `Constraints`: ADD validates existing data in one scan; every later
-  * commit validates its own writes before publishing).
-  */
-/** `OPTIMIZE graft.`p` BLOOM BY (c1…) [ZORDER BY (z1…)]`: rewrite with
-  * native parquet bloom filters on the named columns (point-lookup
-  * skipping tier — see `ParquetTable.optimizeBloom`). Returns the
-  * committed version.
-  */
-case class GraftOptimizeBloomCommand(
-    path: String, bloomFor: Seq[String], zorderBy: Seq[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "version", org.apache.spark.sql.types.LongType)())
-
-  override def run(session: SparkSession): Seq[Row] = Seq(Row(
-    graft.sources.ParquetTable.optimizeBloom(
-      session, path, bloomFor, zorderBy)))
-}
-
-/** `ALTER TABLE graft.`p` RENAME COLUMN a TO b` / `DROP COLUMN a`:
-  * O(1) metadata-only schema change via the `#colmap=` manifest header
-  * (see `ParquetTable.renameColumn`). Returns the committed version.
-  */
-case class GraftColumnCommand(
-    path: String, column: String, renameTo: Option[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "version", org.apache.spark.sql.types.LongType)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val v = renameTo match {
-      case Some(to) => graft.sources.ParquetTable.renameColumn(session, path, column, to)
-      case None => graft.sources.ParquetTable.dropColumn(session, path, column)
-    }
-    Seq(Row(v))
-  }
-}
-
-/** `CREATE TABLE graft.`p` [PARTITIONED BY (c…)] AS SELECT …` — CTAS
-  * onto the versioned layout: the SELECT (which may itself read
-  * `graft.`path`` tables, time travel included) materializes as version
-  * 1. Refuses an existing table (Delta's CTAS-without-REPLACE). Returns
-  * one row with the created version.
-  */
-case class GraftCtasCommand(path: String, partitionBy: Seq[String], select: String)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "version", org.apache.spark.sql.types.LongType)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    require(!ParquetTable.exists(session, path),
-      s"CREATE TABLE graft.`$path`: table already exists — " +
-        "drop/clean the path first (no CREATE OR REPLACE)")
-    val df = org.apache.spark.sql.GraftColumnBridge.ofRows(session,
-      GraftSql.dispatch(session.sessionState.sqlParser.parsePlan(select)))
-    if (partitionBy.nonEmpty)
-      ParquetTable.createVersioned(df, path, partitionBy)
-    else ParquetTable.create(df, path)
-    Seq(Row(ParquetTable.currentVersion(session, path).getOrElse(1L)))
-  }
-}
-
-/** `DESC[RIBE] [TABLE] graft.`p``: one row per logical column —
-  * (col_name, data_type, info) with provenance flags the plain schema
-  * doesn't show: `partition`, `generated(expr)`, `identity(start,step)`,
-  * `added@vN [default expr]` (ADD COLUMN'd), `renamed from p` (active
-  * column mapping). Pure metadata: schema from the versioned read plan,
-  * rules from the DDL files; no data I/O.
-  */
-case class GraftDescribeCommand(path: String) extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq("col_name", "data_type", "info").map(n =>
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      n, org.apache.spark.sql.types.StringType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val schema = ParquetTable.read(session, path).schema
-    val v = ParquetTable.currentVersion(session, path)
-    val parts = v.flatMap(ParquetTable.partitionEntries(session, path, _))
-      .map(_.head._1.split('/').toSeq.map(_.split('=')(0).toLowerCase).toSet)
-      .getOrElse(Set.empty[String])
-    val gen = graft.sources.GeneratedColumns.list(session, path)
-      .map { case (n, e) => n.toLowerCase -> e }.toMap
-    val ident = graft.sources.IdentityColumns.list(session, path)
-      .map(r => r._1.toLowerCase -> ((r._2, r._3))).toMap
-    val defs = graft.sources.ColumnDefaults.list(session, path).filter(_.live)
-      .map(r => r.name.toLowerCase -> r).toMap
-    val renamed = v.map(ParquetTable.columnMapping(session, path, _)._1)
-      .getOrElse(Map.empty[String, String])
-      .map { case (phys, logical) => logical.toLowerCase -> phys }
-    schema.fields.toSeq.map { f =>
-      val n = f.name.toLowerCase
-      val info = Seq(
-        if (parts.contains(n)) Some("partition") else None,
-        gen.get(n).map(e => s"generated($e)"),
-        ident.get(n).map { case (s, st) => s"identity($s,$st)" },
-        defs.get(n).map(r =>
-          s"added@v${r.addedAt}" + r.default.map(d => s" default $d").getOrElse("")),
-        renamed.get(n).map(p => s"renamed from $p")
-      ).flatten.mkString("; ")
-      Row(f.name, f.dataType.simpleString, info)
-    }
-  }
-}
-
-/** `ALTER TABLE graft.`p` ADD COLUMN c type [DEFAULT expr]` — Delta's
-  * metadata-only schema evolution plus the SQL column-DEFAULT model (see
-  * `ParquetTable.addColumn` / `ColumnDefaults`: existing rows read typed
-  * NULL, the default fills future writes that omit the column). Returns
-  * the committed version.
-  */
-case class GraftAddColumnCommand(
-    path: String, name: String, typeSql: String, default: Option[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "version", org.apache.spark.sql.types.LongType)())
-
-  override def run(session: SparkSession): Seq[Row] = Seq(Row(
-    graft.sources.ParquetTable.addColumn(session, path, name, typeSql, default)))
-}
-
-/** `ALTER TABLE graft.`p` ALTER COLUMN c SET DEFAULT expr` /
-  * `… DROP DEFAULT`: change what FUTURE ingest fills — no data touched.
-  */
-case class GraftSetDefaultCommand(
-    path: String, name: String, default: Option[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    graft.sources.ColumnDefaults.setDefault(session, path, name, default)
-    Nil
-  }
-}
-
-case class GraftConstraintCommand(
-    path: String, name: String, check: Option[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    check match {
-      case Some(c) => graft.sources.Constraints.add(session, path, name, c)
-      case None => graft.sources.Constraints.drop(session, path, name)
-    }
-    Nil
-  }
-}
-
-/** `ALTER TABLE graft.`p` ADD COLUMN c GENERATED ALWAYS AS (expr)` /
-  * `… DROP GENERATED COLUMN c` — Delta's generated-column DDL (see
-  * `GeneratedColumns`: ingest verbs fill the column when absent, the
-  * paired `_gen_<c>` CHECK invariant validates every commit).
-  */
-case class GraftGeneratedCommand(
-    path: String, name: String, genExpr: Option[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    genExpr match {
-      case Some(e) => graft.sources.GeneratedColumns.add(session, path, name, e)
-      case None => graft.sources.GeneratedColumns.drop(session, path, name)
-    }
-    Nil
-  }
-}
-
-/** `ALTER TABLE graft.`p` ADD COLUMN c GENERATED BY DEFAULT AS IDENTITY
-  * [(START WITH s INCREMENT BY i)]` / `… DROP IDENTITY COLUMN c` —
-  * Delta's identity-column DDL (see `IdentityColumns`: create-time
-  * registration, insert verbs assign from the persisted watermark).
-  */
-case class GraftIdentityCommand(
-    path: String, name: String, add: Boolean, start: Long, step: Long)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    if (add) graft.sources.IdentityColumns.add(session, path, name, start, step)
-    else graft.sources.IdentityColumns.drop(session, path, name)
-    Nil
-  }
-}
-
-/** `OPTIMIZE graft.`p` COMPACT SMALL [BELOW <bytes>]`: incremental
-  * small-dir compaction (see `ParquetTable.compactSmall` — large dirs
-  * are never rewritten). Returns the committed (or current) version.
-  */
-case class GraftCompactSmallCommand(path: String, minBytes: Long)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "version", org.apache.spark.sql.types.LongType)())
-
-  override def run(session: SparkSession): Seq[Row] = Seq(Row(
-    graft.sources.ParquetTable.compactSmall(session, path, minBytes)))
-}
-
-/** `ALTER TABLE graft.`p` SET TBLPROPERTIES ('k'='v', …)` /
-  * `… UNSET TBLPROPERTIES [IF EXISTS] ('k', …)` (see `TableProperties`;
-  * `graft.appendOnly = 'true'` is enforced by every row-mutating verb).
-  */
-case class GraftPropertiesCommand(
-    path: String, set: Seq[(String, String)], unset: Seq[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Nil
-
-  override def run(session: SparkSession): Seq[Row] = {
-    if (set.nonEmpty)
-      graft.sources.TableProperties.set(session, path, set.toMap)
-    if (unset.nonEmpty)
-      graft.sources.TableProperties.unset(session, path, unset)
-    Nil
-  }
-}
-
-/** `SHOW TBLPROPERTIES graft.`p``: one (key, value) row per property. */
-case class GraftShowPropertiesCommand(path: String)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] = Seq(
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "key", org.apache.spark.sql.types.StringType, nullable = false)(),
-    org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "value", org.apache.spark.sql.types.StringType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    graft.sources.TableProperties.list(session, path)
-      .map { case (k, v) => Row(k, v) }
-}
-
-/** `OPTIMIZE graft.`path` ZORDER BY (c1, c2…)`: republishes the current
-  * image Z-order-clustered for multi-column data skipping (see
-  * `ParquetTable.optimize`). Returns one row with the committed version.
-  */
-case class GraftOptimizeCommand(path: String, zorderBy: Seq[String])
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "committed_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    Seq(Row(ParquetTable.optimize(session, path, zorderBy)))
-}
-
-/** `VACUUM graft.`path` [RETAIN n VERSIONS]`: deletes manifests and data
-  * dirs of versions older than the retained window (default 2 — see
-  * `ParquetTable.vacuum`). Returns one row with the number of versions
-  * still present. With `DRY RUN` appended, returns the authoritative
-  * (kind, path) work list WITHOUT deleting — Delta's VACUUM DRY RUN.
-  */
-case class GraftVacuumCommand(
-    path: String, retain: Int, hours: Boolean = false, dryRun: Boolean = false)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    if (dryRun)
-      Seq(
-        org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          "kind", org.apache.spark.sql.types.StringType, nullable = false)(),
-        org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          "path", org.apache.spark.sql.types.StringType, nullable = false)())
-    else
-      Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        "versions_retained", org.apache.spark.sql.types.LongType,
-        nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val keep =
-      if (hours) ParquetTable.keepCountForHorizon(session, path, retain * 3600000L)
-      else retain
-    if (dryRun)
-      // `VACUUM … DRY RUN`: the authoritative work list, nothing deleted
-      ParquetTable.vacuumPlan(session, path, keep).map { case (k, p) => Row(k, p) }
-    else {
-      ParquetTable.vacuum(session, path, keep)
-      Seq(Row(ParquetTable.versions(session, path).size.toLong))
-    }
-  }
-}
-
-/** `DESCRIBE HISTORY graft.`path`` (also `DESC HISTORY`): one row per
-  * committed version, newest first — Delta's DESCRIBE HISTORY tier (see
-  * `ParquetTable.history`; manifest-dir listing only, no data I/O, so the
-  * collect is one row per version by construction).
-  */
-/** `FSCK graft.`path``: integrity report — dangling manifest entries,
-  * missing data/DV dirs, orphaned bytes (see [[ParquetTable.fsck]]).
-  * Report-only: repairs are deliberate verbs (vacuum for orphans; restore
-  * or a corrective merge for dangling entries), never automatic.
-  */
-case class GraftFsckCommand(path: String) extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{LongType, StringType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("kind", StringType, nullable = false)(),
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("detail", StringType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    ParquetTable.fsck(session, path).collect().toSeq
-}
-
-/** Where a table's NDV sketch lives: a `_`-prefixed sibling of the data
-  * dirs (the `_graft_manifest`/`_graft_changes` convention — manifest
-  * readers list data dirs explicitly and Spark skips `_` paths, so the
-  * sketch never leaks into a scan).
-  */
-private object GraftStats {
-  def dir(path: String): String = ParquetTable.statsDir(path)
-}
-
-/** `ANALYZE graft.`p` COMPUTE STATISTICS FOR COLUMNS (c1, c2…)`: the
-  * full-scan tier — builds the table's NDV sketch at the current head
-  * and pins (columns, version) for the incremental tier. Returns the
-  * analyzed version.
-  */
-case class GraftAnalyzeCommand(path: String, cols: Seq[String])
-    extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.LongType
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("analyzed_version", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = Seq(Row(
-    graft.operators.StatsSketch.analyze(session, path, cols,
-      GraftStats.dir(path))))
-}
-
-/** `ANALYZE graft.`p` COMPUTE INCREMENTAL STATISTICS USING PK (k…)`: the
-  * change-feed tier — advances the pinned sketch to the table head by
-  * sketching only `changes(last, head)` (columns come from the pinned
-  * meta, never restated; PK is needed by the snapshot diff). Returns the
-  * newly covered version. Delete/update windows flip the sketch to the
-  * documented upper-bound mode — see SHOW STATISTICS' `exact` column.
-  */
-case class GraftAnalyzeIncrementalCommand(path: String, pk: Seq[String])
-    extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.LongType
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("analyzed_version", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = Seq(Row(
-    graft.operators.StatsSketch.analyzeIncremental(session, path, pk,
-      GraftStats.dir(path))))
-}
-
-/** `ANALYZE graft.`p` COMPUTE HISTOGRAM FOR COLUMNS (c1, c2…)`: the
-  * histogram tier — the second half of the reference's query-layer
-  * statistics opt-in (glue_etl.py:408
-  * `spark.sql.statistics.histogram.enabled`). Full-scan like Spark's
-  * own histogram ANALYZE (bins are not append-mergeable); numeric
-  * columns only. The read path attaches the bins to the plan's column
-  * statistics (PlanStats), so skewed-column selectivity under CBO
-  * estimates from the real distribution. Returns one row per column
-  * with the bin count.
-  */
-case class GraftAnalyzeHistogramCommand(path: String, cols: Seq[String])
-    extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{IntegerType, StringType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("column", StringType, nullable = false)(),
-    AttributeReference("bins", IntegerType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    // stamp the bins with the version they describe — the read path's
-    // staleness guard refuses bins older than the last full ANALYZE,
-    // newer than the snapshot being read, or any bins once an
-    // update/delete window flipped the sketch inexact. A plain
-    // (non-versioned) location takes the free-standing tier (−1, the
-    // pre-r15 behavior of this verb): no lifecycle, bins valid until
-    // the next StatsSketch.save re-baseline deletes them
-    val v = ParquetTable.currentVersion(session, path).getOrElse(-1L)
-    graft.operators.StatsHistogram.build(
-        ParquetTable.read(session, path), cols, GraftStats.dir(path),
-        version = v)
-      .toSeq.sortBy(_._1).map { case (c, bins) => Row(c, bins.size) }
-  }
-}
-
-/** `SHOW STATISTICS graft.`p``: the per-column NDV estimates of the
-  * table's ANALYZE sketch, plus the exactness flag (false once an
-  * update/delete window made the estimate a "values ever present"
-  * upper bound — re-ANALYZE to reset).
-  */
-case class GraftShowStatsCommand(path: String) extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("column", StringType, nullable = false)(),
-    AttributeReference("m", IntegerType, nullable = false)(),
-    AttributeReference("zeros", LongType, nullable = false)(),
-    AttributeReference("s_scaled", LongType, nullable = false)(),
-    AttributeReference("ndv_est", DoubleType, nullable = false)(),
-    AttributeReference("exact", BooleanType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val dir = GraftStats.dir(path)
-    val exact = graft.operators.StatsSketch.isExact(session, dir)
-    graft.operators.StatsSketch.estimate(session, dir)
-      .orderBy("column").collect().toSeq
-      .map(r => Row(r.getString(0), r.getInt(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4), exact))
-  }
-}
-
-/** `GENERATE symlink_format_manifest FOR TABLE graft.`path``: Delta's
-  * Presto/Athena interop verb (see [[ParquetTable.generateSymlinkManifest]]).
-  * One row per manifest file written — per partition for partitioned
-  * tables; the collect is metadata-sized by construction.
-  */
-case class GraftGenerateManifestCommand(path: String)
-    extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{LongType, StringType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("manifest", StringType, nullable = false)(),
-    AttributeReference("n_files", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    ParquetTable.generateSymlinkManifest(session, path)
-      .map { case (m, n) => Row(m, n) }
-}
-
-case class GraftHistoryCommand(path: String) extends LeafRunnableCommand {
-
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, TimestampType}
-
-  override def output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("partitioned", BooleanType, nullable = false)(),
-    AttributeReference("n_entries", IntegerType, nullable = false)(),
-    AttributeReference("n_data_dirs", IntegerType, nullable = false)(),
-    AttributeReference("has_change_manifest", BooleanType, nullable = false)(),
-    AttributeReference("commit_ts", TimestampType, nullable = true)(),
-    AttributeReference("manifest_mtime", TimestampType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] =
-    ParquetTable.history(session, path).collect().toSeq
-}
-
-/** `DELETE FROM graft.`path` [WHERE cond]`: rows matching the condition
-  * leave the table as the next version. Two tiers, selected by the
-  * session conf `spark.graft.delete.mode`:
-  *
-  *   - `copy-on-write` (default): affected partitions rewrite
-  *     (`ParquetTable.delete`) — reads stay join-free;
-  *   - `merge-on-read`: a deletion-vector commit
-  *     (`ParquetTable.deleteVectors`) — no data file rewrites, reads pay
-  *     a DV anti-join until OPTIMIZE materializes. Delta's
-  *     `delta.enableDeletionVectors` knob, as a session conf.
-  *
-  * The condition travels as its SQL rendering, not the parsed
-  * `Expression` — an unresolved expression held in a command field would
-  * fail the analyzer's resolution check before the command could run; the
-  * text re-parses against the target read at run time. Returns one row
-  * with the committed version.
-  */
-case class GraftDeleteCommand(path: String, conditionSql: String)
-    extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "committed_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val cond = org.apache.spark.sql.functions.expr(conditionSql)
-    val mode = session.conf.get("spark.graft.delete.mode", "copy-on-write")
-    val v = mode match {
-      case "copy-on-write" => ParquetTable.delete(session, path, cond)
-      case "merge-on-read" => ParquetTable.deleteVectors(session, path, cond)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.delete.mode must be copy-on-write or merge-on-read, got '$other'")
-    }
-    Seq(Row(v))
-  }
-}
-
-/** `UPDATE graft.`path` SET col = expr[, …] [WHERE cond]`: matching rows
-  * get the assignments applied (values cast to the column's type; see
-  * `ParquetTable.update`). Expressions travel as SQL text for the same
-  * reason as [[GraftDeleteCommand]]. Returns one row with the committed
-  * version.
-  */
-case class GraftUpdateCommand(
-    path: String,
-    set: Seq[(String, String)],
-    conditionSql: Option[String]) extends LeafRunnableCommand {
-
-  override def output: Seq[Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "committed_version", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    val cond = conditionSql.map(expr).getOrElse(lit(true))
-    Seq(Row(ParquetTable.update(session, path, cond,
-      set.map { case (k, v) => k -> expr(v) }.toMap)))
-  }
+  override def run(session: SparkSession): Seq[Row] = body(session)
 }
 
 /** Delegating parser that owns exactly one namespace: `graft.`path``.
-  * MERGE INTO / DELETE FROM / UPDATE on a graft target become runnable
-  * row-level commands ([[GraftSql.rewrite]], [[GraftDeleteCommand]],
-  * [[GraftUpdateCommand]]); graft relations anywhere else — SELECT/JOIN
-  * sources, merge sources, subqueries, optionally `VERSION AS OF n` —
-  * become versioned-table reads ([[GraftSql.rewriteRelations]]); and
-  * `RESTORE TABLE graft.`path` TO VERSION AS OF n` (a statement Spark's
-  * grammar lacks) is matched pre-parse. Every other string and plan
-  * passes through untouched.
+  * Statements over a graft target become [[GraftCommand]]s, graft
+  * relations anywhere else become versioned-table reads (see
+  * [[GraftSql]]); every other string and plan passes through untouched.
   */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    GraftSql.parseMaintenance(sqlText).getOrElse(
-      GraftSql.dispatch(delegate.parsePlan(sqlText)))
+    GraftSql.statementPlan(sqlText, delegate.parsePlan)
 
   override def parsePlanWithParameters(
       sqlText: String, ctx: ParameterContext): LogicalPlan =
-    GraftSql.parseMaintenance(sqlText).getOrElse(
-      GraftSql.dispatch(delegate.parsePlanWithParameters(sqlText, ctx)))
+    GraftSql.statementPlan(sqlText, delegate.parsePlanWithParameters(_, ctx))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
