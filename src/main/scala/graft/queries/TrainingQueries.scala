@@ -769,8 +769,8 @@ object TrainingQueries {
     }),
 
     // Column mapping (ParquetTable.renameColumn/dropColumn): O(1)
-    // metadata-only RENAME + DROP COLUMN via the #colmap= manifest
-    // header — no data rewrite; the read serves the logical view over
+    // metadata-only RENAME + DROP COLUMN via the manifest's column
+    // mapping — no data rewrite; the read serves the logical view over
     // unchanged physical files. The oracle states the post-DDL logical
     // schema directly over the raw table.
     "q112_rename_column" -> ((s, d) => {
@@ -1526,7 +1526,7 @@ object TrainingQueries {
     // mutate-under-mapping model, ParquetTable.toPhysical): after an
     // O(1) RENAME COLUMN, merge/update/delete keep working through the
     // logical name on a partitioned versioned table — partial commits
-    // write physical-named files and carry the `#colmap=` header; only
+    // write physical-named files and carry the column mapping; only
     // the touched partitions rewrite. The oracle states the final
     // logical contents from the mutation algebra alone.
     "q122_mapped_mutations" -> ((s, d) => {

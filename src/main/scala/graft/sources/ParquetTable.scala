@@ -73,7 +73,7 @@ object ParquetTable {
     */
   def read(spark: SparkSession, path: String): DataFrame =
     currentVersion(spark, path) match {
-      case Some(v) => readVersion(spark, path, v)
+      case Some(v) => readVersion(spark, path, snapshot(spark, path, v))
       case None => spark.read.parquet(path)
     }
 
@@ -82,12 +82,12 @@ object ParquetTable {
     require(versions(spark, path).contains(version),
       s"readAt: version $version not present at $path " +
         s"(have: ${versions(spark, path).mkString(", ")})")
-    readVersion(spark, path, version)
+    readVersion(spark, path, snapshot(spark, path, version))
   }
 
   /** Latest version whose commit time is ≤ `tsMillis` — Delta's
     * `TIMESTAMP AS OF` resolution rule. Commit times come from the
-    * manifests' `#ts=` headers (committed state — see [[commitTimestamp]]);
+    * manifests' commit times (committed state — see [[commitTimestamp]]);
     * headerless legacy manifests fall back to manifest mtime, best
     * effort. Commit times are written by serialized CAS commits on one
     * table so they are monotone up to wall-clock skew; taking the MAX
@@ -128,20 +128,21 @@ object ParquetTable {
     currentVersion(spark, path) match {
       case None => spark.read.parquet(path).filter(predicate)
       case Some(v) =>
-        val groups = prunedFileGroups(spark, path, v, predicate)
+        val head = snapshot(spark, path, v)
+        val groups = fileGroups(spark, path, head, predicate)
         if (groups.forall(_._2.isEmpty))
-          readVersion(spark, path, v).filter(predicate).limit(0)
+          readVersion(spark, path, head).filter(predicate).limit(0)
         else {
           // post-evolution, dirs can carry different (append-only) schemas;
           // align each to the version's schema so the union is exact
-          val align = versionSchema(spark, path, v)
+          val align = versionSchema(spark, path, head)
             .map(s => (df: DataFrame) => alignTo(df, s))
             .getOrElse(identity[DataFrame] _)
           // deletion vectors filter each leg BEFORE align/union (metadata
           // columns only resolve on the scan relation); file-level stats
           // pruning stays conservative — a DV only removes rows
-          val dv = dvOf(spark, path, v)
-          extendDefaults(spark, path, v, applyColmap(spark, path, v,
+          val dv = dvOf(spark, path, head)
+          extendDefaults(spark, path, head, applyColmap(head,
             groups.filter(_._2.nonEmpty).map { case (base, rels) =>
               align(dvFilterLeg(spark.read.option("basePath", base)
                 .parquet(rels.map(r => s"$base/$r"): _*), dv))
@@ -158,8 +159,13 @@ object ParquetTable {
     */
   private[graft] def prunedFileGroups(
       spark: SparkSession, path: String, version: Long,
+      predicate: Column): Seq[(String, Seq[String])] =
+    fileGroups(spark, path, snapshot(spark, path, version), predicate)
+
+  private def fileGroups(
+      spark: SparkSession, path: String, head: Snapshot,
       predicate: Column): Seq[(String, Seq[String])] = {
-    val analyzedCond = readVersion(spark, path, version).filter(predicate)
+    val analyzedCond = readVersion(spark, path, head).filter(predicate)
       .queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
@@ -169,8 +175,7 @@ object ParquetTable {
     // probe — with a vacated name reused (rename a→x, then c→a) the raw
     // predicate would consult the OLD physical a's min/max (or bloom) and
     // silently skip files that match (ADVICE r9 high).
-    val inv = columnMapping(spark, path, version)._1
-      .map { case (p, l) => l.toLowerCase -> p }
+    val inv = head.renames.map { case (p, l) => l.toLowerCase -> p }
     val cond =
       if (inv.isEmpty) analyzedCond
       else analyzedCond.map(_.transform {
@@ -178,18 +183,9 @@ object ParquetTable {
             if inv.contains(a.name.toLowerCase) =>
           a.withName(inv(a.name.toLowerCase))
       })
-    partitionEntries(spark, path, version) match {
-      case None =>
-        unpartitionedDirs(spark, path, version).map { dd =>
-          val dir = new Path(path, dd).toString
-          dir -> DataSkipping.candidateFiles(spark, dir, cond)
-        }
-      case Some(entries) =>
-        byDataDir(entries).map { case (dataDir, parts) =>
-          val base = new Path(path, dataDir).toString
-          base -> DataSkipping.candidateFiles(spark, base, cond)
-            .filter(rel => parts.exists(p => rel.startsWith(p + "/")))
-        }
+    byDataDir(head.entries).map { case (dataDir, parts) =>
+      val base = new Path(path, dataDir).toString
+      base -> DataSkipping.candidateFiles(spark, base, cond).filter(inSlice(_, parts))
     }
   }
 
@@ -209,36 +205,35 @@ object ParquetTable {
       writeOptions: Map[String, String] = Map.empty): Long = {
     val v0 = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
       s"optimize: no versioned table at $path"))
-    partitionEntries(spark, path, v0) match {
-      case None =>
-        publishMaintenance(spark, path, "optimize", Nil,
-          v => DataSkipping.zorder(readVersion(spark, path, v), zorderBy,
-            numFiles, bits),
-          writeOptions = writeOptions)
-      case Some(entries) =>
-        // partitioned: cluster WITHIN partitions in ONE job — range-
-        // partition by (partitionCols…, z) so each task holds a
-        // contiguous (partition, z) slab, and the partitioned write
-        // splits the dirs; every file then covers a narrow z interval
-        // inside its partition, which is what the sidecar pruning feeds
-        // on. `numFiles` bounds total write tasks, not files-per-
-        // partition (Delta OPTIMIZE ZORDER's per-partition binning).
-        val partitionColumns = partitionColumnsOf(entries)
-        require(zorderBy.forall(c => !partitionColumns.exists(_.equalsIgnoreCase(c))),
-          s"optimize: Z-order columns must be data columns " +
-            s"(${partitionColumns.mkString(", ")} are partition columns — " +
-            "constant within a dir, nothing to cluster)")
-        publishMaintenance(spark, path, "optimize", partitionColumns,
-          { v =>
-            val cur = readVersion(spark, path, v)
-            val keys = partitionColumns.map(col) :+ col("__graft_z")
-            cur
-              .withColumn("__graft_z", DataSkipping.zValue(cur, zorderBy, bits))
-              .repartitionByRange(numFiles, keys: _*)
-              .sortWithinPartitions(keys: _*)
-              .drop("__graft_z")
-          },
-          preserveLayout = true, writeOptions = writeOptions)
+    val partitionColumns = snapshot(spark, path, v0).partitionColumns
+    if (partitionColumns.isEmpty)
+      publishMaintenance(spark, path, "optimize", Nil,
+        head => DataSkipping.zorder(readVersion(spark, path, head), zorderBy,
+          numFiles, bits),
+        writeOptions = writeOptions)
+    else {
+      // partitioned: cluster WITHIN partitions in ONE job — range-
+      // partition by (partitionCols…, z) so each task holds a
+      // contiguous (partition, z) slab, and the partitioned write
+      // splits the dirs; every file then covers a narrow z interval
+      // inside its partition, which is what the sidecar pruning feeds
+      // on. `numFiles` bounds total write tasks, not files-per-
+      // partition (Delta OPTIMIZE ZORDER's per-partition binning).
+      require(zorderBy.forall(c => !partitionColumns.exists(_.equalsIgnoreCase(c))),
+        s"optimize: Z-order columns must be data columns " +
+          s"(${partitionColumns.mkString(", ")} are partition columns — " +
+          "constant within a dir, nothing to cluster)")
+      publishMaintenance(spark, path, "optimize", partitionColumns,
+        { head =>
+          val cur = readVersion(spark, path, head)
+          val keys = partitionColumns.map(col) :+ col("__graft_z")
+          cur
+            .withColumn("__graft_z", DataSkipping.zValue(cur, zorderBy, bits))
+            .repartitionByRange(numFiles, keys: _*)
+            .sortWithinPartitions(keys: _*)
+            .drop("__graft_z")
+        },
+        preserveLayout = true, writeOptions = writeOptions)
     }
   }
 
@@ -260,7 +255,7 @@ object ParquetTable {
       spark: SparkSession, path: String, bloomFor: Seq[String],
       zorderBy: Seq[String] = Nil, numFiles: Int = 8): Long = {
     require(bloomFor.nonEmpty, "optimizeBloom: empty bloom column list")
-    currentVersion(spark, path).getOrElse(throw new IllegalStateException(
+    val v0 = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
       s"optimizeBloom: no versioned table at $path"))
     // per-write options, NOT SparkContext.hadoopConfiguration: mutating
     // the shared conf let concurrent writes in the same session pick up
@@ -273,18 +268,16 @@ object ParquetTable {
     else {
       // plain rewrite (compact-shaped, but across numFiles so the
       // bloom tier has per-file filters worth pruning between)
-      val v0 = currentVersion(spark, path).get
-      partitionEntries(spark, path, v0) match {
-        case None =>
-          publishMaintenance(spark, path, "optimizeBloom", Nil,
-            v => readVersion(spark, path, v).repartition(numFiles),
-            writeOptions = bloomOpts)
-        case Some(entries) =>
-          publishMaintenance(spark, path, "optimizeBloom", partitionColumnsOf(entries),
-            v => readVersion(spark, path, v),
-            filesPerPartition = math.max(1, numFiles),
-            writeOptions = bloomOpts)
-      }
+      val partitionColumns = snapshot(spark, path, v0).partitionColumns
+      if (partitionColumns.isEmpty)
+        publishMaintenance(spark, path, "optimizeBloom", Nil,
+          readVersion(spark, path, _).repartition(numFiles),
+          writeOptions = bloomOpts)
+      else
+        publishMaintenance(spark, path, "optimizeBloom", partitionColumns,
+          readVersion(spark, path, _),
+          filesPerPartition = math.max(1, numFiles),
+          writeOptions = bloomOpts)
     }
   }
 
@@ -659,7 +652,7 @@ object ParquetTable {
     val broadcastKeys = Some(ndvU * keyBytes <= threshold)
     val bulk = {
       val ndvT: Option[Double] = currentVersion(spark, path)
-        .flatMap(snapshotRowsFromSidecars(spark, path, _)).map(_.toDouble)
+        .flatMap(v => sliceRows(spark, path, snapshot(spark, path, v).entries)).map(_.toDouble)
         .orElse(if (pk.size != 1) None else try {
           graft.operators.StatsSketch.estimate(spark, statsDir(path))
             .filter(col("column") === pk.head).collect().headOption
@@ -772,8 +765,7 @@ object ParquetTable {
     TableProperties.requireNotAppendOnly(spark, path, "merge")
     // a partitioned VERSIONED table (manifest with partition entries)
     // always merges through the manifest, regardless of how it was opened
-    if (currentVersion(spark, path)
-        .exists(v => partitionEntries(spark, path, v).isDefined)) {
+    if (currentVersion(spark, path).exists(snapshot(spark, path, _).partitioned)) {
       require(partitionColumns.nonEmpty,
         s"merge: $path is a partitioned versioned table; pass its partition columns")
       mergeVersioned(spark, path, updates, pk, partitionColumns, filesPerPartition,
@@ -833,8 +825,9 @@ object ParquetTable {
       // A plain unpartitioned dir (no manifest yet) is read as is and
       // published as version 1.
       val updG = fillColumns(spark, path, updates)
-      commitLoop(spark, path, "merge", txn, missing = None) { v =>
-        val target = if (v == 0) spark.read.parquet(path) else readVersion(spark, path, v)
+      commitLoop(spark, path, "merge", txn, missing = None) { head =>
+        val target =
+          if (head.version == 0) spark.read.parquet(path) else readVersion(spark, path, head)
         val merged =
           if (evolveSchema) mergeFrames(target, updates, pk, evolveSchema = true,
             broadcastKeys = statsPlan.broadcastKeys)
@@ -848,7 +841,7 @@ object ParquetTable {
         // keys: merge never deletes and never changes a row outside the
         // key set, so diffing the affected slices equals the full-snapshot
         // diff at a fraction of the join size.
-        Commit(dataDir, staged = Seq(dataDir), onWin = nv => if (cdf) {
+        Commit(Snapshot(Seq("" -> dataDir)), onWin = nv => if (cdf) {
           val updKeys = updates.select(pk.map(col): _*).distinct()
           // re-select after the semi-joins: a using-columns join HOISTS the
           // pk columns to the front, and the feed must carry table order
@@ -856,7 +849,7 @@ object ParquetTable {
           writeChangeManifest(spark, path, nv,
             changeRowsBetween(
               target.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-              readVersion(spark, path, nv).join(updKeys, pk, "left_semi")
+              readVersion(spark, path, snapshot(spark, path, nv)).join(updKeys, pk, "left_semi")
                 .select(cols.map(col): _*),
               pk, "right_outer"))
         })
@@ -917,41 +910,21 @@ object ParquetTable {
     */
   @volatile var logCommitter: LogCommitter = DefaultCommitter
 
-  /** Publish `version` by committing a manifest file holding `content`
-    * through the configured [[LogCommitter]]. Returns false when another
-    * writer committed that version first.
+  /** Publish `manifest` as `version` through the configured
+    * [[LogCommitter]], stamped with the commit wall clock and `txn`.
+    * Returns false when another writer committed that version first.
     */
   private def commitVersion(
-      spark: SparkSession, path: String, version: Long, content: String,
-      txn: Option[(String, Long)] = None,
-      dv: Seq[String] = Nil,
-      colmap: Option[String] = None): Boolean = {
+      spark: SparkSession, path: String, version: Long, manifest: Snapshot,
+      txn: Option[(String, Long)] = None): Boolean = {
     val md = manifestDir(path)
-    val target = new Path(md, f"v$version%020d")
-    // `#ts=` header: the commit wall-clock becomes committed state inside
-    // the atomically-published manifest (what TIMESTAMP AS OF resolves
-    // against) — unlike file mtimes, it survives copies/restores of the
-    // table directory. `#txn=` records an application transaction id in
-    // the SAME atomic publish (what [[lastTxnVersion]] reads — Delta's
-    // txnAppId/txnVersion idempotent-write tier). `#dv=` lists the
-    // deletion-vector dirs this version reads through (see
-    // [[deleteVectors]]) — part of the snapshot, so it must ride the same
-    // atomic commit. Parsers read through manifestContent, which strips
-    // `#` lines, so the dir-listing format is unchanged.
-    val txnHeader = txn.map { case (app, tv) => s"#txn=$app:$tv\n" }.getOrElse("")
-    // tab-separated: dv entries can be absolute paths (clones), and a
-    // tab is the one separator the body format already forbids in names
-    val dvHeader = if (dv.isEmpty) "" else s"#dv=${dv.mkString("\t")}\n"
-    // `#colmap=` publishes the version's logical column view (renames +
-    // drops) over unchanged physical files — see [[renameColumn]]. NOT
-    // carried forward by default: an ordinary full-image commit writes
-    // logical names physically, which IS the materialization.
-    val cmHeader = colmap.filter(_.nonEmpty).map(m => s"#colmap=$m\n").getOrElse("")
-    val stamped = s"#ts=${System.currentTimeMillis()}\n$txnHeader$dvHeader$cmHeader$content"
-    val won = logCommitter.commit(hadoopFs(spark, md), target, stamped.getBytes("UTF-8"))
+    val stamped = manifest.copy(
+      version = version, ts = Some(System.currentTimeMillis()), txn = txn)
+    val won = logCommitter.commit(hadoopFs(spark, md), new Path(md, f"v$version%020d"),
+      stamped.render.getBytes("UTF-8"))
     if (won) {
       writeLatestHint(hadoopFs(spark, md), md, version)
-      maybeAutoSymlink(spark, path, dv, colmap)
+      maybeAutoSymlink(spark, path, stamped)
     }
     won
   }
@@ -966,14 +939,13 @@ object ParquetTable {
     * SKIPPED, never failed; the next eligible commit catches the export
     * up, and the manual verb stays available for a synchronous refresh.
     */
-  private def maybeAutoSymlink(
-      spark: SparkSession, path: String,
-      dv: Seq[String], colmap: Option[String]): Unit =
-    if (dv.isEmpty && colmap.forall(_.isEmpty) &&
-        TableProperties.get(spark, path, "graft.symlink.autoGenerate")
-          .exists(_.equalsIgnoreCase("true"))) {
-      try { generateSymlinkManifest(spark, path); () }
-      catch { case scala.util.control.NonFatal(_) => () } // advisory export
+  private def maybeAutoSymlink(spark: SparkSession, path: String, committed: Snapshot): Unit =
+    if (committed.dv.isEmpty && !committed.mapped) {
+      try {
+        if (TableProperties.get(spark, path, "graft.symlink.autoGenerate")
+              .exists(_.equalsIgnoreCase("true")))
+          generateSymlinkManifest(spark, path)
+      } catch { case scala.util.control.NonFatal(_) => () } // advisory export
     }
 
   /** `_latest` version HINT (Delta's `_last_checkpoint` shape): snapshot
@@ -1029,17 +1001,16 @@ object ParquetTable {
   /** Nothing to commit: the verb returns `version` (the head it read). */
   private final case class NoOp(version: Long) extends Attempt
 
-  /** A manifest to publish at head + 1: its body and headers, the dirs
-    * the attempt [[stage]]d for it (table-relative: data dirs and DV
-    * dirs), what to run once it won (CDF capture, handed the committed
-    * version), and what to do when it lost to a commit that moved the
-    * head ([[OnMove]]).
+  /** A manifest to publish at head + 1 (its version, commit time and txn
+    * are stamped by [[commitVersion]]), what to run once it won (CDF
+    * capture, handed the committed version), and what to do when it lost
+    * to a commit that moved the head ([[OnMove]]). A partial commit
+    * carries the head's DVs and column mapping by copying the head
+    * (`head.copy(entries = …)`); a full image starts from a fresh
+    * [[Snapshot]], which materializes both.
     */
   private final case class Commit(
-      body: String,
-      staged: Seq[String] = Nil,
-      dv: Seq[String] = Nil,
-      colmap: Option[String] = None,
+      manifest: Snapshot,
       onWin: Long => Unit = _ => (),
       onMove: OnMove = Recompute) extends Attempt
 
@@ -1052,25 +1023,30 @@ object ParquetTable {
   /** The image was supplied by the caller: publish it unchanged. */
   private case object Replay extends OnMove
   /** Try `onto(newHead)` — a manifest-only re-expression of the staged
-    * data on top of the winner (only the body and headers of the
-    * returned commit are used) — and recompute when it returns None.
+    * data on top of the winner — and recompute when it returns None.
     */
-  private final case class Rebase(onto: Long => Option[Commit]) extends OnMove
+  private final case class Rebase(onto: Snapshot => Option[Snapshot]) extends OnMove
+
+  /** The dirs the running [[commitLoop]] attempt has staged: [[stage]]
+    * and [[stageDv]] record every name they mint here, before writing it.
+    */
+  private val attemptDirs =
+    new scala.util.DynamicVariable[Option[scala.collection.mutable.Buffer[String]]](None)
 
   /** THE commit protocol: every versioned verb publishes through this one
     * optimistic loop (Delta's OptimisticTransaction, re-expressed over the
     * manifest CAS). Each attempt:
     *
     *   1. txn re-delivery: when `txn` is at or below the app's committed
-    *      watermark (a racer committed this very batch), deletes whatever
-    *      this verb staged and returns -1 — nothing committed;
+    *      watermark (a racer committed this very batch), returns -1 —
+    *      nothing committed;
     *   2. reads the head `v` (0 when the table does not exist yet; a verb
     *      that needs one passes `missing`, the tail of its error);
     *   3. takes the staged commit while the head has not moved since it
     *      was built, else applies its [[OnMove]] discipline, else calls
-    *      `attempt(v)` for a fresh one — which stages its data through
-    *      [[stage]] and returns a [[Commit]], or a [[NoOp]] the loop
-    *      returns as is;
+    *      `attempt(head)` with the head's [[Snapshot]], parsed once, for a
+    *      fresh one — which stages its data through [[stage]] and returns
+    *      a [[Commit]], or a [[NoOp]] the loop returns as is;
     *   4. CASes the manifest at exactly v + 1 ([[commitVersion]]); a win
     *      runs the commit's `onWin` and returns v + 1.
     *
@@ -1088,78 +1064,89 @@ object ParquetTable {
     *     [[mergeVersioned]] first tries a `Rebase` onto the winner, which
     *     succeeds when the two commits are disjoint ([[rebaseOnto]]).
     *
-    * Orphan cleanup lives here: staged dirs are deleted when a recompute
-    * replaces them, on txn re-delivery, and when the verb gives up after
-    * [[MaxCommitAttempts]] lost races with an IOException naming it. (The
-    * one other cleanup is [[validateCommit]]'s, for a CHECK-constraint
-    * violation before any publish.) Returns the committed version, the
-    * NoOp's version, or -1 for a txn re-delivery.
+    * Orphan cleanup lives here: whatever an attempt staged is deleted when
+    * a recompute replaces it, and on every exit known to commit nothing —
+    * a txn re-delivery, a give-up after [[MaxCommitAttempts]] lost races
+    * (an IOException naming the verb), or an attempt or `Rebase` that
+    * throws (a failed CHECK constraint, a refused empty image). A CAS
+    * that throws may still have published (a committer timing out after
+    * its write landed), so its dirs stay on disk for [[vacuum]]. Returns
+    * the committed version, the NoOp's version, or -1 for a txn
+    * re-delivery.
     */
   private def commitLoop(
       spark: SparkSession, path: String, verb: String,
       txn: Option[(String, Long)] = None, missing: Option[String] = Some(""))(
-      attempt: Long => Attempt): Long = {
+      attempt: Snapshot => Attempt): Long = {
     requireTxnAppId(txn)
-    var staged: Option[Commit] = None // the attempt whose dirs are on disk
-    var pending: Commit = null        // what staged publishes as at base + 1
+    val staged = scala.collection.mutable.Buffer.empty[String] // dirs of `built`
+    var built: Commit = null  // the attempt whose dirs are on disk
+    var pending: Snapshot = null // what it publishes as at base + 1
     var base = -1L
+    var published = false // a CAS ran and did not report a loss
     def drop(): Unit = {
-      staged.foreach(_.staged.foreach { d =>
+      staged.foreach { d =>
         val p = new Path(path, d)
         hadoopFs(spark, p).delete(p, true)
-      })
-      staged = None
-    }
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      attempts += 1
-      if (txnAlreadyApplied(spark, path, txn)) { drop(); return -1L }
-      val v = currentVersion(spark, path).getOrElse(missing.fold(0L)(why =>
-        throw new IllegalStateException(s"$verb: no versioned table at $path$why")))
-      val carried = staged.flatMap { s =>
-        if (v == base) Some(pending)
-        else s.onMove match {
-          case Replay => Some(pending)
-          case Rebase(onto) => onto(v)
-          case Recompute => None
-        }
       }
-      carried match {
-        case Some(c) => pending = c
-        case None =>
-          drop()
-          attempt(v) match {
-            case NoOp(current) => return current
-            case c: Commit => staged = Some(c); pending = c
+      staged.clear()
+      built = null
+    }
+    try {
+      var attempts = 0
+      while (attempts < MaxCommitAttempts) {
+        attempts += 1
+        if (txnAlreadyApplied(spark, path, txn)) return -1L
+        val v = currentVersion(spark, path).getOrElse(missing.fold(0L)(why =>
+          throw new IllegalStateException(s"$verb: no versioned table at $path$why")))
+        lazy val head = if (v == 0) Snapshot(Nil) else snapshot(spark, path, v)
+        val carried = Option(built).flatMap { c =>
+          if (v == base) Some(pending)
+          else c.onMove match {
+            case Replay => Some(pending)
+            case Rebase(onto) => onto(head)
+            case Recompute => None
           }
+        }
+        carried match {
+          case Some(m) => pending = m
+          case None =>
+            drop()
+            attemptDirs.withValue(Some(staged))(attempt(head)) match {
+              case NoOp(current) => return current
+              case c: Commit => built = c; pending = c.manifest
+            }
+        }
+        base = v
+        published = true
+        if (commitVersion(spark, path, v + 1, pending, txn)) {
+          built.onWin(v + 1)
+          return v + 1
+        }
+        published = false
       }
-      base = v
-      if (commitVersion(spark, path, v + 1, pending.body, txn, pending.dv, pending.colmap)) {
-        staged.get.onWin(v + 1)
-        return v + 1
-      }
-    }
-    drop()
-    throw new java.io.IOException(
-      s"$verb: lost the version race at $path $MaxCommitAttempts times; giving up")
+      throw new java.io.IOException(
+        s"$verb: lost the version race at $path $MaxCommitAttempts times; giving up")
+    } finally if (!published) drop()
   }
 
   /** Stage one commit's data: `df` lands in a fresh `_d*` dir with its
     * stats sidecar, then the table's CHECK constraints run against what
     * landed ([[validateCommit]]). Returns the dir name for the manifest.
-    * `physicalNames` marks a partial commit written under an active
+    * `physicalUnder` marks a partial commit written under that head's
     * column mapping; `keepLayout` — see [[writePlain]].
     */
   private def stage(
       spark: SparkSession, path: String, df: DataFrame,
       partitionColumns: Seq[String] = Nil, filesPerPartition: Int = 1,
       writeOptions: Map[String, String] = Map.empty,
-      keepLayout: Boolean = false, physicalNames: Boolean = false): String = {
+      keepLayout: Boolean = false, physicalUnder: Option[Snapshot] = None): String = {
     val dataDir = freshDataDirName()
+    attemptDirs.value.foreach(_ += dataDir)
     val dir = new Path(path, dataDir).toString
     writePlain(df, dir, partitionColumns, filesPerPartition, writeOptions, keepLayout)
     DataSkipping.writeStats(spark, dir, df.schema)
-    validateCommit(spark, path, dataDir, physicalNames)
+    validateCommit(spark, path, dir, physicalUnder)
     dataDir
   }
 
@@ -1179,6 +1166,7 @@ object ParquetTable {
     */
   private def stageDv(spark: SparkSession, path: String, rows: DataFrame): String = {
     val name = s"$DvDirName/dv${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
+    attemptDirs.value.foreach(_ += name)
     sizedForWrite(rows.select(col(DvFileCol), col(DvIdxCol)))
       .write.mode(SaveMode.Overwrite).parquet(new Path(path, name).toString)
     name
@@ -1196,82 +1184,156 @@ object ParquetTable {
     else { hadoopFs(spark, dir).delete(dir, true); None }
   }
 
-  // ---- partitioned versioned layout --------------------------------------
-  // Manifest file content formats:
-  //   unpartitioned:  one line, the version's data dir name
-  //   partitioned:    one line per partition, "partitionDir\tdataDir"
-  //                   (e.g. "date=2024-01-01\t_d1712000000000_123")
-  // A partitioned version references MANY data dirs — each merge writes the
-  // changed partitions into one fresh dir and re-points only those entries,
-  // so untouched partitions are never rewritten (and old manifests keep
-  // seeing their old dirs: snapshot isolation + time travel).
+  // ---- the manifest: one parsed snapshot per version --------------------
 
-  /** CHECK-constraint gate between a commit's parquet write and its
-    * manifest publish (see [[Constraints.validateWritten]]): a violation
-    * removes the just-written orphan dir and fails the commit, so
-    * readers never see it. No-op when the table has no constraints.
+  /** One committed version's manifest, parsed — the single statement of
+    * the manifest format. `_graft_manifest/v<version, 20 digits>` is UTF-8
+    * text: `#` header lines, then body lines, joined by `\n` with no
+    * trailing newline.
     *
-    * `physicalNames = true` marks a PARTIAL commit written under an
-    * active column mapping (files carry physical names, map carried
-    * forward): constraint expressions bind against LOGICAL names — a
-    * constraint added after a rename names the renamed column — so the
-    * written files validate through the current logical view. Full
-    * rewrites keep the default (they write logical names and clear the
-    * map; applying the view to an already-logical frame would misfire
-    * under vacated-name reuse).
+    * Body: one line per entry. An unpartitioned version's line is a data
+    * dir — one for a full-image commit; after merge-on-read commits the
+    * base image first, then one dir per merge ([[mergeVectors]],
+    * [[insertInto]]). A partitioned version's line is
+    * `partitionDir<TAB>dataDir` (e.g. `date=2024-01-01<TAB>_d1712000000000_123`),
+    * written sorted: each merge writes the changed partitions into one
+    * fresh dir and re-points only those entries, so untouched partitions
+    * are never rewritten and old manifests keep seeing their old dirs
+    * (snapshot isolation + time travel); a partition may span several
+    * dirs after append-entry INSERTs. Data dirs are table-relative names
+    * (`_d…`, legacy `_v…`) or absolute paths (shallow clones). A tab is
+    * the one separator names may not hold: a body with a tab is
+    * partitioned. Parsed, every line is an entry `(partitionDir,
+    * dataDir)`, with `partitionDir = ""` when unpartitioned.
+    *
+    * Headers, in any order (the renderer writes them in this one), each
+    * read from its first occurrence; unknown headers are ignored:
+    *   - `#ts=<epoch millis>` — the commit wall clock, what TIMESTAMP AS OF
+    *     resolves against; committed state inside the atomic publish, so
+    *     unlike a file mtime it survives copies of the table directory;
+    *   - `#txn=<appId>:<txnVersion>` — an application transaction marker
+    *     committed with the data (Delta's txnAppId/txnVersion, see
+    *     [[lastTxnVersion]]);
+    *   - `#dv=<dir><TAB><dir>…` — the deletion-vector dirs the version reads
+    *     through ([[deleteVectors]]); table-relative or absolute (clones);
+    *   - `#colmap=<physical>><logical><TAB>…` — the logical column view
+    *     over unchanged physical files ([[renameColumn]]); an entry with an
+    *     empty logical side (`physical>`) is a drop.
+    * The last three are written only when non-empty. A manifest from
+    * before headers existed is a body alone: no commit time, txn, DVs or
+    * mapping.
     */
-  private def validateCommit(
-      spark: SparkSession, path: String, dataDir: String,
-      physicalNames: Boolean = false): Unit =
-    try {
-      val dir = new Path(path, dataDir).toString
-      val (r, d) =
-        if (!physicalNames) (Map.empty[String, String], Seq.empty[String])
-        else currentVersion(spark, path)
-          .map(columnMapping(spark, path, _))
-          .getOrElse((Map.empty[String, String], Seq.empty[String]))
-      if (r.isEmpty && d.isEmpty) Constraints.validateWritten(spark, path, dir)
-      else if (Constraints.list(spark, path).nonEmpty)
-        Constraints.validateFrame(spark, path,
-          applyColmapTo(r, d, spark.read.parquet(dir)))
-    } catch {
-      case e: Throwable =>
-        val dd = new Path(path, dataDir)
-        hadoopFs(spark, dd).delete(dd, true)
-        throw e
-    }
+  private[sources] final case class Snapshot(
+      entries: Seq[(String, String)],
+      dv: Seq[String] = Nil,
+      renames: Map[String, String] = Map.empty,
+      drops: Seq[String] = Nil,
+      version: Long = 0L,
+      ts: Option[Long] = None,
+      txn: Option[(String, Long)] = None) {
 
-  private def manifestRaw(spark: SparkSession, path: String, version: Long): String = {
+    def partitioned: Boolean = entries.exists(_._1.nonEmpty)
+
+    /** Partition columns in directory order ("a=1/b=2" → a, b); Nil when
+      * unpartitioned.
+      */
+    def partitionColumns: Seq[String] =
+      if (!partitioned) Nil else entries.head._1.split('/').toSeq.map(_.split('=')(0))
+
+    /** The data dirs the version reads, in [[byDataDir]] order. */
+    def dataDirs: Seq[String] = byDataDir(entries).map(_._1)
+
+    def mapped: Boolean = renames.nonEmpty || drops.nonEmpty
+
+    /** The `#colmap=` value; empty when unmapped. */
+    def colmapValue: String =
+      (renames.toSeq.sorted.map { case (p, l) => s"$p>$l" } ++
+        drops.sorted.map(_ + ">")).mkString("\t")
+
+    /** The manifest text — what [[commitVersion]] publishes. */
+    def render: String = {
+      val headers = ts.map(t => s"#ts=$t") ++ txn.map { case (app, tv) => s"#txn=$app:$tv" } ++
+        Option.when(dv.nonEmpty)(dv.mkString("#dv=", "\t", "")) ++
+        Option.when(mapped)(s"#colmap=$colmapValue")
+      val body = (if (partitioned) entries.sorted else entries).map {
+        case ("", dataDir) => dataDir
+        case (partitionDir, dataDir) => s"$partitionDir\t$dataDir"
+      }
+      (headers ++ body).mkString("\n")
+    }
+  }
+
+  private[sources] object Snapshot {
+    def parse(version: Long, text: String): Snapshot = {
+      val (headers, body) = text.linesIterator.toSeq.partition(_.startsWith("#"))
+      def header(prefix: String): Option[String] =
+        headers.find(_.startsWith(prefix)).map(_.drop(prefix.length))
+      def fields(value: String): Seq[String] =
+        value.split('\t').toSeq.map(_.trim).filter(_.nonEmpty)
+      val (dropped, renamed) = header("#colmap=").toSeq.flatMap(fields).partition(_.endsWith(">"))
+      Snapshot(
+        entries = body.map(_.trim).filter(_.nonEmpty).map(line => line.split('\t') match {
+          case Array(partitionDir, dataDir) => (partitionDir, dataDir)
+          case _ => ("", line)
+        }),
+        dv = header("#dv=").toSeq.flatMap(fields),
+        renames = renamed.map { e => val (p, l) = e.span(_ != '>'); p -> l.drop(1) }.toMap,
+        drops = dropped.map(_.dropRight(1)),
+        version = version,
+        ts = header("#ts=").flatMap(_.trim.toLongOption),
+        txn = header("#txn=").flatMap(_.split(':') match {
+          case Array(app, tv) => tv.trim.toLongOption.map(app -> _)
+          case _ => None
+        }))
+    }
+  }
+
+  /** Version `version`'s manifest, read and parsed. */
+  private def snapshot(spark: SparkSession, path: String, version: Long): Snapshot = {
     val f = new Path(manifestDir(path), f"v$version%020d")
     val fs = hadoopFs(spark, f)
     val buf = new Array[Byte](fs.getFileStatus(f).getLen.toInt)
     val in = fs.open(f)
     try in.readFully(0, buf)
     finally in.close()
-    new String(buf, "UTF-8")
+    Snapshot.parse(version, new String(buf, "UTF-8"))
   }
 
-  /** Manifest body with `#`-prefixed header lines (commit metadata such as
-    * `#ts=<epochMillis>`) stripped. Every parser of the dir-listing format
-    * reads through here, so headers can grow without touching them;
-    * pre-header manifests (no `#` lines) pass through unchanged.
+  /** CHECK-constraint gate between a commit's parquet write and its
+    * manifest publish (see [[Constraints.validateWritten]]): a violation
+    * fails the commit before anything is published, and [[commitLoop]]
+    * deletes the written dir, so readers never see it. No-op when the
+    * table has no constraints.
+    *
+    * `physicalUnder = Some(head)` marks a PARTIAL commit written under
+    * the head's active column mapping (files carry physical names, map
+    * carried forward): constraint expressions bind against LOGICAL names
+    * — a constraint added after a rename names the renamed column — so
+    * the written files validate through the head's logical view. Full
+    * rewrites keep the default (they write logical names and clear the
+    * map; applying the view to an already-logical frame would misfire
+    * under vacated-name reuse).
     */
-  private def manifestContent(spark: SparkSession, path: String, version: Long): String =
-    manifestRaw(spark, path, version).linesIterator
-      .filterNot(_.startsWith("#")).mkString("\n")
+  private def validateCommit(
+      spark: SparkSession, path: String, dir: String,
+      physicalUnder: Option[Snapshot]): Unit =
+    physicalUnder.filter(_.mapped) match {
+      case None => Constraints.validateWritten(spark, path, dir)
+      case Some(head) =>
+        if (Constraints.list(spark, path).nonEmpty)
+          Constraints.validateFrame(spark, path, applyColmap(head, spark.read.parquet(dir)))
+    }
 
-  /** Commit wall-clock of `version` (epoch millis) from the manifest's
-    * `#ts=` header — committed state inside the atomically-published
-    * manifest, not filesystem mtime. None for manifests written before
-    * the header existed.
+  /** Commit wall-clock of `version` (epoch millis) — committed state
+    * inside the atomically-published manifest, not filesystem mtime. None
+    * for manifests written before the header existed.
     */
   def commitTimestamp(spark: SparkSession, path: String, version: Long): Option[Long] =
-    manifestRaw(spark, path, version).linesIterator
-      .find(_.startsWith("#ts=")).flatMap(_.stripPrefix("#ts=").trim.toLongOption)
+    snapshot(spark, path, version).ts
 
   /** The `txnVersion` most recently committed for `appId` (Delta's
     * `txn.lastWriteVersion` — the idempotent-write watermark): scans
-    * manifests newest-first and returns the first `#txn=` entry for the
+    * manifests newest-first and returns the first txn marker for the
     * app, so with monotone txn versions per app (the streaming-batch-id
     * contract) this is the highest committed one. Cost is one small
     * manifest read per version until a hit — bounded by `vacuum`
@@ -1282,11 +1344,8 @@ object ParquetTable {
     * documented vacuum/txn interaction).
     */
   def lastTxnVersion(spark: SparkSession, path: String, appId: String): Option[Long] =
-    versions(spark, path).sorted(Ordering[Long].reverse).iterator
-      .map(v => manifestRaw(spark, path, v).linesIterator
-        .find(_.startsWith(s"#txn=$appId:"))
-        .flatMap(_.stripPrefix(s"#txn=$appId:").trim.toLongOption))
-      .collectFirst { case Some(tv) => tv }
+    versions(spark, path).reverseIterator.map(snapshot(spark, path, _).txn)
+      .collectFirst { case Some((`appId`, tv)) => tv }
 
   private def requireTxnAppId(txn: Option[(String, Long)]): Unit =
     txn.foreach { case (app, _) =>
@@ -1303,64 +1362,54 @@ object ParquetTable {
       lastTxnVersion(spark, path, app).exists(_ >= tv)
     }
 
-  /** Data dirs of an UNPARTITIONED version, in manifest order. One entry
-    * for full-image commits; several after merge-on-read commits
-    * ([[mergeVectors]] appends a dir per merge — base image first, then
-    * each merge's updates). [[optimize]] / [[atomicReplace]] materialize
-    * back to one.
-    */
-  private def unpartitionedDirs(
-      spark: SparkSession, path: String, version: Long): Seq[String] =
-    manifestContent(spark, path, version).linesIterator
-      .map(_.trim).filter(_.nonEmpty).toSeq
-
   /** Partition entries of `version`: Some(partitionDir → dataDir) for
     * partitioned manifests, None for unpartitioned ones.
     */
   def partitionEntries(
-      spark: SparkSession, path: String, version: Long): Option[Seq[(String, String)]] = {
-    val content = manifestContent(spark, path, version).trim
-    if (!content.contains('\t')) None
-    else Some(content.linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(p, d) = line.split('\t')
-      (p, d)
-    }.toSeq)
-  }
+      spark: SparkSession, path: String, version: Long): Option[Seq[(String, String)]] =
+    Some(snapshot(spark, path, version)).filter(_.partitioned).map(_.entries)
 
   /** Partition columns of the current version, in directory order; Nil
     * for an unpartitioned or missing table.
     */
   def partitionColumns(spark: SparkSession, path: String): Seq[String] =
-    currentVersion(spark, path).flatMap(partitionEntries(spark, path, _))
-      .map(partitionColumnsOf).getOrElse(Nil)
+    currentVersion(spark, path).map(snapshot(spark, path, _).partitionColumns).getOrElse(Nil)
 
-  /** Partition columns recovered from partition entries: "a=1/b=2" → a, b. */
-  private def partitionColumnsOf(entries: Seq[(String, String)]): Seq[String] =
-    entries.head._1.split('/').toSeq.map(_.split('=')(0))
-
-  /** The manifest body for partition entries: sorted `partitionDir\tdataDir` lines. */
-  private def entriesBody(entries: Seq[(String, String)]): String =
-    entries.sorted.map { case (p, dd) => s"$p\t$dd" }.mkString("\n")
-
-  /** Partition entries grouped by data dir, in data-dir order: (dataDir,
-    * the partition dirs it serves). A partition may span several dirs
-    * after append-entry INSERTs, so every slice reader goes through here.
+  /** Entries grouped by data dir: (dataDir, the partition dirs it serves
+    * — `Seq("")` for an unpartitioned dir). Partitioned entries come in
+    * data-dir order (a partition may span several dirs after append-entry
+    * INSERTs, so every slice reader goes through here); unpartitioned ones
+    * keep manifest order, the base image of a merge-on-read chain first.
     */
   private def byDataDir(entries: Seq[(String, String)]): Seq[(String, Seq[String])] =
-    entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dd, es) => dd -> es.map(_._1) }
+    if (entries.forall(_._1.isEmpty)) entries.map(_._2).distinct.map(_ -> Seq(""))
+    else entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dd, es) => dd -> es.map(_._1) }
 
-  /** One plain scan leg per data dir of a partitioned slice, rooted at
-    * exactly the entries' partition subdirs (basePath recovers the
-    * partition columns).
+  /** Whether data-dir-relative file `rel` lies in one of `parts` (every
+    * file of an unpartitioned dir does).
+    */
+  private def inSlice(rel: String, parts: Seq[String]): Boolean =
+    parts.exists(p => p.isEmpty || rel.startsWith(p + "/"))
+
+  /** The directory an entry names: the partition subdir of its data dir. */
+  private def entryDir(path: String, entry: (String, String)): Path = entry match {
+    case ("", dataDir) => new Path(path, dataDir)
+    case (partitionDir, dataDir) => new Path(new Path(path, dataDir), partitionDir)
+  }
+
+  /** One plain scan leg per data dir of a slice: an unpartitioned dir
+    * whole, a partitioned one rooted at exactly the entries' partition
+    * subdirs (basePath recovers the partition columns).
     */
   private def sliceLegs(
       spark: SparkSession, path: String, entries: Seq[(String, String)]): Seq[DataFrame] =
     byDataDir(entries).map { case (dataDir, parts) =>
       val base = new Path(path, dataDir).toString
-      spark.read.option("basePath", base).parquet(parts.map(p => s"$base/$p"): _*)
+      if (parts == Seq("")) spark.read.parquet(base)
+      else spark.read.option("basePath", base).parquet(parts.map(p => s"$base/$p"): _*)
     }
 
-  /** The affected-slice reader: the live rows of version `v`'s `entries`.
+  /** The affected-slice reader: the live rows of `head`'s `entries`.
     * Each leg is DV-filtered on its scan relation, aligned to the
     * version's schema (dirs from before a schema evolution read appended
     * columns as typed NULLs) and — when `logical` — put under the
@@ -1368,19 +1417,18 @@ object ParquetTable {
     * writes back through [[toPhysical]].
     */
   private def readSlice(
-      spark: SparkSession, path: String, v: Long, entries: Seq[(String, String)],
+      spark: SparkSession, path: String, head: Snapshot, entries: Seq[(String, String)],
       logical: Boolean = true): DataFrame = {
-    val schema = versionSchema(spark, path, v)
-    val dv = dvOf(spark, path, v)
-    val (renames, drops) =
-      if (logical) columnMapping(spark, path, v) else (Map.empty[String, String], Nil)
+    val schema = versionSchema(spark, path, head)
+    val dv = dvOf(spark, path, head)
     sliceLegs(spark, path, entries).map { leg =>
       val df = dvFilterLeg(leg, dv)
-      applyColmapTo(renames, drops, schema.map(alignTo(df, _)).getOrElse(df))
+      val aligned = schema.map(alignTo(df, _)).getOrElse(df)
+      if (logical) applyColmap(head, aligned) else aligned
     }.reduce(_.unionByName(_))
   }
 
-  /** The row-address reader: the live rows of version `v` — or of its
+  /** The row-address reader: the live rows of `head` — or of its
     * partitioned `entries` slice — with their row addresses
     * ([[DvFileCol]], [[DvIdxCol]]) attached and rows a prior DV retired
     * excluded, so a new DV holds only live matches. Legs stay physical
@@ -1389,24 +1437,23 @@ object ParquetTable {
     * column mapping.
     */
   private def addressedRows(
-      spark: SparkSession, path: String, v: Long,
+      spark: SparkSession, path: String, head: Snapshot,
       entries: Option[Seq[(String, String)]] = None): DataFrame = {
-    val dv = dvOf(spark, path, v)
-    val (renames, drops) = columnMapping(spark, path, v)
-    entries.fold(versionLegs(spark, path, v))(sliceLegs(spark, path, _))
-      .map(leg => applyColmapTo(renames, drops, liveAddressed(leg, dv)))
+    val dv = dvOf(spark, path, head)
+    entries.fold(versionLegs(spark, path, head))(sliceLegs(spark, path, _))
+      .map(leg => applyColmap(head, liveAddressed(leg, dv)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** What a commit staged in `dataDir`, read back — only the `parts`
-    * partition dirs of a partitioned commit — under version `v`'s logical
+    * partition dirs of a partitioned commit — under `head`'s logical
     * view: the post-image of a CDF capture, never a re-run of the plan
     * that produced it.
     */
   private def stagedRows(
-      spark: SparkSession, path: String, v: Long, dataDir: String,
+      spark: SparkSession, path: String, head: Snapshot, dataDir: String,
       parts: Seq[String] = Nil): DataFrame =
-    applyColmap(spark, path, v,
+    applyColmap(head,
       if (parts.isEmpty) spark.read.parquet(new Path(path, dataDir).toString)
       else sliceLegs(spark, path, parts.map(_ -> dataDir)).head)
 
@@ -1437,25 +1484,17 @@ object ParquetTable {
       })
     }
 
-  /** The table schema `version` publishes, from sidecars ALONE — one
+  /** The table schema `head` publishes, from sidecars ALONE — one
     * small JSON read per referenced data dir, no file listing, no data
     * I/O (partitioned versions take the superset across dirs: after a
     * schema-evolving merge, untouched partitions keep their old dirs).
     * None when no referenced dir carries a schema (pre-sidecar commits).
     * Partition columns are included (commit-time schemas carry them).
     */
-  private[sources] def versionSchema(
-      spark: SparkSession, path: String, version: Long): Option[StructType] =
-    partitionEntries(spark, path, version) match {
-      case None =>
-        supersetSchema(unpartitionedDirs(spark, path, version).flatMap(dd =>
-          DataSkipping.readStats(spark, new Path(path, dd).toString)
-            .flatMap(_.schema)))
-      case Some(entries) =>
-        supersetSchema(entries.map(_._2).distinct.sorted.flatMap(dd =>
-          DataSkipping.readStats(spark, new Path(path, dd).toString)
-            .flatMap(_.schema)))
-    }
+  private def versionSchema(
+      spark: SparkSession, path: String, head: Snapshot): Option[StructType] =
+    supersetSchema(head.dataDirs.flatMap(dd =>
+      DataSkipping.readStats(spark, new Path(path, dd).toString).flatMap(_.schema)))
 
   /** Align one data dir's frame to the version's table schema: columns
     * the dir predates read as typed NULLs (the parquet-reader
@@ -1469,24 +1508,24 @@ object ParquetTable {
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  /** The snapshot of `version`, deletion vectors applied. When the
-    * version carries no `#dv=` header this is exactly the single-relation
+  /** The table as `head` publishes it, deletion vectors applied. When
+    * the version carries no DVs this is exactly the single-relation
     * plan [[versionLegs]] builds (FileIndex pruning, metadata-agg
     * folding); with DVs the legs each gain the anti-join of
     * [[dvFilterLeg]] — a join plan, which is also what keeps the
     * metadata-aggregate rule from folding stale sidecar counts.
     */
-  private def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val dv = dvOf(spark, path, version)
+  private def readVersion(spark: SparkSession, path: String, head: Snapshot): DataFrame = {
+    val dv = dvOf(spark, path, head)
     // colmap LAST: DV filtering and union happen on the physical frame.
     // allowMissingColumns = the typed-NULL schema-evolution semantics the
     // partitioned path already gets from its superset sidecar schema —
     // after an ADD COLUMN, a merge-on-read dir can legitimately carry
     // more columns than the base dir it amends.
-    val base = applyColmap(spark, path, version,
-      versionLegs(spark, path, version).map(dvFilterLeg(_, dv))
+    val base = applyColmap(head,
+      versionLegs(spark, path, head).map(dvFilterLeg(_, dv))
         .reduce(_.unionByName(_, allowMissingColumns = true)))
-    extendDefaults(spark, path, version, base)
+    extendDefaults(spark, path, head, base)
   }
 
   /** Append ADD-COLUMN'd columns the physical frame predates (typed
@@ -1495,11 +1534,10 @@ object ParquetTable {
     * was later colmap-DROPPED stays dropped.
     */
   private def extendDefaults(
-      spark: SparkSession, path: String, version: Long, df: DataFrame): DataFrame = {
+      spark: SparkSession, path: String, head: Snapshot, df: DataFrame): DataFrame = {
     val rules = ColumnDefaults.list(spark, path)
     if (rules.isEmpty) df
-    else ColumnDefaults.extendSchema(rules, version, df,
-      columnMapping(spark, path, version)._2)
+    else ColumnDefaults.extendSchema(rules, head.version, df, head.drops)
   }
 
   /** The version's scan legs — each a SINGLE file-source relation (so
@@ -1508,88 +1546,87 @@ object ParquetTable {
     * fallback. Callers must apply [[dvFilterLeg]] per leg BEFORE any
     * projection or union.
     */
-  private def versionLegs(spark: SparkSession, path: String, version: Long): Seq[DataFrame] =
-    partitionEntries(spark, path, version) match {
-      case None =>
-        // unpartitioned: the manifest body lists the version's data dirs
-        // (one for full-image commits; base + one per merge after
-        // merge-on-read commits), each served through a snapshot
-        // FileIndex so ANY plan over the table (SQL, joins, aggregates)
-        // prunes files from the stats sidecar at planning time — see
-        // GraftFileIndex. The sidecar also carries the commit's schema,
-        // so the common path never re-infers it from footers
-        // (pre-sidecar dirs fall back to inference).
-        val dirs = unpartitionedDirs(spark, path, version)
-        dirs.map { dd =>
-          val dir = new Path(path, dd)
-          val sidecar = DataSkipping.readStats(spark, dir.toString)
-          val schema = sidecar.flatMap(_.schema)
-            .getOrElse(spark.read.parquet(dir.toString).schema)
-          val index = new GraftFileIndex(spark, dir, sidecar.map(_.files))
-          // ANALYZEd tables feed Spark's CBO their real statistics —
-          // full column statistics on single-leg snapshots (the common
-          // published/compacted state); a merge-on-read chain still
-          // gets each leg's EXACT sidecar row count (the union sums
-          // them), but no NDV/min-max — a table-wide sketch says
-          // nothing about one leg, and the chain folds back to one leg
-          // at the MorMaxDataDirs cap anyway. DV'd rows are not
-          // subtracted: estimates stay high → conservative broadcasts.
-          // See PlanStats for the opt-in chain.
-          val cs = if (dirs.size == 1)
-            PlanStats.forSnapshot(spark, path, version, index.sizeInBytes,
-              index.metadataRowCount, index.metadataNonNullCount,
-              index.metadataMinMax,
-              schema.fields.map(f => f.name -> f.dataType).toMap)
-          else PlanStats.rowCountOnly(spark, path,
-            index.sizeInBytes, index.metadataRowCount)
-          GraftColumnBridge.ofFileIndex(spark, index, schema, cs)
-        }
-      case Some(entries) =>
-        // partitioned: one inner InMemoryFileIndex per data dir, rooted
-        // at EXACTLY the partition subdirs this version references
-        // (basePath recovers the partition columns), composed into a
-        // GraftPartitionedFileIndex so any plan gets partition-filter
-        // pruning AND sidecar file skipping at planning time. Dirs
-        // without a schema-bearing sidecar (pre-feature) fall back to
-        // the legacy unioned basePath read.
-        val groups = byDataDir(entries).map { case (dataDir, parts) =>
-          val base = new Path(path, dataDir)
-          (base, parts, DataSkipping.readStats(spark, base.toString))
-        }
-        // the version's table schema is the SUPERSET across dirs: after a
-        // schema-evolving merge, untouched partitions keep old dirs whose
-        // files simply lack the appended columns (the parquet reader
-        // fills typed NULLs — Delta's read-time evolution semantics)
-        val sidecarSchema = supersetSchema(groups.flatMap(_._3.flatMap(_.schema)))
-        sidecarSchema match {
-          case Some(schema) =>
-            val parts = groups.map { case (base, partDirs, sidecar) =>
-              val inner: org.apache.spark.sql.execution.datasources.FileIndex =
-                new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-                  spark, partDirs.map(p => new Path(base, p)),
-                  Map("basePath" -> base.toString), None)
-              val absStats = sidecar.map(_.files.map { case (rel, st) =>
-                new Path(base, rel).toUri.getPath -> st
-              }).getOrElse(Map.empty[String, DataSkipping.FileStat])
-              (inner, absStats)
-            }
-            val index = new GraftPartitionedFileIndex(parts)
-            val partCols = index.partitionSchema.fieldNames
-              .map(_.toLowerCase).toSet
-            val dataSchema = org.apache.spark.sql.types.StructType(
-              schema.fields.filterNot(f => partCols.contains(f.name.toLowerCase)))
-            // the partitioned layout is always ONE relation, so the
-            // ANALYZE statistics attach unconditionally when present;
-            // partition columns are non-null by construction but their
-            // null counts aren't in file stats — omitted, not guessed
-            val cs = PlanStats.forSnapshot(spark, path, version,
-              index.sizeInBytes, index.metadataRowCount,
-              index.metadataNonNullCount, index.metadataMinMax,
-              (dataSchema.fields ++ index.partitionSchema.fields)
-                .map(f => f.name -> f.dataType).toMap)
-            Seq(GraftColumnBridge.ofFileIndex(spark, index, dataSchema, cs))
-          case None => sliceLegs(spark, path, entries)
-        }
+  private def versionLegs(spark: SparkSession, path: String, head: Snapshot): Seq[DataFrame] =
+    if (!head.partitioned) {
+      // unpartitioned: the manifest body lists the version's data dirs
+      // (one for full-image commits; base + one per merge after
+      // merge-on-read commits), each served through a snapshot
+      // FileIndex so ANY plan over the table (SQL, joins, aggregates)
+      // prunes files from the stats sidecar at planning time — see
+      // GraftFileIndex. The sidecar also carries the commit's schema,
+      // so the common path never re-infers it from footers
+      // (pre-sidecar dirs fall back to inference).
+      val dirs = head.dataDirs
+      dirs.map { dd =>
+        val dir = new Path(path, dd)
+        val sidecar = DataSkipping.readStats(spark, dir.toString)
+        val schema = sidecar.flatMap(_.schema)
+          .getOrElse(spark.read.parquet(dir.toString).schema)
+        val index = new GraftFileIndex(spark, dir, sidecar.map(_.files))
+        // ANALYZEd tables feed Spark's CBO their real statistics —
+        // full column statistics on single-leg snapshots (the common
+        // published/compacted state); a merge-on-read chain still
+        // gets each leg's EXACT sidecar row count (the union sums
+        // them), but no NDV/min-max — a table-wide sketch says
+        // nothing about one leg, and the chain folds back to one leg
+        // at the MorMaxDataDirs cap anyway. DV'd rows are not
+        // subtracted: estimates stay high → conservative broadcasts.
+        // See PlanStats for the opt-in chain.
+        val cs = if (dirs.size == 1)
+          PlanStats.forSnapshot(spark, path, head, index.sizeInBytes,
+            index.metadataRowCount, index.metadataNonNullCount,
+            index.metadataMinMax,
+            schema.fields.map(f => f.name -> f.dataType).toMap)
+        else PlanStats.rowCountOnly(spark, path,
+          index.sizeInBytes, index.metadataRowCount)
+        GraftColumnBridge.ofFileIndex(spark, index, schema, cs)
+      }
+    } else {
+      // partitioned: one inner InMemoryFileIndex per data dir, rooted
+      // at EXACTLY the partition subdirs this version references
+      // (basePath recovers the partition columns), composed into a
+      // GraftPartitionedFileIndex so any plan gets partition-filter
+      // pruning AND sidecar file skipping at planning time. Dirs
+      // without a schema-bearing sidecar (pre-feature) fall back to
+      // the legacy unioned basePath read.
+      val groups = byDataDir(head.entries).map { case (dataDir, parts) =>
+        val base = new Path(path, dataDir)
+        (base, parts, DataSkipping.readStats(spark, base.toString))
+      }
+      // the version's table schema is the SUPERSET across dirs: after a
+      // schema-evolving merge, untouched partitions keep old dirs whose
+      // files simply lack the appended columns (the parquet reader
+      // fills typed NULLs — Delta's read-time evolution semantics)
+      val sidecarSchema = supersetSchema(groups.flatMap(_._3.flatMap(_.schema)))
+      sidecarSchema match {
+        case Some(schema) =>
+          val parts = groups.map { case (base, partDirs, sidecar) =>
+            val inner: org.apache.spark.sql.execution.datasources.FileIndex =
+              new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+                spark, partDirs.map(p => new Path(base, p)),
+                Map("basePath" -> base.toString), None)
+            val absStats = sidecar.map(_.files.map { case (rel, st) =>
+              new Path(base, rel).toUri.getPath -> st
+            }).getOrElse(Map.empty[String, DataSkipping.FileStat])
+            (inner, absStats)
+          }
+          val index = new GraftPartitionedFileIndex(parts)
+          val partCols = index.partitionSchema.fieldNames
+            .map(_.toLowerCase).toSet
+          val dataSchema = org.apache.spark.sql.types.StructType(
+            schema.fields.filterNot(f => partCols.contains(f.name.toLowerCase)))
+          // the partitioned layout is always ONE relation, so the
+          // ANALYZE statistics attach unconditionally when present;
+          // partition columns are non-null by construction but their
+          // null counts aren't in file stats — omitted, not guessed
+          val cs = PlanStats.forSnapshot(spark, path, head,
+            index.sizeInBytes, index.metadataRowCount,
+            index.metadataNonNullCount, index.metadataMinMax,
+            (dataSchema.fields ++ index.partitionSchema.fields)
+              .map(f => f.name -> f.dataType).toMap)
+          Seq(GraftColumnBridge.ofFileIndex(spark, index, dataSchema, cs))
+        case None => sliceLegs(spark, path, head.entries)
+      }
     }
 
   /** Hive-style partition dir for one row of partition values (already
@@ -1650,18 +1687,18 @@ object ParquetTable {
     commitLoop(spark, path, "createVersioned", txn, missing = None) { _ =>
       val dataDir = stage(spark, path, image, partitionColumns, filesPerPartition,
         writeOptions)
-      Commit(entriesBody(partitionDirsOf(image, partitionColumns).map(_ -> dataDir)),
-        staged = Seq(dataDir), onMove = Replay)
+      Commit(Snapshot(partitionDirsOf(image, partitionColumns).map(_ -> dataDir)),
+        onMove = Replay)
     }
     ()
   }
 
   /** The [[Rebase]] of a partitioned merge that lost the version CAS:
-    * land its already-written data dir on top of the winner at `head`
+    * land its already-written data dir on top of the winner `head`
     * WITHOUT recomputing — the manifest-entry re-expression of Delta's
     * ConflictChecker (`OptimisticTransaction.checkForConflicts`, which
     * rebases a lost commit onto winning transactions when their
-    * read/write sets are disjoint). The merge computed against `baseV`
+    * read/write sets are disjoint). The merge computed against `base`
     * rebases iff every commit since is DISJOINT from it:
     *
     *   - none re-pointed, consolidated, or appended an entry of any
@@ -1690,16 +1727,12 @@ object ParquetTable {
     * every dir to the version's superset sidecar schema.
     */
   private def rebaseOnto(
-      spark: SparkSession, path: String, baseV: Long, head: Long,
+      spark: SparkSession, path: String, base: Snapshot, head: Snapshot,
       affected: Seq[String], mapped: Seq[String], dataDir: String,
-      appendBesideOld: Boolean, newDv: Option[String]): Option[Commit] = {
+      appendBesideOld: Boolean, newDv: Option[String]): Option[Snapshot] = {
     val affectedSet = affected.toSet
-    def affectedOf(v: Long) =
-      partitionEntries(spark, path, v).map(_.filter(e => affectedSet(e._1)).sorted)
-    val headEntries = partitionEntries(spark, path, head).getOrElse(Nil)
-    val baseDvs = dvDirs(spark, path, baseV)
-    val headDvs = dvDirs(spark, path, head)
-    val addedDvs = headDvs.filterNot(baseDvs.contains)
+    def affectedOf(s: Snapshot) = s.entries.filter(e => affectedSet(e._1)).sorted
+    val addedDvs = head.dv.filterNot(base.dv.contains)
     // DV file keys are `dataDir/partitionDir/file` (see [[dvFileKey]]), so
     // the overlap check runs at (dataDir, partition) granularity — a
     // winner's DV inside a SHARED data dir (the create dir holds every
@@ -1707,19 +1740,18 @@ object ParquetTable {
     // partitions. One distinct-key scan of the added DVs (small by
     // construction: 16 B/deleted row, distinct keys = files touched).
     def dvTouchesSlice = {
-      val prefixes = affectedOf(baseV).getOrElse(Nil).map { case (p, dd) => s"$dd/$p/" }
+      val prefixes = affectedOf(base).map { case (p, dd) => s"$dd/$p/" }
       dvFrame(spark, path, addedDvs).select(col(DvFileCol)).distinct().collect()
         .exists(r => prefixes.exists(r.getString(0).startsWith))
     }
-    val disjoint = affectedOf(baseV).isDefined && affectedOf(head) == affectedOf(baseV) &&
-      columnMapping(spark, path, head) == columnMapping(spark, path, baseV) &&
-      baseDvs.forall(headDvs.contains) && (addedDvs.isEmpty || !dvTouchesSlice)
+    val disjoint = head.partitioned && affectedOf(head) == affectedOf(base) &&
+      (head.renames, head.drops) == (base.renames, base.drops) &&
+      base.dv.forall(head.dv.contains) && (addedDvs.isEmpty || !dvTouchesSlice)
     val rebased =
-      (if (appendBesideOld) headEntries else headEntries.filterNot(e => affectedSet(e._1))) ++
+      (if (appendBesideOld) head.entries else head.entries.filterNot(e => affectedSet(e._1))) ++
         mapped.map(_ -> dataDir)
     if (!disjoint || rebased.isEmpty) None
-    else Some(Commit(entriesBody(rebased), dv = headDvs ++ newDv,
-      colmap = carriedColmap(spark, path, head)))
+    else Some(head.copy(entries = rebased, dv = head.dv ++ newDv))
   }
 
   /** Upsert into a partitioned VERSIONED table: reads only the affected
@@ -1769,10 +1801,10 @@ object ParquetTable {
     // below consults it (ANALYZEd tables only; see [[planMergeStats]])
     lazy val statsPlan = planMergeStats(spark, path, updates, pk)
     lazy val affected = partitionDirsOf(upd, partitionColumns)
-    commitLoop(spark, path, "mergeVersioned", txn) { v =>
-      val entries = partitionEntries(spark, path, v).getOrElse(
-        throw new IllegalStateException(
-          s"mergeVersioned: $path holds an UNPARTITIONED versioned table"))
+    commitLoop(spark, path, "mergeVersioned", txn) { head =>
+      if (!head.partitioned) throw new IllegalStateException(
+        s"mergeVersioned: $path holds an UNPARTITIONED versioned table")
+      val entries = head.entries
       val affectedSet = affected.toSet
       val affectedEntries = entries.filter(e => affectedSet(e._1))
       // the affected slice in LOGICAL space; the merge computes there and
@@ -1783,7 +1815,7 @@ object ParquetTable {
       // carried into the commit, keeping deletes on UNTOUCHED partitions
       val target =
         if (affectedEntries.isEmpty) None
-        else Some(readSlice(spark, path, v, affectedEntries))
+        else Some(readSlice(spark, path, head, affectedEntries))
       // merge-on-read tier for HOT partitions (the partitioned twin of
       // [[mergeVectors]]): matched rows in the affected slice retire by
       // deletion vector, the update set appends as ONE new dir with
@@ -1795,7 +1827,7 @@ object ParquetTable {
       // consolidates). Schema evolution always rewrites.
       val useMor = combine.isEmpty && !evolveSchema && target.isDefined &&
         mergeOnRead.getOrElse {
-          val rows = affectedSliceRows(spark, path, affectedEntries)
+          val rows = sliceRows(spark, path, affectedEntries)
           val maxDirs = affectedEntries.groupBy(_._1).values
             .map(_.size).maxOption.getOrElse(0)
           rows.exists(_ > MorAutoRowsFloor) && maxDirs < MorMaxDataDirs &&
@@ -1807,15 +1839,12 @@ object ParquetTable {
         val updAligned = upd.select(cols.map(col): _*)
         val updKeys = hintKeys(
           updAligned.select(pk.map(col): _*).distinct(), statsPlan.broadcastKeys)
-        val dataDir = stage(spark, path, toPhysical(spark, path, v, updAligned),
-          partitionColumns, filesPerPartition, physicalNames = true)
+        val dataDir = stage(spark, path, toPhysical(spark, path, head, updAligned),
+          partitionColumns, filesPerPartition, physicalUnder = Some(head))
         // (file, row_index) of affected-slice rows whose pk is replaced
         val dvName = stageDvIfAny(spark, path,
-          addressedRows(spark, path, v, Some(affectedEntries)).join(updKeys, pk, "left_semi"))
-        Commit(entriesBody(entries ++ affected.map(_ -> dataDir)),
-          staged = dataDir +: dvName.toSeq,
-          dv = dvDirs(spark, path, v) ++ dvName,
-          colmap = carriedColmap(spark, path, v),
+          addressedRows(spark, path, head, Some(affectedEntries)).join(updKeys, pk, "left_semi"))
+        Commit(head.copy(entries = entries ++ affected.map(_ -> dataDir), dv = head.dv ++ dvName),
           // committed appended dir = the post-images; pre side = the
           // affected slice's replaced keys (re-selected: the semi join
           // hoists pk columns) — valid under rebase too: disjointness
@@ -1823,19 +1852,16 @@ object ParquetTable {
           onWin = committedV => if (cdf) writeChangeManifest(spark, path, committedV,
             changeRowsBetween(
               t.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-              stagedRows(spark, path, v, dataDir, affected).select(cols.map(col): _*),
+              stagedRows(spark, path, head, dataDir, affected).select(cols.map(col): _*),
               pk, "right_outer")),
           // entries unchanged means the DV's (file, row_index) targets
           // are still the live base files
-          onMove = Rebase(w => rebaseOnto(spark, path, v, w, affected, affected, dataDir,
+          onMove = Rebase(rebaseOnto(spark, path, head, _, affected, affected, dataDir,
             appendBesideOld = true, dvName)))
       } else {
         // the version's LOGICAL table schema, from sidecars alone: the
         // anchor for images of partitions the table does not hold yet
-        lazy val logicalSchema = {
-          val (cmRenames, cmDrops) = columnMapping(spark, path, v)
-          versionSchema(spark, path, v).map(colmapSchema(cmRenames, cmDrops, _))
-        }
+        lazy val logicalSchema = versionSchema(spark, path, head).map(colmapSchema(head, _))
         val merged = target match {
           case Some(t) =>
             combine.map(_(t, upd)).getOrElse(mergeFrames(t, upd, pk,
@@ -1849,7 +1875,7 @@ object ParquetTable {
             // later multi-dir unionByName read
             combine.get(spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              logicalSchema.getOrElse(readVersion(spark, path, v).schema)), upd)
+              logicalSchema.getOrElse(readVersion(spark, path, head).schema)), upd)
           case None =>
             if (!evolveSchema) upd
             else logicalSchema match {
@@ -1867,8 +1893,8 @@ object ParquetTable {
               case None => upd
             }
         }
-        val dataDir = stage(spark, path, toPhysical(spark, path, v, merged),
-          partitionColumns, filesPerPartition, physicalNames = true)
+        val dataDir = stage(spark, path, toPhysical(spark, path, head, merged),
+          partitionColumns, filesPerPartition, physicalUnder = Some(head))
         // every affected partition consolidates onto the new dir (its old
         // entries — possibly several — drop out). Survivors come from the
         // WRITTEN layout, not a re-run of the merge plan: a conditional
@@ -1883,20 +1909,19 @@ object ParquetTable {
         require(kept.nonEmpty,
           s"mergeVersioned: merge would empty every partition of $path; " +
             "an empty partitioned manifest is unreadable — drop the table instead")
-        Commit(entriesBody(kept), staged = Seq(dataDir),
-          dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v),
+        Commit(head.copy(entries = kept),
           // capture from the COMMITTED slice, never by re-evaluating the
           // update plan; the v-snapshot dirs the before side reads remain
           // on disk (vacuum hasn't run)
           onWin = committedV => if (cdf) {
-            val newSlice = stagedRows(spark, path, v, dataDir, affected)
+            val newSlice = stagedRows(spark, path, head, dataDir, affected)
             writeChangeManifest(spark, path, committedV, changeRowsBetween(
               target.getOrElse(newSlice.filter(lit(false))), newSlice, pk, "right_outer"))
           },
           // the consolidated dir already folded in the base DVs, which the
           // disjointness check proves still stand; conflicts are judged on
           // the FULL affected set, only survivors re-map
-          onMove = Rebase(w => rebaseOnto(spark, path, v, w, affected,
+          onMove = Rebase(rebaseOnto(spark, path, head, _, affected,
             affected.filter(survivors), dataDir, appendBesideOld = false, None)))
       }
     }
@@ -1967,45 +1992,38 @@ object ParquetTable {
     def rewrite(df: DataFrame, resolvedSet: Option[Map[String, Column]]): DataFrame =
       resolvedSet.fold(df.filter(!condition))(applySet(df, condition, _))
     try commitLoop(spark, path, verb, missing = Some(" (row-level rewrites need " +
-        "manifest isolation; plain layouts have no safe in-place path)")) { v =>
-      val target = readVersion(spark, path, v)
+        "manifest isolation; plain layouts have no safe in-place path)")) { head =>
+      val target = readVersion(spark, path, head)
       requireDeterministic(target, condition, set, verb)
-      partitionEntries(spark, path, v) match {
-        case None =>
-          val resolvedSet = set.map(resolveSet(target, _, Nil, verb))
-          val matched = matchedIn(target)
-          if (matched.isEmpty) NoOp(v)
-          else {
-            val dataDir = stageImage(spark, path, rewrite(target, resolvedSet))
-            Commit(dataDir, staged = Seq(dataDir), onWin = nv => if (cdf)
-              writeChangeManifest(spark, path, nv, captureRewrite(matched, resolvedSet)))
-          }
-        case Some(entries) =>
-          val partitionColumns = partitionColumnsOf(entries)
-          val matched = matchedIn(target)
-          val resolvedSet = set.map(resolveSet(target, _, partitionColumns, verb))
-          val affected = partitionDirsOf(matched, partitionColumns).toSet
-          if (affected.isEmpty) NoOp(v)
-          else {
-            // rewrite ONLY the affected partitions' slice, in logical
-            // space, physical names back on the way out — the partial-
-            // rewrite discipline of mergeVersioned
-            val newSlice = rewrite(
-              readSlice(spark, path, v, entries.filter(e => affected(e._1))), resolvedSet)
-            val dataDir = stage(spark, path, toPhysical(spark, path, v, newSlice),
-              partitionColumns, physicalNames = true)
-            // a fully-deleted partition leaves the manifest; every
-            // affected partition's old entries drop out wholesale
-            val newEntries = entries.filterNot(e => affected(e._1)) ++
-              partitionDirsOf(newSlice, partitionColumns).map(_ -> dataDir)
-            require(newEntries.nonEmpty,
-              s"$verb would empty every partition of $path; an empty " +
-                "partitioned manifest is unreadable — drop the table instead")
-            Commit(entriesBody(newEntries), staged = Seq(dataDir),
-              dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v),
-              onWin = nv => if (cdf)
-                writeChangeManifest(spark, path, nv, captureRewrite(matched, resolvedSet)))
-          }
+      val partitionColumns = head.partitionColumns
+      val matched = matchedIn(target)
+      val resolvedSet = set.map(resolveSet(target, _, partitionColumns, verb))
+      def capture(nv: Long): Unit =
+        if (cdf) writeChangeManifest(spark, path, nv, captureRewrite(matched, resolvedSet))
+      if (!head.partitioned) {
+        if (matched.isEmpty) NoOp(head.version)
+        else Commit(Snapshot(Seq("" -> stageImage(spark, path, rewrite(target, resolvedSet)))),
+          onWin = capture)
+      } else {
+        val affected = partitionDirsOf(matched, partitionColumns).toSet
+        if (affected.isEmpty) NoOp(head.version)
+        else {
+          // rewrite ONLY the affected partitions' slice, in logical
+          // space, physical names back on the way out — the partial-
+          // rewrite discipline of mergeVersioned
+          val newSlice = rewrite(
+            readSlice(spark, path, head, head.entries.filter(e => affected(e._1))), resolvedSet)
+          val dataDir = stage(spark, path, toPhysical(spark, path, head, newSlice),
+            partitionColumns, physicalUnder = Some(head))
+          // a fully-deleted partition leaves the manifest; every
+          // affected partition's old entries drop out wholesale
+          val newEntries = head.entries.filterNot(e => affected(e._1)) ++
+            partitionDirsOf(newSlice, partitionColumns).map(_ -> dataDir)
+          require(newEntries.nonEmpty,
+            s"$verb would empty every partition of $path; an empty " +
+              "partitioned manifest is unreadable — drop the table instead")
+          Commit(head.copy(entries = newEntries), onWin = capture)
+        }
       }
     } finally persisted.foreach(_.unpersist())
   }
@@ -2097,8 +2115,8 @@ object ParquetTable {
       txn: Option[(String, Long)] = None,
       writeOptions: Map[String, String] = Map.empty): Long =
     commitLoop(spark, path, "atomicReplace", txn, missing = None) { _ =>
-      val dataDir = stageImage(spark, path, df0, partitionColumns, writeOptions)
-      Commit(dataDir, staged = Seq(dataDir), onMove = Replay)
+      Commit(Snapshot(Seq("" -> stageImage(spark, path, df0, partitionColumns, writeOptions))),
+        onMove = Replay)
     }
 
   /** SNAPSHOT-DIFF change feed between two committed versions — the NET
@@ -2208,66 +2226,37 @@ object ParquetTable {
   private[sources] val DvFileCol = "__graft_dv_file"
   private[sources] val DvIdxCol = "__graft_dv_idx"
 
-  /** Deletion-vector dirs of `version`, from the manifest's `#dv=` header
-    * (tab-separated; entries are table-relative names or absolute paths
-    * for shallow clones). Empty for versions without deletes-by-vector.
+  /** Deletion-vector dirs of `version` (table-relative names, or
+    * absolute paths for shallow clones). Empty for versions without
+    * deletes-by-vector.
     */
   def dvDirs(spark: SparkSession, path: String, version: Long): Seq[String] =
-    manifestRaw(spark, path, version).linesIterator
-      .find(_.startsWith("#dv=")).toSeq
-      .flatMap(_.stripPrefix("#dv=").split('\t')).map(_.trim).filter(_.nonEmpty)
+    snapshot(spark, path, version).dv
 
   // ---- column mapping: RENAME/DROP COLUMN without rewrite -----------------
 
-  /** `version`'s column mapping from its `#colmap=` header:
-    * (physical → logical renames, dropped physical columns). Entries are
-    * tab-separated `physical>logical`; an empty logical side marks a
-    * drop. Empty maps for unmapped versions.
+  /** `version`'s column mapping: (physical → logical renames, dropped
+    * physical columns). Empty maps for unmapped versions.
     */
   def columnMapping(
-      spark: SparkSession, path: String, version: Long): (Map[String, String], Seq[String]) =
-    manifestRaw(spark, path, version).linesIterator
-      .find(_.startsWith("#colmap=")) match {
-      case None => (Map.empty, Nil)
-      case Some(line) =>
-        val entries = line.stripPrefix("#colmap=").split('\t')
-          .map(_.trim).filter(_.nonEmpty)
-        val (drops, renames) = entries.partition(_.endsWith(">"))
-        (renames.map { e =>
-          val i = e.indexOf('>')
-          e.substring(0, i) -> e.substring(i + 1)
-        }.toMap, drops.map(_.dropRight(1)).toSeq)
-    }
-
-  /** Serialize a mapping back to the header value. */
-  private def colmapValue(renames: Map[String, String], drops: Seq[String]): String =
-    (renames.toSeq.sorted.map { case (p, l) => s"$p>$l" } ++
-      drops.sorted.map(_ + ">")).mkString("\t")
-
-  /** Apply `version`'s logical column view to an assembled physical
-    * frame: dropped columns projected away, renamed columns aliased.
-    * Identity for unmapped versions (the overwhelmingly common case —
-    * one manifest-header probe, no plan change).
-    */
-  private def applyColmap(
-      spark: SparkSession, path: String, version: Long, df: DataFrame): DataFrame = {
-    val (renames, drops) = columnMapping(spark, path, version)
-    applyColmapTo(renames, drops, df)
+      spark: SparkSession, path: String, version: Long): (Map[String, String], Seq[String]) = {
+    val s = snapshot(spark, path, version)
+    (s.renames, s.drops)
   }
 
-  /** The logical-view projection itself: dropped physical columns
-    * projected away, renamed ones aliased; columns outside the mapping
-    * (including reader metadata like [[DvFileCol]]) pass through — so
-    * mutation verbs can put a PHYSICAL leg under the logical names while
-    * keeping their row-address columns.
+  /** Put a frame under `head`'s logical column view: dropped physical
+    * columns projected away, renamed ones aliased; columns outside the
+    * mapping (including reader metadata like [[DvFileCol]]) pass through
+    * — so mutation verbs can put a PHYSICAL leg under the logical names
+    * while keeping their row-address columns. Identity for unmapped
+    * versions (the overwhelmingly common case — no plan change).
     */
-  private def applyColmapTo(
-      renames: Map[String, String], drops: Seq[String], df: DataFrame): DataFrame =
-    if (renames.isEmpty && drops.isEmpty) df
+  private def applyColmap(head: Snapshot, df: DataFrame): DataFrame =
+    if (!head.mapped) df
     else df.select(df.columns
-      .filterNot(c => drops.exists(_.equalsIgnoreCase(c)))
+      .filterNot(c => head.drops.exists(_.equalsIgnoreCase(c)))
       .map(c => col(c).as(
-        renames.collectFirst { case (p, l) if p.equalsIgnoreCase(c) => l }
+        head.renames.collectFirst { case (p, l) if p.equalsIgnoreCase(c) => l }
           .getOrElse(c))).toIndexedSeq: _*)
 
   /** Inverse of [[applyColmap]] for OUTGOING writes under an active
@@ -2281,16 +2270,15 @@ object ParquetTable {
     * (schema evolution) appended. Identity when the version is unmapped.
     */
   private def toPhysical(
-      spark: SparkSession, path: String, version: Long, df: DataFrame): DataFrame = {
-    val (renames, drops) = columnMapping(spark, path, version)
-    if (renames.isEmpty && drops.isEmpty) return df
-    val phys = versionSchema(spark, path, version)
-      .orElse(supersetSchema(versionLegs(spark, path, version).map(_.schema)))
+      spark: SparkSession, path: String, head: Snapshot, df: DataFrame): DataFrame = {
+    if (!head.mapped) return df
+    val phys = versionSchema(spark, path, head)
+      .orElse(supersetSchema(versionLegs(spark, path, head).map(_.schema)))
       .getOrElse(return df)
-    val inv = renames.map { case (p, l) => l.toLowerCase -> p }
+    val inv = head.renames.map { case (p, l) => l.toLowerCase -> p }
     val renamed = df.select(df.columns.map(c =>
       col(c).as(inv.getOrElse(c.toLowerCase, c))).toIndexedSeq: _*)
-    val withDropped = drops.foldLeft(renamed)((d, p) =>
+    val withDropped = head.drops.foldLeft(renamed)((d, p) =>
       phys.fields.find(_.name.equalsIgnoreCase(p)) match {
         case Some(f) if !d.columns.exists(_.equalsIgnoreCase(p)) =>
           d.withColumn(f.name, lit(null).cast(f.dataType))
@@ -2303,51 +2291,20 @@ object ParquetTable {
     withDropped.select((physOrder ++ extras).map(col): _*)
   }
 
-  /** The logical view of a PHYSICAL schema under a mapping — the schema
-    * twin of [[applyColmapTo]].
+  /** The logical view of a PHYSICAL schema under `head`'s mapping — the
+    * schema twin of [[applyColmap]].
     */
-  private def colmapSchema(
-      renames: Map[String, String], drops: Seq[String], s: StructType): StructType =
-    if (renames.isEmpty && drops.isEmpty) s
+  private def colmapSchema(head: Snapshot, s: StructType): StructType =
+    if (!head.mapped) s
     else StructType(s.fields
-      .filterNot(f => drops.exists(_.equalsIgnoreCase(f.name)))
-      .map(f => f.copy(name = renames.collectFirst {
+      .filterNot(f => head.drops.exists(_.equalsIgnoreCase(f.name)))
+      .map(f => f.copy(name = head.renames.collectFirst {
         case (p, l) if p.equalsIgnoreCase(f.name) => l
       }.getOrElse(f.name))))
 
-  /** The current mapping rendered for a carry-forward commit (None when
-    * unmapped) — every PARTIAL commit under an active map must pass this
-    * to [[commitVersion]], or the new version would read raw physical
-    * names.
-    */
-  private def carriedColmap(
-      spark: SparkSession, path: String, version: Long): Option[String] = {
-    val (r, d) = columnMapping(spark, path, version)
-    Some(colmapValue(r, d)).filter(_.nonEmpty)
-  }
-
-  /** Refuse a verb that cannot serve an unmaterialized column mapping
-    * (symlink export: external readers consume raw files, which carry
-    * PHYSICAL names). Mutation verbs no longer freeze — they translate
-    * through the map on the way in ([[toPhysical]]) and carry it forward
-    * ([[carriedColmap]]); full-image rewrites ([[compact]], [[optimize]],
-    * unpartitioned merge/update/delete) write logical names and clear
-    * the map, which IS the materialization.
-    */
-  private def requireNoColmap(spark: SparkSession, path: String, verb: String): Unit =
-    if (exists(spark, path)) currentVersion(spark, path).foreach { v =>
-      val (renames, drops) = columnMapping(spark, path, v)
-      if (renames.nonEmpty || drops.nonEmpty) throw new IllegalStateException(
-        s"$verb: table at $path carries an unmaterialized column mapping " +
-          s"(renames: ${renames.map { case (p, l) => s"$p->$l" }.mkString(",")}; " +
-          s"drops: ${drops.mkString(",")}). Run compact/optimize to " +
-          "materialize the logical schema into the data files first — " +
-          "reads and time travel work throughout.")
-    }
-
   /** Delta-parity `ALTER TABLE … RENAME COLUMN` WITHOUT rewriting data:
     * an O(1) metadata-only commit republishing the current version's
-    * data dirs under an updated `#colmap=` header. Reads and time travel
+    * data dirs under an updated column mapping. Reads and time travel
     * serve every version under its own mapping; old versions keep their
     * old names. Data-mutating verbs keep working under the mapping
     * (Delta's mutate-under-mapping model): partial commits translate
@@ -2363,53 +2320,49 @@ object ParquetTable {
     * names (header syntax). `changes`/CDF windows must not straddle a
     * rename commit — snapshots on the two sides disagree on names — and
     * symlink export stays refused while mapped (external readers see raw
-    * physical names).
+    * physical names). Like every column commit, the checks run against
+    * each attempt's head ([[commitLoop]]'s recompute discipline).
     */
   def renameColumn(
       spark: SparkSession, path: String, from: String, to: String): Long = {
-    val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-      s"renameColumn: no versioned table at $path"))
     require(!(from.contains('>') || from.contains('\t') ||
       to.contains('>') || to.contains('\t')),
       s"renameColumn: '>' and tab are reserved by the mapping header")
-    val logical = read(spark, path).columns.toSeq
-    require(logical.exists(_.equalsIgnoreCase(from)),
-      s"renameColumn: no column '$from' at $path (have ${logical.mkString(",")})")
-    require(!logical.exists(_.equalsIgnoreCase(to)),
-      s"renameColumn: column '$to' already exists at $path")
-    partitionEntries(spark, path, v).foreach { entries =>
-      require(!partitionColumnsOf(entries).exists(_.equalsIgnoreCase(from)),
+    commitLoop(spark, path, "renameColumn") { head =>
+      val logical = readVersion(spark, path, head).columns.toSeq
+      require(logical.exists(_.equalsIgnoreCase(from)),
+        s"renameColumn: no column '$from' at $path (have ${logical.mkString(",")})")
+      require(!logical.exists(_.equalsIgnoreCase(to)),
+        s"renameColumn: column '$to' already exists at $path")
+      require(!head.partitionColumns.exists(_.equalsIgnoreCase(from)),
         s"renameColumn: '$from' is a partition column — the directory " +
           "layout embeds it; rewrite via createVersioned with new names")
+      require(!Constraints.list(spark, path).exists(_._2.toLowerCase
+          .contains(from.toLowerCase)),
+        s"renameColumn: a CHECK constraint references '$from' — drop and " +
+          "re-add the constraint around the rename")
+      // identity rules are keyed by column NAME (the identity DDL rows);
+      // renaming the column would leave the rule pointing at the vacated
+      // name, and later ingest would fill a spurious column under it
+      // (ADVICE r9 medium) — mirror the partition-column refusal
+      require(!IdentityColumns.list(spark, path).exists(_._1.equalsIgnoreCase(from)),
+        s"renameColumn: '$from' carries an identity rule keyed by name — " +
+          "drop the rule first, or keep the name")
+      // ADD COLUMN rules are keyed by name too (fill + read-side extension
+      // + time-travel windows would all chase the vacated name)
+      require(!ColumnDefaults.list(spark, path).exists(r =>
+          r.live && r.name.equalsIgnoreCase(from)),
+        s"renameColumn: '$from' was ADD COLUMN'd and its rule is keyed by " +
+          "name — drop the column instead, or keep the name")
+      // the new entry maps the PHYSICAL name (the inverse image of `from`
+      // under the current mapping) to the new logical name
+      val physical = head.renames.collectFirst {
+        case (p, l) if l.equalsIgnoreCase(from) => p
+      }.getOrElse(from)
+      // a rename back to the physical name clears its entry
+      Commit(head.copy(renames = (head.renames - physical + (physical -> to))
+        .filterNot { case (p, l) => p.equalsIgnoreCase(l) }))
     }
-    require(!Constraints.list(spark, path).exists(_._2.toLowerCase
-        .contains(from.toLowerCase)),
-      s"renameColumn: a CHECK constraint references '$from' — drop and " +
-        "re-add the constraint around the rename")
-    // identity rules are keyed by column NAME (the identity DDL rows);
-    // renaming the column would leave the rule pointing at the vacated
-    // name, and later ingest would fill a spurious column under it
-    // (ADVICE r9 medium) — mirror the partition-column refusal
-    require(!IdentityColumns.list(spark, path).exists(_._1.equalsIgnoreCase(from)),
-      s"renameColumn: '$from' carries an identity rule keyed by name — " +
-        "drop the rule first, or keep the name")
-    // ADD COLUMN rules are keyed by name too (fill + read-side extension
-    // + time-travel windows would all chase the vacated name)
-    require(!ColumnDefaults.list(spark, path).exists(r =>
-        r.live && r.name.equalsIgnoreCase(from)),
-      s"renameColumn: '$from' was ADD COLUMN'd and its rule is keyed by " +
-        "name — drop the column instead, or keep the name")
-    val (renames, drops) = columnMapping(spark, path, v)
-    // the new entry maps the PHYSICAL name (the inverse image of `from`
-    // under the current mapping) to the new logical name
-    val physical = renames.collectFirst {
-      case (p, l) if l.equalsIgnoreCase(from) => p
-    }.getOrElse(from)
-    val updated = renames - physical + (physical -> to)
-    // a rename back to the physical name clears its entry
-    val compacted = updated.filterNot { case (p, l) => p.equalsIgnoreCase(l) }
-    commitMetadataVersion(spark, path, v, colmapValue(compacted, drops),
-      "renameColumn")
   }
 
   /** Delta-parity `ALTER TABLE … DROP COLUMN` without rewrite — the
@@ -2419,104 +2372,77 @@ object ParquetTable {
     * keep writing the dropped column as typed NULLs so every dir of the
     * version stays union-compatible).
     */
-  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
-    val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-      s"dropColumn: no versioned table at $path"))
-    val logical = read(spark, path).columns.toSeq
-    require(logical.exists(_.equalsIgnoreCase(name)),
-      s"dropColumn: no column '$name' at $path (have ${logical.mkString(",")})")
-    require(logical.length > 1, s"dropColumn: cannot drop the only column")
-    partitionEntries(spark, path, v).foreach { entries =>
-      require(!partitionColumnsOf(entries).exists(_.equalsIgnoreCase(name)),
+  def dropColumn(spark: SparkSession, path: String, name: String): Long =
+    commitLoop(spark, path, "dropColumn") { head =>
+      val logical = readVersion(spark, path, head).columns.toSeq
+      require(logical.exists(_.equalsIgnoreCase(name)),
+        s"dropColumn: no column '$name' at $path (have ${logical.mkString(",")})")
+      require(logical.length > 1, s"dropColumn: cannot drop the only column")
+      require(!head.partitionColumns.exists(_.equalsIgnoreCase(name)),
         s"dropColumn: '$name' is a partition column")
+      require(!Constraints.list(spark, path).exists(_._2.toLowerCase
+          .contains(name.toLowerCase)),
+        s"dropColumn: a CHECK constraint references '$name' — drop it first")
+      // see renameColumn: a dropped identity column's rule would re-fill
+      // the column on the next ingest as if it were never dropped
+      require(!IdentityColumns.list(spark, path).exists(_._1.equalsIgnoreCase(name)),
+        s"dropColumn: '$name' carries an identity rule — drop the rule first")
+      val defRule = ColumnDefaults.list(spark, path)
+        .find(r => r.live && r.name.equalsIgnoreCase(name))
+      val next =
+        if (defRule.isDefined && !versionSchema(spark, path, head).exists(
+            _.fieldNames.exists(_.equalsIgnoreCase(name))))
+          // an ADD COLUMN'd column no write ever materialized: nothing
+          // physical to unmap — closing the rule's version window IS the
+          // drop (the metadata commit marks where history stops serving it)
+          head
+        else {
+          val physical = head.renames.collectFirst {
+            case (p, l) if l.equalsIgnoreCase(name) => p
+          }.getOrElse(name)
+          head.copy(renames = head.renames - physical, drops = head.drops :+ physical)
+        }
+      // an added column, materialized or not, also closes its rule window,
+      // so ingest stops re-filling it and the extension stops re-adding it
+      Commit(next, onWin = v =>
+        if (defRule.isDefined) ColumnDefaults.markDropped(spark, path, name, v))
     }
-    require(!Constraints.list(spark, path).exists(_._2.toLowerCase
-        .contains(name.toLowerCase)),
-      s"dropColumn: a CHECK constraint references '$name' — drop it first")
-    // see renameColumn: a dropped identity column's rule would re-fill
-    // the column on the next ingest as if it were never dropped
-    require(!IdentityColumns.list(spark, path).exists(_._1.equalsIgnoreCase(name)),
-      s"dropColumn: '$name' carries an identity rule — drop the rule first")
-    val (renames, drops) = columnMapping(spark, path, v)
-    ColumnDefaults.list(spark, path)
-      .find(r => r.live && r.name.equalsIgnoreCase(name)) match {
-      case Some(_)
-          if !versionSchema(spark, path, v).exists(
-            _.fieldNames.exists(_.equalsIgnoreCase(name))) =>
-        // an ADD COLUMN'd column no write ever materialized: nothing
-        // physical to unmap — closing the rule's version window IS the
-        // drop (the metadata commit marks where history stops serving it)
-        val next = commitMetadataVersion(spark, path, v,
-          colmapValue(renames, drops), "dropColumn")
-        ColumnDefaults.markDropped(spark, path, name, next)
-        next
-      case defRule =>
-        val physical = renames.collectFirst {
-          case (p, l) if l.equalsIgnoreCase(name) => p
-        }.getOrElse(name)
-        val next = commitMetadataVersion(spark, path, v,
-          colmapValue(renames - physical, drops :+ physical), "dropColumn")
-        // a MATERIALIZED added column also closes its rule window, so
-        // ingest stops re-filling it and the extension stops re-adding it
-        if (defRule.isDefined) ColumnDefaults.markDropped(spark, path, name, next)
-        next
-    }
-  }
 
   /** Delta-parity `ALTER TABLE … ADD COLUMN name type [DEFAULT expr]`
     * WITHOUT rewriting data: an O(1) metadata commit (the current
-    * version's dirs republished as v+1) plus a [[ColumnDefaults]] rule.
-    * Reads of v+1 onward serve the column — EXISTING rows as typed NULLs
-    * (an ADD COLUMN never invents history); the DEFAULT applies to FUTURE
-    * writes that omit the column (ingest materializes it physically, the
-    * SQL CURRENT_DEFAULT model — change it later with
-    * [[ColumnDefaults.setDefault]]). Time travel below v+1 never shows
-    * the column. Refused names: existing logical columns, and physical
-    * names vacated by RENAME/DROP COLUMN while the mapping is
-    * unmaterialized (stats/bloom sidecars still key the old physical
-    * data — the readWhere hazard ADVICE r9 flagged; compact/optimize
-    * first).
+    * version's dirs republished as v+1) plus a [[ColumnDefaults]] rule,
+    * registered once the commit won. Reads of v+1 onward serve the
+    * column — EXISTING rows as typed NULLs (an ADD COLUMN never invents
+    * history); the DEFAULT applies to FUTURE writes that omit the column
+    * (ingest materializes it physically, the SQL CURRENT_DEFAULT model —
+    * change it later with [[ColumnDefaults.setDefault]]). Time travel
+    * below v+1 never shows the column. Refused names: existing logical
+    * columns, and physical names vacated by RENAME/DROP COLUMN while the
+    * mapping is unmaterialized (stats/bloom sidecars still key the old
+    * physical data — the readWhere hazard ADVICE r9 flagged;
+    * compact/optimize first). A crash between the commit and the rule
+    * write leaves a version without the rule.
     */
   def addColumn(
       spark: SparkSession, path: String, name: String, typeSql: String,
-      default: Option[String] = None): Long = {
-    val v = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-      s"addColumn: no versioned table at $path"))
-    val rule = ColumnDefaults.Rule(name, typeSql, default, addedAt = 0L)
-    ColumnDefaults.validateSyntax(spark, rule)
-    val logical = read(spark, path).columns.toSeq
-    require(!logical.exists(_.equalsIgnoreCase(name)),
-      s"addColumn: column '$name' already exists at $path")
-    val (renames, drops) = columnMapping(spark, path, v)
-    require(!drops.exists(_.equalsIgnoreCase(name)) &&
-      !renames.keys.exists(_.equalsIgnoreCase(name)),
-      s"addColumn: '$name' is still a PHYSICAL column name under the " +
-        "active column mapping — data files and their stats/bloom " +
-        "sidecars key it; compact/optimize to materialize the mapping " +
-        "first")
-    require(!ColumnDefaults.list(spark, path).exists(r =>
-        r.live && r.name.equalsIgnoreCase(name)),
-      s"addColumn: column '$name' already added at $path")
-    val next = commitMetadataVersion(spark, path, v,
-      colmapValue(renames, drops), "addColumn")
-    ColumnDefaults.register(spark, path, rule.copy(addedAt = next))
-    next
-  }
-
-  /** Republish `v`'s body + DV header as version v+1 with a new colmap
-    * header — the shared metadata-only commit of rename/drop.
-    */
-  private def commitMetadataVersion(
-      spark: SparkSession, path: String, v: Long, colmap: String,
-      verb: String): Long = {
-    val next = v + 1
-    require(commitVersion(spark, path, next,
-      manifestContent(spark, path, v).trim,
-      dv = dvDirs(spark, path, v),
-      colmap = Some(colmap)),
-      s"$verb: lost the commit race for version $next at $path — retry")
-    next
-  }
+      default: Option[String] = None): Long =
+    commitLoop(spark, path, "addColumn") { head =>
+      val rule = ColumnDefaults.Rule(name, typeSql, default, addedAt = 0L)
+      ColumnDefaults.validateSyntax(spark, rule)
+      val logical = readVersion(spark, path, head).columns.toSeq
+      require(!logical.exists(_.equalsIgnoreCase(name)),
+        s"addColumn: column '$name' already exists at $path")
+      require(!head.drops.exists(_.equalsIgnoreCase(name)) &&
+        !head.renames.keys.exists(_.equalsIgnoreCase(name)),
+        s"addColumn: '$name' is still a PHYSICAL column name under the " +
+          "active column mapping — data files and their stats/bloom " +
+          "sidecars key it; compact/optimize to materialize the mapping " +
+          "first")
+      require(!ColumnDefaults.list(spark, path).exists(r =>
+          r.live && r.name.equalsIgnoreCase(name)),
+        s"addColumn: column '$name' already added at $path")
+      Commit(head, onWin = v => ColumnDefaults.register(spark, path, rule.copy(addedAt = v)))
+    }
 
   /** The union of `dirs`' DV parquet — rows of (file URI, row index)
     * marking deleted rows. Small by construction (16 B/deleted row), so
@@ -2558,35 +2484,60 @@ object ParquetTable {
     dv.fold(withMeta)(d => withMeta.join(d, Seq(DvFileCol, DvIdxCol), "left_anti"))
   }
 
-  /** The version's DV as Some(frame) when the `#dv=` header is present —
-    * the one object read paths thread through [[dvFilterLeg]]. */
-  private def dvOf(spark: SparkSession, path: String, version: Long): Option[DataFrame] = {
-    val dirs = dvDirs(spark, path, version)
-    if (dirs.isEmpty) None else Some(dvFrame(spark, path, dirs))
+  /** `head`'s DV as Some(frame) when it has one — the one object read
+    * paths thread through [[dvFilterLeg]]. */
+  private def dvOf(spark: SparkSession, path: String, head: Snapshot): Option[DataFrame] =
+    Option.when(head.dv.nonEmpty)(dvFrame(spark, path, head.dv))
+
+  /** Auto-tier floor for [[merge]]'s merge-on-read decision: below this
+    * many rows (summed from the version's sidecars — metadata-only), a
+    * full rewrite is cheaper than MOR's extra join/probe jobs; above it,
+    * rewrite cost keeps growing with the table while MOR stays
+    * O(update rows). Dirs without sidecars (pre-stats commits) count as
+    * unknown → rewrite (conservative).
+    */
+  val MorAutoRowsFloor: Long = 10000000L
+
+  /** Auto-tier cap on merge-on-read CHAIN length: once a version lists
+    * this many data dirs, the next auto-tiered merge takes the rewrite
+    * path, which materializes DVs and folds the dirs back to one — so
+    * read fan-out (one relation per dir + the DV anti-join) is bounded
+    * by construction, Delta's auto-compaction discipline without a
+    * separate maintenance job. Forcing `mergeOnRead = Some(true)`
+    * bypasses the cap (run [[optimize]]/[[compact]] yourself).
+    */
+  val MorMaxDataDirs: Int = 64
+
+  /** Sidecar-only row count of `entries` (per dir, the files under the
+    * entries' partition prefixes — the same math DETAIL uses; a whole
+    * snapshot's entries give the table's). None when any dir lacks a
+    * sidecar (pre-stats commits); callers treat unknown as "rewrite".
+    * DV'd rows are NOT subtracted, so on a merge-on-read chain this
+    * over-counts live rows — a fraction denominator built from it gives
+    * a conservative (smaller) fraction.
+    */
+  private def sliceRows(
+      spark: SparkSession, path: String, entries: Seq[(String, String)]): Option[Long] = {
+    val perDir = byDataDir(entries).map { case (dd, parts) =>
+      DataSkipping.readStats(spark, new Path(path, dd).toString).map(sc =>
+        sc.files.filter { case (rel, _) => inSlice(rel, parts) }.values.map(_.rows).sum)
+    }
+    if (perDir.forall(_.isDefined)) Some(perDir.flatten.sum) else None
   }
 
-  /** Merge-on-read DELETE (Delta deletion vectors): rows matching
-    * `condition` leave the table as the next version WITHOUT rewriting a
-    * single data file — the commit writes only a deletion-vector dir
-    * (one (file, row_index) pair per deleted row) and re-publishes the
-    * same manifest body with the DV appended to its `#dv=` header. At
-    * 100 TB this is the difference between an O(deleted rows) commit and
-    * rewriting whole partitions to drop a handful of rows
-    * ([[delete]] — the copy-on-write tier — rewrites; this tier marks).
-    *
-    * Reads pay one anti-join against the DV (broadcast while the DV is
-    * small — the operating regime; a DV that has grown large means it is
-    * time to [[optimize]] or [[compact]], either of which materializes
-    * the deletes and resets the header). DVs accumulate across commits
-    * and survive merges/updates of OTHER partitions (carried forward in
-    * the commit header); entries for files a rewrite replaced go stale
-    * and match nothing.
-    *
-    * `condition` must be deterministic (same contract as [[delete]]).
-    * `cdf = true` captures the deleted rows into this commit's change
-    * manifest for [[tableChanges]]. A no-match delete is a no-op.
-    * Returns the committed (or current) version.
+  /** The auto tier of an unpartitioned merge: merge-on-read when the
+    * version's chain is under `maxDirs` dirs and its sidecars count more
+    * than `rowsFloor` rows.
     */
+  private[sources] def autoMergeOnRead(
+      spark: SparkSession, path: String, version: Long,
+      rowsFloor: Long = MorAutoRowsFloor,
+      maxDirs: Int = MorMaxDataDirs): Boolean = {
+    val head = snapshot(spark, path, version)
+    !head.partitioned && head.entries.size < maxDirs &&
+      sliceRows(spark, path, head.entries).exists(_ > rowsFloor)
+  }
+
   /** Merge-on-read UPSERT (the MERGE twin of [[deleteVectors]]): commit
     * cost is O(update rows), not O(table). Matched target rows are
     * retired by deletion vector (one (file, row_index) pair each — no
@@ -2609,74 +2560,6 @@ object ParquetTable {
     * evolution goes through the rewrite tier. Returns the committed
     * version (-1 = txn re-delivery, nothing committed).
     */
-  /** Auto-tier floor for [[merge]]'s merge-on-read decision: below this
-    * many rows (summed from the version's sidecars — metadata-only), a
-    * full rewrite is cheaper than MOR's extra join/probe jobs; above it,
-    * rewrite cost keeps growing with the table while MOR stays
-    * O(update rows). Dirs without sidecars (pre-stats commits) count as
-    * unknown → rewrite (conservative).
-    */
-  val MorAutoRowsFloor: Long = 10000000L
-
-  /** Auto-tier cap on merge-on-read CHAIN length: once a version lists
-    * this many data dirs, the next auto-tiered merge takes the rewrite
-    * path, which materializes DVs and folds the dirs back to one — so
-    * read fan-out (one relation per dir + the DV anti-join) is bounded
-    * by construction, Delta's auto-compaction discipline without a
-    * separate maintenance job. Forcing `mergeOnRead = Some(true)`
-    * bypasses the cap (run [[optimize]]/[[compact]] yourself).
-    */
-  val MorMaxDataDirs: Int = 64
-
-  /** Sidecar-only row count of the affected partitions' slice (per dir,
-    * files under any affected partition prefix — the same math DETAIL
-    * uses). None when any dir lacks a sidecar (pre-stats commits);
-    * callers treat unknown as "rewrite".
-    */
-  private def affectedSliceRows(
-      spark: SparkSession, path: String,
-      affectedEntries: Seq[(String, String)]): Option[Long] = {
-    val perDir = byDataDir(affectedEntries).map { case (dd, parts) =>
-      DataSkipping.readStats(spark, new Path(path, dd).toString).map(sc =>
-        sc.files.filter { case (rel, _) =>
-          parts.exists(p => rel.startsWith(p + "/"))
-        }.values.map(_.rows).sum)
-    }
-    if (perDir.forall(_.isDefined)) Some(perDir.flatten.sum) else None
-  }
-
-  /** Sidecar-only row count of a whole snapshot (both layouts). None
-    * when any referenced dir lacks a sidecar (pre-stats commits). DV'd
-    * rows are NOT subtracted, so on a merge-on-read chain this over-
-    * counts live rows — callers using it as a fraction denominator get
-    * a conservative (smaller) fraction.
-    */
-  private[sources] def snapshotRowsFromSidecars(
-      spark: SparkSession, path: String, version: Long): Option[Long] =
-    partitionEntries(spark, path, version) match {
-      case Some(entries) => affectedSliceRows(spark, path, entries)
-      case None =>
-        val perDir = unpartitionedDirs(spark, path, version).map(dd =>
-          DataSkipping.readStats(spark, new Path(path, dd).toString)
-            .map(_.files.values.map(_.rows).sum))
-        if (perDir.nonEmpty && perDir.forall(_.isDefined))
-          Some(perDir.flatten.sum)
-        else None
-    }
-
-  private[sources] def autoMergeOnRead(
-      spark: SparkSession, path: String, version: Long,
-      rowsFloor: Long = MorAutoRowsFloor,
-      maxDirs: Int = MorMaxDataDirs): Boolean =
-    partitionEntries(spark, path, version).isEmpty && {
-      val dirs = unpartitionedDirs(spark, path, version)
-      val perDir = dirs.map(dd =>
-        DataSkipping.readStats(spark, new Path(path, dd).toString)
-          .map(_.files.values.map(_.rows).sum))
-      dirs.size < maxDirs &&
-        perDir.forall(_.isDefined) && perDir.flatten.sum > rowsFloor
-    }
-
   def mergeVectors(
       spark: SparkSession, path: String, updates: DataFrame, pk: Seq[String],
       cdf: Boolean = false, txn: Option[(String, Long)] = None): Long = {
@@ -2694,25 +2577,22 @@ object ParquetTable {
       else planMergeStats(spark, path, updates, pk).broadcastKeys
     }
     commitLoop(spark, path, "mergeVectors", txn, missing = Some(" (merge-on-read " +
-        "needs manifest isolation; create the table first)")) { v =>
-      require(partitionEntries(spark, path, v).isEmpty,
+        "needs manifest isolation; create the table first)")) { head =>
+      require(!head.partitioned,
         s"mergeVectors: $path is partitioned — partitioned merges are " +
           "already partition-scoped (mergeVersioned)")
-      val target = readVersion(spark, path, v)
+      val target = readVersion(spark, path, head)
       val cols = target.columns.toSeq
       val upd = dedupByKey(fillColumns(spark, path, updates), pk).select(cols.map(col): _*)
       val updKeys = hintKeys(upd.select(pk.map(col): _*).distinct(), keysHint)
       // the append dir carries the full update set (matched rows'
       // replacements AND inserts) in PHYSICAL names under an active
       // mapping; matched target rows retire by DV
-      val dataDir = stage(spark, path, toPhysical(spark, path, v, upd),
-        physicalNames = true)
+      val dataDir = stage(spark, path, toPhysical(spark, path, head, upd),
+        physicalUnder = Some(head))
       val dvName = stageDvIfAny(spark, path,
-        addressedRows(spark, path, v).join(updKeys, pk, "left_semi"))
-      Commit(manifestContent(spark, path, v).trim + "\n" + dataDir,
-        staged = dataDir +: dvName.toSeq,
-        dv = dvDirs(spark, path, v) ++ dvName,
-        colmap = carriedColmap(spark, path, v),
+        addressedRows(spark, path, head).join(updKeys, pk, "left_semi"))
+      Commit(head.copy(entries = head.entries :+ ("" -> dataDir), dv = head.dv ++ dvName),
         // CDF capture scoped to the affected keys: rows outside the
         // update-key set are byte-identical across the commit (same
         // files), so diffing the pre-snapshot's affected slice against
@@ -2722,7 +2602,7 @@ object ParquetTable {
         onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
           changeRowsBetween(
             target.join(updKeys, pk, "left_semi").select(cols.map(col): _*),
-            stagedRows(spark, path, v, dataDir), pk, "right_outer")))
+            stagedRows(spark, path, head, dataDir), pk, "right_outer")))
     }
   }
 
@@ -2771,15 +2651,6 @@ object ParquetTable {
       require(fs.rename(src, dst), s"convert: rename failed for $src")
       moved += ((src, dst))
     }
-    def commitOrRestore(body: String): Unit =
-      if (!commitVersion(spark, path, 1L, body)) {
-        moved.reverseIterator.foreach { case (orig, dst) => fs.rename(dst, orig) }
-        fs.delete(dd, true)
-        throw new IllegalStateException(
-          s"convert: lost the creation race at $path — a concurrent " +
-          "create/convert committed first; all moved files were restored " +
-          "to their original locations")
-      }
     if (partitionColumns.isEmpty) {
       val files = fs.listStatus(root).filter(st => st.isFile &&
         st.getPath.getName.endsWith(".parquet") &&
@@ -2787,9 +2658,6 @@ object ParquetTable {
       require(files.nonEmpty, s"convert: no parquet files at the root of $path " +
         "(for a partitioned layout pass its partition columns)")
       sweepInto(files.map(_.getPath).toSeq)
-      DataSkipping.writeStats(spark, dd.toString,
-        spark.read.parquet(dd.toString).schema)
-      commitOrRestore(dataDir)
     } else {
       // top-level hive dirs ("col=value") move wholesale, preserving any
       // nested partition structure beneath them
@@ -2798,35 +2666,25 @@ object ParquetTable {
       require(tops.nonEmpty,
         s"convert: no ${partitionColumns.head}=* partition dirs at $path")
       sweepInto(tops.map(_.getPath).toSeq)
-      DataSkipping.writeStats(spark, dd.toString,
-        spark.read.parquet(dd.toString).schema)
-      // leaf partition dirs (depth = |partitionColumns|) become entries
-      val leaves = writtenPartitionDirs(spark, path, dataDir, partitionColumns)
-      require(leaves.nonEmpty, s"convert: no leaf partition dirs of depth " +
-        s"${partitionColumns.length} under $path")
-      commitOrRestore(entriesBody(leaves.map(_ -> dataDir)))
+    }
+    DataSkipping.writeStats(spark, dd.toString,
+      spark.read.parquet(dd.toString).schema)
+    // leaf partition dirs (depth = |partitionColumns|) become entries; an
+    // unpartitioned layout is the one entry ("", dataDir)
+    val leaves = writtenPartitionDirs(spark, path, dataDir, partitionColumns)
+    require(leaves.nonEmpty, s"convert: no leaf partition dirs of depth " +
+      s"${partitionColumns.length} under $path")
+    if (!commitVersion(spark, path, 1L, Snapshot(leaves.map(_ -> dataDir)))) {
+      moved.reverseIterator.foreach { case (orig, dst) => fs.rename(dst, orig) }
+      fs.delete(dd, true)
+      throw new IllegalStateException(
+        s"convert: lost the creation race at $path — a concurrent " +
+        "create/convert committed first; all moved files were restored " +
+        "to their original locations")
     }
     1L
   }
 
-  /** Versioned INSERT INTO (Delta's AddFile append): on an UNPARTITIONED
-    * versioned table the commit is O(appended rows) — the new rows land
-    * in one fresh data dir and the manifest body grows by that line
-    * (existing dirs and deletion vectors untouched, exactly the
-    * [[mergeVectors]] commit shape minus the DV). Duplicates are NOT
-    * deduplicated — INSERT is append, [[merge]] is the upsert verb.
-    *
-    * On a PARTITIONED versioned table the append is ALSO O(appended
-    * rows): the new rows land in one fresh dir and the manifest gains
-    * `(partition → newDir)` entries beside the existing ones — a
-    * partition may span several dirs until the next merge or row-level
-    * rewrite of that partition consolidates it (every slice reader
-    * groups the full entry list by dir). Untouched partitions: zero
-    * entries added, zero I/O.
-    *
-    * `cdf = true` captures the appended rows as inserts. Returns the
-    * committed version (-1 = txn re-delivery, nothing committed).
-    */
   /** Align an INSERT source to the table schema: by NAME when the row
     * columns are exactly the table's (any order, case-insensitive) —
     * the DataFrame-API shape; otherwise by POSITION with casts — SQL
@@ -2849,49 +2707,85 @@ object ParquetTable {
     }
   }
 
+  /** Versioned INSERT INTO (Delta's AddFile append): on an UNPARTITIONED
+    * versioned table the commit is O(appended rows) — the new rows land
+    * in one fresh data dir and the manifest body grows by that line
+    * (existing dirs and deletion vectors untouched, exactly the
+    * [[mergeVectors]] commit shape minus the DV). Duplicates are NOT
+    * deduplicated — INSERT is append, [[merge]] is the upsert verb.
+    *
+    * On a PARTITIONED versioned table the append is ALSO O(appended
+    * rows): the new rows land in one fresh dir and the manifest gains
+    * `(partition → newDir)` entries beside the existing ones — a
+    * partition may span several dirs until the next merge or row-level
+    * rewrite of that partition consolidates it (every slice reader
+    * groups the full entry list by dir). Untouched partitions: zero
+    * entries added, zero I/O.
+    *
+    * `cdf = true` captures the appended rows as inserts. Returns the
+    * committed version (-1 = txn re-delivery, nothing committed).
+    */
   def insertInto(
       spark: SparkSession, path: String, rows0: DataFrame,
       cdf: Boolean = false, txn: Option[(String, Long)] = None): Long = {
     val rows = fillColumns(spark, path, IdentityColumns.fill(spark, path, rows0))
     commitLoop(spark, path, "insertInto", txn, missing = Some(" (plain layouts " +
-        "append through ParquetTable.append)")) { v =>
+        "append through ParquetTable.append)")) { head =>
       // the insert aligns to the LOGICAL schema; the appended dir is
       // written physical under an active mapping, which carries
-      val aligned = alignInsert(rows, readVersion(spark, path, v).schema)
-      val entries = partitionEntries(spark, path, v)
-      val partitionColumns = entries.map(partitionColumnsOf).getOrElse(Nil)
-      val affected = if (entries.isEmpty) Nil else partitionDirsOf(aligned, partitionColumns)
-      val dataDir = stage(spark, path, toPhysical(spark, path, v, aligned),
-        partitionColumns, physicalNames = true)
-      // unpartitioned: the manifest body grows by the new dir's line.
-      // Partitioned: an APPEND-ENTRY commit — (partition → newDir) entries
-      // land BESIDE the old ones (a partition may now span several dirs;
-      // every slice reader groups the full entry list by dir), and the
-      // next merge or row-level rewrite of the partition consolidates it
-      Commit(
-        entries.fold(manifestContent(spark, path, v).trim + "\n" + dataDir)(es =>
-          entriesBody(es ++ affected.map(_ -> dataDir))),
-        staged = Seq(dataDir), dv = dvDirs(spark, path, v),
-        colmap = carriedColmap(spark, path, v),
+      val aligned = alignInsert(rows, readVersion(spark, path, head).schema)
+      val partitionColumns = head.partitionColumns
+      val affected =
+        if (head.partitioned) partitionDirsOf(aligned, partitionColumns) else Seq("")
+      val dataDir = stage(spark, path, toPhysical(spark, path, head, aligned),
+        partitionColumns, physicalUnder = Some(head))
+      // an APPEND-ENTRY commit: the new dir's entries land BESIDE the old
+      // ones — unpartitioned, one more dir in the chain; partitioned,
+      // (partition → newDir) entries (a partition may now span several
+      // dirs; every slice reader groups the full entry list by dir), and
+      // the next merge or row-level rewrite of the partition consolidates it
+      Commit(head.copy(entries = head.entries ++ affected.map(_ -> dataDir)),
         // capture from the COMMITTED dir, never the row plan: the
         // appended dir IS exactly the inserted multiset
         onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
-          stagedRows(spark, path, v, dataDir, affected)
+          stagedRows(spark, path, head, dataDir, affected)
             .select(aligned.columns.map(col).toSeq: _*)
             .withColumn("_change_type", lit("insert"))))
     }
   }
 
+  /** Merge-on-read DELETE (Delta deletion vectors): rows matching
+    * `condition` leave the table as the next version WITHOUT rewriting a
+    * single data file — the commit writes only a deletion-vector dir
+    * (one (file, row_index) pair per deleted row) and re-publishes the
+    * same manifest body with the DV appended to its DV list. At
+    * 100 TB this is the difference between an O(deleted rows) commit and
+    * rewriting whole partitions to drop a handful of rows
+    * ([[delete]] — the copy-on-write tier — rewrites; this tier marks).
+    *
+    * Reads pay one anti-join against the DV (broadcast while the DV is
+    * small — the operating regime; a DV that has grown large means it is
+    * time to [[optimize]] or [[compact]], either of which materializes
+    * the deletes and resets the header). DVs accumulate across commits
+    * and survive merges/updates of OTHER partitions (carried forward in
+    * the commit header); entries for files a rewrite replaced go stale
+    * and match nothing.
+    *
+    * `condition` must be deterministic (same contract as [[delete]]).
+    * `cdf = true` captures the deleted rows into this commit's change
+    * manifest for [[tableChanges]]. A no-match delete is a no-op.
+    * Returns the committed (or current) version.
+    */
   def deleteVectors(
       spark: SparkSession, path: String, condition: Column,
       cdf: Boolean = false): Long = {
     TableProperties.requireNotAppendOnly(spark, path, "deleteVectors")
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try commitLoop(spark, path, "deleteVectors", missing = Some(" (deletion " +
-        "vectors need manifest isolation)")) { v =>
+        "vectors need manifest isolation)")) { head =>
       // previous DVs already excluded — re-deleting an already-deleted
       // row is a no-op and the new DV holds only live matches
-      val live = addressedRows(spark, path, v)
+      val live = addressedRows(spark, path, head)
       requireDeterministic(live.drop(DvFileCol, DvIdxCol), condition, None, "deleteVectors")
       // matched is DELETE-SIZED (O(matched rows) is this verb's whole
       // contract) — persist it so the no-op probe, the DV write and the
@@ -2899,11 +2793,10 @@ object ParquetTable {
       // at 100 TB each re-evaluation was a full table scan)
       val matched = live.filter(condition)
       persisted += matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (matched.isEmpty) NoOp(v)
+      if (matched.isEmpty) NoOp(head.version)
       else {
         val dvName = stageDv(spark, path, matched)
-        Commit(manifestContent(spark, path, v), staged = Seq(dvName),
-          dv = dvDirs(spark, path, v) :+ dvName, colmap = carriedColmap(spark, path, v),
+        Commit(head.copy(dv = head.dv :+ dvName),
           onWin = nv => if (cdf) writeChangeManifest(spark, path, nv,
             matched.drop(DvFileCol, DvIdxCol).withColumn("_change_type", lit("delete"))))
       }
@@ -2973,6 +2866,20 @@ object ParquetTable {
     sizedForWrite(changeRows).write.mode(SaveMode.Overwrite)
       .parquet(changeManifestPath(path, version).toString)
 
+  /** Whether EVERY commit in [fromVersion, toVersion] captured a change
+    * manifest (merged/updated/deleted with `cdf = true`) — i.e. whether
+    * [[tableChanges]] over that window is guaranteed change-sized (reads
+    * only the captured manifests, never a table snapshot). Metadata-only:
+    * one existence probe per commit.
+    */
+  def hasChangeManifests(
+      spark: SparkSession, path: String,
+      fromVersion: Long, toVersion: Long): Boolean =
+    (fromVersion to toVersion).forall { v =>
+      val cf = changeManifestPath(path, v)
+      hadoopFs(spark, cf).exists(cf)
+    }
+
   /** Per-commit change data feed — the Delta `table_changes` tier that the
     * net snapshot-diff [[changes]] deliberately is not. Emits each commit
     * in `[fromVersion, toVersion]` separately with `_commit_version` and
@@ -2995,20 +2902,6 @@ object ParquetTable {
     * the committed state (they don't survive a copy), so rather than emit
     * an unstable column the timestamp is left to the caller.
     */
-  /** Whether EVERY commit in [fromVersion, toVersion] captured a change
-    * manifest (merged/updated/deleted with `cdf = true`) — i.e. whether
-    * [[tableChanges]] over that window is guaranteed change-sized (reads
-    * only the captured manifests, never a table snapshot). Metadata-only:
-    * one existence probe per commit.
-    */
-  def hasChangeManifests(
-      spark: SparkSession, path: String,
-      fromVersion: Long, toVersion: Long): Boolean =
-    (fromVersion to toVersion).forall { v =>
-      val cf = changeManifestPath(path, v)
-      hadoopFs(spark, cf).exists(cf)
-    }
-
   def tableChanges(
       spark: SparkSession,
       path: String,
@@ -3026,10 +2919,11 @@ object ParquetTable {
       val base =
         if (hadoopFs(spark, cf).exists(cf)) spark.read.parquet(cf.toString)
         else if (v == 1L && have.contains(1L))
-          readVersion(spark, path, 1L).withColumn("_change_type", lit("insert"))
+          readVersion(spark, path, snapshot(spark, path, 1L))
+            .withColumn("_change_type", lit("insert"))
         else if (have.contains(v) && have.contains(v - 1)) {
-          val before = readVersion(spark, path, v - 1)
-          val after = readVersion(spark, path, v)
+          val before = readVersion(spark, path, snapshot(spark, path, v - 1))
+          val after = readVersion(spark, path, snapshot(spark, path, v))
           requireUniquePk(
             Seq(s"v${v - 1}" -> before, s"v$v" -> after), pk,
             s"tableChanges commit $v at $path")
@@ -3056,14 +2950,13 @@ object ParquetTable {
     import spark.implicits._
     val fs = hadoopFs(spark, manifestDir(path))
     versions(spark, path).sorted(Ordering[Long].reverse).map { v =>
-      val entries = partitionEntries(spark, path, v)
+      val s = snapshot(spark, path, v)
       val mtime = fs.getFileStatus(new Path(manifestDir(path), f"v$v%020d"))
         .getModificationTime
       val cf = changeManifestPath(path, v)
-      (v, entries.isDefined, entries.map(_.size).getOrElse(1),
-        entries.map(_.map(_._2).distinct.size).getOrElse(1),
+      (v, s.partitioned, s.entries.size, s.dataDirs.size,
         hadoopFs(spark, cf).exists(cf),
-        commitTimestamp(spark, path, v).map(new java.sql.Timestamp(_)),
+        s.ts.map(new java.sql.Timestamp(_)),
         new java.sql.Timestamp(mtime))
     }.toDF("version", "partitioned", "n_entries", "n_data_dirs",
       "has_change_manifest", "commit_ts", "manifest_mtime")
@@ -3073,8 +2966,8 @@ object ParquetTable {
     * row for the CURRENT snapshot — version, commit instant, partition
     * shape, file/row counts from the stats sidecars (no data I/O; counts
     * are None when some dir predates sidecars), history depth, the
-    * CHECK-constraint count, and the active column mapping (the raw
-    * `#colmap=` value; empty when unmapped). Plain parquet dirs report
+    * CHECK-constraint count, and the active column mapping (its
+    * manifest form, see [[Snapshot]]; empty when unmapped). Plain parquet dirs report
     * format "parquet" with only the location filled.
     */
   def detail(spark: SparkSession, path: String): DataFrame = {
@@ -3085,18 +2978,13 @@ object ParquetTable {
           Option.empty[java.sql.Timestamp], false, Seq.empty[String],
           0, 0, Option.empty[Long], Option.empty[Long], 0L, 0, 0, ""))
       case Some(v) =>
-        val entries = partitionEntries(spark, path, v)
-        val partCols = entries.map(partitionColumnsOf).getOrElse(Nil)
-        // (dataDir, referenced partition prefixes — empty = whole dir)
-        val dirRefs: Seq[(String, Seq[String])] = entries match {
-          case None => unpartitionedDirs(spark, path, v).map((_, Nil))
-          case Some(es) => byDataDir(es)
-        }
+        val head = snapshot(spark, path, v)
+        val partCols = head.partitionColumns
+        // (dataDir, referenced partition prefixes — "" = whole dir)
+        val dirRefs = byDataDir(head.entries)
         val perDir = dirRefs.map { case (dd, parts) =>
           DataSkipping.readStats(spark, new Path(path, dd).toString).map { sc =>
-            val files = sc.files.filter { case (rel, _) =>
-              parts.isEmpty || parts.exists(p => rel.startsWith(p + "/"))
-            }
+            val files = sc.files.filter { case (rel, _) => inSlice(rel, parts) }
             (files.size.toLong, files.values.map(_.rows).sum)
           }
         }
@@ -3109,13 +2997,13 @@ object ParquetTable {
         // prefix is still referenced by this version's manifest — an
         // equi-join on the extracted prefix, never a data scan. Stale
         // entries (from rewritten partitions) are excluded exactly.
-        val nDel = dvDirs(spark, path, v) match {
+        val nDel = head.dv match {
           case Nil => 0L
           case dirs =>
             import spark.implicits._
             val prefixes = dirRefs.flatMap { case (dd, parts) =>
               val dirName = new Path(path, dd).getName
-              if (parts.isEmpty) Seq(dirName) else parts.map(p => s"$dirName/$p")
+              parts.map(p => if (p.isEmpty) dirName else s"$dirName/$p")
             }.distinct.toDF("__graft_prefix")
             val depth = if (partCols.isEmpty) 1 else 1 + partCols.size
             val keyPrefix = regexp_extract(col(DvFileCol),
@@ -3125,14 +3013,12 @@ object ParquetTable {
               .join(prefixes, Seq("__graft_prefix"), "left_semi").count()
         }
         val nr = nrRaw.map(_ - nDel)
-        val (cmR, cmD) = columnMapping(spark, path, v)
-        Seq((path, "graft", Some(v),
-          commitTimestamp(spark, path, v).map(new java.sql.Timestamp(_)),
-          entries.isDefined, partCols,
-          entries.map(_.size).getOrElse(0), dirRefs.size, nf, nr, nDel,
+        Seq((path, "graft", Some(v), head.ts.map(new java.sql.Timestamp(_)),
+          head.partitioned, partCols,
+          if (head.partitioned) head.entries.size else 0, dirRefs.size, nf, nr, nDel,
           versions(spark, path).size,
           Constraints.list(spark, path).size,
-          colmapValue(cmR, cmD)))
+          head.colmapValue))
     }
     row.toDF("location", "format", "version", "commit_ts", "partitioned",
       "partition_columns", "n_partitions", "n_data_dirs", "num_files",
@@ -3153,15 +3039,11 @@ object ParquetTable {
     require(versions(spark, path).contains(version),
       s"restore: version $version not present at $path " +
         s"(have: ${versions(spark, path).mkString(", ")})")
-    val content = manifestContent(spark, path, version)
     // the restored version's deletion vectors AND column mapping are part
     // of its snapshot — restoring without them would resurrect
     // vector-deleted rows / revert logical names
-    val dv = dvDirs(spark, path, version)
-    val cm = carriedColmap(spark, path, version)
-    commitLoop(spark, path, "restore", missing = None) { _ =>
-      Commit(content, dv = dv, colmap = cm, onMove = Replay)
-    }
+    val restored = snapshot(spark, path, version)
+    commitLoop(spark, path, "restore", missing = None)(_ => Commit(restored, onMove = Replay))
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE t SHALLOW CLONE s`): publish
@@ -3197,25 +3079,13 @@ object ParquetTable {
       s"shallowClone: $targetPath already holds data (clone targets must " +
         "not exist — a manifest over a plain layout would shadow it and " +
         "vacuum would then delete it)")
-    val body = manifestContent(spark, sourcePath, v).trim
-    val abs =
-      if (body.contains('\t'))
-        body.linesIterator.filter(_.nonEmpty).map { line =>
-          val Array(p, d) = line.split('\t')
-          s"$p\t${new Path(sourcePath, d)}"
-        }.mkString("\n")
-      else
-        // unpartitioned: absolutize every data dir the snapshot lists
-        // (several after merge-on-read commits)
-        body.linesIterator.map(_.trim).filter(_.nonEmpty)
-          .map(d => new Path(sourcePath, d).toString).mkString("\n")
-    // the clone reads through the source snapshot's deletion vectors too
-    // (absolutized like the data dirs; DV rows already hold absolute URIs)
-    // — and under its column mapping (logical names travel with the view)
-    val dvAbs = dvDirs(spark, sourcePath, v).map(d => new Path(sourcePath, d).toString)
-    val (cmR, cmD) = columnMapping(spark, sourcePath, v)
-    require(commitVersion(spark, targetPath, 1L, abs, dv = dvAbs,
-      colmap = Some(colmapValue(cmR, cmD)).filter(_.nonEmpty)),
+    // every data dir the snapshot lists (several after merge-on-read
+    // commits) and its deletion vectors, absolutized (DV rows already hold
+    // absolute URIs); the column mapping travels with the view
+    val source = snapshot(spark, sourcePath, v)
+    def abs(dir: String) = new Path(sourcePath, dir).toString
+    require(commitVersion(spark, targetPath, 1L, source.copy(
+      entries = source.entries.map { case (p, dd) => (p, abs(dd)) }, dv = source.dv.map(abs))),
       s"shallowClone: lost the creation race at $targetPath")
     // clones carry the source's DDL verbatim (Delta clones table
     // properties): constraints, generation rules, properties and identity
@@ -3236,14 +3106,11 @@ object ParquetTable {
     * untouched — run `vacuum` afterwards to reclaim it.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val v0 = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"compact: no versioned table at $path"))
     // unpartitioned: fold a merge-on-read chain (N appended dirs + DVs)
     // back to one full-image dir; a no-chain table republishes its single
     // dir — still useful to materialize DVs
-    val partitionColumns = partitionEntries(spark, path, v0).map(partitionColumnsOf).getOrElse(Nil)
-    publishMaintenance(spark, path, "compact", partitionColumns,
-      v => readVersion(spark, path, v))
+    publishMaintenance(spark, path, "compact", partitionColumns(spark, path),
+      readVersion(spark, path, _))
     ()
   }
 
@@ -3257,25 +3124,22 @@ object ParquetTable {
   private def publishMaintenance(
       spark: SparkSession, path: String, what: String,
       partitionColumns: Seq[String],
-      image: Long => DataFrame,
+      image: Snapshot => DataFrame,
       preserveLayout: Boolean = false,
       filesPerPartition: Int = 1,
       writeOptions: Map[String, String] = Map.empty): Long =
-    commitLoop(spark, path, what) { v =>
+    commitLoop(spark, path, what) { head =>
       // maintenance images arrange their OWN layout (compact's fold,
       // ZORDER's range slabs) — the adaptive sizing must not refuse it
-      val dataDir = stage(spark, path, image(v), partitionColumns, filesPerPartition,
+      val dataDir = stage(spark, path, image(head), partitionColumns, filesPerPartition,
         writeOptions, keepLayout = preserveLayout || partitionColumns.isEmpty)
       // metadata-only entry derivation (lists the dirs the write produced)
       // — partitionDirsOf would re-execute the whole rewrite plan. A full
       // rewrite of the logical head image: DVs and an active column
-      // mapping are materialized (no dv, no colmap) — the full-image
+      // mapping are materialized (a fresh snapshot) — the full-image
       // commit rules
-      Commit(
-        if (partitionColumns.isEmpty) dataDir
-        else entriesBody(writtenPartitionDirs(spark, path, dataDir, partitionColumns)
-          .map(_ -> dataDir)),
-        staged = Seq(dataDir))
+      Commit(Snapshot(writtenPartitionDirs(spark, path, dataDir, partitionColumns)
+        .map(_ -> dataDir)))
     }
 
   /** Delta-parity `GENERATE symlink_format_manifest`: export the CURRENT
@@ -3308,10 +3172,16 @@ object ParquetTable {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalStateException(
         s"generateSymlinkManifest: no versioned table at $path"))
+    val head = snapshot(spark, path, v)
     // a symlink consumer reads raw files — it would see PHYSICAL column
     // names, silently diverging from this table's logical view
-    requireNoColmap(spark, path, "generateSymlinkManifest")
-    if (dvDirs(spark, path, v).nonEmpty) {
+    if (head.mapped) throw new IllegalStateException(
+      s"generateSymlinkManifest: table at $path carries an unmaterialized column mapping " +
+        s"(renames: ${head.renames.map { case (p, l) => s"$p->$l" }.mkString(",")}; " +
+        s"drops: ${head.drops.mkString(",")}). Run compact/optimize to " +
+        "materialize the logical schema into the data files first — " +
+        "reads and time travel work throughout.")
+    if (head.dv.nonEmpty) {
       throw new IllegalStateException(
         s"generateSymlinkManifest: version $v of $path carries deletion " +
           "vectors; a symlink manifest lists whole files and would " +
@@ -3331,39 +3201,14 @@ object ParquetTable {
       finally out.close()
       (mf.toString, files.size.toLong)
     }
-    partitionEntries(spark, path, v) match {
-      case None =>
-        val files = unpartitionedDirs(spark, path, v)
-          .flatMap(dd => dataFiles(new Path(path, dd)))
-        Seq(write("manifest", files))
-      case Some(entries) =>
-        entries.groupBy(_._1).toSeq.sortBy(_._1).map { case (partDir, es) =>
-          val files = es.map(_._2).distinct.flatMap(dd =>
-            dataFiles(new Path(new Path(path, dd), partDir)))
-          write(s"$partDir/manifest", files)
-        }
+    // one manifest per partition dir; an unpartitioned table's one
+    // "partition" is the root, its dirs in chain order
+    head.entries.groupBy(_._1).toSeq.sortBy(_._1).map { case (partDir, es) =>
+      val files = es.map(_._2).distinct.flatMap(dd => dataFiles(entryDir(path, partDir -> dd)))
+      write(if (partDir.isEmpty) "manifest" else s"$partDir/manifest", files)
     }
   }
 
-  /** Partition-scoped compaction — Delta's `OPTIMIZE … WHERE` tier:
-    * rewrite ONLY the partitions matching `predicate`, consolidating
-    * their append-entry dir chains and materializing their deletion
-    * vectors into one fresh dir; every other partition keeps its entries
-    * untouched. This is the verb [[compact]] is missing at scale: after
-    * a month of MOR merges into a hot partition, compacting it costs
-    * O(hot partition), not O(table) — a 3-year table never rewrites cold
-    * history to fold one day's chain.
-    *
-    * `predicate` must reference partition columns only (checked on the
-    * unresolved attribute names): partition membership is decided per
-    * PARTITION, and a data-column predicate would tear rows out of
-    * partitions it matches partially. Carried deletion vectors stay in
-    * the commit — their (file, row-index) keys no longer match the
-    * compacted partitions' fresh files (their deletes are already
-    * materialized) but keep deletes on untouched partitions in force,
-    * the same carry rule as the merge rewrite path. Returns the
-    * committed version (or the current one when nothing matches).
-    */
   /** Incremental small-dir compaction: fold ONLY the sub-`minBytes`
     * footprints into one fresh dir and republish the manifest with the
     * large ones untouched — the 100 TB shape for absorbing a stream of
@@ -3390,60 +3235,63 @@ object ParquetTable {
   def compactSmall(
       spark: SparkSession, path: String,
       minBytes: Long = 32L * 1024 * 1024): Long =
-    commitLoop(spark, path, "compactSmall") { v =>
-      require(dvDirs(spark, path, v).isEmpty,
-        s"compactSmall: version $v carries deletion vectors — run compact() " +
+    commitLoop(spark, path, "compactSmall") { head =>
+      require(head.dv.isEmpty,
+        s"compactSmall: version ${head.version} carries deletion vectors — run compact() " +
           "to materialize them first (subset folding could orphan a DV)")
       val fs = hadoopFs(spark, new Path(path))
-      def small(dir: Path) = fs.getContentSummary(dir).getLength < minBytes
-      // physical in, physical out: the fold unions raw dirs and rewrites
-      // them byte-compatible, so an active column mapping simply carries
-      partitionEntries(spark, path, v) match {
-        case None =>
-          val (folded, kept) = unpartitionedDirs(spark, path, v)
-            .partition(d => small(new Path(path, d)))
-          if (folded.size < 2) NoOp(v)
-          else {
-            val tableSchema = versionSchema(spark, path, v)
-            val dataDir = stage(spark, path, folded.map { d =>
-              val df = spark.read.parquet(new Path(path, d).toString)
-              tableSchema.map(alignTo(df, _)).getOrElse(df)
-            }.reduce(_.unionByName(_)), physicalNames = true)
-            Commit((kept :+ dataDir).mkString("\n"), staged = Seq(dataDir),
-              colmap = carriedColmap(spark, path, v))
-          }
-        case Some(entries) =>
-          val partitionColumns = partitionColumnsOf(entries)
-          // per-(partition, dir) slice footprint — a dir may hold a big
-          // slice of one partition and a tiny slice of another
-          val foldable = entries.filter { case (p, dd) => small(new Path(new Path(path, dd), p)) }
-            .groupBy(_._1).filter(_._2.size >= 2)
-          if (foldable.isEmpty) NoOp(v)
-          else {
-            val folded = foldable.values.flatten.toSeq
-            val dataDir = stage(spark, path, readSlice(spark, path, v, folded, logical = false),
-              partitionColumns, physicalNames = true)
-            val survivors = writtenPartitionDirs(spark, path, dataDir, partitionColumns).toSet
-            require(survivors == foldable.keySet,
-              s"compactSmall: folded rows landed outside their partitions at " +
-                s"$path (${(survivors diff foldable.keySet).mkString(", ")})")
-            Commit(entriesBody(entries.filterNot(folded.contains) ++
-              foldable.keys.map(_ -> dataDir)), staged = Seq(dataDir),
-              colmap = carriedColmap(spark, path, v))
-          }
+      // per-(partition, dir) slice footprint — a dir may hold a big slice
+      // of one partition and a tiny slice of another; an unpartitioned
+      // table's dirs are slices of its one partition ""
+      val foldable = head.entries
+        .filter(e => fs.getContentSummary(entryDir(path, e)).getLength < minBytes)
+        .groupBy(_._1).filter(_._2.size >= 2)
+      if (foldable.isEmpty) NoOp(head.version)
+      else {
+        // physical in, physical out: the fold unions raw dirs and rewrites
+        // them byte-compatible, so an active column mapping simply carries
+        val folded = foldable.values.flatten.toSeq
+        val partitionColumns = head.partitionColumns
+        val dataDir = stage(spark, path, readSlice(spark, path, head, folded, logical = false),
+          partitionColumns, physicalUnder = Some(head))
+        val survivors = writtenPartitionDirs(spark, path, dataDir, partitionColumns).toSet
+        require(survivors == foldable.keySet,
+          s"compactSmall: folded rows landed outside their partitions at " +
+            s"$path (${(survivors diff foldable.keySet).mkString(", ")})")
+        Commit(head.copy(entries = head.entries.filterNot(folded.contains) ++
+          foldable.keys.map(_ -> dataDir)))
       }
     }
+
+  /** Partition-scoped compaction — Delta's `OPTIMIZE … WHERE` tier:
+    * rewrite ONLY the partitions matching `predicate`, consolidating
+    * their append-entry dir chains and materializing their deletion
+    * vectors into one fresh dir; every other partition keeps its entries
+    * untouched. This is the verb [[compact]] is missing at scale: after
+    * a month of MOR merges into a hot partition, compacting it costs
+    * O(hot partition), not O(table) — a 3-year table never rewrites cold
+    * history to fold one day's chain.
+    *
+    * `predicate` must reference partition columns only (checked on the
+    * unresolved attribute names): partition membership is decided per
+    * PARTITION, and a data-column predicate would tear rows out of
+    * partitions it matches partially. Carried deletion vectors stay in
+    * the commit — their (file, row-index) keys no longer match the
+    * compacted partitions' fresh files (their deletes are already
+    * materialized) but keep deletes on untouched partitions in force,
+    * the same carry rule as the merge rewrite path. Returns the
+    * committed version (or the current one when nothing matches).
+    */
 
   def compactWhere(
       spark: SparkSession, path: String, predicate: Column,
       filesPerPartition: Int = 1): Long =
-    commitLoop(spark, path, "compactWhere") { v =>
-      val entries = partitionEntries(spark, path, v).getOrElse(
-        throw new IllegalStateException(
-          s"compactWhere: $path holds an UNPARTITIONED versioned table — " +
-            "use compact() (one dir chain, nothing to scope)"))
-      val partitionColumns = partitionColumnsOf(entries)
-      val filtered = readVersion(spark, path, v).filter(predicate)
+    commitLoop(spark, path, "compactWhere") { head =>
+      if (!head.partitioned) throw new IllegalStateException(
+        s"compactWhere: $path holds an UNPARTITIONED versioned table — " +
+          "use compact() (one dir chain, nothing to scope)")
+      val partitionColumns = head.partitionColumns
+      val filtered = readVersion(spark, path, head).filter(predicate)
       // reference check on the ANALYZED filter (Spark 4 Columns are lazy
       // ColumnNode trees — unresolvable without a plan)
       val refs = filtered.queryExecution.analyzed.collect {
@@ -3457,18 +3305,27 @@ object ParquetTable {
           s"${nonPartition.mkString(", ")} — partition columns are " +
           s"${partitionColumns.mkString(", ")}")
       val affected = partitionDirsOf(filtered, partitionColumns).toSet
-      if (affected.isEmpty) NoOp(v)
+      if (affected.isEmpty) NoOp(head.version)
       else {
         // partition-scoped fold of raw physical dirs: the mapping carries
         // (predicates reference partition columns, which are never renamed)
         val dataDir = stage(spark, path,
-          readSlice(spark, path, v, entries.filter(e => affected(e._1)), logical = false),
-          partitionColumns, filesPerPartition, physicalNames = true)
-        Commit(entriesBody(entries.filterNot(e => affected(e._1)) ++
-          affected.toSeq.map(_ -> dataDir)), staged = Seq(dataDir),
-          dv = dvDirs(spark, path, v), colmap = carriedColmap(spark, path, v))
+          readSlice(spark, path, head, head.entries.filter(e => affected(e._1)), logical = false),
+          partitionColumns, filesPerPartition, physicalUnder = Some(head))
+        Commit(head.copy(entries = head.entries.filterNot(e => affected(e._1)) ++
+          affected.toSeq.map(_ -> dataDir)))
       }
     }
+
+  /** Time-based retention (Delta's `VACUUM … RETAIN n HOURS` semantics
+    * mapped onto version retention): keep every version whose commit
+    * time is at or after `now − horizonMillis` — always at
+    * least the current version — then run the same reference-aware
+    * sweep as [[vacuum]]. Pre-header manifests (no commit time) count as old.
+    */
+  def vacuumOlderThan(spark: SparkSession, path: String, horizonMillis: Long): Unit =
+    if (versions(spark, path).nonEmpty)
+      vacuum(spark, path, keepCountForHorizon(spark, path, horizonMillis))
 
   /** Retire history: keep the newest `keepLast` versions, delete older
     * manifests and every data dir (or partition subdir) no kept manifest
@@ -3480,16 +3337,6 @@ object ParquetTable {
     * partitions at data dirs written MANY versions ago, so "older than
     * keepLast" alone can't justify deletion — only unreferenced dirs go.
     */
-  /** Time-based retention (Delta's `VACUUM … RETAIN n HOURS` semantics
-    * mapped onto version retention): keep every version whose committed
-    * `#ts=` header is at or after `now − horizonMillis` — always at
-    * least the current version — then run the same reference-aware
-    * sweep as [[vacuum]]. Pre-header manifests (no `#ts=`) count as old.
-    */
-  def vacuumOlderThan(spark: SparkSession, path: String, horizonMillis: Long): Unit =
-    if (versions(spark, path).nonEmpty)
-      vacuum(spark, path, keepCountForHorizon(spark, path, horizonMillis))
-
   def vacuum(spark: SparkSession, path: String, keepLast: Int = 2): Unit = {
     val fs = hadoopFs(spark, new Path(path))
     vacuumPlan(spark, path, keepLast).foreach { case (kind, p) =>
@@ -3511,20 +3358,15 @@ object ParquetTable {
     val vs = versions(spark, path)
     if (vs.isEmpty) return Nil
     val fs = hadoopFs(spark, new Path(path))
-    val kept = vs.takeRight(keepLast)
+    val kept = vs.takeRight(keepLast).map(snapshot(spark, path, _))
     val out = Seq.newBuilder[(String, String)]
-    // (dataDir, Some(partDir)) for partitioned refs, (dataDir, None) full
-    val refs: Seq[(String, Option[String])] = kept.flatMap { v =>
-      partitionEntries(spark, path, v) match {
-        case Some(es) => es.map { case (p, dd) => (dd, Some(p)) }
-        case None => unpartitionedDirs(spark, path, v).map((_, None))
-      }
-    }
-    val referencedDirs = refs.map(_._1).toSet
-    // deletion-vector dirs still referenced by a kept version's #dv=
-    // header (resolved names only — absolute entries point into a clone's
-    // SOURCE, which this table does not own and must not touch)
-    val keptDvNames = kept.flatMap(v => dvDirs(spark, path, v))
+    // (partDir, dataDir) entries; partDir "" references the whole dir
+    val refs = kept.flatMap(_.entries)
+    val referencedDirs = refs.map(_._2).toSet
+    // deletion-vector dirs still referenced by a kept version (resolved
+    // names only — absolute entries point into a clone's SOURCE, which
+    // this table does not own and must not touch)
+    val keptDvNames = kept.flatMap(_.dv)
       .map(d => new Path(path, d))
       .filter(_.getParent == new Path(path, DvDirName))
       .map(_.getName).toSet
@@ -3543,8 +3385,8 @@ object ParquetTable {
         else {
           // partially-referenced partitioned dir: drop stale partition
           // subdirs no kept manifest points at (full refs keep everything)
-          val keptParts = refs.collect { case (`name`, Some(p)) => p }.toSet
-          val fullyRef = refs.exists { case (d, po) => d == name && po.isEmpty }
+          val keptParts = refs.collect { case (p, `name`) if p.nonEmpty => p }.toSet
+          val fullyRef = refs.contains("" -> name)
           if (!fullyRef && keptParts.nonEmpty)
             fs.listStatus(st.getPath).foreach { sub =>
               val subName = sub.getPath.getName
@@ -3589,7 +3431,7 @@ object ParquetTable {
     *     conditional-DELETE rewrite tier once had; fsck is its field
     *     detector and regression tripwire)
     *   - `missing_data_dir` — an unpartitioned version's data dir is gone
-    *   - `missing_dv` — a `#dv=` header names a deletion-vector dir that
+    *   - `missing_dv` — a version names a deletion-vector dir that
     *     is gone: vector-deleted rows would resurrect on read
     *   - `orphan_dir` / `orphan_dv` (version -1) — bytes NO live version
     *     references: a crashed writer or lost CAS racer left them; wasted
@@ -3610,19 +3452,14 @@ object ParquetTable {
     val referenced = scala.collection.mutable.Set[String]()
     val referencedDv = scala.collection.mutable.Set[String]()
     versions(spark, path).foreach { v =>
-      partitionEntries(spark, path, v) match {
-        case Some(es) => es.foreach { case (p, dd) =>
-          referenced += dd
-          if (!fs.exists(new Path(new Path(path, dd), p)))
-            findings += (("dangling_entry", v, s"$p -> $dd"))
-        }
-        case None => unpartitionedDirs(spark, path, v).foreach { dd =>
-          referenced += dd
-          if (!fs.exists(new Path(path, dd)))
-            findings += (("missing_data_dir", v, dd))
-        }
+      val s = snapshot(spark, path, v)
+      s.entries.foreach { case entry @ (p, dd) =>
+        referenced += dd
+        if (!fs.exists(entryDir(path, entry)))
+          findings += (if (p.isEmpty) ("missing_data_dir", v, dd)
+            else ("dangling_entry", v, s"$p -> $dd"))
       }
-      dvDirs(spark, path, v).foreach { d =>
+      s.dv.foreach { d =>
         val dp = new Path(path, d)
         if (dp.getParent == new Path(path, DvDirName)) referencedDv += dp.getName
         if (!fs.exists(dp)) findings += (("missing_dv", v, d))
@@ -3692,9 +3529,7 @@ object ParquetTable {
     // wholesale by the vacuum(keepLast = 1) below, so nothing that
     // SURVIVES this purge can reference foreign bytes.
     currentVersion(spark, path).foreach { v =>
-      val dirs = partitionEntries(spark, path, v)
-        .map(_.map(_._2)).getOrElse(unpartitionedDirs(spark, path, v))
-      val foreign = dirs.filter(d => new Path(d).isAbsolute)
+      val foreign = snapshot(spark, path, v).dataDirs.filter(d => new Path(d).isAbsolute)
       require(foreign.isEmpty,
         s"purge: the current version of $path references data OUTSIDE " +
           s"the table dir (shallow clone): ${foreign.head} — purging here " +

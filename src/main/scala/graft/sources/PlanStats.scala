@@ -317,10 +317,10 @@ object PlanStats {
     * columns are logical names, the relation's attributes physical) and
     * restricted to `schemaTypes`, the relation's actual attributes.
     */
-  def forSnapshot(
+  private[sources] def forSnapshot(
       spark: SparkSession,
       tablePath: String,
-      version: Long,
+      snapshot: ParquetTable.Snapshot,
       sizeInBytes: Long,
       rowCount: Option[Long],
       nonNull: String => Option[Long],
@@ -332,16 +332,15 @@ object PlanStats {
     val rows = rowCount.getOrElse(return None)
     val (ndv, stamped, lifecycle) =
       statsFor(spark, ParquetTable.statsDir(tablePath)).getOrElse(return None)
-    val histograms = histogramsFor(stamped, lifecycle, version)
+    val histograms = histogramsFor(stamped, lifecycle, snapshot.version)
     // logical sketch name → this version's physical attribute name
-    val (renames, drops) = ParquetTable.columnMapping(spark, tablePath, version)
-    val toPhysical = renames.map(_.swap)
+    val toPhysical = snapshot.renames.map(_.swap)
     // the histogram tier (the reference's second query-layer stats
     // conf, glue_etl.py:408): exact grid-granular equi-height bins give
     // FilterEstimation real skew instead of 1/NDV uniformity
     val colStats = ndv.flatMap { case (logical, est) =>
       val physical = toPhysical.getOrElse(logical, logical)
-      if (!schemaTypes.contains(physical) || drops.contains(physical)) None
+      if (!schemaTypes.contains(physical) || snapshot.drops.contains(physical)) None
       else Some(physical -> columnStat(schemaTypes(physical), est, rows,
         nonNull(physical).map(nn => BigInt(math.max(0L, rows - nn))),
         minMax(physical),

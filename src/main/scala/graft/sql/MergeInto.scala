@@ -152,10 +152,12 @@ object GraftSql {
 
   /** Parse and execute one `MERGE INTO graft.`path`` statement on an
     * existing session (no extension registration needed). The source may
-    * itself read `graft.`path`` tables.
+    * itself read `graft.`path`` tables. Parsed by Spark's own grammar,
+    * not the session's: a session with [[GraftSessionExtensions]] would
+    * hand back the statement already dispatched.
     */
   def merge(spark: SparkSession, sqlText: String): Unit =
-    spark.sessionState.sqlParser.parsePlan(sqlText) match {
+    BaseParser.parsePlan(sqlText) match {
       case m: MergeIntoTable =>
         rewrite(m).getOrElse(throw new IllegalArgumentException(
           "GraftSql.merge: not a graft-target MERGE (target must be " +
@@ -185,6 +187,9 @@ object GraftSql {
             case _ => throw e
           }
       }))
+
+  /** Spark's grammar, without any session extension. */
+  private lazy val BaseParser = new org.apache.spark.sql.execution.SparkSqlParser()
 
   /** Spark's grammar without its reserved-property check. */
   private object PropertyParser extends AbstractSqlParser {
@@ -478,8 +483,13 @@ object GraftSql {
     Option(list).toSeq.flatMap(_.split(',')).map(_.trim.stripPrefix("`").stripSuffix("`"))
       .filter(_.nonEmpty)
 
+  /** Comments before a statement's first token (Spark's parser skips
+    * them; the anchored pre-match regexes must too).
+    */
+  private val LeadingComments = """(?s)\A(?:\s+|--[^\n]*|/\*.*?\*/)*+""".r
+
   private[sql] def parseMaintenance(sqlText: String): Option[LogicalPlan] =
-    Some(sqlText).collect {
+    Some(LeadingComments.replaceFirstIn(sqlText, "")).collect {
       case RestoreStmt(path, v) =>
         versioned(s"RESTORE TABLE graft.`$path`", "restored_to_version")(
           ParquetTable.restore(_, path, v.toLong))
@@ -601,7 +611,7 @@ object GraftSql {
 
   /** A timestamp literal as epoch millis: digits are epoch millis;
     * `yyyy-MM-dd[ HH:mm:ss[.f]]` reads in the JVM zone, the clock the
-    * manifests' `#ts=` headers are stamped from.
+    * manifests' commit times are stamped from.
     */
   private def epochMillis(str: String, what: String): Long = {
     def fail() = throw new IllegalArgumentException(
@@ -614,8 +624,8 @@ object GraftSql {
   /** Substitute every `graft.`path`` relation in `plan` with the
     * versioned-table read it names: bare references read the CURRENT
     * manifest version, `VERSION AS OF n` time-travels via `readAt`, and
-    * `TIMESTAMP AS OF '<ts>'` resolves through the manifests' committed
-    * `#ts=` headers via `readAtTimestamp` (accepted literal shapes:
+    * `TIMESTAMP AS OF '<ts>'` resolves through the manifests' commit
+    * times via `readAtTimestamp` (accepted literal shapes:
     * `'yyyy-MM-dd HH:mm:ss[.f]'`, `'yyyy-MM-dd'`, a TIMESTAMP literal, or
     * an integer epoch-millis). Non-graft relations pass through for the
     * catalog to resolve. Needs an active session (the substituted subtree

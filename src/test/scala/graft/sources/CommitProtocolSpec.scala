@@ -19,7 +19,10 @@ import graft.SparkSpec
   *       it, and nothing it staged is left on disk;
   *   (c) the first CAS is refused because a racer published the same
   *       txn marker — the verb reports the re-delivery (-1) and leaves
-  *       nothing behind.
+  *       nothing behind;
+  *   (d) the first CAS publishes and then throws (a committer timing out
+  *       after its write landed) — the error reaches the caller and the
+  *       published head stays readable: none of its dirs is deleted.
   */
 class CommitProtocolSpec extends SparkSpec {
 
@@ -99,7 +102,13 @@ class CommitProtocolSpec extends SparkSpec {
       (p, _) => Some(ParquetTable.compactSmall(spark, p, minBytes = 1L << 30))),
     Verb("restore", "restore",
       p => { unpartitioned(p); ParquetTable.deleteVectors(spark, p, col("id") === 1); () },
-      (p, _) => Some(ParquetTable.restore(spark, p, 1L))))
+      (p, _) => Some(ParquetTable.restore(spark, p, 1L))),
+    Verb("renameColumn", "renameColumn", partitioned,
+      (p, _) => Some(ParquetTable.renameColumn(spark, p, "v", "w"))),
+    Verb("dropColumn", "dropColumn", partitioned,
+      (p, _) => Some(ParquetTable.dropColumn(spark, p, "v"))),
+    Verb("addColumn", "addColumn", unpartitioned,
+      (p, _) => Some(ParquetTable.addColumn(spark, p, "n", "INT", Some("7")))))
 
   // ---- fixtures and probes ------------------------------------------------
 
@@ -211,6 +220,31 @@ class CommitProtocolSpec extends SparkSpec {
       assert(ParquetTable.lastTxnVersion(spark, path, "app") === Some(7L))
       assert(image(path) === imageBefore)
       assert(stagedDirs(path) === dirsBefore)
+    }
+  }
+
+  // ---- (d) a CAS that publishes, then throws -------------------------------
+
+  verbs.foreach { verb =>
+    test(s"(d) ${verb.label}: a CAS that throws after publishing keeps the head readable") {
+      val path = fixture(verb, "d")
+      val versionsBefore = versionCount(path)
+      val e = intercept[java.io.IOException] {
+        withCommitter { (n, fs, target, content) =>
+          if (n > 1) None
+          else {
+            assert(DefaultCommitter.commit(fs, target, content))
+            throw new java.io.IOException("commit timed out after publishing")
+          }
+        } {
+          verb.run(path, None)
+        }
+      }
+      assert(e.getMessage === "commit timed out after publishing")
+      assert(versionCount(path) === versionsBefore + 1)
+      val missing = headDirs(path).filterNot(d => new java.io.File(path, d).isDirectory)
+      assert(missing.isEmpty, s"dirs of the published head deleted: $missing")
+      image(path)
     }
   }
 }

@@ -413,10 +413,16 @@ class ParquetTableSpec extends SparkSpec {
     ParquetTable.create(df(Row(1, "a", "d1")), path) // v1, no change manifest
     ParquetTable.merge(spark, path, df(Row(1, "A", "d1")),
       Seq("id"), cdf = true) // v2, captured
+    ParquetTable.merge(spark, path, df(Row(2, "b", "d1")),
+      Seq("id"), mergeOnRead = Some(true)) // v3, a two-dir merge-on-read chain
     val h = ParquetTable.history(spark, path)
-      .select("version", "partitioned", "n_data_dirs", "has_change_manifest")
-      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2), r.getBoolean(3)))
-    assert(h.toSeq === Seq((2L, false, 1, true), (1L, false, 1, false)))
+      .select("version", "partitioned", "n_entries", "n_data_dirs", "has_change_manifest")
+      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2), r.getInt(3),
+        r.getBoolean(4)))
+    assert(h.toSeq === Seq((3L, false, 2, 2, false), (2L, false, 1, 1, true),
+      (1L, false, 1, 1, false)))
+    // DESCRIBE DETAIL counts the same chain
+    assert(ParquetTable.detail(spark, path).select("n_data_dirs").head().getInt(0) === 2)
     // partitioned table: entry counts reflect the manifest
     val p2 = tmpDir("history-part") + "/t"
     ParquetTable.createVersioned(df(Row(1, "a", "d1"), Row(2, "b", "d2")),

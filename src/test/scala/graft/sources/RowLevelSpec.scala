@@ -109,6 +109,11 @@ class RowLevelSpec extends SparkSpec {
       ParquetTable.delete(spark, path, lit(true))
     }
     assert(all.getMessage.contains("empty every partition"))
+    // the refused rewrite left no data dir outside the head's entries
+    val head = ParquetTable.currentVersion(spark, path).get
+    val referenced = ParquetTable.partitionEntries(spark, path, head).get.map(_._2).toSet
+    val dataDirs = new java.io.File(path).list().filter(_.startsWith("_d")).toSet
+    assert(dataDirs === referenced)
     // unknown SET column names the schema
     val unk = intercept[IllegalArgumentException] {
       ParquetTable.update(spark, path, col("id") === 1L, Map("nope" -> lit(1)))

@@ -227,6 +227,10 @@ class ConditionalMergeSpec extends SparkSpec {
     // and the refusal left v1 intact and readable
     assert(ParquetTable.read(spark, path).as[(Long, Double, String)]
       .collect().toSet === Set((1L, 10.0, "d1")))
+    // with no data dir outside v1's entries
+    val referenced = ParquetTable.partitionEntries(spark, path, 1L).get.map(_._2).toSet
+    val dataDirs = new java.io.File(path).list().filter(_.startsWith("_d")).toSet
+    assert(dataDirs === referenced)
   }
 
   test("UPDATE SET on a partition column is refused (ADVICE r7)") {

@@ -58,6 +58,11 @@ class MergeIntoSpec extends SparkSpec {
     ext.sql(mergeStmt(path, "ext_upd")) // plain SQL, no GraftSql call
     assert(ParquetTable.read(ext, path).as[(Long, Double)].collect().toSet ===
       Set((1L, 9.0), (2L, 2.0)))
+    // GraftSql.merge takes the statement the session's parser already dispatched
+    Seq((2L, 5.0)).toDF("id", "v").createOrReplaceTempView("ext_upd2")
+    GraftSql.merge(ext, mergeStmt(path, "ext_upd2"))
+    assert(ParquetTable.read(ext, path).as[(Long, Double)].collect().toSet ===
+      Set((1L, 9.0), (2L, 5.0)))
   }
 
   test("unsupported clause shapes fail fast, naming the clause") {

@@ -43,6 +43,14 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(rows.map(_.getString(0)).toSeq == Seq("id", "name", "x"))
   }
 
+  test("leading comments before a graft-only statement") {
+    val p = table()
+    val vacuumed = GraftSql.sql(spark, s"/* nightly */ VACUUM graft.`$p`").collect()
+    assert(vacuumed.map(_.getLong(0)).toSeq == Seq(1L))
+    val history = GraftSql.sql(spark, s"-- audit\nDESCRIBE HISTORY graft.`$p`").collect()
+    assert(history.map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
   test("reserved Spark property keys stay free-form graft properties") {
     val p = table()
     GraftSql.sql(spark,
