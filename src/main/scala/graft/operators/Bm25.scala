@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.tokens
+import graft.sources.IndexStore
 
 /** BM25 document ranking (Robertson & Walker 1994; the Okapi weighting) —
   * the retrieval scorer data-curation pipelines use for query-targeted
@@ -107,10 +108,12 @@ object Bm25 {
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
-  /** Persist the inverted index: postings (doc_id, term-fingerprint, tf),
-    * document lengths, per-term document frequencies, and the two corpus
-    * scalars. The stored `term` column is the xxhash64 fingerprint (LONG),
-    * never the string — see the class doc's fingerprint-diet note.
+  /** Persist the inverted index as one [[graft.sources.IndexStore]]
+    * version: postings (doc_id, term-fingerprint, tf), document lengths
+    * and per-term document frequencies, with the two corpus scalars
+    * (`n`, `avgdl`) pinned in the version header. The stored `term` column
+    * is the xxhash64 fingerprint (LONG), never the string — see the class
+    * doc's fingerprint-diet note.
     * The corpus tokenization + counting — the dominant cost of [[topK]] —
     * is paid ONCE per corpus version; every later search is only the
     * query-side joins ([[topKIndexed]]). The same amortization shape as
@@ -121,81 +124,47 @@ object Bm25 {
   def buildIndex(
       docs: DataFrame, docIdCol: String, textCol: String, dir: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val toks = fpTokens(docs, "doc_id", col(docIdCol), tokens(col(textCol)))
     val tf = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    // cache: postings feed BOTH the write and the df aggregation below —
-    // without it the tokenize+count pass runs twice
+    // cache: postings feed the write, the df aggregation AND the doc
+    // lengths — without it the tokenize+count pass runs three times
     tf.cache()
+    // Σ tf per doc == raw token count, riding the CACHED tf frame
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    dl.cache()
     try {
+      // N must be the same statistic [[topK]] uses (docs.count(), i.e.
+      // ALL docs including null/empty-text ones), not dl.count() (docs
+      // with >=1 token) — otherwise the two tiers compute different idf
+      // on corpora containing tokenless rows
+      val n = docs.count().toDouble
+      val avgdl = dl.agg(avg(col("dl"))).head.getDouble(0)
       // index artifacts are byte-sized at write (guide §6): tiny
       // corpora write ONE file per dir instead of one per reduce
       // partition — every later probe pays the listing + footer count
-      graft.sources.ParquetTable.sizedForWrite(tf)
-        .write.mode("overwrite").parquet(s"$dir/postings")
-      graft.sources.ParquetTable.sizedForWrite(
-          tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .write.mode("overwrite").parquet(s"$dir/termstats")
-      // Σ tf per doc == raw token count, riding the CACHED tf frame
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      dl.cache()
-      try {
-        graft.sources.ParquetTable.sizedForWrite(dl)
-          .write.mode("overwrite").parquet(s"$dir/doclens")
-        // N must be the same statistic [[topK]] uses (docs.count(), i.e.
-        // ALL docs including null/empty-text ones), not dl.count() (docs
-        // with >=1 token) — otherwise the two tiers compute different idf
-        // on corpora containing tokenless rows
-        val n = docs.count().toDouble
-        val avgdl = dl.agg(avg(col("dl"))).head.getDouble(0)
-        // n_postings is the torn-index marker: meta commits LAST, so any
-        // earlier crash leaves it disagreeing with the postings dir and
-        // [[requireConsistent]] refuses to serve (ADVICE r9 low)
-        Seq((n, avgdl, tf.count()))
-          .toDF("n", "avgdl", "n_postings")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-      } finally { dl.unpersist(); () }
-    } finally { tf.unpersist(); () }
+      IndexStore.save(spark, dir, "buildIndex", scalars(n, avgdl))(
+        IndexStore.parquet("postings", tf),
+        IndexStore.parquet("termstats", tf.groupBy(col("term")).agg(count(lit(1)).as("df"))),
+        IndexStore.parquet("doclens", dl))
+      ()
+    } finally { dl.unpersist(); tf.unpersist(); () }
   }
 
-  /** Fail fast when the persisted index is torn: [[appendToIndex]] is a
-    * multi-step update (postings append → doclens append → termstats swap
-    * → meta swap, meta LAST), so a crash mid-sequence leaves the postings
-    * row count disagreeing with the `n_postings` marker the last complete
-    * update committed — without the check, every later [[topKIndexed]]
-    * would silently score against inconsistent tf/df statistics.
-    * Pre-marker indexes (no `n_postings` column) skip the check. The
-    * postings count is a column-less parquet scan (footer-driven, no
-    * column I/O) — cheap relative to the query joins it guards.
-    */
-  private def requireConsistent(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    // meta through the cached 1-row reader and the postings count from
-    // parquet footers — the guard used to cost a meta job plus a
-    // scheduled column-less scan per probe call; footers carry the same
-    // exact row counts with zero jobs
-    val meta = SmallMeta.headRow(spark, s"$dir/meta")
-    if (meta.schema.fieldNames.contains("n_postings")) {
-      val expected = meta.getLong(meta.fieldIndex("n_postings"))
-      val actual = graft.sources.DataSkipping.footerRowCount(
-        spark, s"$dir/postings")
-      require(actual == expected,
-        s"BM25 index at $dir is torn: postings hold $actual rows but the " +
-          s"meta marker committed $expected — an appendToIndex crashed " +
-          "mid-update. Rebuild the index (buildIndex) before serving.")
-    }
-  }
+  private def scalars(n: Double, avgdl: Double): Map[String, String] =
+    Map("n" -> java.lang.Double.toString(n), "avgdl" -> java.lang.Double.toString(avgdl))
 
   /** Append NEW documents to a [[buildIndex]]-persisted index without a
     * rebuild: tokenize + count ONLY the new docs, append their postings
-    * and doclens files, merge the per-term df deltas, and refresh the
-    * two scalars — O(new docs) work against an O(corpus) rebuild, the
-    * same amortization as the streaming ANN index maintenance. The
-    * updated index is equivalent to `buildIndex(old ∪ new)` — integer
-    * count statistics merge exactly, and the scalars recompute over the
-    * full doclens/docs (spec-pinned: incremental == rebuild, identical
-    * topKIndexed results).
+    * and doclens beside the indexed ones, merge the per-term df deltas,
+    * and refresh the two scalars — O(new docs) work against an O(corpus)
+    * rebuild, the same amortization as the streaming ANN index
+    * maintenance. The updated index is equivalent to
+    * `buildIndex(old ∪ new)` — integer count statistics merge exactly,
+    * and the scalars recompute over the full doclens/docs (spec-pinned:
+    * incremental == rebuild, identical topKIndexed results). The whole
+    * update is one index version: a crash part-way leaves the previous
+    * version served.
     *
     * New doc ids must be DISJOINT from the indexed corpus (probed
     * against the postings' doc set, fail-fast): BM25 count statistics
@@ -205,62 +174,32 @@ object Bm25 {
   def appendToIndex(
       newDocs: DataFrame, docIdCol: String, textCol: String, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    import spark.implicits._
-    // refuse to compound a torn index — appending onto inconsistent
-    // postings/termstats would bake the skew in permanently
-    requireConsistent(spark, dir)
-    val dup = spark.read.parquet(s"$dir/postings")
-      .select(col("doc_id")).distinct()
-      .join(newDocs.select(col(docIdCol).as("doc_id")), Seq("doc_id"), "left_semi")
-      .limit(1).collect()
-    require(dup.isEmpty, s"appendToIndex: doc_id ${dup.headOption.map(_.get(0))
-      .getOrElse("")} is already indexed at $dir — BM25 statistics cannot " +
-      "distinguish an update from a duplicate; delete-then-append or rebuild")
-    val oldMeta = SmallMeta.headRow(spark, s"$dir/meta")
-    val oldN = oldMeta.getDouble(oldMeta.fieldIndex("n"))
-    val oldPostings =
-      if (oldMeta.schema.fieldNames.contains("n_postings"))
-        oldMeta.getLong(oldMeta.fieldIndex("n_postings"))
-      else graft.sources.DataSkipping.footerRowCount(
-        spark, s"$dir/postings") // pre-marker index
-    val nNew = newDocs.count().toDouble
     val toks = fpTokens(newDocs, "doc_id", col(docIdCol), tokens(col(textCol)))
     val tf = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     tf.cache()
     try {
-      val nTf = tf.count() // materializes the cache; the delta's marker share
-      graft.sources.ParquetTable.sizedForWrite(tf)
-        .write.mode("append").parquet(s"$dir/postings")
-      graft.sources.ParquetTable.sizedForWrite(
-          tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-        .write.mode("append").parquet(s"$dir/doclens")
-      // termstats is read AND replaced — stage to a sibling dir, then
-      // swap (overwriting a path the plan is lazily reading corrupts it)
-      val mergedStats = spark.read.parquet(s"$dir/termstats")
-        .unionByName(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      replaceDir(spark, s"$dir/termstats", mergedStats)
-      val avgdl = spark.read.parquet(s"$dir/doclens")
-        .agg(avg(col("dl"))).head.getDouble(0)
-      // meta LAST: its n_postings marker is what declares the whole
-      // multi-step update complete (see [[requireConsistent]])
-      replaceDir(spark, s"$dir/meta",
-        Seq((oldN + nNew, avgdl, oldPostings + nTf))
-          .toDF("n", "avgdl", "n_postings").coalesce(1))
+      val nNew = newDocs.count().toDouble
+      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      IndexStore.update(spark, dir, "appendToIndex") { head =>
+        val dup = head.read(spark, "postings")
+          .select(col("doc_id")).distinct()
+          .join(newDocs.select(col(docIdCol).as("doc_id")), Seq("doc_id"), "left_semi")
+          .limit(1).collect()
+        require(dup.isEmpty, s"appendToIndex: doc_id ${dup.headOption.map(_.get(0))
+          .getOrElse("")} is already indexed at $dir — BM25 statistics cannot " +
+          "distinguish an update from a duplicate; delete-then-append or rebuild")
+        val avgdl = head.read(spark, "doclens").unionByName(dl)
+          .agg(avg(col("dl"))).head.getDouble(0)
+        IndexStore.Update(
+          append = Seq(IndexStore.parquet("postings", tf), IndexStore.parquet("doclens", dl)),
+          replace = Seq(IndexStore.parquet("termstats", head.read(spark, "termstats")
+            .unionByName(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
+            .groupBy(col("term")).agg(sum(col("df")).as("df")))),
+          props = scalars(head("n").toDouble + nNew, avgdl))
+      }
+      ()
     } finally { tf.unpersist(); () }
-  }
-
-  private def replaceDir(
-      spark: org.apache.spark.sql.SparkSession, path: String, df: DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_staged")
-    val fs = p.getFileSystem(conf)
-    graft.sources.ParquetTable.sizedForWrite(df)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(p, true)
-    require(fs.rename(tmp, p), s"replaceDir: rename $tmp -> $p failed")
   }
 
   /** BM25 top-k over a [[buildIndex]]-persisted index — identical results
@@ -275,12 +214,12 @@ object Bm25 {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    requireConsistent(spark, dir)
+    val head = IndexStore.head(spark, dir)
     score(
-      spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/doclens"),
-      spark.read.parquet(s"$dir/termstats"),
-      spark.read.parquet(s"$dir/meta").select(col("n"), col("avgdl")),
+      head.read(spark, "postings"),
+      head.read(spark, "doclens"),
+      head.read(spark, "termstats"),
+      spark.range(1).select(lit(head("n").toDouble).as("n"), lit(head("avgdl").toDouble).as("avgdl")),
       queries, queryIdCol, queryTextCol, k, k1, b)
   }
 }

@@ -83,7 +83,7 @@ object Dsir {
 
   /** Persist the trained importance model: the per-term log-ratio table
     * (f, lr) — vocab-bounded, fp-keyed, the expensive two-corpus counting
-    * pass paid ONCE — plus the smoothing k it was built with. The
+    * pass paid ONCE — as one [[graft.sources.IndexStore]] version. The
     * deployment shape (DSIR §3: estimate the ratio on a sample, score
     * the full raw corpus): train on raw-sample + target once, then
     * [[scoreWithModel]] every incoming shard against the parquet table.
@@ -104,15 +104,15 @@ object Dsir {
     val totals = rawCounts.agg(
       sum(col("cr")).as("nr"), count(lit(1)).as("v"))
       .crossJoin(tokensOf(target, idCol, textCol).agg(count(lit(1)).as("nt")))
-    rawCounts.join(tgtCounts, Seq("f"), "left")
-      .crossJoin(totals)
-      .select(col("f"),
-        (log((coalesce(col("ct"), lit(0L)) + lit(k)) /
-             (col("nt") + lit(k) * col("v"))) -
-         log((col("cr") + lit(k)) /
-             (col("nr") + lit(k) * col("v")))).as("lr"))
-      .transform(graft.sources.ParquetTable.sizedForWrite)
-      .write.mode("overwrite").parquet(s"$dir/termratio")
+    graft.sources.IndexStore.save(raw.sparkSession, dir, "trainModel", Map.empty)(
+      graft.sources.IndexStore.parquet("termratio", rawCounts.join(tgtCounts, Seq("f"), "left")
+        .crossJoin(totals)
+        .select(col("f"),
+          (log((coalesce(col("ct"), lit(0L)) + lit(k)) /
+               (col("nt") + lit(k) * col("v"))) -
+           log((col("cr") + lit(k)) /
+               (col("nr") + lit(k) * col("v")))).as("lr"))))
+    ()
   }
 
   /** Score documents against a [[trainModel]]-persisted ratio table —
@@ -125,7 +125,7 @@ object Dsir {
       docs: DataFrame, idCol: String, textCol: String): DataFrame =
     tokensOf(docs, idCol, textCol)
       .select(col(idCol), xxhash64(col("w")).as("f"))
-      .join(spark.read.parquet(s"$dir/termratio"), Seq("f"))
+      .join(graft.sources.IndexStore.head(spark, dir).read(spark, "termratio"), Seq("f"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum(col("lr")).as("weight"))
 

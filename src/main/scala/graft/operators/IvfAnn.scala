@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.IndexStore
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
   * clustered-index scale path, complementing `Ann.lshTopK`:
@@ -77,34 +78,46 @@ object IvfAnn {
     Index(centroids, assigned)
   }
 
-  /** Persist the index: centroids as a tiny parquet (centroid_id +
-    * vector), the assigned corpus PARTITIONED BY centroid_id — so a
-    * search that probes nProbe cells prunes to exactly those partition
-    * directories at scan time. This is what makes the build amortizable:
-    * build once per corpus version, serve searches from the layout.
+  /** Persist the index as one [[IndexStore]] version: centroids as a
+    * tiny parquet (centroid_id + vector), the assigned corpus PARTITIONED
+    * BY centroid_id — so a search that probes nProbe cells prunes to
+    * exactly those partition directories at scan time. This is what
+    * makes the build amortizable: build once per corpus version, serve
+    * searches from the layout.
     */
   def save(spark: org.apache.spark.sql.SparkSession, index: Index, dir: String): Unit = {
-    import spark.implicits._
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    // cluster rows onto their cells first: one file per cell per shuffle
-    // partition instead of every task writing into every cell directory
-    index.assigned.repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(s"$dir/assigned")
+    IndexStore.save(spark, dir, "IvfAnn.save", Map.empty)(
+      centroidArtifact(spark, "centroids", index.centroids),
+      // cluster rows onto their cells first: one file per cell per shuffle
+      // partition instead of every task writing into every cell directory
+      "assigned" -> (p => index.assigned.repartition(col("centroid_id"))
+        .write.partitionBy("centroid_id").parquet(p)))
+    ()
   }
+
+  /** `(centroid_id, centroid)` rows as one single-file artifact. */
+  private[graft] def centroidArtifact(
+      spark: org.apache.spark.sql.SparkSession, name: String,
+      centroids: Array[Array[Float]]): IndexStore.Artifact = {
+    import spark.implicits._
+    name -> (p => centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("centroid_id", "centroid").coalesce(1).write.parquet(p))
+  }
+
+  /** Centroids of a saved index, in centroid_id order. */
+  private[graft] def readCentroids(
+      spark: org.apache.spark.sql.SparkSession, head: IndexStore.Head,
+      name: String): Array[Array[Float]] =
+    head.read(spark, name).orderBy(col("centroid_id")).collect()
+      .map(_.getSeq[Float](1).toArray)
 
   /** Reload a saved index. The assigned side comes back partition-pruned:
     * `topK`'s centroid_id equi-join lets Spark skip every unprobed cell
     * directory.
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("centroid_id")).collect()
-      .map(_.getSeq[Float](1).toArray)
-    Index(centroids, spark.read.parquet(s"$dir/assigned"))
+    val head = IndexStore.head(spark, dir)
+    Index(readCentroids(spark, head, "centroids"), head.read(spark, "assigned"))
   }
 
   /** Top-k by cosine for each query, probing the `nProbe` nearest cells. */

@@ -120,8 +120,9 @@ object LmScore {
         count(col("logp")).as("n_bigrams"),
         avg(col("logp")).as("avg_logp"))
 
-  /** Persist the trained bigram LM: pair counts (f1, f2, c2), context
-    * counts (f1, c1) and the 1-row vocab scalar. The corpus counting pass
+  /** Persist the trained bigram LM as one [[graft.sources.IndexStore]]
+    * version: pair counts (f1, f2, c2) and context counts (f1, c1), with
+    * the vocab scalar `v` pinned in the header. The corpus counting pass
     * — the dominant cost of [[scoreBigram]] — is paid ONCE per corpus
     * version; every later batch scores against the parquet counts
     * ([[scoreWithModel]]), the CCNet deployment shape (train the LM on
@@ -136,15 +137,15 @@ object LmScore {
       .groupBy(col("f1"), col("f2")).agg(count(lit(1)).as("c2"))
     pairCounts.cache()
     try {
-      graft.sources.ParquetTable.sizedForWrite(pairCounts)
-        .write.mode("overwrite").parquet(s"$dir/paircounts")
-      graft.sources.ParquetTable.sizedForWrite(
-          pairCounts.groupBy(col("f1")).agg(sum(col("c2")).as("c1")))
-        .write.mode("overwrite").parquet(s"$dir/ctxcounts")
-      tokenizedOf(corpus, idCol, textCol)
+      val v = tokenizedOf(corpus, idCol, textCol)
         .select(explode(col("__t")).as("w")).filter(length(col("w")) > 0)
-        .agg(count_distinct(xxhash64(col("w"))).as("v"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+        .agg(count_distinct(xxhash64(col("w")))).head().getLong(0)
+      graft.sources.IndexStore.save(corpus.sparkSession, dir, "trainBigram",
+          Map("v" -> v.toString))(
+        graft.sources.IndexStore.parquet("paircounts", pairCounts),
+        graft.sources.IndexStore.parquet("ctxcounts",
+          pairCounts.groupBy(col("f1")).agg(sum(col("c2")).as("c1"))))
+      ()
     } finally { pairCounts.unpersist(); () }
   }
 
@@ -161,11 +162,12 @@ object LmScore {
       textCol: String,
       k: Double = 0.5): DataFrame = {
     require(k > 0, s"scoreWithModel: smoothing k must be positive, got $k")
+    val head = graft.sources.IndexStore.head(spark, dir)
     scoreAgainst(
       bigramFps(docs, idCol, textCol),
-      spark.read.parquet(s"$dir/paircounts"),
-      spark.read.parquet(s"$dir/ctxcounts"),
-      spark.read.parquet(s"$dir/meta"),
+      head.read(spark, "paircounts"),
+      head.read(spark, "ctxcounts"),
+      spark.range(1).select(lit(head("v").toLong).as("v")),
       idCol, k)
   }
 

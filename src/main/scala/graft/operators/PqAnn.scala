@@ -213,7 +213,8 @@ object PqAnn {
     IvfPqIndex(ivf.centroids, cb, encoded)
   }
 
-  /** Persist an IVF-PQ index: cells and codebook as tiny parquets
+  /** Persist an IVF-PQ index as one [[graft.sources.IndexStore]]
+    * version: cells and codebook as tiny parquets
     * (model-sized — nCells·dim and m·k·dsub floats), the ENCODED corpus
     * partitioned by `centroid_id` — so [[searchIvfPq]] over the loaded
     * index prunes its cell equi-join to exactly the probed cells'
@@ -225,21 +226,18 @@ object PqAnn {
   def saveIvfPq(
       spark: org.apache.spark.sql.SparkSession, index: IvfPqIndex, dir: String): Unit = {
     import spark.implicits._
-    index.cells.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cells")
     val cbRows = for {
       s <- 0 until index.cb.m
       j <- 0 until index.cb.k
     } yield (s, j, index.cb.sub(s)(j).toSeq)
-    cbRows.toDF("sub", "cent", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-    // cluster rows onto their cells first: one file per cell instead of
-    // every task writing into every cell directory
-    index.encoded.repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(s"$dir/encoded")
+    graft.sources.IndexStore.save(spark, dir, "saveIvfPq", Map.empty)(
+      IvfAnn.centroidArtifact(spark, "cells", index.cells),
+      "codebook" -> (p => cbRows.toDF("sub", "cent", "vec").coalesce(1).write.parquet(p)),
+      // cluster rows onto their cells first: one file per cell instead of
+      // every task writing into every cell directory
+      "encoded" -> (p => index.encoded.repartition(col("centroid_id"))
+        .write.partitionBy("centroid_id").parquet(p)))
+    ()
   }
 
   /** Reload a [[saveIvfPq]]-persisted index. The encoded side comes back
@@ -249,10 +247,9 @@ object PqAnn {
     */
   def loadIvfPq(
       spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqIndex = {
-    val cells = spark.read.parquet(s"$dir/cells")
-      .orderBy(col("centroid_id")).collect()
-      .map(_.getSeq[Float](1).toArray)
-    val cbRows = spark.read.parquet(s"$dir/codebook")
+    val head = graft.sources.IndexStore.head(spark, dir)
+    val cells = IvfAnn.readCentroids(spark, head, "cells")
+    val cbRows = head.read(spark, "codebook")
       .orderBy(col("sub"), col("cent")).collect()
     val m = cbRows.map(_.getInt(0)).max + 1
     val k = cbRows.map(_.getInt(1)).max + 1
@@ -260,7 +257,7 @@ object PqAnn {
     cbRows.foreach { r =>
       sub(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
     }
-    IvfPqIndex(cells, Codebook(sub), spark.read.parquet(s"$dir/encoded"))
+    IvfPqIndex(cells, Codebook(sub), head.read(spark, "encoded"))
   }
 
   /** ADC top-k probing the `nProbe` nearest cells: queries explode to

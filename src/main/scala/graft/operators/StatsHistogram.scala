@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexStore
+
 /** Equi-height column histograms for the ANALYZE layer — the second
   * half of the reference's query-layer statistics opt-in
   * (glue_etl.py:407-408 sets BOTH `spark.sql.cbo.enabled` AND
@@ -29,8 +31,10 @@ import org.apache.spark.sql.functions._
   *      becomes its own near-singleton bin, which is exactly the
   *      skew-capture a histogram exists for.
   *
-  * Persisted as `dir/histogram` parquet rows
-  * `(column, bin, lo, hi, rows, ndv)` beside the NDV sketch; the
+  * Persisted as the `histogram` artifact of the sketch dir's
+  * [[graft.sources.IndexStore]] — parquet rows
+  * `(column, bin, lo, hi, rows, ndv)` beside the NDV registers, with the
+  * `built_version` stamp in the version header; the
   * read path attaches them to the plan's `CatalogColumnStat`s (see
   * [[graft.sources.PlanStats]]). Full-scan tier only, like Spark's
   * own histogram ANALYZE: bins are not mergeable under appends — the
@@ -45,8 +49,9 @@ object StatsHistogram {
 
   final case class Bin(lo: Double, hi: Double, rows: Long, ndv: Long)
 
-  /** Build and persist histograms for `cols` of `df` at `dir/histogram`.
-    * Returns per-column bins (also the spec surface).
+  /** Build and persist histograms for `cols` of `df` as the `histogram`
+    * artifact of `dir` (replacing any earlier one; the dir need not hold
+    * a sketch yet). Returns per-column bins (also the spec surface).
     *
     * `version` stamps the bins with the TABLE VERSION they describe
     * (−1 = free-standing data with no versioned lifecycle). The read
@@ -124,11 +129,13 @@ object StatsHistogram {
       }
     }.toMap
     import spark.implicits._
-    perCol.toSeq.flatMap { case (c, bins) =>
-      bins.zipWithIndex.map { case (b, i) =>
-        (c, i, b.lo, b.hi, b.rows, b.ndv, version) }
-    }.toDF("column", "bin", "lo", "hi", "rows", "ndv", "built_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/histogram")
+    val rows = perCol.toSeq.flatMap { case (c, bins) =>
+      bins.zipWithIndex.map { case (b, i) => (c, i, b.lo, b.hi, b.rows, b.ndv) }
+    }.toDF("column", "bin", "lo", "hi", "rows", "ndv")
+    IndexStore.update(spark, dir, "statsHistogram.build", create = true) { _ =>
+      IndexStore.Update(replace = Seq("histogram" -> (p => rows.coalesce(1).write.parquet(p))),
+        props = Map("built_version" -> version.toString))
+    }
     perCol
   }
 
@@ -138,27 +145,21 @@ object StatsHistogram {
   def read(spark: SparkSession, dir: String): Map[String, Seq[Bin]] =
     readStamped(spark, dir).bins
 
-  /** Bins plus their build-version stamp (−1 when the files predate the
-    * stamp or were built free-standing). One stamp for the whole tier:
-    * `build` always rewrites every requested column in one publish.
+  /** Bins plus their build-version stamp (−1 when built free-standing).
+    * One stamp for the whole tier: `build` always rewrites every requested
+    * column in one publish.
     */
   final case class Stamped(builtVersion: Long, bins: Map[String, Seq[Bin]])
 
-  def readStamped(spark: SparkSession, dir: String): Stamped = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/histogram")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Stamped(-1L, Map.empty)
-    val df = spark.read.parquet(p.toString)
-    val stamped = df.schema.fieldNames.contains("built_version")
-    val rows = df.collect()
-    val version =
-      if (stamped && rows.nonEmpty) rows.head.getLong(rows.head.fieldIndex("built_version"))
-      else -1L
-    Stamped(version, rows
+  def readStamped(spark: SparkSession, dir: String): Stamped =
+    IndexStore.headOption(spark, dir).map(readStamped(spark, _)).getOrElse(Stamped(-1L, Map.empty))
+
+  private[graft] def readStamped(spark: SparkSession, head: IndexStore.Head): Stamped =
+    if (!head.has("histogram")) Stamped(-1L, Map.empty)
+    else Stamped(head("built_version").toLong, head.read(spark, "histogram").collect()
       .groupBy(_.getString(0))
       .map { case (c, rs) =>
         c -> rs.sortBy(_.getInt(1)).toSeq.map(r =>
           Bin(r.getDouble(2), r.getDouble(3), r.getLong(4), r.getLong(5)))
       })
-  }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.TextFunctions.polyHash64
+import graft.sources.IndexStore
 
 /** Incremental, mergeable per-column NDV statistics — HyperLogLog register
   * sketches a SQL engine can replay exactly.
@@ -21,7 +22,8 @@ import graft.functions.TextFunctions.polyHash64
   *     requested columns (explode of a per-row struct array — no
   *     per-column rescans), map-side combinable by Catalyst (partial
   *     `max` per register before the exchange);
-  *   - `save`/`append` persist registers beside the table; append
+  *   - `save`/`append` persist registers beside the table, each write
+  *     one [[graft.sources.IndexStore]] version; append
   *     sketches ONLY the new rows and appends delta registers — history
   *     is never rescanned, and because the register merge is `max`
   *     (idempotent + commutative + associative), an at-least-once
@@ -179,150 +181,77 @@ object StatsSketch {
       .map(r => r.getDouble(r.fieldIndex("ndv_est"))).getOrElse(0.0)
   }
 
-  /** Pinned sketch parameters plus table-analyze state: `cols` fixes the
-    * analyzed column set at build time, `lastVersion` the table version
-    * the registers cover (−1 for free-standing sketches), `exact`
-    * whether the estimate equals current-table NDV (false once an
-    * update or delete has entered an incremental window — registers
-    * are max-only, so a retired value cannot leave the sketch; see
-    * [[analyzeIncremental]]), and `fullVersion` the version the last
-    * FULL [[analyze]] rescanned (−1 for free-standing sketches) — the
-    * watermark the histogram tier's staleness guard compares its
-    * `built_version` stamp against (see
+  /** Pinned sketch parameters plus table-analyze state, committed in the
+    * sketch dir's [[IndexStore]] header: `cols` fixes the analyzed column
+    * set at build time, `lastVersion` the table version the registers
+    * cover (−1 for free-standing sketches), `exact` whether the estimate
+    * equals current-table NDV (false once an update or delete has entered
+    * an incremental window — registers are max-only, so a retired value
+    * cannot leave the sketch; see [[analyzeIncremental]]), and
+    * `fullVersion` the version the last FULL [[analyze]] rescanned (−1 for
+    * free-standing sketches) — the watermark the histogram tier's
+    * staleness guard compares its `built_version` stamp against (see
     * [[graft.sources.PlanStats]]): bins stamped before the last full
     * rescan may describe pre-mutation rows the rescan replaced.
     */
   private final case class Meta(p: Int, seed: Long, cols: Seq[String],
-      lastVersion: Long, exact: Boolean, fullVersion: Long)
+      lastVersion: Long, exact: Boolean, fullVersion: Long) {
+    def props: Map[String, String] = Map("p" -> p.toString, "seed" -> seed.toString,
+      "base_hash" -> "poly64", "cols" -> cols.mkString(","),
+      "last_version" -> lastVersion.toString, "exact" -> exact.toString,
+      "full_version" -> fullVersion.toString)
+  }
 
-  /** Driver-side meta cache: every [[readMetaFull]] was a full
-    * `spark.read.parquet(...).head()` — a Spark job per call, and the
-    * ANALYZE scenarios read the meta 4–6 times each (estimate, isExact,
-    * analyzeIncremental, append). Keyed by the meta dir's file listing
-    * (name:length:mtime per part file), so an external rewrite of the
-    * meta — another JVM's ANALYZE — invalidates the entry. Writes
-    * through [[writeMeta]] INVALIDATE their entry rather than populate
-    * it (ADVICE r15: a fingerprint taken after our own write could
-    * belong to a concurrent writer's file set — the next read
-    * re-fingerprints and re-reads instead). Bounded LRU with normalized
-    * URI keys so a long-lived JVM probing many sketch dirs cannot grow
-    * it without bound. Metadata only, never query results (guide §1.2
-    * step 2: per-task/driver overhead after the algorithm is right).
-    * Same mtime-granularity staleness bound as
-    * [[graft.operators.SmallMeta]], documented there.
+  private def meta(head: IndexStore.Head): Meta =
+    Meta(head("p").toInt, head("seed").toLong, head("cols").split(',').toSeq.filter(_.nonEmpty),
+      head("last_version").toLong, head("exact").toBoolean, head("full_version").toLong)
+
+  /** One register generation: ≤ m rows per column BY CONSTRUCTION (the
+    * groupBy's key space), a scale-independent bound — one file, not one
+    * per reduce partition: every estimate/analyze re-read pays the file
+    * count (guide §6). repartition(1), NOT coalesce(1): coalesce would
+    * collapse the register fold's reduce stage to one task, while this
+    * keeps the aggregation parallel and moves only the ≤ m-row result
+    * through one extra (model-bounded) exchange.
     */
-  private val metaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, Meta)](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, Meta)]): Boolean =
-        size() > 256
-    })
-
-  private def metaCacheKey(dir: String): String =
-    new org.apache.hadoop.fs.Path(s"$dir/meta").toUri.toString
-
-  /** None when the meta dir is missing — the uncached read then raises
-    * the same AnalysisException callers have always seen.
-    */
-  private def metaFingerprint(spark: SparkSession, dir: String): Option[String] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      Some(fs.listStatus(p).filter(_.isFile)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|"))
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
-    import spark.implicits._
-    Seq((m.p, m.seed, "poly64", m.cols.mkString(","), m.lastVersion, m.exact,
-        m.fullVersion))
-      .toDF("p", "seed", "base_hash", "cols", "last_version", "exact",
-        "full_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    // invalidate, never populate: a fingerprint listed right after our
-    // write could already reflect a concurrent writer's files, and
-    // caching OUR Meta against THEIR listing would serve stale state
-    // until the next external rewrite (ADVICE r15)
-    metaCache.remove(metaCacheKey(dir))
-    ()
-  }
-
-  private def readMetaFull(spark: SparkSession, dir: String): Meta = {
-    val key = metaCacheKey(dir)
-    metaFingerprint(spark, dir) match {
-      case None => readMetaUncached(spark, dir) // missing dir: original error
-      case Some(fp) =>
-        val hit = metaCache.get(key)
-        if (hit != null && hit._1 == fp) hit._2
-        else {
-          val m = readMetaUncached(spark, dir)
-          metaCache.put(key, (fp, m))
-          m
-        }
-    }
-  }
-
-  private def readMetaUncached(spark: SparkSession, dir: String): Meta = {
-    val r = spark.read.parquet(s"$dir/meta").head()
-    val last = r.getLong(r.fieldIndex("last_version"))
-    Meta(r.getInt(r.fieldIndex("p")), r.getLong(r.fieldIndex("seed")),
-      r.getString(r.fieldIndex("cols")).split(',').toSeq.filter(_.nonEmpty),
-      last,
-      r.getBoolean(r.fieldIndex("exact")),
-      // metas written before the histogram lifecycle (r15) lack the
-      // column — the last full analyze is then the pinned version itself
-      if (r.schema.fieldNames.contains("full_version"))
-        r.getLong(r.fieldIndex("full_version"))
-      else last)
-  }
+  private def registers(sketched: DataFrame): IndexStore.Artifact =
+    "registers" -> (p => sketched.repartition(1).write.parquet(p))
 
   /** The analyze-state triple the read path's histogram guard consumes:
     * (exact, version of the last full analyze, covered version).
     */
   final case class Lifecycle(exact: Boolean, fullVersion: Long, lastVersion: Long)
 
-  def lifecycle(spark: SparkSession, dir: String): Lifecycle = {
-    val m = readMetaFull(spark, dir)
+  def lifecycle(spark: SparkSession, dir: String): Lifecycle =
+    lifecycle(IndexStore.head(spark, dir))
+
+  private[graft] def lifecycle(head: IndexStore.Head): Lifecycle = {
+    val m = meta(head)
     Lifecycle(m.exact, m.fullVersion, m.lastVersion)
   }
 
-  /** Build and persist a sketch: `dir/registers` + `dir/meta` pinning
-    * (p, seed, base_hash, cols) so appends provably hash like the build.
+  /** Build and persist a sketch: one [[IndexStore]] version holding the
+    * `registers` artifact, its header pinning (p, seed, base_hash, cols)
+    * so appends provably hash like the build.
     *
-    * Any EXISTING histogram at the dir is deleted: a free-standing
-    * sketch has no version lifecycle, so re-saving is its whole
-    * re-baseline — bins built over the previous data would otherwise
-    * pass the unstamped guard (−1 ≥ −1) forever and serve a dead
-    * distribution beside the fresh counts (r15 review). Rebuild with
-    * [[StatsHistogram.build]] after the save when the tier is wanted.
+    * A save is a full build, so any EXISTING histogram at the dir is
+    * dropped from the new version: a free-standing sketch has no version
+    * lifecycle, so re-saving is its whole re-baseline — bins built over
+    * the previous data would otherwise pass the unstamped guard (−1 ≥ −1)
+    * forever and serve a dead distribution beside the fresh counts.
+    * Rebuild with [[StatsHistogram.build]] after the save when the tier is
+    * wanted.
     */
   def save(df: DataFrame, cols: Seq[String], dir: String,
       p: Int = DefaultPrecision, seed: Long = 4242L): Unit = {
-    val spark = df.sparkSession
-    // register frames are ≤ m rows per column BY CONSTRUCTION (the
-    // groupBy's key space), a scale-independent bound — one file, not
-    // one per reduce partition: every estimate/analyze re-read pays the
-    // file count (guide §6). repartition(1), NOT coalesce(1): coalesce
-    // would collapse the register fold's reduce stage to one task, while
-    // this keeps the aggregation parallel and moves only the ≤ m-row
-    // result through one extra (model-bounded) exchange
-    sketch(df, cols, p, seed).repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/registers")
-    val hist = new org.apache.hadoop.fs.Path(s"$dir/histogram")
-    val fs = hist.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(hist)) { fs.delete(hist, true); () }
-    writeMeta(spark, dir, Meta(p, seed, cols, -1L, exact = true,
-      fullVersion = -1L))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): (Int, Long) = {
-    val m = readMetaFull(spark, dir)
-    (m.p, m.seed)
+    IndexStore.save(df.sparkSession, dir, "statsSketch.save",
+        Meta(p, seed, cols, -1L, exact = true, fullVersion = -1L).props)(
+      registers(sketch(df, cols, p, seed)))
+    ()
   }
 
   /** Incremental maintenance: sketch ONLY `newRows` (params read from the
-    * pinned meta, never re-chosen) and append the delta registers.
+    * pinned header, never re-chosen) and append the delta registers.
     * History is never rescanned; `estimate`'s fold takes `max` per
     * bucket across all appended generations, so a replayed append is a
     * no-op by algebra, not by convention.
@@ -333,29 +262,31 @@ object StatsSketch {
     * conflicts are refused, not absorbed).
     */
   def append(newRows: DataFrame, cols: Seq[String], dir: String): Unit = {
-    val meta = readMetaFull(newRows.sparkSession, dir)
-    require(cols == meta.cols,
-      s"statsSketch append: columns $cols conflict with the pinned " +
-        s"column set ${meta.cols} at $dir")
-    sketch(newRows, cols, meta.p, meta.seed).repartition(1)
-      .write.mode("append").parquet(s"$dir/registers")
+    IndexStore.update(newRows.sparkSession, dir, "statsSketch.append") { head =>
+      val m = meta(head)
+      require(cols == m.cols,
+        s"statsSketch append: columns $cols conflict with the pinned " +
+          s"column set ${m.cols} at $dir")
+      IndexStore.Update(append = Seq(registers(sketch(newRows, cols, m.p, m.seed))))
+    }
+    ()
   }
 
-  /** Rewrite accumulated append generations back to ≤ m rows per column.
-    * Like the other index-store compactions this is an exclusive
-    * maintenance action (run it from the table's maintenance slot, not
-    * beside a live appender).
+  /** Rewrite accumulated append generations back to ≤ m rows per column,
+    * as one version that replaces every register generation.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val folded = spark.read.parquet(s"$dir/registers")
-      .groupBy(col("column"), col("bucket"))
-      .agg(max(col("rank")).as("rank"))
-      .collect() // ≤ m rows per column — model-sized by construction
     import spark.implicits._
-    spark.createDataset(folded.toSeq.map(r =>
-        (r.getString(0), r.getInt(1), r.getInt(2))))
-      .toDF("column", "bucket", "rank").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/registers")
+    IndexStore.update(spark, dir, "statsSketch.compact") { head =>
+      val folded = head.read(spark, "registers")
+        .groupBy(col("column"), col("bucket"))
+        .agg(max(col("rank")).as("rank"))
+        .collect() // ≤ m rows per column — model-sized by construction
+      IndexStore.Update(replace = Seq("registers" -> (p =>
+        spark.createDataset(folded.toSeq.map(r => (r.getString(0), r.getInt(1), r.getInt(2))))
+          .toDF("column", "bucket", "rank").coalesce(1).write.parquet(p))))
+    }
+    ()
   }
 
   /** Fold a register frame to per-column NDV statistics:
@@ -415,28 +346,34 @@ object StatsSketch {
     * set rides along so all-NULL columns report zeros = m / ndv_est = 0
     * rather than silently vanishing.
     */
-  def estimate(spark: SparkSession, dir: String): DataFrame = {
-    val meta = readMetaFull(spark, dir)
-    estimateFrom(spark.read.parquet(s"$dir/registers"), meta.p, meta.cols)
+  def estimate(spark: SparkSession, dir: String): DataFrame =
+    estimate(spark, IndexStore.head(spark, dir))
+
+  private[graft] def estimate(spark: SparkSession, head: IndexStore.Head): DataFrame = {
+    val m = meta(head)
+    estimateFrom(head.read(spark, "registers"), m.p, m.cols)
   }
 
   // ---- Versioned-table ANALYZE -----------------------------------------
 
   /** One-shot ANALYZE of a versioned [[graft.sources.ParquetTable]]: a
-    * full-scan sketch of the current head, with the covered version
-    * pinned in meta so [[analyzeIncremental]] knows where to resume.
-    * Returns the analyzed version.
+    * full-scan sketch of the current head replaces the registers, with
+    * the covered version pinned in the header so [[analyzeIncremental]]
+    * knows where to resume. A histogram built earlier stays in the
+    * version; the read path's guard retires it by its stamp. Returns the
+    * analyzed version.
     */
   def analyze(spark: SparkSession, tablePath: String, cols: Seq[String],
       sketchDir: String, p: Int = DefaultPrecision, seed: Long = 4242L): Long = {
     val v = graft.sources.ParquetTable.currentVersion(spark, tablePath)
       .getOrElse(throw new IllegalArgumentException(
         s"analyze: no versioned table at $tablePath"))
-    sketch(graft.sources.ParquetTable.read(spark, tablePath), cols, p, seed)
-      .repartition(1) // register-bounded: ≤ m rows per column
-      .write.mode("overwrite").parquet(s"$sketchDir/registers")
-    writeMeta(spark, sketchDir, Meta(p, seed, cols, v, exact = true,
-      fullVersion = v))
+    IndexStore.update(spark, sketchDir, "analyze", create = true) { _ =>
+      IndexStore.Update(
+        replace = Seq(registers(sketch(graft.sources.ParquetTable.read(spark, tablePath),
+          cols, p, seed))),
+        props = Meta(p, seed, cols, v, exact = true, fullVersion = v).props)
+    }
     v
   }
 
@@ -447,10 +384,9 @@ object StatsSketch {
     * the table. Cost is change-sized: at 100 TB the nightly ANALYZE
     * touches the day's commits, not the decade's.
     *
-    * Crash/replay safety comes from write ORDER + algebra: delta
-    * registers are appended BEFORE the meta version advances, and a
-    * replayed append is a register-max no-op — a crash between the two
-    * writes re-runs the same window and converges.
+    * Crash/replay safety: the delta registers and the version advance
+    * are one [[IndexStore]] version, so a crash before its commit leaves
+    * the previous coverage in place and a re-run sketches the same window.
     *
     * Exactness contract (stated, not hoped): registers are max-only, so
     * new values enter the sketch but a retired value cannot leave it — a
@@ -469,16 +405,16 @@ object StatsSketch {
     */
   def analyzeIncremental(spark: SparkSession, tablePath: String,
       pk: Seq[String], sketchDir: String): Long = {
-    val meta = readMetaFull(spark, sketchDir)
-    require(meta.lastVersion >= 0,
+    val covered = meta(IndexStore.head(spark, sketchDir)).lastVersion
+    require(covered >= 0,
       s"analyzeIncremental: sketch at $sketchDir is free-standing " +
         "(built by save(), not analyze()) — it pins no table version")
     val head = graft.sources.ParquetTable.currentVersion(spark, tablePath)
       .getOrElse(throw new IllegalArgumentException(
         s"analyzeIncremental: no versioned table at $tablePath"))
-    if (head == meta.lastVersion) return head
-    require(head > meta.lastVersion,
-      s"analyzeIncremental: sketch covers v${meta.lastVersion} but the " +
+    if (head == covered) return head
+    require(head > covered,
+      s"analyzeIncremental: sketch covers v$covered but the " +
         s"table head is v$head — the table was RESTOREd past the sketch; " +
         "recompute with analyze()")
     // CDF fast path: when every commit in the window captured a change
@@ -492,38 +428,42 @@ object StatsSketch {
     // later commit deleted; the net diff never does) — both satisfy the
     // same contract: registers cover every value the sketch has ever
     // been shown, and estimate ≥ current NDV once exact is false.
-    val captured = graft.sources.ParquetTable
-      .hasChangeManifests(spark, tablePath, meta.lastVersion + 1, head)
-    val delta = (
-      if (captured)
-        graft.sources.ParquetTable
-          .tableChanges(spark, tablePath, meta.lastVersion + 1, head, pk)
-          .drop("_commit_version")
-      else graft.sources.ParquetTable
-        .changes(spark, tablePath, meta.lastVersion, head, pk)
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val appendOnly = delta
-        .filter(col("_change_type") =!= "insert").isEmpty
-      // What to sketch per feed:
-      //   - per-commit CDF (captured): `_change_type` ∈ {insert, delete,
-      //     update_preimage, update_postimage}; preimages are covered by
-      //     induction (each was the base image or an earlier commit's
-      //     postimage in this same feed), so sketch insert + postimage.
-      //   - snapshot NET diff (fallback): `_change_type` ∈ {insert,
-      //     update, delete} with ONE row per changed key carrying the
-      //     NEW image — preimages never appear, so `=!= "delete"` is
-      //     exactly inserts + update postimages.
-      val upserts = (
-        if (captured)
-          delta.filter(col("_change_type").isin("insert", "update_postimage"))
-        else delta.filter(col("_change_type") =!= "delete")
-      ).drop("_change_type")
-      sketch(upserts, meta.cols, meta.p, meta.seed).repartition(1)
-        .write.mode("append").parquet(s"$sketchDir/registers")
-      writeMeta(spark, sketchDir,
-        meta.copy(lastVersion = head, exact = meta.exact && appendOnly))
-    } finally { delta.unpersist(); () }
+    IndexStore.update(spark, sketchDir, "analyzeIncremental") { h =>
+      val meta = this.meta(h)
+      if (meta.lastVersion >= head) IndexStore.Update() // a racer covered the window
+      else {
+        val captured = graft.sources.ParquetTable
+          .hasChangeManifests(spark, tablePath, meta.lastVersion + 1, head)
+        val delta = (
+          if (captured)
+            graft.sources.ParquetTable
+              .tableChanges(spark, tablePath, meta.lastVersion + 1, head, pk)
+              .drop("_commit_version")
+          else graft.sources.ParquetTable
+            .changes(spark, tablePath, meta.lastVersion, head, pk)
+        ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val appendOnly = delta
+          .filter(col("_change_type") =!= "insert").isEmpty
+        // What to sketch per feed:
+        //   - per-commit CDF (captured): `_change_type` ∈ {insert, delete,
+        //     update_preimage, update_postimage}; preimages are covered by
+        //     induction (each was the base image or an earlier commit's
+        //     postimage in this same feed), so sketch insert + postimage.
+        //   - snapshot NET diff (fallback): `_change_type` ∈ {insert,
+        //     update, delete} with ONE row per changed key carrying the
+        //     NEW image — preimages never appear, so `=!= "delete"` is
+        //     exactly inserts + update postimages.
+        val upserts = (
+          if (captured)
+            delta.filter(col("_change_type").isin("insert", "update_postimage"))
+          else delta.filter(col("_change_type") =!= "delete")
+        ).drop("_change_type")
+        IndexStore.Update(
+          append = Seq(registers(sketch(upserts, meta.cols, meta.p, meta.seed))),
+          props = meta.copy(lastVersion = head, exact = meta.exact && appendOnly).props,
+          cached = Seq(delta))
+      }
+    }
     head
   }
 
@@ -531,7 +471,7 @@ object StatsSketch {
     * or is the documented upper bound after delete windows (false).
     */
   def isExact(spark: SparkSession, dir: String): Boolean =
-    readMetaFull(spark, dir).exact
+    meta(IndexStore.head(spark, dir)).exact
 
   /** Merge independently-built sketches (same (p, seed) pinned meta —
     * e.g. one per partition or per commit) by register max: the HLL
@@ -539,11 +479,12 @@ object StatsSketch {
     */
   def merged(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "statsSketch: no sketch dirs")
-    val metas = dirs.map(readMetaFull(spark, _))
+    val heads = dirs.map(IndexStore.head(spark, _))
+    val metas = heads.map(meta)
     val params = metas.map(m => (m.p, m.seed)).distinct
     require(params.size == 1,
       s"statsSketch: cannot merge sketches with different (p, seed): $params")
-    val all = dirs.map(d => spark.read.parquet(s"$d/registers"))
+    val all = heads.map(_.read(spark, "registers"))
       .reduce(_ unionByName _)
     estimateFrom(all, params.head._1, metas.flatMap(_.cols).distinct)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.IndexStore
 
 /** Document deduplication for training-data pipelines, four flavors:
   *
@@ -172,21 +173,26 @@ object TextDedup {
   }
 
   /** Persist a winnowing fingerprint index over a history corpus: the
-    * (fp, id) posting list as parquet — the local-overlap twin of
-    * [[minHashIndexSave]], with k/w pinned beside it so probes can never
-    * silently mix sketch parameters.
+    * (fp, id) posting list as one [[IndexStore]] version — the
+    * local-overlap twin of [[minHashIndexSave]], with k/w pinned in the
+    * version header so probes can never silently mix sketch parameters.
     */
   def winnowingIndexSave(
       history: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 3, w: Int = 4): Unit = {
-    graft.sources.ParquetTable.sizedForWrite(history
-        .select(col(idCol).as("hist_id"),
-          explode(winnowingFingerprints(col(textCol), k, w)).as("fp")))
-      .write.mode("overwrite").parquet(s"$dir/posting")
-    history.sparkSession.createDataFrame(Seq((k, w)))
-      .toDF("k", "w").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/params")
+    IndexStore.save(history.sparkSession, dir, "winnowingIndexSave",
+        Map("k" -> k.toString, "w" -> w.toString))(
+      winnowingPosting(history, idCol, textCol, k, w))
+    ()
   }
+
+  private def winnowingPosting(
+      docs: DataFrame, idCol: String, textCol: String, k: Int, w: Int): IndexStore.Artifact =
+    IndexStore.parquet("posting", docs.select(col(idCol).as("hist_id"),
+      explode(winnowingFingerprints(col(textCol), k, w)).as("fp")))
+
+  private def winnowingParams(head: IndexStore.Head): (Int, Int) =
+    (head("k").toInt, head("w").toInt)
 
   /** Probe a batch against a [[winnowingIndexSave]]d history: batch docs
     * sharing ≥ `minShared` selected fingerprints with ANY history doc —
@@ -205,21 +211,19 @@ object TextDedup {
     */
   def winnowingIndexAppend(
       docs: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
-    val spark = docs.sparkSession
-    val p = SmallMeta.headRow(spark, s"$dir/params")
-    val (k, w) = (p.getInt(0), p.getInt(1))
-    graft.sources.ParquetTable.sizedForWrite(docs
-        .select(col(idCol).as("hist_id"),
-          explode(winnowingFingerprints(col(textCol), k, w)).as("fp")))
-      .write.mode("append").parquet(s"$dir/posting")
+    IndexStore.update(docs.sparkSession, dir, "winnowingIndexAppend") { head =>
+      val (k, w) = winnowingParams(head)
+      IndexStore.Update(append = Seq(winnowingPosting(docs, idCol, textCol, k, w)))
+    }
+    ()
   }
 
   def winnowingProbeHistory(
       batch: DataFrame, idCol: String, textCol: String, dir: String,
       minShared: Long = 2): DataFrame = {
     val spark = batch.sparkSession
-    val p = SmallMeta.headRow(spark, s"$dir/params")
-    val (k, w) = (p.getInt(0), p.getInt(1))
+    val head = IndexStore.head(spark, dir)
+    val (k, w) = winnowingParams(head)
     batch
       .select(col(idCol),
         explode(winnowingFingerprints(col(textCol), k, w)).as("fp"))
@@ -228,7 +232,7 @@ object TextDedup {
       // the at-least-once-replay guard: a duplicated [[winnowingIndexAppend]]
       // must not double-count n_shared (the same membership discipline as
       // minHashProbeHistory's distinct()'d candidate set).
-      .join(spark.read.parquet(s"$dir/posting").distinct(), Seq("fp"))
+      .join(head.read(spark, "posting").distinct(), Seq("fp"))
       .groupBy(col(idCol), col("hist_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -525,10 +529,11 @@ object TextDedup {
   /** Persist a MinHash-LSH index over a history corpus so NEW batches can
     * be near-dup-checked against it without ever re-minhashing the
     * history — the near-dup twin of the exact-dedup fingerprint store:
-    * `bands` (id, band, key) bucket rows for the candidate equi-join,
-    * `sigs` (id, sig) for signature-level similarity estimates, and
-    * `meta` pinning (n, numHashes, bands, seed) so probes provably hash
-    * with the SAME permutations. One corpus pass at build; per-batch
+    * `bands` (id, band, key) bucket rows for the candidate equi-join and
+    * `sigs` (id, sig) for signature-level similarity estimates, published
+    * as one [[IndexStore]] version whose header pins (n, numHashes,
+    * bands, seed, baseHash) so probes provably hash with the SAME
+    * permutations. One corpus pass at build; per-batch
     * probe cost is O(batch) signatures + one equi-join against the
     * bucket table. At serving scale, bucket `bands` by `key`
     * ([[graft.sources.Bucketing]]) to make the probe join exchange-free
@@ -544,43 +549,32 @@ object TextDedup {
       bands: Int = 8,
       seed: Long = 42L,
       baseHash: String = "xxh64"): Unit = {
-    val spark = history.sparkSession
-    import spark.implicits._
     val rows = bandRows(history, idCol, textCol, n, numHashes, bands, seed,
       baseHash)
     rows.cache()
     try {
-      graft.sources.ParquetTable.sizedForWrite(
-          rows.select(col(idCol).as("hist_id"), col("band"), col("key")))
-        .write.mode("overwrite").parquet(s"$dir/bands")
-      graft.sources.ParquetTable.sizedForWrite(
-          rows.select(col(idCol).as("hist_id"), col("sig")).distinct())
-        .write.mode("overwrite").parquet(s"$dir/sigs")
-      Seq((n, numHashes, bands, seed, baseHash))
-        .toDF("n", "num_hashes", "bands", "seed", "base_hash")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      IndexStore.save(history.sparkSession, dir, "minHashIndexSave", Map(
+          "n" -> n.toString, "num_hashes" -> numHashes.toString, "bands" -> bands.toString,
+          "seed" -> seed.toString, "base_hash" -> baseHash))(
+        minHashArtifacts(rows, idCol): _*)
+      ()
     } finally { rows.unpersist(); () }
   }
 
+  private def minHashArtifacts(rows: DataFrame, idCol: String): Seq[IndexStore.Artifact] = Seq(
+    IndexStore.parquet("bands", rows.select(col(idCol).as("hist_id"), col("band"), col("key"))),
+    IndexStore.parquet("sigs", rows.select(col(idCol).as("hist_id"), col("sig")).distinct()))
+
   /** The pinned parameters of a persisted MinHash index:
-    * (n, numHashes, bands, seed, baseHash). `base_hash` is read
-    * schema-aware so indexes persisted before the column existed keep
-    * probing with their build-era default (`xxh64`).
+    * (n, numHashes, bands, seed, baseHash).
     */
-  private def readIndexMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int, Long, String) = {
-    val meta = SmallMeta.headRow(spark, s"$dir/meta")
-    val baseHash =
-      if (meta.schema.fieldNames.contains("base_hash"))
-        meta.getString(meta.fieldIndex("base_hash"))
-      else "xxh64"
-    (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getLong(3), baseHash)
-  }
+  private def minHashParams(head: IndexStore.Head): (Int, Int, Int, Long, String) =
+    (head("n").toInt, head("num_hashes").toInt, head("bands").toInt, head("seed").toLong,
+      head("base_hash"))
 
   /** Append NEW documents' band/sig rows to a [[minHashIndexSave]]d
     * index — the maintenance path a streaming ingest needs: parameters
-    * are READ from the pinned meta (never re-chosen), so later probes
+    * are READ from the pinned header (never re-chosen), so later probes
     * provably hash with the same permutations as the original build.
     * Replays may duplicate rows; the probe's candidate set is
     * `distinct()`d so membership answers are insensitive to them (the
@@ -592,25 +586,19 @@ object TextDedup {
       idCol: String,
       textCol: String,
       dir: String): Unit = {
-    val spark = docs.sparkSession
-    val (n, numHashes, bandCount, seed, baseHash) = readIndexMeta(spark, dir)
-    val rows = bandRows(docs, idCol, textCol, n, numHashes, bandCount, seed,
-      baseHash)
-    rows.cache()
-    try {
-      graft.sources.ParquetTable.sizedForWrite(
-          rows.select(col(idCol).as("hist_id"), col("band"), col("key")))
-        .write.mode("append").parquet(s"$dir/bands")
-      graft.sources.ParquetTable.sizedForWrite(
-          rows.select(col(idCol).as("hist_id"), col("sig")).distinct())
-        .write.mode("append").parquet(s"$dir/sigs")
-    } finally { rows.unpersist(); () }
+    IndexStore.update(docs.sparkSession, dir, "minHashIndexAppend") { head =>
+      val (n, numHashes, bandCount, seed, baseHash) = minHashParams(head)
+      val rows = bandRows(docs, idCol, textCol, n, numHashes, bandCount, seed,
+        baseHash).cache()
+      IndexStore.Update(append = minHashArtifacts(rows, idCol), cached = Seq(rows))
+    }
+    ()
   }
 
   /** Near-dup pairs between a new `batch` and a [[minHashIndexSave]]d
     * history (CROSS pairs only — compose with [[minHashDedupPairs]] for
     * within-batch pairs). The batch is signed with the index's own
-    * parameters (read from meta), candidates come from the band-bucket
+    * parameters (read from its header), candidates come from the band-bucket
     * equi-join, and similarity is:
     *
     *   - EXACT n-gram Jaccard when `verifyAgainst` supplies the history
@@ -633,11 +621,12 @@ object TextDedup {
       threshold: Double,
       verifyAgainst: Option[(DataFrame, String, String)] = None): DataFrame = {
     val spark = batch.sparkSession
-    val (n, numHashes, bandCount, seed, baseHash) = readIndexMeta(spark, dir)
+    val head = IndexStore.head(spark, dir)
+    val (n, numHashes, bandCount, seed, baseHash) = minHashParams(head)
     val probeRows = bandRows(batch, idCol, textCol, n, numHashes, bandCount,
       seed, baseHash)
     val cands = probeRows
-      .join(spark.read.parquet(s"$dir/bands"), Seq("band", "key"))
+      .join(head.read(spark, "bands"), Seq("band", "key"))
       .select(col(idCol).as("batch_id"), col("hist_id"))
       .distinct()
     verifyAgainst match {
@@ -654,7 +643,7 @@ object TextDedup {
       case None =>
         val bs = probeRows
           .select(col(idCol).as("batch_id"), col("sig").as("__sb")).distinct()
-        val hs = spark.read.parquet(s"$dir/sigs")
+        val hs = head.read(spark, "sigs")
           .select(col("hist_id"), col("sig").as("__sh"))
         cands.join(bs, Seq("batch_id")).join(hs, Seq("hist_id"))
           .withColumn("__j",

@@ -470,7 +470,7 @@ object TrainingQueries {
       val dir = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         s"graft_ivfpq_${math.abs(d.hashCode)}_$nVecs").toString
-      if (!new java.io.File(s"$dir/encoded").exists()) {
+      if (!graft.sources.IndexStore.exists(s, dir)) {
         val idx = graft.operators.PqAnn.buildIvfPq(emb, "vec_id", "embedding",
           nCells = 4, m = 8, k = 8, cellIter = 0, pqIter = 0, trainRows = 8)
         graft.operators.PqAnn.saveIvfPq(s, idx, dir)
@@ -729,7 +729,7 @@ object TrainingQueries {
         // stale string-keyed index from an older binary is never joined
         // against long query fingerprints
         s"graft_bm25idxf_${math.abs(d.hashCode)}_$nDocs").toString
-      if (!new java.io.File(s"$idx/meta").exists()) {
+      if (!graft.sources.IndexStore.exists(s, idx)) {
         graft.operators.Bm25.buildIndex(corpus, "doc_id", "text", idx)
       }
       val queries = s.createDataFrame(Seq(
@@ -1634,7 +1634,7 @@ object TrainingQueries {
       val idx = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         s"graft_mhidx_${math.abs(d.hashCode)}_$nHist").toString
-      if (!new java.io.File(s"$idx/meta").exists()) {
+      if (!graft.sources.IndexStore.exists(s, idx)) {
         graft.operators.TextDedup.minHashIndexSave(
           history, "doc_id", "text", idx)
       }
@@ -1657,7 +1657,7 @@ object TrainingQueries {
       val dir = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         s"graft_lmbg_${math.abs(d.hashCode)}_$nDocs").toString
-      if (!new java.io.File(s"$dir/meta").exists()) {
+      if (!graft.sources.IndexStore.exists(s, dir)) {
         graft.operators.LmScore.trainBigram(corpus, "doc_id", "text", dir)
       }
       graft.operators.LmScore

@@ -136,16 +136,6 @@ object DataSkipping {
     }
   }
 
-  /** Exact row count of the parquet files under `dir`, from footers only —
-    * the same metadata a column-less `count()` scan reads, without
-    * launching a Spark job. Serves the serve-path consistency guards
-    * (e.g. [[graft.operators.Bm25]]'s torn-index check), which would
-    * otherwise pay a scheduled job per probe call.
-    */
-  def footerRowCount(spark: SparkSession, dir: String): Long =
-    census(spark, new Path(dir), listParquetFiles(spark, dir))
-      .values.map(_.rows).sum
-
   /** The parquet files a PLAIN (non-manifest) Spark read of `dir`
     * scans, as (relative path, byte size): same recursion as
     * [[listParquetFiles]] but skipping hidden (`_`/`.`-prefixed) path

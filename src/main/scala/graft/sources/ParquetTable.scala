@@ -542,13 +542,11 @@ object ParquetTable {
     */
   def statsDir(path: String): String = s"$path/_graft_stats"
 
-  /** Whether the table has been ANALYZEd (a pinned sketch exists at
-    * [[statsDir]]). Metadata-only existence probe.
+  /** Whether the table has been ANALYZEd (a sketch version is committed
+    * at [[statsDir]], see [[IndexStore]]). One metadata existence probe.
     */
-  def hasStats(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(statsDir(path), "meta")
-    hadoopFs(spark, p).exists(p)
-  }
+  def hasStats(spark: SparkSession, path: String): Boolean =
+    IndexStore.exists(spark, statsDir(path))
 
   /** Kill switch for stats-informed merge planning (`true` by default —
     * the real opt-in is having run ANALYZE on the table at all).
@@ -864,14 +862,23 @@ object ParquetTable {
   private def hadoopFs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def manifestDir(path: String) = new Path(path, ManifestDirName)
+  private[sources] def manifestDir(path: String) = new Path(path, ManifestDirName)
 
   /** Unique data-dir name for every versioned write — two racing writers
     * can never target the same directory; the manifest, not the name,
-    * binds a dir into a version. Only [[stage]] and [[convert]] mint one.
+    * binds a dir into a version. Only [[mintDataDir]] and [[convert]] mint one.
     */
   private def freshDataDirName() =
     s"_d${System.currentTimeMillis()}_${System.nanoTime() % 1000000}"
+
+  /** A fresh data-dir name for the running [[commitLoop]] attempt,
+    * recorded for its orphan cleanup before anything is written there.
+    */
+  private[sources] def mintDataDir(): String = {
+    val dataDir = freshDataDirName()
+    attemptDirs.value.foreach(_ += dataDir)
+    dataDir
+  }
 
   /** Committed versions at `path`, ascending; empty for plain layouts. */
   def versions(spark: SparkSession, path: String): Seq[Long] = {
@@ -996,10 +1003,10 @@ object ParquetTable {
   private val MaxCommitAttempts = 10
 
   /** What one attempt of a versioned verb decided against the head. */
-  private sealed trait Attempt
+  private[sources] sealed trait Attempt
 
   /** Nothing to commit: the verb returns `version` (the head it read). */
-  private final case class NoOp(version: Long) extends Attempt
+  private[sources] final case class NoOp(version: Long) extends Attempt
 
   /** A manifest to publish at head + 1 (its version, commit time and txn
     * are stamped by [[commitVersion]]), what to run once it won (CDF
@@ -1009,7 +1016,7 @@ object ParquetTable {
     * (`head.copy(entries = …)`); a full image starts from a fresh
     * [[Snapshot]], which materializes both.
     */
-  private final case class Commit(
+  private[sources] final case class Commit(
       manifest: Snapshot,
       onWin: Long => Unit = _ => (),
       onMove: OnMove = Recompute) extends Attempt
@@ -1017,17 +1024,17 @@ object ParquetTable {
   /** The discipline of a staged [[Commit]] whose CAS was lost to a
     * commit that moved the head — see [[commitLoop]].
     */
-  private sealed trait OnMove
+  private[sources] sealed trait OnMove
   /** The image was derived from the head: recompute it. */
-  private case object Recompute extends OnMove
+  private[sources] case object Recompute extends OnMove
   /** The image was supplied by the caller: publish it unchanged. */
-  private case object Replay extends OnMove
+  private[sources] case object Replay extends OnMove
   /** Try `onto(newHead)` — a manifest-only re-expression of the staged
     * data on top of the winner — and recompute when it returns None.
     */
   private final case class Rebase(onto: Snapshot => Option[Snapshot]) extends OnMove
 
-  /** The dirs the running [[commitLoop]] attempt has staged: [[stage]]
+  /** The dirs the running [[commitLoop]] attempt has staged: [[mintDataDir]]
     * and [[stageDv]] record every name they mint here, before writing it.
     */
   private val attemptDirs =
@@ -1074,7 +1081,7 @@ object ParquetTable {
     * the committed version, the NoOp's version, or -1 for a txn
     * re-delivery.
     */
-  private def commitLoop(
+  private[sources] def commitLoop(
       spark: SparkSession, path: String, verb: String,
       txn: Option[(String, Long)] = None, missing: Option[String] = Some(""))(
       attempt: Snapshot => Attempt): Long = {
@@ -1141,8 +1148,7 @@ object ParquetTable {
       partitionColumns: Seq[String] = Nil, filesPerPartition: Int = 1,
       writeOptions: Map[String, String] = Map.empty,
       keepLayout: Boolean = false, physicalUnder: Option[Snapshot] = None): String = {
-    val dataDir = freshDataDirName()
-    attemptDirs.value.foreach(_ += dataDir)
+    val dataDir = mintDataDir()
     val dir = new Path(path, dataDir).toString
     writePlain(df, dir, partitionColumns, filesPerPartition, writeOptions, keepLayout)
     DataSkipping.writeStats(spark, dir, df.schema)
@@ -1218,10 +1224,18 @@ object ParquetTable {
     *     through ([[deleteVectors]]); table-relative or absolute (clones);
     *   - `#colmap=<physical>><logical><TAB>…` — the logical column view
     *     over unchanged physical files ([[renameColumn]]); an entry with an
-    *     empty logical side (`physical>`) is a drop.
-    * The last three are written only when non-empty. A manifest from
-    * before headers existed is a body alone: no commit time, txn, DVs or
-    * mapping.
+    *     empty logical side (`physical>`) is a drop;
+    *   - `#props=<key>=<value><TAB>…` — key/value properties committed with
+    *     the version, written sorted by key: an index version's pinned
+    *     parameters ([[IndexStore]]). A key holds no `=`; neither side holds
+    *     a tab, CR or LF (the renderer refuses them). Numbers are written
+    *     in their Java `toString` form, which parses back bit-identical.
+    * The last four are written only when non-empty. A manifest from
+    * before headers existed is a body alone: no commit time, txn, DVs,
+    * mapping or properties.
+    *
+    * An index version ([[IndexStore]]) uses the partitioned body shape
+    * with the artifact name in the partition slot: `postings<TAB>_d…`.
     */
   private[sources] final case class Snapshot(
       entries: Seq[(String, String)],
@@ -1230,7 +1244,8 @@ object ParquetTable {
       drops: Seq[String] = Nil,
       version: Long = 0L,
       ts: Option[Long] = None,
-      txn: Option[(String, Long)] = None) {
+      txn: Option[(String, Long)] = None,
+      props: Map[String, String] = Map.empty) {
 
     def partitioned: Boolean = entries.exists(_._1.nonEmpty)
 
@@ -1252,9 +1267,16 @@ object ParquetTable {
 
     /** The manifest text — what [[commitVersion]] publishes. */
     def render: String = {
+      props.foreach { case (k, v) =>
+        require(k.nonEmpty && !k.contains('=') && !(k + v).exists("\t\r\n".contains(_)),
+          s"manifest property '$k' -> '$v': keys must be non-empty without '=', " +
+            "and neither side may hold a tab, CR or LF")
+      }
       val headers = ts.map(t => s"#ts=$t") ++ txn.map { case (app, tv) => s"#txn=$app:$tv" } ++
         Option.when(dv.nonEmpty)(dv.mkString("#dv=", "\t", "")) ++
-        Option.when(mapped)(s"#colmap=$colmapValue")
+        Option.when(mapped)(s"#colmap=$colmapValue") ++
+        Option.when(props.nonEmpty)(
+          props.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("#props=", "\t", ""))
       val body = (if (partitioned) entries.sorted else entries).map {
         case ("", dataDir) => dataDir
         case (partitionDir, dataDir) => s"$partitionDir\t$dataDir"
@@ -1284,12 +1306,14 @@ object ParquetTable {
         txn = header("#txn=").flatMap(_.split(':') match {
           case Array(app, tv) => tv.trim.toLongOption.map(app -> _)
           case _ => None
-        }))
+        }),
+        props = header("#props=").toSeq.flatMap(_.split('\t')).filter(_.contains('='))
+          .map { kv => val (k, v) = kv.span(_ != '='); k -> v.drop(1) }.toMap)
     }
   }
 
   /** Version `version`'s manifest, read and parsed. */
-  private def snapshot(spark: SparkSession, path: String, version: Long): Snapshot = {
+  private[sources] def snapshot(spark: SparkSession, path: String, version: Long): Snapshot = {
     val f = new Path(manifestDir(path), f"v$version%020d")
     val fs = hadoopFs(spark, f)
     val buf = new Array[Byte](fs.getFileStatus(f).getLen.toInt)

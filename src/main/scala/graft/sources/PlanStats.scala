@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions.col
   * written — at 100 TB that write IS the cost being decided.
   *
   * Scale: the register fold behind the NDV map is model-sized (≤ m
-  * rows per analyzed column) and cached per sketch state — one
+  * rows per analyzed column) and cached per sketch head version — one
   * sub-second job per (table, ANALYZE generation) per JVM, zero cost
   * on tables never ANALYZEd (one metadata existence probe, also
   * cached by the FS client).
@@ -64,40 +64,23 @@ object PlanStats {
   def enabled(spark: SparkSession): Boolean =
     spark.conf.get(Conf, "true") == "true"
 
-  /** sketch dir → (fingerprint, (per-column NDV estimate, stamped
-    * histogram bins, sketch lifecycle)). The fingerprint is the stats
-    * files' (count, total length, max mtime) triple folded to a long —
-    * any analyze/analyzeIncremental/histogram build rewrites meta,
-    * appends registers, or republishes the histogram, so a stale entry
-    * cannot be served. Keyed by DIR with the fingerprint in the VALUE
-    * (ADVICE r14): a new generation REPLACES its predecessor's entry
-    * instead of accumulating beside it, so a long-lived session holds
-    * exactly one entry per table, not one per ANALYZE ever run. The
-    * cache holds the RAW stamped bins + lifecycle — the per-read
-    * staleness guard ([[histogramsFor]]) depends on the version being
-    * READ, so it must run per call, not per generation.
+  /** sketch dir → (the sketch's head version, (per-column NDV estimate,
+    * stamped histogram bins, sketch lifecycle)). Every analyze,
+    * analyzeIncremental, append or histogram build commits a new head, so
+    * a stale entry cannot be served; the head carries its data-dir names,
+    * which are unique per commit, so a dir deleted and rebuilt to the same
+    * version number does not match either. Keyed by DIR with the head in
+    * the VALUE: a new generation REPLACES its predecessor's entry instead
+    * of accumulating beside it, so a long-lived session holds exactly one
+    * entry per table, not one per ANALYZE ever run. The cache holds the
+    * RAW stamped bins + lifecycle — the per-read staleness guard
+    * ([[histogramsFor]]) depends on the version being READ, so it must run
+    * per call, not per generation.
     */
   private val ndvCache = new java.util.concurrent.ConcurrentHashMap[
     String,
-    (Long, (Map[String, Double], graft.operators.StatsHistogram.Stamped,
+    (IndexStore.Head, (Map[String, Double], graft.operators.StatsHistogram.Stamped,
       graft.operators.StatsSketch.Lifecycle))]()
-
-  private def fingerprint(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return None
-    val parts = Seq(new Path(p, "meta"), new Path(p, "registers"),
-        new Path(p, "histogram"))
-      .filter(fs.exists)
-    if (parts.isEmpty) return None
-    var count = 0L; var len = 0L; var mtime = 0L
-    parts.foreach { d =>
-      fs.listStatus(d).foreach { st =>
-        count += 1; len += st.getLen; mtime = math.max(mtime, st.getModificationTime)
-      }
-    }
-    Some(count * 1000003L ^ len * 2862933555777941757L ^ mtime)
-  }
 
   /** The stats dir's per-column NDV estimates, RAW stamped histogram
     * bins and sketch lifecycle (logical column names), via the
@@ -110,18 +93,18 @@ object PlanStats {
   def statsFor(spark: SparkSession, sketchDir: String): Option[
       (Map[String, Double], graft.operators.StatsHistogram.Stamped,
         graft.operators.StatsSketch.Lifecycle)] =
-    fingerprint(spark, sketchDir).flatMap { fp =>
+    IndexStore.headOption(spark, sketchDir).flatMap { head =>
       val hit = ndvCache.get(sketchDir)
-      if (hit != null && hit._1 == fp) Some(hit._2)
+      if (hit != null && hit._1 == head) Some(hit._2)
       else Option(ndvCache.compute(sketchDir, { (_, prev) =>
-        if (prev != null && prev._1 == fp) prev
+        if (prev != null && prev._1 == head) prev
         else try {
-          val ndv = graft.operators.StatsSketch.estimate(spark, sketchDir)
+          val ndv = graft.operators.StatsSketch.estimate(spark, head)
             .select(col("column"), col("ndv_est")).collect()
             .map(r => r.getString(0) -> r.getDouble(1)).toMap
-          (fp, (ndv,
-            graft.operators.StatsHistogram.readStamped(spark, sketchDir),
-            graft.operators.StatsSketch.lifecycle(spark, sketchDir)))
+          (head, (ndv,
+            graft.operators.StatsHistogram.readStamped(spark, head),
+            graft.operators.StatsSketch.lifecycle(head)))
         } catch { case scala.util.control.NonFatal(_) => null }
       })).map(_._2)
     }

@@ -493,7 +493,8 @@ object StreamingIngest {
     * drops everything, and appends nothing — the correct fixed point.
     * The first batch against a missing index pins (n, numHashes, bands,
     * seed) by saving an empty index up front, so every later probe and
-    * append provably shares the build parameters.
+    * append provably shares the build parameters; later batches read them
+    * from the index header (no Spark job).
     */
   def streamNearDupIngest(
       spark: SparkSession,
@@ -521,25 +522,23 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
-        val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-        val fs = metaPath.getFileSystem(s.sessionState.newHadoopConf())
-        if (!fs.exists(metaPath))
-          TextDedup.minHashIndexSave(batch.limit(0), idCol, textCol,
-            indexDir, n, numHashes, bands)
-        else {
-          // The history probe and index append read the PINNED meta; the
-          // within-batch dedup below uses the caller's (n, numHashes,
-          // bands). A restart with different args would silently change
-          // within-batch semantics relative to the index — refuse instead
-          // of diverging from the q117-per-micro-batch contract.
-          val m = s.read.parquet(s"$indexDir/meta").head()
-          val pinned = (m.getInt(0), m.getInt(1), m.getInt(2))
-          require(pinned == ((n, numHashes, bands)),
-            s"streamNearDupIngest: passed (n=$n, numHashes=$numHashes, " +
-              s"bands=$bands) conflict with the index's pinned " +
-              s"(n=${pinned._1}, numHashes=${pinned._2}, bands=${pinned._3}) " +
-              s"at $indexDir/meta — restart with the pinned parameters or " +
-              "rebuild the index")
+        graft.sources.IndexStore.headOption(s, indexDir) match {
+          case None =>
+            TextDedup.minHashIndexSave(batch.limit(0), idCol, textCol,
+              indexDir, n, numHashes, bands)
+          case Some(head) =>
+            // The history probe and index append read the PINNED header;
+            // the within-batch dedup below uses the caller's (n, numHashes,
+            // bands). A restart with different args would silently change
+            // within-batch semantics relative to the index — refuse instead
+            // of diverging from the q117-per-micro-batch contract.
+            val pinned = (head("n").toInt, head("num_hashes").toInt, head("bands").toInt)
+            require(pinned == ((n, numHashes, bands)),
+              s"streamNearDupIngest: passed (n=$n, numHashes=$numHashes, " +
+                s"bands=$bands) conflict with the index's pinned " +
+                s"(n=${pinned._1}, numHashes=${pinned._2}, bands=${pinned._3}) " +
+                s"at $indexDir — restart with the pinned parameters or " +
+                "rebuild the index")
         }
         val verify =
           if (verifyWithCorpus && ParquetTable.exists(s, outPath))
@@ -638,8 +637,10 @@ object StreamingIngest {
     * stream with a watermark or a batch frame; the batch twin is
     * oracle-checked as q31_sessions).
     */
-  /** Initialize a STREAMING ANN index dir: persist the frozen coarse
-    * centroids (from an offline [[graft.operators.IvfAnn.build]]) so
+  /** Initialize a STREAMING ANN index dir: one
+    * [[graft.sources.IndexStore]] version holding the frozen coarse
+    * centroids (from an offline [[graft.operators.IvfAnn.build]]) and an
+    * empty `assigned` artifact dir the stream's file sink fills, so
     * [[embeddingStreamIndex]] batches and [[graft.operators.IvfAnn.load]]
     * searches share one assignment. Centroids are frozen by design (the
     * faiss practice — retrain offline and re-assign wholesale when drift
@@ -649,10 +650,13 @@ object StreamingIngest {
       spark: SparkSession,
       indexDir: String,
       centroids: Array[Array[Float]]): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    graft.sources.IndexStore.save(spark, indexDir, "initStreamIndex", Map.empty)(
+      graft.operators.IvfAnn.centroidArtifact(spark, "centroids", centroids),
+      "assigned" -> { p =>
+        val dir = new org.apache.hadoop.fs.Path(p)
+        dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir); ()
+      })
+    ()
   }
 
   /** Streaming ANN index maintenance: embedding batches land in the SAME
@@ -679,12 +683,10 @@ object StreamingIngest {
       checkpointDir: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): StreamingQuery = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("centroid_id")).collect()
-      .map(_.getSeq[Float](1).toArray)
+    val head = graft.sources.IndexStore.head(spark, indexDir)
+    val centroids = graft.operators.IvfAnn.readCentroids(spark, head, "centroids")
     require(centroids.nonEmpty,
-      s"embeddingStreamIndex: no centroids at $indexDir/centroids — " +
-        "run initStreamIndex first")
+      s"embeddingStreamIndex: no centroids at $indexDir — run initStreamIndex first")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(idCol,
         org.apache.spark.sql.types.LongType, nullable = false),
@@ -702,7 +704,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .partitionBy("centroid_id")
       .format("parquet")
-      .option("path", s"$indexDir/assigned")
+      .option("path", head.paths("assigned").head)
       .start()
   }
 

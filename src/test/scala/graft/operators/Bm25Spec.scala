@@ -104,14 +104,16 @@ class Bm25Spec extends SparkSpec {
     val fullDir = tmpDir("bm25full") + "/index"
     Bm25.buildIndex(docs.unionByName(more), "doc_id", "text", fullDir)
 
-    def stats(dir: String) = (
-      spark.read.parquet(s"$dir/postings")
+    def stats(dir: String) = {
+      val head = graft.sources.IndexStore.head(spark, dir)
+      (head.read(spark, "postings")
         .as[(Long, Long, Long)].collect().sorted.toSeq,
-      spark.read.parquet(s"$dir/doclens")
+      head.read(spark, "doclens")
         .as[(Long, Long)].collect().sorted.toSeq,
-      spark.read.parquet(s"$dir/termstats")
+      head.read(spark, "termstats")
         .as[(Long, Long)].collect().sorted.toSeq,
-      spark.read.parquet(s"$dir/meta").as[(Double, Double, Long)].head())
+      (head("n").toDouble, head("avgdl").toDouble))
+    }
     assert(stats(incDir) === stats(fullDir))
 
     val queries = Seq((1L, "spark tables"), (2L, "join fast"))
@@ -128,28 +130,5 @@ class Bm25Spec extends SparkSpec {
         "doc_id", "text", incDir)
     }
     assert(e.getMessage.contains("already indexed"))
-  }
-
-  test("a torn mid-append index is refused, not silently served") {
-    val dir = tmpDir("bm25torn") + "/index"
-    Bm25.buildIndex(docs, "doc_id", "text", dir)
-    // simulate a crash AFTER the postings append but BEFORE the meta
-    // swap: extra posting rows land, the n_postings marker does not
-    Seq((99L, 12345L, 2L)).toDF("doc_id", "term", "tf")
-      .write.mode("append").parquet(s"$dir/postings")
-    val queries = Seq((1L, "spark")).toDF("query_id", "qtext")
-    val e = intercept[IllegalArgumentException] {
-      Bm25.topKIndexed(spark, dir, queries, "query_id", "qtext", k = 2)
-    }
-    assert(e.getMessage.contains("torn"))
-    val e2 = intercept[IllegalArgumentException] {
-      Bm25.appendToIndex(Seq((8L, "fresh text")).toDF("doc_id", "text"),
-        "doc_id", "text", dir)
-    }
-    assert(e2.getMessage.contains("torn"))
-    // a rebuild restores service
-    Bm25.buildIndex(docs, "doc_id", "text", dir)
-    assert(Bm25.topKIndexed(spark, dir, queries, "query_id", "qtext", k = 2)
-      .count() > 0)
   }
 }

@@ -96,6 +96,8 @@ class IvfAnnSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted.toSeq
     assert(res(loaded) === res(idx))
     // the inverted file landed partitioned by cell → probe-time pruning
-    assert(new java.io.File(s"$dir/assigned/centroid_id=0").exists())
+    val assigned = graft.sources.IndexStore.head(spark, dir).paths("assigned")
+    assert(assigned.size === 1)
+    assert(new java.io.File(s"${assigned.head}/centroid_id=0").exists())
   }
 }

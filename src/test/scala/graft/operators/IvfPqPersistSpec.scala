@@ -71,7 +71,9 @@ class IvfPqPersistSpec extends SparkSpec {
     PqAnn.saveIvfPq(spark, build(c), dir)
     // one file per cell by construction (saveIvfPq clusters before the
     // partitioned write) — so file counts map 1:1 to cell directories
-    val cellDirs = new java.io.File(s"$dir/encoded").listFiles()
+    val encoded = graft.sources.IndexStore.head(spark, dir).paths("encoded")
+    assert(encoded.size === 1)
+    val cellDirs = new java.io.File(encoded.head).listFiles()
       .filter(_.getName.startsWith("centroid_id=")).map(_.getName).sorted
     assert(cellDirs.length === 3, s"expected 3 cell dirs, got ${cellDirs.mkString(",")}")
     val loaded = PqAnn.loadIvfPq(spark, dir)

@@ -68,14 +68,14 @@ class StatsSketchSpec extends SparkSpec {
     // compaction folds generations without changing answers
     StatsSketch.compact(spark, dir)
     assert(StatsSketch.estimate(spark, dir).collect().toSeq === b)
-    assert(spark.read.parquet(s"$dir/registers").count() <= 4096)
+    assert(graft.sources.IndexStore.head(spark, dir).read(spark, "registers").count() <= 4096)
   }
 
   test("append reads (p, seed) from pinned meta, not caller defaults") {
     val dir = tmpDir("hll_pin") + "/s"
     StatsSketch.save(ids(0, 1000), Seq("id"), dir, p = 9, seed = 99L)
     StatsSketch.append(ids(1000, 2000), Seq("id"), dir)
-    val reg = spark.read.parquet(s"$dir/registers")
+    val reg = graft.sources.IndexStore.head(spark, dir).read(spark, "registers")
     // appended registers live in the build's 2^9 bucket space
     assert(reg.agg(max(col("bucket"))).head().getInt(0) < 512)
     val est = StatsSketch.estimate(spark, dir).head()

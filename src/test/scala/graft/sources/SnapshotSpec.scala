@@ -41,13 +41,20 @@ class SnapshotSpec extends SparkSpec {
     ParquetTable.renameColumn(spark, p, "x", "amount")
     ParquetTable.compactWhere(spark, p, col("day") === "d1")
 
-    val all = Seq(u, clone, p).flatMap(manifests)
-    assert(all.size === 12)
+    // an index dir: artifact entries and the #props= header
+    val idx = tmpDir("snap-idx") + "/index"
+    val docs = Seq((1L, "spark tables"), (2L, "bloom filters")).toDF("doc_id", "text")
+    graft.operators.Bm25.buildIndex(docs, "doc_id", "text", idx)
+    graft.operators.Bm25.appendToIndex(Seq((3L, "tables again")).toDF("doc_id", "text"),
+      "doc_id", "text", idx)
+
+    val all = Seq(u, clone, p, idx).flatMap(manifests)
+    assert(all.size === 14)
     all.foreach { case (v, m) =>
       assert(ParquetTable.Snapshot.parse(v, m).render === m)
     }
     // every header and both body shapes were exercised
-    Seq("#ts=", "#txn=app.1:4", "#dv=", "#colmap=", "\t").foreach { s =>
+    Seq("#ts=", "#txn=app.1:4", "#dv=", "#colmap=", "#props=avgdl=", "postings\t_d", "\t").foreach { s =>
       assert(all.exists(_._2.contains(s)), s)
     }
   }
@@ -71,5 +78,24 @@ class SnapshotSpec extends SparkSpec {
     val legacyUnpartitioned = ParquetTable.Snapshot.parse(1L, "_v1\n")
     assert(legacyUnpartitioned.entries === Seq("" -> "_v1"))
     assert(legacyUnpartitioned.render === "_v1")
+  }
+
+  test("#props= round-trips doubles bit-identical and refuses tab, CR and LF") {
+    val doubles = Seq(1.0 / 3, 2.5e-300, -0.0, Double.MaxValue, 7.0)
+    val s = ParquetTable.Snapshot(Seq("postings" -> "_d1"),
+      props = doubles.zipWithIndex.map { case (d, i) => s"d$i" -> java.lang.Double.toString(d) }
+        .toMap + ("cols" -> "a,b=c"))
+    val back = ParquetTable.Snapshot.parse(1L, s.render)
+    assert(back.props("cols") === "a,b=c")
+    doubles.zipWithIndex.foreach { case (d, i) =>
+      assert(java.lang.Double.doubleToRawLongBits(back.props(s"d$i").toDouble) ===
+        java.lang.Double.doubleToRawLongBits(d))
+    }
+    assert(back.render === s.render)
+    Seq("k" -> "a\tb", "k" -> "a\nb", "k" -> "a\rb", "k\t" -> "v", "a=b" -> "v", "" -> "v")
+      .foreach { kv =>
+        intercept[IllegalArgumentException](
+          ParquetTable.Snapshot(Seq("x" -> "_d1"), props = Map(kv)).render)
+      }
   }
 }

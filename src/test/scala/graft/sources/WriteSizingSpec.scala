@@ -113,7 +113,7 @@ class WriteSizingSpec extends SparkSpec {
     graft.operators.StatsSketch.append(
       (5001 to 9000).map(i => (i.toLong, i % 97)).toDF("k", "v"),
       Seq("k", "v"), dir)
-    assert(parquetFiles(s"$dir/registers").size == 2,
+    assert(IndexStore.head(spark, dir).paths("registers").flatMap(parquetFiles).size == 2,
       "save + append = exactly two single-file register generations")
   }
 }

@@ -339,6 +339,47 @@ class StreamingIngestSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted === Seq(1L, 2L))
   }
 
+  test("streamNearDupIngest: a micro-batch reads the pinned parameters without a Spark job") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val root = tmpDir("stream-neardup-jobs")
+    Files.createDirectories(Paths.get(s"$root/in"))
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false)))
+    def write(name: String, rows: (Long, String)*): Unit =
+      frame(schema, rows.map(r => org.apache.spark.sql.Row(r._1, r._2)))
+        .coalesce(1).write.parquet(s"$root/in/$name")
+    def run(): Unit = StreamingIngest.streamNearDupIngest(
+      spark, s"$root/in/*", schema, "doc_id", "text",
+      s"$root/corpus", s"$root/index", threshold = 0.5, s"$root/ckpt",
+      n = 2, numHashes = 32, bands = 16).awaitTermination()
+    write("b1", 1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "completely different text about spark engines")
+    run()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    write("b2", 10L -> "the quick brown fox jumps over the lazy cat",
+      11L -> "entirely unrelated musings on parquet footers")
+    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try run()
+    finally {
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // the same micro-batch ran 34 jobs when every batch re-read the 1-row
+    // meta parquet: the header read takes none
+    assert(jobs.get() <= 33, s"${jobs.get()} jobs")
+    assert(ParquetTable.read(spark, s"$root/corpus")
+      .collect().map(_.getLong(0)).sorted === Seq(1L, 2L, 11L))
+    // save, then one append per micro-batch, each its own bands dir
+    assert(graft.sources.IndexStore.head(spark, s"$root/index").paths("bands").size === 3)
+  }
+
   test("hourlyEventCounts: watermarked windowed aggregation over a file stream") {
     val root = tmpDir("stream-agg")
     val in = s"$root/in"
