@@ -131,4 +131,40 @@ class Bm25Spec extends SparkSpec {
     }
     assert(e.getMessage.contains("already indexed"))
   }
+
+  test("a torn mid-append index is refused, not silently served") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.{IndexStore, ParquetTable}
+    val dir = tmpDir("bm25torn") + "/index"
+    Bm25.buildIndex(docs, "doc_id", "text", dir)
+    val queries = Seq((1L, "spark")).toDF("query_id", "qtext")
+    def res(d: String) = Bm25.topKIndexed(spark, d, queries, "query_id", "qtext", k = 5)
+      .orderBy("rank").as[(Long, Int, Long, Double)].collect().toSeq
+    val before = res(dir)
+    val head = IndexStore.head(spark, dir)
+    // simulate a crash AFTER the append staged its postings and doclens
+    // but BEFORE the manifest CAS: doc 99 (a copy of doc 2, which would
+    // rank first for "spark") lands in a data dir no version names
+    val staged = s"$dir/_d${System.currentTimeMillis()}_0"
+    head.read(spark, "postings").filter(col("doc_id") === 2L)
+      .withColumn("doc_id", lit(99L)).write.parquet(s"$staged/postings")
+    head.read(spark, "doclens").filter(col("doc_id") === 2L)
+      .withColumn("doc_id", lit(99L)).write.parquet(s"$staged/doclens")
+    // the torn append is not served: same version, same results
+    assert(IndexStore.head(spark, dir).version === head.version)
+    assert(res(dir) === before)
+    assert(!res(dir).exists(_._3 == 99L))
+    assert(ParquetTable.fsck(spark, dir).collect().map(r => (r.getString(0), r.getString(2)))
+      .toSeq === Seq(("orphan_dir", staged.split('/').last)))
+    // the next append builds on the committed version only: it equals a
+    // rebuild that never saw doc 99, and vacuum reclaims the staged dir
+    val fresh = Seq((8L, "fresh spark text")).toDF("doc_id", "text")
+    Bm25.appendToIndex(fresh, "doc_id", "text", dir)
+    val rebuilt = tmpDir("bm25torn_full") + "/index"
+    Bm25.buildIndex(docs.unionByName(fresh), "doc_id", "text", rebuilt)
+    assert(res(dir) === res(rebuilt))
+    ParquetTable.vacuum(spark, dir)
+    assert(ParquetTable.fsck(spark, dir).count() === 0)
+    assert(res(dir) === res(rebuilt))
+  }
 }
