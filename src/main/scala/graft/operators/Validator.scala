@@ -15,10 +15,11 @@ import graft.schemas.TableSpec
   *   - every null in a `nullable=false` schema field is an error
   *     (etl_utils.py:113-121);
   *   - table rules (e.g. total_amount > 0, etl_utils.py:163-168);
-  *   - referential integrity per FK against a reference frame's distinct
-  *     key set (etl_utils.py:125-159) — expressed here as ONE left-outer
-  *     join per FK with a null-flag check, folding the reference's
-  *     anti-join + flag-join-back pair into a single join;
+  *   - referential integrity per FK against a reference frame's key set
+  *     (etl_utils.py:125-159) — expressed here as ONE correlated `EXISTS`
+  *     per FK, which the optimizer turns into an existence join: every
+  *     input row is kept exactly once and flagged, folding the
+  *     reference's anti-join + flag-join-back pair into a single join;
   *   - final rendering `concat_ws("; ", errors)` (etl_utils.py:176-180);
   *   - the split projects back to the declared schema, fixing the
   *     reference's leaked helper-column bug (etl_utils.py:186-187 drops only
@@ -26,11 +27,14 @@ import graft.schemas.TableSpec
   *
   * Scale notes: null/rule checks are pure Catalyst expressions folded into
   * one whole-stage-codegen pass — zero shuffles. Each FK check is one
-  * equi-join against a deduplicated key set; the key set is typically much
-  * smaller than the fact table, so AQE picks a broadcast join at runtime
-  * (we deliberately do not force `broadcast()` — at 100 TB a dimension's
-  * distinct key set can exceed driver memory, and a shuffle join is then
-  * correct; AQE decides from actual sizes).
+  * existence join against the reference column as it is: an existence
+  * join emits each probe row once whatever the build side holds, so
+  * duplicate reference keys need no `distinct()` aggregate over the whole
+  * reference table, and a NULL reference key matches nothing. The key
+  * column is typically much smaller than the fact table, so AQE picks a
+  * broadcast join at runtime (we deliberately do not force `broadcast()`
+  * — at 100 TB a dimension's key column can exceed driver memory, and a
+  * shuffle join is then correct; AQE decides from actual sizes).
   */
 object Validator {
 
@@ -58,20 +62,21 @@ object Validator {
     spec.rules.foreach(r => acc = appendError(acc, r.fails, r.message))
     var out = df.withColumn(AccCol, acc)
 
-    // 2. Referential integrity: one left-outer join per FK against the
-    //    deduplicated reference key set. A non-null FK value with no match
-    //    is a violation; NULL FK values are handled by the null rules.
+    // 2. Referential integrity: one correlated EXISTS per FK against the
+    //    reference column. A non-null FK value with no match is a
+    //    violation; NULL FK values are handled by the null rules.
+    //    The FK value is compared under a name the reference frame cannot
+    //    hold: an outer reference whose name also resolves inside the
+    //    subquery binds to the inner column instead.
     spec.foreignKeys.foreach { fk =>
       references.get(fk.refTable).foreach { ref =>
-        val marker = s"__graft_ref_${fk.refTable}_${fk.refColumn}"
-        val refKeys = ref.select(col(fk.refColumn).as(marker)).distinct()
-        out = out
-          .join(refKeys, out(fk.column) === refKeys(marker), "left_outer")
+        val key = s"__graft_fk_${fk.column}"
+        val found = ref.where(ref(fk.refColumn) === col(key).outer()).exists()
+        out = out.withColumn(key, col(fk.column))
           .withColumn(AccCol,
-            appendError(col(AccCol),
-              col(fk.column).isNotNull && col(marker).isNull,
+            appendError(col(AccCol), col(fk.column).isNotNull && !found,
               s"Invalid ${fk.column}: not found in ${fk.refTable}"))
-          .drop(marker)
+          .drop(key)
       }
     }
 
@@ -98,13 +103,21 @@ object Validator {
   }
 
   /** Rejected-records metadata columns (reference: src/etl_utils.py:251-253,
-    * src/glue_etl.py:265-267).
+    * src/glue_etl.py:265-267). `rejection_time` is one instant per call,
+    * taken on the driver when the frame is built — what
+    * `current_timestamp()` gives — but served by a zero-argument function
+    * instead of a literal: constant folding inlines a timestamp literal
+    * into the generated class, so every write would compile its own
+    * copy of the same code, while the function rides in the class's
+    * references and the class body stays the same from write to write.
     */
-  def withRejectionMetadata(rejected: DataFrame, source: String, jobName: String): DataFrame =
+  def withRejectionMetadata(rejected: DataFrame, source: String, jobName: String): DataFrame = {
+    val at = java.sql.Timestamp.from(java.time.Instant.now())
     rejected
-      .withColumn("rejection_time", current_timestamp())
+      .withColumn("rejection_time", udf(() => at).asNonNullable()())
       .withColumn("source", lit(source))
       .withColumn("job_name", lit(jobName))
+  }
 
   /** Rejection summary: error type → count, most frequent first
     * (reference: src/glue_etl.py:284-289). The top-k is pushed into the

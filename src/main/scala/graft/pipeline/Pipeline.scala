@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -38,9 +38,10 @@ object Pipeline {
       rejectedDir: String,    // rejected records at <rejectedDir>/<name>
       archiveDir: Option[String] = None,
       jobName: String = "graft-etl",
-      // post-merge full-table recount for TableResult.mergedRows — exact
-      // observability at reference scale, a full extra scan at 100 TB;
-      // disable there and read counts from the parquet footers instead
+      // TableResult.mergedRows after the merge, exact: summed from the
+      // live files' parquet footers (one footer read per file, no scan
+      // job); a versioned target, whose manifest and deletion vectors
+      // decide what is live, is counted by a scan. false reports -1
       countAfterMerge: Boolean = true,
       // durable notification outbox (the reference's SNS publishes,
       // delta-lake.json:216-265) — None keeps the log/exit-code surface
@@ -63,7 +64,7 @@ object Pipeline {
     require(cfg.notifyDir.isEmpty || cfg.runId.nonEmpty,
       "pipeline: notifyDir is set but runId is empty — the outbox dedupes " +
         "on (run_id, status), so each execution needs its own explicit id")
-    notified(cfg, "etl") {
+    notified(cfg, "etl") { sharedClassNames(spark) {
       val refs = scala.collection.mutable.Map.empty[String, DataFrame]
       val results = Schemas.all.map { spec =>
         val res = notified(cfg, spec.name) {
@@ -84,6 +85,24 @@ object Pipeline {
         ()
       }
       results
+    } }
+  }
+
+  /** Runs `body` with `spark.sql.codegen.useIdInClassName=false`, then
+    * restores the session's own setting. A whole-stage class is otherwise
+    * named after its codegen stage id, which AQE re-numbers as it
+    * re-plans, so the same pipeline compiled under another id is a new
+    * entry in Spark's codegen cache; unnamed, a load's plan shapes compile
+    * once and later loads reuse them.
+    */
+  private def sharedClassNames[A](spark: SparkSession)(body: => A): A = {
+    val key = "spark.sql.codegen.useIdInClassName"
+    val before = spark.conf.getAll.get(key)
+    spark.conf.set(key, "false")
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
@@ -110,35 +129,48 @@ object Pipeline {
   /** One dataset through the full path (reference: src/glue_etl.py:217-320).
     * The validated frame is persisted (the reference's cache+count at
     * glue_etl.py:228-229), and ONE accounting pass over it — rows per
-    * distinct `validation_errors` value, i.e. per combination of failed
-    * rules (a handful), collected to the driver — yields the input and
-    * rejected counts, the clean-input check and the rejection summary. The
-    * rejected append and the merge then read the cached rows, so the CSV
-    * scan and validation joins run once.
+    * distinct (`validation_errors`, partition columns) value, i.e. per
+    * combination of failed rules and target partition (a handful per
+    * partition), collected to the driver — yields the input and rejected
+    * counts, the clean-input check, the rejection summary and the
+    * partition set of the merge: the partitions of ALL valid rows, taken
+    * before the dedup (which keeps an arbitrary row per key), so the merge
+    * reads and rewrites exactly those partitions without a job of its own
+    * to find them. The rejected append and the merge then read the cached
+    * rows, so the CSV scan and validation joins run once. `mergedRows`
+    * comes from the merged table's file footers (see
+    * [[Config.countAfterMerge]]). The body runs under
+    * [[sharedClassNames]], like [[run]].
     */
   def processDataset(
       spark: SparkSession,
       cfg: Config,
       spec: TableSpec,
-      references: Map[String, DataFrame]): TableResult = {
+      references: Map[String, DataFrame]): TableResult = sharedClassNames(spark) {
     val raw = CsvIngest.readConformed(spark, inputPath(cfg, spec.name), spec)
     val annotated = Validator.validate(raw, spec, references)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val errors = col(Validator.ErrorsCol)
-      val byError = annotated.groupBy(errors).count().collect()
-        .map(r => Option(r.getString(0)) -> r.getLong(1)).toSeq
+      val parts = spec.partitionColumns
+      // (errors, partition values…) -> rows, counted by a map-side-combined
+      // `countByValue`: a handful of keys, and no generated aggregate
+      // classes (`groupBy().count()` compiles four more per table)
+      val groups = annotated.select((errors +: parts.map(col)): _*).rdd.countByValue().toSeq
+      val byError = groups.groupMapReduce(g => Option(g._1.getString(0)))(_._2)(_ + _).toSeq
       val inputRows = byError.map(_._2).sum
       val rejectedRows = writeRejected(annotated.filter(errors.isNotNull),
         byError.collect { case (Some(msg), n) => msg -> n }, cfg, spec)
+      val validParts = groups.collect { case (g, _) if g.isNullAt(0) => Row.fromSeq(g.toSeq.tail) }
       val deduped = Deduplicator.dropDuplicatesByKey(
         annotated.filter(errors.isNull).select(spec.columnNames.map(col): _*),
         spec.primaryKey)
-      ParquetTable.merge(spark, tablePath(cfg, spec.name), deduped,
-        spec.primaryKey, spec.partitionColumns)
+      val table = tablePath(cfg, spec.name)
+      ParquetTable.mergeWithin(spark, table, deduped, spec.primaryKey, parts, Some(validParts))
       val mergedRows =
-        if (cfg.countAfterMerge) ParquetTable.read(spark, tablePath(cfg, spec.name)).count()
-        else -1L
+        if (!cfg.countAfterMerge) -1L
+        else ParquetTable.plainRowCount(spark, table)
+          .getOrElse(ParquetTable.read(spark, table).count())
       TableResult(spec.name, inputRows, inputRows - rejectedRows, rejectedRows, mergedRows)
     } finally annotated.unpersist()
   }

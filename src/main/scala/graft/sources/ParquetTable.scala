@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -352,79 +352,77 @@ object ParquetTable {
     * cluster conf (thousands of shuffle partitions) a modest commit
     * scatters thousands of KB-sized files. The estimate is the analyzed
     * plan's sizeInBytes — for parquet scans the actual compressed input
-    * bytes; filters and joins only ever round it UP (size-only visitor).
-    * Row-multiplying operators do NOT: a Generate (explode) estimates at
-    * about its input's size however many rows it emits, so a
-    * shuffle-bearing plan that explodes a small input can be packed into
-    * one file although its output is large. Fires only when the write
-    * would otherwise scatter tiny files, and resizes with a post-compute
-    * `repartition` — see the inline comments for why each of those
-    * choices is load-bearing.
+    * bytes. It is NOT an upper bound on the output: the size-only visitor
+    * scales by row width, never by row multiplicity, so a Generate
+    * (explode) estimates at about its input's size however many rows it
+    * emits. A plan that contains one therefore never takes the one-file
+    * path. Fires only when the write would otherwise scatter tiny files,
+    * and resizes with a post-compute `repartition` — see the inline
+    * comments for why each of those choices is load-bearing.
     */
   private[graft] def sizedForWrite(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
     val target = targetFileBytes(df.sparkSession)
-    // a repartition/coalesce at the ROOT of the caller's plan (under
-    // row-preserving wrappers only) is a layout directive — "write
+    // ONE walk of the analyzed plan collects the three facts below.
+    // `directive`: a repartition/coalesce at the ROOT of the caller's plan
+    // (under row-preserving wrappers only) is a layout directive — "write
     // exactly these partitions" — and the sizing must never silently
     // override it. Deeper repartitions (e.g. a reader fanning a
     // single-file scan out for compute) are NOT write-layout intent and
     // stay subject to sizing.
-    @annotation.tailrec
-    def rootDirective(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    // `scatters`: a SHUFFLE-FREE plan (scan → project/filter → write)
+    // already writes bytes-proportional file counts — its partitioning IS
+    // the scan's splits — so packing it buys nothing and the repartition
+    // exchange is pure waste (measured on q57's fixture create at sf1:
+    // ~27 MB of parquet re-shuffled to produce the same one file the scan
+    // would have written). Only a plan with a shuffle-inducing operator
+    // scatters `spark.sql.shuffle.partitions` files regardless of size.
+    // `generates`: a row-multiplying Generate, whose output the estimate
+    // cannot bound (see above).
+    var directive, scatters, generates = false
+    def walk(p: LogicalPlan, onRootChain: Boolean): Unit = {
       p match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => true
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project => rootDirective(pr.child)
-        case sa: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias => rootDirective(sa.child)
-        case _ => false
+        case _: RepartitionOperation => directive ||= onRootChain; scatters = true
+        case _: Join | _: Aggregate | _: Distinct | _: Deduplicate => scatters = true
+        case _: Window | _: Sort | _: Intersect | _: Except => scatters = true
+        case _: Generate => generates = true
+        case _ =>
       }
-    if (target <= 0L || rootDirective(df.queryExecution.analyzed)) df
-    else {
-      // ANALYZED plan stats, not optimized: the size-only visitor reads
-      // the same leaf bytes either way (filters/joins don't shrink the
-      // estimate without CBO), and asking for the optimized plan here
-      // would run the optimizer a SECOND time per commit — the write
-      // itself re-plans the resized tree (measured ~0.3-0.5 s per
-      // commit on merge-sized plans)
-      // A SHUFFLE-FREE plan (scan → project/filter → write) already
-      // writes bytes-proportional file counts — its partitioning IS the
-      // scan's splits — so packing it buys nothing and the repartition
-      // exchange is pure waste (measured on q57's fixture create at
-      // sf1: ~27 MB of parquet re-shuffled to produce the same one
-      // file the scan would have written). Only a plan with a
-      // shuffle-inducing operator scatters `spark.sql.shuffle.partitions`
-      // files regardless of size.
-      import org.apache.spark.sql.catalyst.plans.logical._
-      val scattersFiles = df.queryExecution.analyzed.exists {
-        case _: Join | _: Aggregate | _: Distinct | _: Deduplicate => true
-        case _: Window | _: Sort | _: RepartitionOperation => true
-        case _: Intersect | _: Except => true
-        case _ => false
-      }
-      val est = df.queryExecution.analyzed.stats.sizeInBytes
-      // Fire ONLY for a genuinely SMALL artifact — estimate at or under
-      // a quarter of one target file (32 MiB at the default). Such an
-      // artifact gains nothing from more files (openCost packing folds
-      // its sibling files into 1-2 scan splits either way) and loses a
-      // footer-census open + listing entry per file on every later
-      // read. Anything bigger keeps its native layout: the files ARE
-      // the downstream scan's split parallelism, and resizing them was
-      // measured (sf1, take 1 of this change) to serialize the next
-      // merge's join and the full-scan ANALYZE for seconds per commit —
-      // far more than the metadata it saved. Join-shaped plans (change
-      // manifests, DV slices) estimate as size PRODUCTS under the
-      // size-only visitor and therefore never fire — correct, if
-      // accidental: their consumers full-scan them.
-      if (!scattersFiles || est > target / 4) df
-      else
-        // `repartition`, DELIBERATELY not `coalesce`: coalesce imposes
-        // the file count by collapsing the plan's final stage, which
-        // serializes whatever compute lives there (measured at sf1: a
-        // coalesce(1)d merge ran its whole join+encode on one core —
-        // q57 3.5 s → 16.2 s, q148 17.6 s → 61.4 s). The repartition
-        // exchange moves only the bytes about to be written — by
-        // construction at most a quarter target file.
-        df.repartition(1)
+      val chain = onRootChain && (p.isInstanceOf[Project] || p.isInstanceOf[SubqueryAlias])
+      p.children.foreach(walk(_, chain))
     }
+    val plan = df.queryExecution.analyzed
+    walk(plan, onRootChain = true)
+    // ANALYZED plan stats, not optimized: the size-only visitor reads
+    // the same leaf bytes either way (filters/joins don't shrink the
+    // estimate without CBO), and asking for the optimized plan here
+    // would run the optimizer a SECOND time per commit — the write
+    // itself re-plans the resized tree (measured ~0.3-0.5 s per
+    // commit on merge-sized plans).
+    // Fire ONLY for a genuinely SMALL artifact — estimate at or under
+    // a quarter of one target file (32 MiB at the default). Such an
+    // artifact gains nothing from more files (openCost packing folds
+    // its sibling files into 1-2 scan splits either way) and loses a
+    // footer-census open + listing entry per file on every later
+    // read. Anything bigger keeps its native layout: the files ARE
+    // the downstream scan's split parallelism, and resizing them was
+    // measured (sf1, take 1 of this change) to serialize the next
+    // merge's join and the full-scan ANALYZE for seconds per commit —
+    // far more than the metadata it saved. Join-shaped plans (change
+    // manifests, DV slices) estimate as size PRODUCTS under the
+    // size-only visitor and therefore never fire — correct, if
+    // accidental: their consumers full-scan them.
+    if (target <= 0L || directive || !scatters || generates ||
+        plan.stats.sizeInBytes > target / 4) df
+    else
+      // `repartition`, DELIBERATELY not `coalesce`: coalesce imposes
+      // the file count by collapsing the plan's final stage, which
+      // serializes whatever compute lives there (measured at sf1: a
+      // coalesce(1)d merge ran its whole join+encode on one core —
+      // q57 3.5 s → 16.2 s, q148 17.6 s → 61.4 s). The repartition
+      // exchange moves only the bytes about to be written — by
+      // construction at most a quarter target file.
+      df.repartition(1)
   }
 
   // Images bigger than the [[sizedForWrite]] small-artifact bar keep
@@ -662,6 +660,27 @@ object ParquetTable {
     MergeStatsPlan(broadcastKeys, bulk)
   }
 
+  /** Rows whose `partitionColumns` values (in that order) equal one of
+    * `values`, NULL matching NULL: a predicate on partition columns only,
+    * which the scan evaluates against its directory listing, so only the
+    * named partitions are read. No values selects no rows.
+    */
+  private def inPartitions(partitionColumns: Seq[String], values: Seq[Row]): Column =
+    partitionColumns match {
+      case Seq(c) =>
+        val (nulls, vs) = values.map(_.get(0)).partition(_ == null)
+        val in = if (vs.isEmpty) lit(false) else col(c).isin(vs.distinct: _*)
+        if (nulls.isEmpty) in else in || col(c).isNull
+      case _ =>
+        def any(xs: Seq[Column]): Column =
+          if (xs.isEmpty) lit(false)
+          else if (xs.size == 1) xs.head
+          else { val (l, r) = xs.splitAt(xs.size / 2); any(l) || any(r) }
+        any(values.distinct.map(r =>
+          partitionColumns.zipWithIndex.map { case (c, i) => col(c) <=> lit(r.get(i)) }
+            .reduce(_ && _)))
+    }
+
   /** Apply the planner's side decision to a deduplicated key set. */
   private def hintKeys(keys: DataFrame, broadcastKeys: Option[Boolean]): DataFrame =
     broadcastKeys match {
@@ -718,7 +737,34 @@ object ParquetTable {
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
       mergeOnRead: Option[Boolean] = None,
+      combine: Option[(DataFrame, DataFrame) => DataFrame] = None): Unit =
+    mergeWithin(spark, path, updates, pk, partitionColumns, None, filesPerPartition,
+      cdf, evolveSchema, txn, mergeOnRead, combine)
+
+  /** [[merge]] for a caller that already holds `partitionValues`: the
+    * distinct values of `partitionColumns` (in that order) over ALL of
+    * `updates`' rows, duplicates included — the rows a deduplicated
+    * `updates` is taken from. `updates` must carry those columns
+    * itself. Only a plain partitioned table uses the list, to prune its
+    * target read; `None` collects it from `updates` there.
+    */
+  private[graft] def mergeWithin(
+      spark: SparkSession,
+      path: String,
+      updates: DataFrame,
+      pk: Seq[String],
+      partitionColumns: Seq[String],
+      partitionValues: Option[Seq[Row]],
+      filesPerPartition: Int = 1,
+      cdf: Boolean = false,
+      evolveSchema: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      mergeOnRead: Option[Boolean] = None,
       combine: Option[(DataFrame, DataFrame) => DataFrame] = None): Unit = {
+    require(partitionValues.isEmpty || partitionColumns.forall(c =>
+      updates.columns.exists(spark.sessionState.conf.resolver(_, c))),
+      s"merge: partition values need the partition columns " +
+        s"${partitionColumns.mkString(", ")} in the incoming rows")
     // column mapping: the COW tiers below compute in LOGICAL space and
     // publish through atomicReplace, a full-image commit that writes
     // logical names and does NOT carry the map — i.e. the merge
@@ -780,10 +826,11 @@ object ParquetTable {
         s"$path is a plain partitioned layout")
       require(txn.isEmpty, s"merge: txn markers need a versioned table; " +
         s"$path is a plain partitioned layout")
-      // Partition-scoped merge: read ONLY the affected partitions (partition
-      // pruning via a dynamic IN-filter on collected partition values — the
-      // partition-value set is small by construction: one row per partition
-      // directory), merge, and rewrite just those partitions.
+      // Partition-scoped merge: read ONLY the affected partitions (a static
+      // partition filter on the incoming partition values, so the scan
+      // lists only those directories — the value set is small by
+      // construction: one row per partition directory), merge, and
+      // rewrite just those partitions.
       val incoming = fillColumns(spark, path,
         dedupInput(updates, pk).fold(updates)(GraftColumnBridge.ofRows(spark, _)))
       val upd = incoming.dropDuplicates(pk)
@@ -796,10 +843,18 @@ object ParquetTable {
       // of it can pick a row from another partition than the write does —
       // dynamic overwrite would then replace a partition whose untouched
       // rows were never read. This superset is deterministic.
-      val parts = incoming.select(partitionColumns.map(col): _*).distinct()
-      val affected = read(spark, path).join(parts, partitionColumns.toSeq, "left_semi")
-      val merged = combine.map(_(affected, upd)).getOrElse(
-        mergeFrames(affected, upd, pk, broadcastKeys = statsPlan.broadcastKeys))
+      val parts = partitionValues.getOrElse(
+        incoming.select(partitionColumns.map(col): _*).distinct().collect().toSeq)
+      val affected = read(spark, path).filter(inPartitions(partitionColumns, parts))
+      // the upsert image of [[mergeFrames]], with the anti-join taking the
+      // keys of the incoming rows as they are: the same key set as the
+      // deduplicated rows', and an anti-join needs no `distinct()` — one
+      // aggregate fewer per merge
+      val merged = combine.map(_(affected, upd)).getOrElse {
+        val cols = affected.columns.toSeq.map(col)
+        affected.join(hintKeys(incoming.select(pk.map(col): _*), statsPlan.broadcastKeys),
+          pk, "left_anti").select(cols: _*).unionByName(upd.select(cols: _*))
+      }
       withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
         clusterByPartitions(merged, partitionColumns, filesPerPartition)
           .write.mode(SaveMode.Overwrite)
@@ -854,6 +909,15 @@ object ParquetTable {
       }
     }
   }
+
+  /** Exact row count of a PLAIN table from its live files' parquet
+    * footers — no scan job; `None` for a versioned table, whose live files
+    * its manifest names and whose deletion vectors may mask rows.
+    */
+  private[graft] def plainRowCount(spark: SparkSession, path: String): Option[Long] =
+    if (currentVersion(spark, path).isDefined) None
+    else Some(DataSkipping.census(spark, new Path(path),
+      DataSkipping.visibleParquetFiles(spark, path).map(_._1)).values.map(_.rows).sum)
 
   // ---- versioned manifest layout ----------------------------------------
 
@@ -3346,10 +3410,11 @@ object ParquetTable {
     * time is at or after `now − horizonMillis` — always at
     * least the current version — then run the same reference-aware
     * sweep as [[vacuum]]. Pre-header manifests (no commit time) count as old.
+    * A plain table keeps only its current state, so only its statistics
+    * store has anything to sweep.
     */
   def vacuumOlderThan(spark: SparkSession, path: String, horizonMillis: Long): Unit =
-    if (versions(spark, path).nonEmpty)
-      vacuum(spark, path, keepCountForHorizon(spark, path, horizonMillis))
+    vacuum(spark, path, keepCountForHorizon(spark, path, horizonMillis))
 
   /** Retire history: keep the newest `keepLast` versions, delete older
     * manifests and every data dir (or partition subdir) no kept manifest
@@ -3360,6 +3425,12 @@ object ParquetTable {
     * Reference-aware: a partitioned manifest may point untouched
     * partitions at data dirs written MANY versions ago, so "older than
     * keepLast" alone can't justify deletion — only unreferenced dirs go.
+    *
+    * The table's statistics store ([[statsDir]], an [[IndexStore]] dir of
+    * ANALYZE sketches and histograms) is swept with the same retention:
+    * it keeps its newest `keepLast` versions — at least its current one,
+    * the only one its readers read — and every register or histogram dir
+    * a re-ANALYZE replaced goes with the rest.
     */
   def vacuum(spark: SparkSession, path: String, keepLast: Int = 2): Unit = {
     val fs = hadoopFs(spark, new Path(path))
@@ -3374,11 +3445,20 @@ object ParquetTable {
     * IS the sweep's work list ([[vacuum]] executes exactly these rows),
     * so the dry run is authoritative, not an approximation. Pure
     * metadata walk — one manifest-dir listing plus one listing per
-    * top-level dir; no data I/O, no Spark job.
+    * top-level dir; no data I/O, no Spark job. The statistics store's rows
+    * (see [[vacuum]]) follow the table's.
     */
   def vacuumPlan(
       spark: SparkSession, path: String, keepLast: Int = 2): Seq[(String, String)] = {
     require(keepLast >= 1, "vacuum must keep at least the current version")
+    val stats = statsDir(path)
+    sweepPlan(spark, path, keepLast) ++
+      (if (IndexStore.exists(spark, stats)) sweepPlan(spark, stats, keepLast) else Nil)
+  }
+
+  /** [[vacuumPlan]]'s rows for one versioned dir: a table or an index. */
+  private def sweepPlan(
+      spark: SparkSession, path: String, keepLast: Int): Seq[(String, String)] = {
     val vs = versions(spark, path)
     if (vs.isEmpty) return Nil
     val fs = hadoopFs(spark, new Path(path))
@@ -3614,7 +3694,9 @@ object ParquetTable {
   }
 
   private def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
-    val before = spark.conf.getOption(key)
+    // the explicitly set value only: `getOption` answers a registered
+    // key's default too, and restoring that would leave the key set
+    val before = spark.conf.getAll.get(key)
     spark.conf.set(key, value)
     try body
     finally before match {

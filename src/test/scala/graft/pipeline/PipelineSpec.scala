@@ -44,7 +44,27 @@ class PipelineSpec extends SparkSpec {
       rejectedDir = s"$root/rejected",
       archiveDir = Some(s"$root/archive"))
 
-    val results = Pipeline.run(spark, cfg).map(r => r.name -> r).toMap
+    /** Runs the pipeline; the run's rejected writes must stamp one non-null
+      * `rejection_time` per table, taken within the call, and the run must
+      * leave the session conf as it found it.
+      */
+    def runChecked(): Map[String, Pipeline.TableResult] = {
+      val confBefore = spark.conf.getAll
+      val stampsBefore = rejectionTimes(cfg)
+      val start = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MICROS)
+      val out = Pipeline.run(spark, cfg).map(r => r.name -> r).toMap
+      val end = java.time.Instant.now()
+      assert(spark.conf.getAll === confBefore, "Pipeline.run must restore the session conf")
+      for ((t, stamps) <- rejectionTimes(cfg)) {
+        val fresh = stamps -- stampsBefore.getOrElse(t, Set.empty)
+        assert(fresh.size === 1, s"$t: one rejection_time per write, got $fresh")
+        val at = fresh.head.getOrElse(fail(s"$t: NULL rejection_time"))
+        assert(!at.isBefore(start) && !at.isAfter(end), s"$t: $at outside [$start, $end]")
+      }
+      out
+    }
+
+    val results = runChecked()
 
     // products: 4 in, 1 rejected (null name), dup pk collapsed → 2 merged
     assert(results("products").inputRows === 4)
@@ -78,7 +98,7 @@ class PipelineSpec extends SparkSpec {
     // replaying the same input is a no-op on the curated tables (MERGE
     // idempotency — the reference's EventBridge-rerun safety)
     writeFixtures(input)
-    val again = Pipeline.run(spark, cfg).map(r => r.name -> r).toMap
+    val again = runChecked()
     assert(again("products").mergedRows === 2)
     assert(again("orders").mergedRows === 2)
     assert(again("order_items").mergedRows === 1)
@@ -104,6 +124,29 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Empties Spark's codegen cache (a private field of `CodeGenerator`), so
+    * a load's compile count does not depend on what earlier tests left
+    * there: the first load then compiles every class it needs.
+    */
+  private def clearCodegenCache(): Unit = {
+    val gen = Class.forName("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
+      .getField("MODULE$").get(null)
+    val field = gen.getClass.getDeclaredMethod("cache")
+    field.setAccessible(true)
+    val cache = field.invoke(gen)
+    cache.getClass.getMethod("loadingCache").invoke(cache)
+      .asInstanceOf[org.sparkproject.guava.cache.Cache[_, _]].invalidateAll()
+  }
+
+  /** Distinct `rejection_time` values (NULL as None) in each table's rejected sink. */
+  private def rejectionTimes(cfg: Pipeline.Config): Map[String, Set[Option[java.time.Instant]]] =
+    Seq("products", "orders", "order_items").flatMap { t =>
+      val dir = s"${cfg.rejectedDir}/$t"
+      if (!Files.exists(Paths.get(dir))) None
+      else Some(t -> spark.read.parquet(dir).select("rejection_time").distinct().collect()
+        .map(r => Option(r.getTimestamp(0)).map(_.toInstant)).toSet)
+    }.toMap
+
   test("processDataset: one accounting pass, a bounded number of Spark jobs per table") {
     val root = tmpDir("pipeline-jobs")
     val cfg = Pipeline.Config(inputDir = s"$root/raw", outputDir = s"$root/curated",
@@ -114,38 +157,59 @@ class PipelineSpec extends SparkSpec {
         jobs.incrementAndGet(); ()
       }
     }
-    /** (input, valid, rejected, merged, jobs) per table, in run order. */
-    def load(): Seq[(String, (Long, Long, Long, Long, Int))] = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    /** (input, valid, rejected, merged, jobs) per table, in run order, and
+      * the classes the load's processDataset calls compiled — from an empty
+      * codegen cache, so every class the load needs, each once per class
+      * loader that asks for it. */
+    def load(): (Seq[(String, (Long, Long, Long, Long, Int))], Long) = {
+      clearCodegenCache()
       writeFixtures(cfg.inputDir)
       val refs = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
-      graft.schemas.Schemas.all.map { spec =>
+      var compiled = 0L
+      val tables = graft.schemas.Schemas.all.map { spec =>
         org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
         jobs.set(0)
+        val c0 = compiles.getCount
         val r = Pipeline.processDataset(spark, cfg, spec, refs.toMap)
+        compiled += compiles.getCount - c0
         org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
         val n = jobs.get()
         refs(spec.name) = graft.sources.ParquetTable.read(spark, Pipeline.tablePath(cfg, spec.name))
         spec.name -> ((r.inputRows, r.validRows, r.rejectedRows, r.mergedRows, n))
       }
+      (tables, compiled)
     }
     spark.sparkContext.addSparkListener(listener)
-    val (initial, replay) =
-      try (load(), load())
+    val ((initial, c1), (replay, c2), (warm, c3)) =
+      try (load(), load(), load())
       finally spark.sparkContext.removeSparkListener(listener)
     val counts = Seq(
       "products" -> ((4L, 3L, 1L, 2L)),
       "orders" -> ((3L, 2L, 1L, 2L)),
       "order_items" -> ((3L, 1L, 2L, 1L)))
-    // jobs per table with one accounting pass and one dedup; four separate
-    // counting actions and a stacked dedup ran 16/16/20 on the initial load
-    // and 22/22/25 on the replay
+    // jobs per table with one accounting pass and one dedup, the merge's
+    // partition set taken from that pass and the merged rows from the
+    // footers; four separate counting actions and a stacked dedup ran
+    // 16/16/20 on the initial load and 22/22/25 on the replay, and a
+    // distinct+semi-join partition set and a recount scan 11/11/15 and 16/16/20
     val maxJobs = Seq(
-      initial -> Map("products" -> 11, "orders" -> 11, "order_items" -> 15),
-      replay -> Map("products" -> 16, "orders" -> 16, "order_items" -> 20))
+      initial -> Map("products" -> 6, "orders" -> 6, "order_items" -> 9),
+      replay -> Map("products" -> 8, "orders" -> 8, "order_items" -> 11),
+      warm -> Map("products" -> 8, "orders" -> 8, "order_items" -> 11))
     for ((run, bound) <- maxJobs) {
       assert(run.map { case (t, (i, v, r, m, _)) => t -> ((i, v, r, m)) } === counts)
       for ((t, (_, _, _, _, n)) <- run)
         assert(n <= bound(t), s"$t: processDataset launched $n Spark jobs, at most ${bound(t)} expected")
     }
+    // A warm load (the replay and the third load merge into existing
+    // tables) reuses its classes from the previous load only if they all
+    // fit Spark's codegen cache; above its capacity the LRU drops them
+    // before the next load asks again, and every load recompiles (129
+    // classes per warm load when the accounting pass, the partition set,
+    // the FK checks and the recount each ran their own aggregate or scan).
+    val capacity = spark.conf.get("spark.sql.codegen.cache.maxEntries").toLong
+    assert(c1 > 0 && c2 >= c1 && c3 <= capacity,
+      s"classes per load: $c1, $c2, $c3 — a warm load needs at most the cache's $capacity")
   }
 }

@@ -66,6 +66,23 @@ class ParquetTableSpec extends SparkSpec {
     assert(d2After === d2Before)
   }
 
+  test("partitioned merge reads a NULL partition, from its own or a supplied partition list") {
+    val path = tmpDir("merge-part-null") + "/t"
+    ParquetTable.create(
+      df(Row(1, "a", null), Row(2, "b", "d1"), Row(3, "c", "d2")), path, Seq("day"))
+    // the list collected inside the merge: the NULL partition is read and
+    // rewritten with its untouched row
+    ParquetTable.merge(spark, path, df(Row(4, "d", null), Row(2, "B", "d1")),
+      Seq("id"), Seq("day"))
+    // the list a caller already holds (the pipeline's accounting pass)
+    ParquetTable.mergeWithin(spark, path, df(Row(1, "A", null)), Seq("id"), Seq("day"),
+      Some(Seq(Row(null))))
+    val out = ParquetTable.read(spark, path).collect()
+      .map(r => r.getInt(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(out === Map(1 -> ("A", null), 2 -> ("B", "d1"), 3 -> ("c", "d2"),
+      4 -> ("d", null)))
+  }
+
   test("merge on empty/missing table creates it") {
     val path = tmpDir("merge-create") + "/t"
     ParquetTable.merge(spark, path, df(Row(1, "a", "d1")), Seq("id"))

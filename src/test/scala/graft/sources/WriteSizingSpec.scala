@@ -92,6 +92,23 @@ class WriteSizingSpec extends SparkSpec {
       "create(df.repartition(5)) must write exactly 5 files")
   }
 
+  test("a plan with an explode never takes the one-file path") {
+    import spark.implicits._
+    // 200 rows of 50 tokens each: a shuffle-shaped plan whose estimate is
+    // the input's size, while the explode emits 50 rows per input row
+    val df = (1 to 200).map(i => (i.toLong, (1 to 50).map(j => s"t$i-$j").toArray))
+      .toDF("id", "toks")
+      .select(col("id"), explode(col("toks")).as("tok"))
+      .distinct()
+    val target = 128L * 1024 * 1024
+    assert(df.queryExecution.analyzed.stats.sizeInBytes <= target / 4)
+    assert(ParquetTable.sizedForWrite(df) eq df,
+      "a Generate's output is unbounded by the estimate: no repartition(1)")
+    // control: the same small shuffle-shaped plan without the explode packs
+    val flat = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "tok").distinct()
+    assert(ParquetTable.sizedForWrite(flat) ne flat)
+  }
+
   test("targetFileBytes <= 0 disables the sizing") {
     val t = tmpDir("graft_wsz_off") + "/t"
     import spark.implicits._

@@ -58,10 +58,22 @@ class AnalyzeStatsSpec extends SparkSpec {
     val s4 = GraftSql.sql(spark, s"SHOW STATISTICS graft.`$t`").collect()
     assert(s4.forall(_.getBoolean(5)))
 
-    // the sketch dir is invisible to table reads and safe from VACUUM
+    // the sketch dir is invisible to table reads; VACUUM sweeps the dirs
+    // the re-ANALYZEs replaced and never a live one, and the statistics
+    // answer the same afterwards
     assert(ParquetTable.read(spark, t).count() === 3999)
+    val statsDir = new java.io.File(ParquetTable.statsDir(t))
+    val live = graft.sources.IndexStore.head(spark, statsDir.getPath).entries.map(_._2).toSet
+    val onDisk = statsDir.listFiles().map(_.getName).filter(_.startsWith("_d")).toSet
+    val replaced = onDisk -- live
+    assert(live.nonEmpty && replaced.nonEmpty, s"live $live, on disk $onDisk")
     val sweep = ParquetTable.vacuumPlan(spark, t, keepLast = 1)
-    assert(!sweep.exists(_._2.contains("_graft_stats")), sweep.toString)
+    val swept = sweep.collect { case ("data_dir", p) if p.contains("_graft_stats") =>
+      new org.apache.hadoop.fs.Path(p).getName }.toSet
+    assert(swept === replaced, sweep.toString)
+    ParquetTable.vacuum(spark, t, keepLast = 1)
+    assert(statsDir.listFiles().map(_.getName).filter(_.startsWith("_d")).toSet === live)
+    assert(GraftSql.sql(spark, s"SHOW STATISTICS graft.`$t`").collect().toSeq === s4.toSeq)
   }
 
   test("CDF-captured windows take the change-manifest feed and equal one-shot") {
